@@ -28,6 +28,32 @@ object Bench {
     "tx_quality", "tx_token_counts", "u1_union_all", "u2_union_distinct",
     "w1_class_ratio", "w2_event_lag", "x1_sqdist", "x2_model_score",
     "x3_posexplode")
+
+  val PerQueryFile = "target/bench_per_query.json"
+
+  /** One query's span rows (its own path and the paths under it, plus the
+    * empty path for any job that ran outside every span) with its
+    * fit-memo deltas and the host load at its end. */
+  final case class QueryRun(name: String, rows: Seq[obs.Row], memoHits: Long,
+                            memoMisses: Long, loadavg: Double) {
+    def sum(f: obs.Row => Long): Long = rows.map(f).sum
+    def sec: Double = rows.find(_.path == name).map(_.wallMs / 1000).getOrElse(0.0)
+    def unspannedJobs: Long = rows.filter(_.path.isEmpty).map(_.jobs).sum
+    def json: String = {
+      // fit-memo fields only where fits happened — keeps the artifact
+      // diffable without 180 rows of zeros
+      val memo = if (memoHits == 0 && memoMisses == 0) ""
+        else s""","fit_memo_hits":$memoHits,"fit_memo_misses":$memoMisses"""
+      s"""  {"query":"$name","sec":$sec,"jobs":${sum(_.jobs)},"tasks":${sum(_.tasks)},""" +
+        s""""task_ms":${sum(_.taskMs)},"input_bytes":${sum(_.inputBytes)},""" +
+        s""""shuffle_read_bytes":${sum(_.shuffleReadBytes)},""" +
+        s""""shuffle_write_bytes":${sum(_.shuffleWriteBytes)},""" +
+        s""""output_bytes":${sum(_.outputBytes)},"unspanned_jobs":$unspannedJobs,""" +
+        s""""loadavg":$loadavg$memo,"spans":[""" +
+        rows.map(r => "\n    " + r.json).mkString(",") + "]}"
+    }
+  }
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -37,39 +63,16 @@ object Bench {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // deterministic name order (Map iteration order varies per hash seed);
-    // also lets queries that share memoized fitted stages amortize warmup
-    // the same way on every run
     // optional comma-separated filter for profiling a subset in isolation
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
-    // Per-query I/O attribution (stderr only — the stdout JSON contract is
-    // unchanged): cumulative task-metric counters snapshotted around each
-    // query separate "plan got worse" (shuffle/input bytes moved) from
-    // "host got slower" (same bytes, more seconds) when totals drift
-    // between rounds — the same role gcTotal plays for heap pressure.
-    val inB = new java.util.concurrent.atomic.AtomicLong
-    val srB = new java.util.concurrent.atomic.AtomicLong
-    val swB = new java.util.concurrent.atomic.AtomicLong
-    // cumulative executor task run time: per-query task_ms vs wall sec makes
-    // host contamination attributable from the artifact alone — a query whose
-    // wall doubles at IDENTICAL task_ms lost its time to co-tenant load /
-    // scheduling, not to its own plan (round-15 instrumentation, VERDICT item 2)
-    val taskMs = new java.util.concurrent.atomic.AtomicLong
-    spark.sparkContext.addSparkListener(new org.apache.spark.scheduler.SparkListener {
-      override def onTaskEnd(
-          te: org.apache.spark.scheduler.SparkListenerTaskEnd): Unit = {
-        val m = te.taskMetrics
-        if (m != null) {
-          inB.addAndGet(m.inputMetrics.bytesRead)
-          srB.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-          swB.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          taskMs.addAndGet(m.executorRunTime)
-        }
-      }
-    })
-    def ioSnapshot(): (Long, Long, Long, Long) = {
+    // Each query runs in obs.span(name): the listener attributes every job
+    // and stage to its span path, so a query's rows carry its phases
+    // (wall, jobs, tasks, task_ms, io bytes) and its totals are their sums.
+    // Same bytes + more seconds = host load; more bytes = a plan change.
+    spark.sparkContext.addSparkListener(new obs.Listener)
+    def settle(): Seq[obs.Row] = {
       org.apache.spark.sql.graftshim.Shim.drainListenerBus(spark.sparkContext)
-      (inB.get(), srB.get(), swB.get(), taskMs.get())
+      obs.drain()
     }
     // reproducibility: the round-5 builder/driver totals diverged ~2× on
     // identical code — record the knobs that differ between harnesses
@@ -101,61 +104,52 @@ object Bench {
         .queryExecution.toRdd.count()
       Sweep.drop(spark)
     }
-    val io = scala.collection.mutable.ArrayBuffer[(String, Long, Long, Long)]()
-    // per-query FitMemo attribution: whichever training query runs first
-    // pays the shared fits (trio wall swings with zero code change), so
-    // the artifact records each query's memo misses (fits it computed)
-    // and hits (fits someone else already paid for)
-    val memo = scala.collection.mutable.Map[String, (Long, Long)]()
-    // per-query host state (task-time + loadavg at query end): makes the
-    // next load-vs-regression dispute decidable per query, not per run
-    val host = scala.collection.mutable.Map[String, (Long, Double)]()
+    settle() // the warmup's rows belong to no query
+    // deterministic name order (Map iteration order varies per hash seed);
+    // also lets queries that share memoized fitted stages amortize warmup
+    // the same way on every run
     val results = SparkEntry.queries.toSeq.sortBy(_._1)
       .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (name, fn) =>
-      val (in0, sr0, sw0, tm0) = ioSnapshot()
+      // per-query FitMemo attribution: whichever training query runs first
+      // pays the shared fits (trio wall swings with zero code change), so
+      // the artifact records each query's memo misses (fits it computed)
+      // and hits (fits someone else already paid for)
       val (mh0, mm0) = (graft.matching.Matcher.FitMemo.globalHits.get(),
         graft.matching.Matcher.FitMemo.globalMisses.get())
-      val t0 = System.nanoTime()
       // toRdd.count() materializes every column of the result (a plain
       // count() would let Catalyst prune the projection away and undercount
       // vector-heavy queries).
-      try { fn(spark, sfDir).queryExecution.toRdd.count() }
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1L }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (in1, sr1, sw1, tm1) = ioSnapshot()
-      io += ((name, in1 - in0, sr1 - sr0, sw1 - sw0))
-      host(name) = (tm1 - tm0, loadAvg())
-      memo(name) = (graft.matching.Matcher.FitMemo.globalHits.get() - mh0,
-        graft.matching.Matcher.FitMemo.globalMisses.get() - mm0)
+      obs.span(name) {
+        try { fn(spark, sfDir).queryExecution.toRdd.count() }
+        catch { case e: Throwable =>
+          System.err.println(s"[bench] $name failed: ${e.getMessage}"); -1L }
+      }
+      val run = QueryRun(name, settle(),
+        graft.matching.Matcher.FitMemo.globalHits.get() - mh0,
+        graft.matching.Matcher.FitMemo.globalMisses.get() - mm0, loadAvg())
       // between-query hygiene (OUTSIDE the timed region — the sweep is
       // harness bookkeeping, not query work): drop per-query checkpoint
       // blocks / stray caches and delete consumed per-run qtmp stores, so
       // query N+80 isn't paying GC for query N's leftovers. Memoized
       // stages survive (Sweep.retainNew).
       Sweep.drop(spark)
-      name -> dt
+      run
     }
     locally { // drift-attribution report: totals + the heaviest shufflers
       def mb(b: Long) = f"${b / 1048576.0}%.1f"
-      val (ti, tr, tw) = (io.map(_._2).sum, io.map(_._3).sum, io.map(_._4).sum)
-      System.err.println(s"[bench] io total: input=${mb(ti)}MiB " +
-        s"shuffleRead=${mb(tr)}MiB shuffleWrite=${mb(tw)}MiB")
-      io.sortBy { case (_, _, sr, sw) => -(sr + sw) }.take(12).foreach {
-        case (n, i, sr, sw) => System.err.println(
-          s"[bench] io $n: input=${mb(i)}MiB shuffleRead=${mb(sr)}MiB " +
-          s"shuffleWrite=${mb(sw)}MiB")
+      def shuffled(r: QueryRun) = r.sum(_.shuffleReadBytes) + r.sum(_.shuffleWriteBytes)
+      System.err.println(s"[bench] io total: " +
+        s"input=${mb(results.map(_.sum(_.inputBytes)).sum)}MiB " +
+        s"shuffleRead=${mb(results.map(_.sum(_.shuffleReadBytes)).sum)}MiB " +
+        s"shuffleWrite=${mb(results.map(_.sum(_.shuffleWriteBytes)).sum)}MiB")
+      results.sortBy(r => -shuffled(r)).take(12).foreach { r =>
+        System.err.println(s"[bench] io ${r.name}: input=${mb(r.sum(_.inputBytes))}MiB " +
+          s"shuffleRead=${mb(r.sum(_.shuffleReadBytes))}MiB " +
+          s"shuffleWrite=${mb(r.sum(_.shuffleWriteBytes))}MiB")
       }
     }
-    // The per-query map is emitted sorted CHEAPEST-FIRST: harness logs
-    // retain only the ~4 KB TAIL of this line, so ascending cost puts the
-    // expensive head (er_*/m4_*/ann_ivf_*) inside the retained window —
-    // the next load-vs-regression dispute is decidable from the recorded
-    // artifact alone instead of needing a judge re-run.
-    val qs = results.sortBy(_._2).map { case (k, v) => s"\"" + k + "\":" + v }
-      .mkString("{", ",", "}")
-    val total = results.map(_._2).sum
+    val total = results.map(_.sec).sum
     // GC share of the run — distinguishes "heap pressure" from "host
     // load" when totals drift between otherwise-identical runs
     val gcMs = scala.jdk.CollectionConverters.ListHasAsScala(
@@ -164,51 +158,30 @@ object Bench {
     val load1 = loadAvg()
     System.err.println(s"[bench] gcTotal=${gcMs}ms of ${(total * 1000).toLong}ms " +
       s"loadavg=$load0->$load1")
-    // Full attribution artifact (cost-descending, with gc + io totals) —
-    // survives however the stdout line gets truncated.
     // the 72-query round-2 contract subset's own subtotal — the
     // like-for-like number against the 177.9 s baseline as the suite
     // grows (directive: the 2x gate's denominator is this subset, so
     // record its numerator per run)
-    val subsetRows = results.filter { case (k, _) => ContractSubset(k) }
-    val subsetSec = subsetRows.map(_._2).sum
+    val subsetRows = results.filter(r => ContractSubset(r.name))
+    val subsetSec = subsetRows.map(_.sec).sum
     System.err.println(f"[bench] contract subset: ${subsetRows.size} of " +
       f"${ContractSubset.size} baseline queries present, $subsetSec%.1f s")
+    // Full attribution artifact, cost-descending, one row per query with
+    // its span rows
     locally {
-      val ioByName = io.map(t => t._1 -> (t._2, t._3, t._4)).toMap
-      val perQuery = results.sortBy(-_._2).map { case (k, v) =>
-        val (i, sr, sw) = ioByName.getOrElse(k, (0L, 0L, 0L))
-        val (mh, mm) = memo.getOrElse(k, (0L, 0L))
-        val (tm, la) = host.getOrElse(k, (0L, -1.0))
-        // fit-memo fields only where fits happened — keeps the artifact
-        // diffable without 180 rows of zeros
-        val memoJson = if (mh == 0 && mm == 0) ""
-          else s""","fit_memo_hits":$mh,"fit_memo_misses":$mm"""
-        s"""  {"query":"$k","sec":$v,"input_bytes":$i,"shuffle_read_bytes":$sr,"shuffle_write_bytes":$sw,"task_ms":$tm,"loadavg":$la$memoJson}"""
-      }.mkString("[\n", ",\n", "\n]")
+      val perQuery = results.sortBy(-_.sec).map(_.json).mkString("[\n", ",\n", "\n]")
       val body = s"""{"total_sec":$total,"gc_ms":$gcMs,"sf":"$sfDir","cpus":$cpus,
 "loadavg_start":$load0,"loadavg_end":$load1,
 "contract_subset_sec":$subsetSec,"contract_subset_n":${subsetRows.size},
 "queries_cost_desc":$perQuery}"""
-      val out = java.nio.file.Paths.get("/root/repo/target/bench_per_query.json")
+      val out = java.nio.file.Paths.get(PerQueryFile).toAbsolutePath
       java.nio.file.Files.createDirectories(out.getParent)
       java.nio.file.Files.write(out, body.getBytes("UTF-8"))
       System.err.println(s"[bench] per-query artifact: $out")
     }
-    // "metric"/"value"/"gc_ms" repeated AFTER the (long) per-query map:
-    // harness logs keep only the tail of the line, and the leading fields
-    // get truncated away.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","gc_ms":$gcMs,"loadavg_start":$load0,"loadavg_end":$load1,"contract_subset_sec":$subsetSec,"contract_subset_n":${subsetRows.size},"metric":"total","value":$total,"unit":"sec"}""")
-    // Round-15 harness-contract repair (VERDICT r14 item 1): the driver
-    // retains only the ~2000-char TAIL of stdout, which truncates the head
-    // of the full line above — BENCH parsed:null since r10. Emit a COMPACT
-    // summary (NO per-query map — 187 entries cannot fit the tail window)
-    // as the LAST stdout line so the driver has a complete parseable JSON
-    // object; the full per-query detail (sec, io bytes, task_ms, loadavg,
-    // fit-memo attribution) lives in target/bench_per_query.json, pointed
-    // at by "per_query_file". The full legacy line above is unchanged and
-    // still carries every query's seconds.
-    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"gc_ms":$gcMs,"loadavg_start":$load0,"loadavg_end":$load1,"contract_subset_sec":$subsetSec,"contract_subset_n":${subsetRows.size},"n_queries":${results.size},"per_query_file":"target/bench_per_query.json"}""")
+    // the last stdout line: one JSON object; the per-query detail lives
+    // in the artifact it names
+    println(s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","cpus":$cpus,"gc_ms":$gcMs,"loadavg_start":$load0,"loadavg_end":$load1,"contract_subset_sec":$subsetSec,"contract_subset_n":${subsetRows.size},"n_queries":${results.size},"per_query_file":"$PerQueryFile"}""")
     spark.stop()
   }
 }

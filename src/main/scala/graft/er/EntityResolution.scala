@@ -4,6 +4,7 @@ import org.apache.spark.ml.PipelineModel
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.blocking.Blocking
+import graft.obs
 import graft.features.TextFeatures
 import graft.matching.{Distances, Matcher, ModelStore}
 import graft.pairs.Pairs
@@ -64,11 +65,13 @@ object EntityResolution {
   def nameCandidates(feats: DataFrame, cfg: Config = Config()): DataFrame = {
     val featA = feats.where("table = 'abt'")
     val featB = feats.where("table = 'buy'")
-    Blocking.dedupedSimilarityJoin(featA, featB, keyCol = "name",
-        featureCol = "name_features", threshold = cfg.nameThreshold,
-        bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
-        seed = cfg.seed)
-      .select("idA", "idB")
+    obs.span("name_lsh") {
+      Blocking.dedupedSimilarityJoin(featA, featB, keyCol = "name",
+          featureCol = "name_features", threshold = cfg.nameThreshold,
+          bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
+          seed = cfg.seed)
+        .select("idA", "idB")
+    }
   }
 
   /** Notebook 02 (candidates, description side): the second blocking pass
@@ -79,11 +82,13 @@ object EntityResolution {
   def descriptCandidates(feats: DataFrame, cfg: Config = Config()): DataFrame = {
     val featA = feats.where("table = 'abt'")
     val featB = feats.where("table = 'buy'")
-    Blocking.dedupedSimilarityJoin(featA, featB, keyCol = "description",
-        featureCol = "descript_features", threshold = cfg.descriptThreshold,
-        bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
-        seed = cfg.seed + 1)
-      .select("idA", "idB")
+    obs.span("descript_lsh") {
+      Blocking.dedupedSimilarityJoin(featA, featB, keyCol = "description",
+          featureCol = "descript_features", threshold = cfg.descriptThreshold,
+          bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
+          seed = cfg.seed + 1)
+        .select("idA", "idB")
+    }
   }
 
   /** Notebook 02 (labels): golden ∪ name candidates ∪ description
@@ -98,21 +103,17 @@ object EntityResolution {
   case class TrainedMatcher(model: PipelineModel, areaUnderPR: Double)
 
   /** Notebook 03 (train): pairwise distance features → class weights →
-    * stratified split → tuned GBT → AUPR on the held-out split.
-    *
-    * NOTE: [[graft.ProfileEr]] mirrors this body step for step (sampleBy
-    * fractions, parts formula, split, trainSingle args) so flagship
-    * timings decompose; an edit here must be mirrored there or the
-    * profiler silently stops measuring the production path (ADVICE r14). */
+    * stratified split → tuned GBT → AUPR on the held-out split. Each step
+    * runs in an `obs` span under `train`. */
   def train(feats: DataFrame, labeled: DataFrame,
-            cfg: Config = Config()): TrainedMatcher = {
+            cfg: Config = Config()): TrainedMatcher = obs.span("train") {
     val featA = feats.where("table = 'abt'")
     val featB = feats.where("table = 'buy'")
     // A permissive blocking threshold can admit a near-quadratic candidate
     // set; training on all of it buys nothing (the decision boundary lives
     // on 3 scalar features). Cap the training set with a seeded
     // label-stratified downsample — scoring still covers every candidate.
-    val n = labeled.count()
+    val n = obs.span("sample")(labeled.count())
     val sampled =
       if (n <= cfg.maxTrainPairs) labeled
       else {
@@ -133,9 +134,14 @@ object EntityResolution {
     // evaluation would otherwise each re-execute the attach-features joins
     // + sqdist pipeline (measured ~2× the whole training cost at sf0.1).
     // The coalesce stays INSIDE trainTuned (training side only) so the
-    // split sees the plan's row order unchanged.
-    val weighted = Matcher.addClassWeights(dists).cache()
-    val Seq(tr, te) = Matcher.stratifiedSplit(weighted, Seq(0.8, 0.2), seed = cfg.seed)
+    // split sees the plan's row order unchanged. The count fills the cache
+    // here, so the attach shows as its own phase, not inside the first fit.
+    val weighted = obs.span("distances") {
+      val w = Matcher.addClassWeights(dists).cache(); w.count(); w
+    }
+    val Seq(tr, te) = obs.span("split") {
+      Matcher.stratifiedSplit(weighted, Seq(0.8, 0.2), seed = cfg.seed)
+    }
     // a singleton grid is no search — skip the TVS fit-then-refit double
     val best =
       if (cfg.gbtMaxIterGrid.size == 1 && cfg.gbtMaxDepthGrid.size == 1)
@@ -151,7 +157,8 @@ object EntityResolution {
     // skipping the evaluator's ~4 tiny shuffle jobs when the held-out
     // curve is small — the same swap the m4/m5 trial loop made in
     // optimization round 14 (guide §1.2)
-    val result = TrainedMatcher(best, Matcher.heldOutAupr(best.transform(te)))
+    val result = TrainedMatcher(best,
+      obs.span("aupr")(Matcher.heldOutAupr(best.transform(te))))
     weighted.unpersist(blocking = false)
     result
   }
@@ -226,17 +233,21 @@ object EntityResolution {
     val newFeats = transformCatalog(pipes, newRows)
     // bucket count comes from the store's own marker, not cfg — a config
     // that drifted from the writer's would otherwise duplicate keys
-    graft.io.IO.upsertPartitionedStore(spark, featureStorePath, newFeats,
-      keys = Seq("table", "id"),
-      updateCols = Seq("name_features", "descript_features", "price_features"))
+    obs.span("store_merge") {
+      graft.io.IO.upsertPartitionedStore(spark, featureStorePath, newFeats,
+        keys = Seq("table", "id"),
+        updateCols = Seq("name_features", "descript_features", "price_features"))
+    }
     val store = graft.io.IO.readPartitionedStore(spark, featureStorePath)
     val storedB = store.where("table = 'buy'")
-    val cands = Blocking.dedupedSimilarityJoin(
-        newFeats.where("table = 'abt'"), storedB, keyCol = "name",
-        featureCol = "name_features", threshold = cfg.nameThreshold,
-        bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
-        seed = cfg.seed)
-      .select("idA", "idB").distinct()
+    val cands = obs.span("name_lsh") {
+      Blocking.dedupedSimilarityJoin(
+          newFeats.where("table = 'abt'"), storedB, keyCol = "name",
+          featureCol = "name_features", threshold = cfg.nameThreshold,
+          bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
+          seed = cfg.seed)
+        .select("idA", "idB").distinct()
+    }
     scoreAll(store, cands, matcher)
   }
 }

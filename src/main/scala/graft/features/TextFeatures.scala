@@ -4,6 +4,7 @@ import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.ml.feature._
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.obs
 
 /** The reference's three feature pipelines (F1-F13, `01_Feature
   * Engineering.py:185-473`), parameterized per column.
@@ -125,10 +126,12 @@ object TextFeatures {
     val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
     val (nameM, descM, priceM) = try {
       implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
-      val nameF = Future(namePipeline().fit(base))
-      val descF = Future(descriptW2VPipeline(maxIter = w2vMaxIter,
-        minCount = w2vMinCount, seed = seed).fit(base))
-      val priceF = Future(pricePipeline().fit(base))
+      // the pool's threads start inside the caller's span, so each fit's
+      // span nests under it
+      val nameF = Future(obs.span("name_fit")(namePipeline().fit(base)))
+      val descF = Future(obs.span("descript_fit")(descriptW2VPipeline(
+        maxIter = w2vMaxIter, minCount = w2vMinCount, seed = seed).fit(base)))
+      val priceF = Future(obs.span("price_fit")(pricePipeline().fit(base)))
       (Await.result(nameF, Duration.Inf), Await.result(descF, Duration.Inf),
         Await.result(priceF, Duration.Inf))
     } finally pool.shutdown()

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
+import graft.obs
 
 /** IO layer: schema-declared CSV scan (S2, ref `01_Feature
   * Engineering.py:62-65`), overwrite parquet sink (S3, `01:67-72` minus the
@@ -766,12 +767,21 @@ object IO {
     * for the no-op) — callers that record per-commit state (the
     * refresh's staleness baseline) must use it rather than re-reading
     * storeVersions.last, which a racing writer's later commit can have
-    * advanced past ours. */
+    * advanced past ours.
+    *
+    * `append` is [[appendPartitionedStore]]'s manifest rule: the new
+    * generation's buckets are ADDED next to their existing entries
+    * instead of replacing them. Its data is then base-independent, so it
+    * is written once however many races the commit loses.
+    *
+    * Each attempt's phases run in `obs` spans: locate (the plan), write
+    * (the generation), claim, and commit (re-check, manifest, marker). */
   private def commitRewrittenBucketsPlanned(spark: SparkSession, targetPath: String,
                                             plan: () => (Set[Int], DataFrame),
                                             beforeCommit: () => Unit = () => (),
                                             maxAttempts: Int = 5,
-                                            beforeClaim: () => Unit = () => ()): Option[Int] = {
+                                            beforeClaim: () => Unit = () => (),
+                                            append: Boolean = false): Option[Int] = {
     val (fs, root) = hfs(spark, targetPath)
     // reused across attempts when the base hasn't advanced: a refused
     // claim (peer mid-commit, not yet committed) must not cost a second
@@ -787,46 +797,54 @@ object IO {
         throw new IllegalArgumentException(
           s"$targetPath has no committed manifest — not a partitioned store"))
       val man = readManifest(fs, root, cur)
-      if (dataBase != cur) {
+      // an append's rows only ADD to whatever manifest is current, so its
+      // generation is base-independent and writes once; a rewrite's
+      // generation is a function of its base
+      if (genName.isEmpty || (!append && dataBase != cur)) {
         // plan + write recompute as a UNIT against this base: the
         // rewrite frame and the touched set it was derived from must
         // describe the same manifest version
-        val (t, frame) = plan()
+        val (t, frame) = obs.span("locate")(plan())
         touched = t
-        if (touched.isEmpty) return None
+        if (touched.isEmpty && !append) return None
         genName = newGenName(cur + 1)
         val genPath = new HPath(root, s"$GenCol=$genName")
         // same rebalance-before-partitionBy + manifest-covered committer
         // shortcut as writePartitionedStore (see writeGenDir)
-        writeGenDir(frame, genPath)
+        obs.span("write")(writeGenDir(frame, genPath))
         written = listPartDirs(fs, genPath, BucketCol)
         dataBase = cur
       }
       val next = cur + 1
       beforeClaim()
-      claimVersion(fs, root, next, ClaimLeaseMs) match {
+      obs.span("claim")(claimVersion(fs, root, next, ClaimLeaseMs)) match {
         case Some(nonce) =>
-          try {
-            if (currentManifestVersion(fs, root).contains(cur) &&
+          val committed =
+            try obs.span("commit") {
+              currentManifestVersion(fs, root).contains(cur) &&
                 !isCommitted(fs, root, next) &&
                 // fencing: a holder whose lease was broken while it
                 // stalled must not write the new holder's manifest
-                holdsClaim(fs, root, next, nonce)) {
-              val kept = man.filter { case (b, _) => !touched(b) }
-              writeManifestVersion(fs, root, next, kept ++ written.map(_ -> genName))
-              beforeCommit()
-              if (holdsClaim(fs, root, next, nonce)) {
-                try { commitManifestVersion(fs, root, next); return Some(next) }
-                catch { case e: java.io.IOException =>
-                  // marker landed from a fenced-off racer in the residual
-                  // window: a lost race, not a failure — loop and recompute
-                  if (!isCommitted(fs, root, next)) throw e
+                holdsClaim(fs, root, next, nonce) && {
+                  // an append keeps every entry; a rewrite collapses the
+                  // touched buckets onto its generation
+                  val kept = if (append) man else man.filter { case (b, _) => !touched(b) }
+                  writeManifestVersion(fs, root, next, kept ++ written.map(_ -> genName))
+                  beforeCommit()
+                  holdsClaim(fs, root, next, nonce) &&
+                    (try { commitManifestVersion(fs, root, next); true }
+                    catch { case e: java.io.IOException =>
+                      // marker landed from a fenced-off racer in the
+                      // residual window: a lost race, not a failure —
+                      // loop and recompute
+                      if (!isCommitted(fs, root, next)) throw e
+                      false
+                    })
                 }
-              }
-            }
-            // base advanced (or claim fenced off) under us: our generation
-            // is orphan garbage (vacuum reclaims it); recompute
-          } finally releaseClaim(fs, root, next, nonce)
+            } finally releaseClaim(fs, root, next, nonce)
+          if (committed) return Some(next)
+          // base advanced (or claim fenced off) under us: a rewrite's
+          // generation is orphan garbage (vacuum reclaims it); recompute
         case None =>
           // claim refused: an active writer is committing `next`. Its
           // commit/release resolves the base; back off so spins don't
@@ -835,7 +853,7 @@ object IO {
       }
     }
     throw new IllegalStateException(
-      s"merge lost $maxAttempts optimistic-concurrency races on $targetPath")
+      s"commit lost $maxAttempts optimistic-concurrency races on $targetPath")
   }
 
   /** Keyed DELETE — `WHEN MATCHED DELETE` with the same O(delta) pruning
@@ -1100,7 +1118,6 @@ object IO {
     * it is derived from `keys` with the store's persisted count. */
   def appendPartitionedStore(spark: SparkSession, targetPath: String,
                              source: DataFrame, keys: Seq[String]): Unit = {
-    val (fs, root) = hfs(spark, targetPath)
     val src =
       if (source.columns.contains(BucketCol))
         // trusted bucket ARITHMETIC, validated keys AND range: the
@@ -1111,47 +1128,11 @@ object IO {
           bucketRangeGuard(storeBuckets(targetPath), col(BucketCol))))
       else source.withColumn(BucketCol,
         guardedBucketExpr(keys, storeBuckets(targetPath)))
-    // append data is base-independent (new pairs just ADD to whatever
-    // manifest is current), so the delta writes ONCE to a writer-unique
-    // generation and only the manifest commit loops optimistically
-    val genName = newGenName(0)
-    val genPath = new HPath(root, s"$GenCol=$genName")
-    writeGenDir(src, genPath)
-    val written = listPartDirs(fs, genPath, BucketCol)
-    var attempt = 0
-    while (attempt < 10) {
-      attempt += 1
-      val cur = currentManifestVersion(fs, root).getOrElse(
-        throw new IllegalArgumentException(
-          s"$targetPath has no committed manifest — not a partitioned store"))
-      val man = readManifest(fs, root, cur)
-      val next = cur + 1
-      claimVersion(fs, root, next, ClaimLeaseMs) match {
-        case Some(nonce) =>
-          try {
-            if (currentManifestVersion(fs, root).contains(cur) &&
-                !isCommitted(fs, root, next) &&
-                holdsClaim(fs, root, next, nonce)) {
-              writeManifestVersion(fs, root, next, man ++ written.map(_ -> genName))
-              if (holdsClaim(fs, root, next, nonce)) {
-                try { commitManifestVersion(fs, root, next); return }
-                catch { case e: java.io.IOException =>
-                  // marker landed from a fenced-off racer in the residual
-                  // window: a lost race, not a failure — loop and retry
-                  if (!isCommitted(fs, root, next)) throw e
-                }
-              }
-            }
-          } finally releaseClaim(fs, root, next, nonce)
-        case None =>
-          // appends never truly conflict (base-independent data); a
-          // refused claim just means a peer is inside its few-ms commit
-          // window — back off instead of spinning through the attempts
-          Thread.sleep(50L * attempt)
-      }
-    }
-    throw new IllegalStateException(
-      s"append lost 10 optimistic-concurrency races on $targetPath")
+    // appends never truly conflict (base-independent data), so they get
+    // more attempts: a refused claim just means a peer is inside its
+    // few-ms commit window
+    commitRewrittenBucketsPlanned(spark, targetPath, () => (Set.empty[Int], src),
+      maxAttempts = 10, append = true)
   }
 
   /** Reclaim files no committed reader can reach: bucket directories

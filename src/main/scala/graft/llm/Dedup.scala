@@ -750,11 +750,13 @@ object Dedup {
       }
     // random init + few Lloyd iterations: the cells are a BLOCKING key, so
     // partition quality (not convergence) is what matters — k-means|| init
-    // plus the default 20 iterations costs 4× more fit time (measured via
-    // graft.ProfileSem) for no recall gain on either fixture regime
-    val km = new KMeans().setK(nCells).setSeed(seed).setMaxIter(maxIter)
-      .setInitMode("random").setFeaturesCol("mlv")
-      .setPredictionCol("cell").fit(fitInput)
+    // plus the default 20 iterations costs 4× more fit time (the
+    // kmeans_fit span) for no recall gain on either fixture regime
+    val km = graft.obs.span("kmeans_fit") {
+      new KMeans().setK(nCells).setSeed(seed).setMaxIter(maxIter)
+        .setInitMode("random").setFeaturesCol("mlv")
+        .setPredictionCol("cell").fit(fitInput)
+    }
     cosinePairs(km.transform(v), idCol, "arr", col("cell"), threshold)
   }
 

@@ -9,6 +9,7 @@ import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.obs
 
 /** M2-M6 + X2 — train/tune/evaluate/score the pair classifier (ref
   * `03_Train & Deploy Model.py:120-314,434-446,567-579`).
@@ -121,7 +122,7 @@ object Matcher {
   def trainTuned(train: DataFrame, seed: Long = 42L, parallelism: Int = 4,
                  maxIterGrid: Seq[Int] = Seq(10, 20),
                  maxDepthGrid: Seq[Int] = Seq(3, 5),
-                 coalesceTo: Option[Int] = None): TrainValidationSplitModel = {
+                 coalesceTo: Option[Int] = None): TrainValidationSplitModel = obs.span("gbt_fit") {
     val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
     val asm = new VectorAssembler().setInputCols(FeatureCols)
       .setOutputCol("features").setHandleInvalid("keep")
@@ -146,7 +147,7 @@ object Matcher {
     * grids go through [[trainTuned]]/[[trainCrossValidated]]. */
   def trainSingle(train: DataFrame, seed: Long = 42L,
                   maxIter: Int = 10, maxDepth: Int = 3,
-                  coalesceTo: Option[Int] = None): PipelineModel = {
+                  coalesceTo: Option[Int] = None): PipelineModel = obs.span("gbt_fit") {
     val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
     val asm = new VectorAssembler().setInputCols(FeatureCols)
       .setOutputCol("features").setHandleInvalid("keep")
@@ -471,7 +472,7 @@ object Matcher {
                    candidates: Seq[GbtCandidate] = defaultHalvingCandidates,
                    minIter: Int = 5, maxIter: Int = 45, eta: Int = 3,
                    coalesceTo: Option[Int] = None,
-                   memo: Option[FitMemo] = None): HalvingResult = {
+                   memo: Option[FitMemo] = None): HalvingResult = obs.span("halving") {
     require(candidates.nonEmpty && eta >= 2 && minIter >= 1 && maxIter >= minIter)
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration

@@ -45,7 +45,9 @@ object BreadthQueries {
     * failure delegates to the percentile() aggregate, so the exact
     * contract can never silently weaken. `values` is scanned twice (plus
     * once more for the tiny band collect) — cheap column scans in place
-    * of the distinct-value buffer. */
+    * of the distinct-value buffer. Every pass reads the column cast to
+    * double, the values percentile() itself interpolates, so a decimal
+    * column's passes agree on band membership. */
   private[graft] def exactMedianTwoPass(values: DataFrame, c: String,
                                         bandCap: Long = 200000L): Option[Double] = {
     import values.sparkSession.implicits._
@@ -53,8 +55,9 @@ object BreadthQueries {
       val r = values.agg(expr(s"percentile($c, 0.5)")).head()
       if (r.isNullAt(0)) None else Some(r.getDouble(0))
     }
-    val r1 = values.agg(count(col(c)).as("n"),
-      expr(s"approx_percentile($c, array(0.496, 0.504), 1000)").as("bracket")).head()
+    val x = col(c).cast("double")
+    val r1 = values.agg(count(x).as("n"),
+      percentile_approx(x, array(lit(0.496), lit(0.504)), lit(1000)).as("bracket")).head()
     val n = r1.getLong(0)
     if (n == 0L) None
     else if (r1.isNullAt(1)) fallback
@@ -64,12 +67,12 @@ object BreadthQueries {
       val pos = 0.5 * (n - 1)
       val (lower, higher) = (pos.floor.toLong, pos.ceil.toLong)
       val r2 = values.agg(
-        sum(when(col(c) < lo, 1L).otherwise(0L)).as("c_lo"),
-        sum(when(col(c).between(lo, hi), 1L).otherwise(0L)).as("band_n")).head()
+        sum(when(x < lo, 1L).otherwise(0L)).as("c_lo"),
+        sum(when(x.between(lo, hi), 1L).otherwise(0L)).as("band_n")).head()
       val (cLo, bandN) = (r2.getLong(0), r2.getLong(1))
       if (cLo > lower || higher >= cLo + bandN || bandN > bandCap) fallback
       else {
-        val band = values.select(col(c).cast("double").as("x"))
+        val band = values.select(x.as("x"))
           .where(col("x").between(lo, hi))
           .sort("x").as[Double].collect() // bounded: band_n ≤ bandCap
         val vLower = band((lower - cLo).toInt)
@@ -419,16 +422,17 @@ object BreadthQueries {
       val (exactNd, approxNd) = (ndRow.getLong(0), ndRow.getLong(1))
       // accuracy 1000 = 0.1% rank error — 10× tighter than the 1%
       // bound asserted below, at a tenth of the sketch size
-      val approxP50 = li.agg(
+      val approxP50 = Option(li.agg(
         expr("approx_percentile(l_extendedprice, 0.5, 1000)").as("approx_p50"))
-        .head().getDouble(0)
-      val exactP50 = exactMedianTwoPass(li, "l_extendedprice").get
+        .head().getAs[java.lang.Double](0)).map(_.doubleValue)
+      // no values, no median: NULL exact_p50, as percentile() reports
+      val exactP50 = exactMedianTwoPass(li, "l_extendedprice")
       Seq((exactNd,
           math.abs(approxNd - exactNd).toDouble / exactNd <= 0.05,
           // same decimal-string HALF_UP as Spark's round() on doubles
-          BigDecimal(exactP50).setScale(4,
-            scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble,
-          math.abs(approxP50 - exactP50) / exactP50 <= 0.01))
+          exactP50.map(e => BigDecimal(e).setScale(4,
+            scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble),
+          for (e <- exactP50; a <- approxP50) yield math.abs(a - e) / e <= 0.01))
         .toDF("exact_nd", "hll_within_5pct", "exact_p50", "quantile_within_1pct")
     }),
 

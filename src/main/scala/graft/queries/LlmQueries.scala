@@ -356,9 +356,11 @@ object LlmQueries {
       .select("idA", "idB").cache()
     val sem = Dedup.semanticPairs(emb, nCells = 8, threshold = 0.3)
       .select("idA", "idB").cache()
+    // the within-cell pair join runs when this count fills the cache
+    val nSem = graft.obs.span("cell_pair_join")(sem.count())
     val nExact = exact.count()
     val hit = sem.join(exact, Seq("idA", "idB")).count()
-    val fp = sem.count() - hit
+    val fp = nSem - hit
     exact.unpersist(blocking = false)
     sem.unpersist(blocking = false)
     SemStats(nExact, hit.toDouble / math.max(nExact, 1L), fp)

@@ -8,6 +8,7 @@ import graft.blocking.Blocking
 import graft.features.TextFeatures
 import graft.matching.{Distances, Matcher, ModelStore}
 import graft.pairs.Pairs
+import graft.obs
 
 /** The end-to-end fuzzy-match dataflow (the reference's reason to exist):
   * clean → feature pipelines → LSH blocking → candidate pairs → label join →
@@ -110,10 +111,13 @@ object MatchQueries {
         val a = Catalogs.sideA(s, dir).where(keyFilter).withColumn("table", lit("abt"))
         val b = Catalogs.sideB(s, dir).where(keyFilter).withColumn("table", lit("buy"))
         val all = a.unionByName(b).select("table", "id", "name", "description", "price")
-        val (pipes, feats) = EntityResolution.fitFeatureModels(all, flagshipCfg)
-        val cached = feats.cache()
-        cached.count() // materialize INSIDE retainNew — a lazy cache
-                       // registers no RDD and the sweep would evict it
+        val (pipes, cached) = obs.span("features") {
+          val (pipes, feats) = EntityResolution.fitFeatureModels(all, flagshipCfg)
+          val cached = feats.cache()
+          cached.count() // materialize INSIDE retainNew — a lazy cache
+                         // registers no RDD and the sweep would evict it
+          (pipes, cached)
+        }
         // golden pairs restricted to the sampled subset (semi-join on A ids)
         Stage(cached, Catalogs.golden(s, dir)
           .join(a.select(col("id").as("idA")), Seq("idA"), "left_semi"), pipes)
@@ -125,9 +129,14 @@ object MatchQueries {
     matcherCache.getOrElseUpdate(cacheKey(s, dir, keyFilter),
       graft.Sweep.retainNew(s) {
         val st = featureStage(s, dir, keyFilter)
-        val labeled = EntityResolution.labeledCandidates(st.feats, st.golden, flagshipCfg)
-          .cache()
-        labeled.count() // materialize inside retainNew (see featureStage)
+        // the LSH runs inside labeledCandidates (its name_lsh span); the
+        // count materializes the label join
+        val labeled = obs.span("labeled_candidates") {
+          val l = EntityResolution.labeledCandidates(st.feats, st.golden, flagshipCfg)
+            .cache()
+          l.count() // materialize inside retainNew (see featureStage)
+          l
+        }
         val trained = EntityResolution.train(st.feats, labeled, flagshipCfg)
         (trained.model, labeled)
       })
@@ -172,9 +181,11 @@ object MatchQueries {
         // and each consumer keeps its own ordered limit.
         val dists = Distances.pairDistances(labeled.select("idA", "idB"),
           st.feats.where("table = 'abt'"), st.feats.where("table = 'buy'"))
-        val df = Matcher.score(model, dists).cache()
-        df.count() // materialize inside retainNew (see featureStage)
-        df
+        obs.span("score") {
+          val df = Matcher.score(model, dists).cache()
+          df.count() // materialize inside retainNew (see featureStage)
+          df
+        }
       })
 
   private def flagshipUncached(s: SparkSession, dir: String, keyFilter: String): DataFrame = {
@@ -278,7 +289,7 @@ object MatchQueries {
     val scored = EntityResolution
       .inferIncremental(newRows, store, st.pipes, model, flagshipCfg)
       .select("idA", "idB", "match_score").cache()
-    val nScored = scored.count()
+    val nScored = obs.span("score")(scored.count())
     // reclaim superseded generations, then count through the manifest (a
     // raw directory read would also see pre-merge files awaiting vacuum)
     graft.io.IO.vacuumPartitionedStore(s, store)
@@ -306,8 +317,7 @@ object MatchQueries {
     * (session, dir), like the feature stage it builds on: m4 and m5 run
     * back-to-back in a bench/verify session and would otherwise each pay
     * the candidate-join + distance-join + weight derivation for the
-    * identical frame (shared by m4_halving_search, m5_train_eval, and
-    * ProfileHalving). */
+    * identical frame (shared by m4_halving_search and m5_train_eval). */
   private[graft] def halvingTrainingFrame(s: SparkSession, dir: String): DataFrame =
     trainingFrameCache.getOrElseUpdate(cacheKey(s, dir, "id % 10 = 0"),
       graft.Sweep.retainNew(s) {
@@ -319,9 +329,11 @@ object MatchQueries {
         val labeled = Pairs.labelJoin(cands, golden)
         val dists = Distances.pairDistances(labeled, feats.where("table='abt'"),
           feats.where("table='buy'")).join(labeled, Seq("idA", "idB"))
-        val w = Matcher.addClassWeights(dists).cache()
-        w.count() // materialize inside retainNew (see featureStage)
-        w
+        obs.span("training_frame") {
+          val w = Matcher.addClassWeights(dists).cache()
+          w.count() // materialize inside retainNew (see featureStage)
+          w
+        }
       })
 
   val defs: Seq[(String, Q)] = Seq(

@@ -20,8 +20,13 @@ object Shim {
 
   /** Drain the listener bus (`listenerBus` is `private[spark]`) so a
     * metrics snapshot taken right after a query's last job sees every
-    * task-end event — the Bench harness's per-query I/O attribution
-    * would otherwise race the async event delivery. */
+    * job and stage event — the span rows Bench reads per query would
+    * otherwise race the async event delivery. */
   def drainListenerBus(sc: org.apache.spark.SparkContext): Unit =
     sc.listenerBus.waitUntilEmpty()
+
+  /** The running SparkContext, if any (`getActive` is `private[spark]`;
+    * the public `getOrCreate` would start one). */
+  def activeContext: Option[org.apache.spark.SparkContext] =
+    org.apache.spark.SparkContext.getActive
 }

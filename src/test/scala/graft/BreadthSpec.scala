@@ -315,6 +315,19 @@ class BreadthSpec extends SparkSpec {
     // empty input: both report no median
     val empty = Seq.empty[Double].toDF("x")
     assert(exactMedianTwoPass(empty, "x").isEmpty && oracle(empty, "x").isEmpty)
+    // a decimal column: every pass reads the doubles percentile() reads
+    Seq(Seq("1.10", "2.20", "3.35", "4.05"), (1 to 4999).map(i => s"${i % 97}.${i % 10}"))
+      .foreach { vs =>
+        val df = vs.toDF("s").select(col("s").cast("decimal(10,2)").as("x"))
+        assert(exactMedianTwoPass(df, "x") == oracle(df, "x"), s"decimal frame of ${vs.size}")
+      }
+    // the a12 query over an empty lineitem: one row with a NULL exact_p50
+    val emptyDir = java.nio.file.Files.createTempDirectory("a12_empty").toString
+    try {
+      Tables.lineitem(spark, sf).limit(0).write.parquet(s"$emptyDir/lineitem.parquet")
+      val rows = SparkEntry.queries("a12_approx_sketch")(spark, emptyDir).collect()
+      assert(rows.length == 1 && rows(0).isNullAt(rows(0).fieldIndex("exact_p50")))
+    } finally graft.io.IO.deletePath(emptyDir)
     // band cap forces the certificate path to DELEGATE, not weaken: with
     // cap 0 every band overflows, and the value must still be exact
     val big = (1 to 1000).map(_.toDouble).toDF("x")

@@ -1,0 +1,77 @@
+package graft
+
+import org.apache.spark.sql.graftshim.Shim
+import graft.matching.Matcher
+
+/** `obs.span`: path nesting, job attribution to the innermost span, pool
+  * threads landing in their caller's span, and one row per path. */
+class ObsSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Run `body` with a listener attached; return the rows it recorded. */
+  private def recorded(body: => Unit): Map[String, obs.Row] = {
+    val listener = new obs.Listener
+    Shim.drainListenerBus(spark.sparkContext)
+    obs.drain()
+    spark.sparkContext.addSparkListener(listener)
+    try body
+    finally {
+      Shim.drainListenerBus(spark.sparkContext)
+      spark.sparkContext.removeSparkListener(listener)
+    }
+    obs.drain().map(r => r.path -> r).toMap
+  }
+
+  private def job(): Unit = spark.range(100).repartition(2).count()
+
+  test("a thrown body restores the parent path") {
+    val rows = recorded {
+      obs.span("outer") {
+        intercept[IllegalStateException] {
+          obs.span("inner")(throw new IllegalStateException("boom"))
+        }
+        job()
+      }
+      job()
+    }
+    assert(rows("outer/inner").calls == 1 && rows("outer/inner").jobs == 0)
+    assert(rows("outer").jobs > 0, s"job after the throw left the outer span: $rows")
+    assert(rows("").jobs > 0, s"job after the span still tagged: $rows")
+  }
+
+  test("a job inside nested spans is attributed to the innermost span only") {
+    val rows = recorded(obs.span("a")(obs.span("b")(job())))
+    assert(rows("a/b").jobs > 0 && rows("a/b").tasks > 0)
+    assert(rows("a").jobs == 0 && rows("a").tasks == 0)
+    assert(rows.get("").forall(_.jobs == 0), s"unspanned jobs: $rows")
+    assert(rows("a").wallMs >= rows("a/b").wallMs)
+  }
+
+  test("jobs from trainHalving's trial futures land in the caller's span") {
+    val rnd = new scala.util.Random(7)
+    val df = Matcher.addClassWeights((1 to 200).map { i =>
+      val base = if (i % 2 == 1) 0.05 else 1.5
+      (base + rnd.nextDouble() * 0.1, base + rnd.nextDouble() * 0.1,
+        base + rnd.nextDouble() * 0.05, i % 2)
+    }.toDF("name_sqdist", "descript_sqdist", "price_sqdist", "label")).coalesce(2)
+    val rows = recorded {
+      obs.span("caller") {
+        Matcher.trainHalving(df, parallelism = 4,
+          candidates = Matcher.defaultHalvingCandidates.take(4),
+          minIter = 1, maxIter = 2, eta = 2)
+      }
+    }
+    val jobs = rows.values.filter(_.jobs > 0)
+    assert(jobs.nonEmpty && jobs.forall(_.path.startsWith("caller")),
+      s"trial jobs escaped the caller's span: $rows")
+    // 4 + 2 trials plus the refit, each a chain of jobs, all under it
+    assert(rows("caller/halving").jobs > 7)
+  }
+
+  test("1,000 calls of one span leave one aggregate row") {
+    obs.drain()
+    (1 to 1000).foreach(_ => obs.span("tick")(()))
+    val rows = obs.drain()
+    assert(rows.map(_.path) == Seq("tick") && rows.head.calls == 1000)
+  }
+}
