@@ -25,10 +25,10 @@ import org.apache.spark.sql.SparkSession
   *
   * Protocol: Bench and Verify call [[drop]] after every query. Memo
   * builders that deliberately share materialized state across queries
-  * ([[queries.SessionMemo]], MatchQueries' stage caches) wrap their builds
-  * in [[retainNew]], which registers every RDD the build leaves persisted
-  * as sweep-exempt. Everything else persisted at sweep time is, by
-  * construction, garbage: its query has already been consumed.
+  * ([[queries.SessionMemo]]) wrap their builds in [[retainNew]], which
+  * registers every RDD the build leaves persisted as sweep-exempt.
+  * Everything else persisted at sweep time is, by construction, garbage:
+  * its query has already been consumed.
   */
 object Sweep {
 

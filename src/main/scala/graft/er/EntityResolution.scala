@@ -15,7 +15,7 @@ import graft.pairs.Pairs
   *
   * ```
   * val cfg    = EntityResolution.Config()
-  * val feats  = EntityResolution.fitFeatures(catalogs, cfg)     // notebook 01
+  * val (pipes, feats) = EntityResolution.fitFeatureModels(catalogs, cfg) // notebook 01
   * val pairs  = EntityResolution.labeledCandidates(feats, golden, cfg) // 02
   * val model  = EntityResolution.train(feats, pairs, cfg)       // 03 (train)
   * val ranked = EntityResolution.scoreAll(feats, pairs.select("idA","idB"), model.model) // 03 (infer)
@@ -47,15 +47,6 @@ object EntityResolution {
       // the buckets the delta's keys hash into, so per-batch merge cost is
       // O(delta + touched buckets), not O(store)
       storeBuckets: Int = 64)
-
-  /** Notebook 01: fit the three feature pipelines over the unioned catalogs
-    * (columns: table, id, name, description, price) and emit the
-    * `abtbuyfeatures`-shaped frame. */
-  def fitFeatures(catalogs: DataFrame, cfg: Config = Config()): DataFrame = {
-    val (_, _, _, feats) =
-      TextFeatures.buildFeatures(catalogs, w2vMaxIter = cfg.w2vMaxIter, seed = cfg.seed)
-    feats
-  }
 
   /** Notebook 02 (candidates): LSH-block the name features of side A
     * against side B; returns (idA, idB) candidate pairs. Joins *distinct
@@ -103,8 +94,10 @@ object EntityResolution {
   case class TrainedMatcher(model: PipelineModel, areaUnderPR: Double)
 
   /** Notebook 03 (train): pairwise distance features → class weights →
-    * stratified split → tuned GBT → AUPR on the held-out split. Each step
-    * runs in an `obs` span under `train`. */
+    * stratified split → GBT → AUPR on the held-out split. A one-point
+    * maxIter × maxDepth grid is one [[Matcher.fit]]; a larger grid runs
+    * through [[Matcher.trainGridMemo]]. Each step runs in an `obs` span
+    * under `train`. */
   def train(feats: DataFrame, labeled: DataFrame,
             cfg: Config = Config()): TrainedMatcher = obs.span("train") {
     val featA = feats.where("table = 'abt'")
@@ -133,7 +126,7 @@ object EntityResolution {
     // scan, every grid fit, the best-model refit, and the held-out
     // evaluation would otherwise each re-execute the attach-features joins
     // + sqdist pipeline (measured ~2× the whole training cost at sf0.1).
-    // The coalesce stays INSIDE trainTuned (training side only) so the
+    // The coalesce stays inside the fit (training side only) so the
     // split sees the plan's row order unchanged. The count fills the cache
     // here, so the attach shows as its own phase, not inside the first fit.
     val weighted = obs.span("distances") {
@@ -142,16 +135,14 @@ object EntityResolution {
     val Seq(tr, te) = obs.span("split") {
       Matcher.stratifiedSplit(weighted, Seq(0.8, 0.2), seed = cfg.seed)
     }
-    // a singleton grid is no search — skip the TVS fit-then-refit double
+    // a one-point grid is no search — fit it once on the whole split
+    val points = (for (i <- cfg.gbtMaxIterGrid; d <- cfg.gbtMaxDepthGrid)
+      yield (Matcher.GbtCandidate(d, 0.1, 1.0), i)).distinct
     val best =
-      if (cfg.gbtMaxIterGrid.size == 1 && cfg.gbtMaxDepthGrid.size == 1)
-        Matcher.trainSingle(tr, seed = cfg.seed,
-          maxIter = cfg.gbtMaxIterGrid.head, maxDepth = cfg.gbtMaxDepthGrid.head,
-          coalesceTo = Some(parts))
+      if (points.size == 1)
+        Matcher.fit(tr, points.head._1, points.head._2, cfg.seed, Some(parts))
       else
-        Matcher.trainTuned(tr, seed = cfg.seed,
-          maxIterGrid = cfg.gbtMaxIterGrid, maxDepthGrid = cfg.gbtMaxDepthGrid,
-          coalesceTo = Some(parts)).bestModel.asInstanceOf[PipelineModel]
+        Matcher.trainGridMemo(tr, points, seed = cfg.seed, coalesceTo = Some(parts)).model
     // heldOutAupr == evaluator.evaluate bit-for-bit (it delegates to the
     // distributed evaluator outside its bounded-collect regime) while
     // skipping the evaluator's ~4 tiny shuffle jobs when the held-out
@@ -187,11 +178,13 @@ object EntityResolution {
   case class FittedPipelines(name: PipelineModel, descript: PipelineModel,
                              price: PipelineModel)
 
-  /** Fit the feature pipelines and keep the fitted models (the artifacts
-    * notebook 01 persists and notebook 03 reloads). */
+  /** Notebook 01: fit the three feature pipelines over the unioned catalogs
+    * (columns: table, id, name, description, price). Returns the fitted
+    * models (the artifacts notebook 01 persists and notebook 03 reloads)
+    * and the `abtbuyfeatures`-shaped frame. */
   def fitFeatureModels(catalogs: DataFrame,
                        cfg: Config = Config()): (FittedPipelines, DataFrame) = {
-    val (n, d, p, feats) = graft.features.TextFeatures.buildFeatures(
+    val (n, d, p, feats) = TextFeatures.buildFeatures(
       catalogs, w2vMaxIter = cfg.w2vMaxIter, seed = cfg.seed)
     (FittedPipelines(n, d, p), feats)
   }

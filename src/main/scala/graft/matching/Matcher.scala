@@ -4,7 +4,6 @@ import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier
 import org.apache.spark.ml.evaluation.BinaryClassificationEvaluator
 import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.ml.functions.vector_to_array
-import org.apache.spark.ml.tuning.{CrossValidator, CrossValidatorModel, ParamGridBuilder, TrainValidationSplit, TrainValidationSplitModel}
 import org.apache.spark.ml.{Pipeline, PipelineModel}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
@@ -15,10 +14,13 @@ import graft.obs
   * `03_Train & Deploy Model.py:120-314,434-446,567-579`).
   *
   * Substitutions recorded in SURVEY §7.6: GBTClassifier for XGBoost (same
-  * gradient-boosted-tree family), ParamGrid + TrainValidationSplit for
-  * hyperopt TPE, native `.transform` scoring for the pyfunc UDF. Training
-  * never leaves Spark — the reference's `toPandas()` export (`03:120`) is
-  * exactly the driver-side collect this engine forbids at scale.
+  * gradient-boosted-tree family), native `.transform` scoring for the
+  * pyfunc UDF. Training has one fit ([[fit]]) and one search loop
+  * ([[withSearchContext]]) behind the reference's hyperopt TPE: batch TPE
+  * ([[trainTpe]]), successive halving ([[trainHalving]]) and an explicit
+  * grid ([[trainGridMemo]]). Training never leaves Spark — the reference's
+  * `toPandas()` export (`03:120`) is exactly the driver-side collect this
+  * engine forbids at scale.
   */
 object Matcher {
 
@@ -92,13 +94,6 @@ object Matcher {
     df.withColumn(outCol, expr)
   }
 
-  /** Frame-per-split form of [[withHashSplit]]. */
-  def hashSplit(df: DataFrame, keyCols: Seq[String],
-                fractions: Seq[Double]): Seq[DataFrame] = {
-    val tagged = withHashSplit(df, keyCols, fractions)
-    fractions.indices.map(i => tagged.where(col("split") === i).drop("split"))
-  }
-
   /** M3 — 'balanced' class weights as a weight column (`03:156-161`). */
   def addClassWeights(df: DataFrame, labelCol: String = "label",
                       weightCol: String = "weight"): DataFrame = {
@@ -109,91 +104,6 @@ object Matcher {
       .crossJoin(broadcast(total))
       .withColumn(weightCol, col("tot").cast("double") / (col("k") * col("n")))
       .drop("n", "tot", "k")
-  }
-
-  /** M4+M5 — assemble distance features, grid-search a GBT classifier with a
-    * train/validation split, parallel trials (`03:164-253`).
-    *
-    * `coalesceTo`: boosted-tree training runs many short Spark jobs per
-    * iteration; on a small training set spread over many partitions the
-    * per-task overhead dominates. Callers that know the row count (e.g.
-    * EntityResolution.train after its sampling pass) pass a partition
-    * target sized to the data; None leaves partitioning untouched. */
-  def trainTuned(train: DataFrame, seed: Long = 42L, parallelism: Int = 4,
-                 maxIterGrid: Seq[Int] = Seq(10, 20),
-                 maxDepthGrid: Seq[Int] = Seq(3, 5),
-                 coalesceTo: Option[Int] = None): TrainValidationSplitModel = obs.span("gbt_fit") {
-    val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
-    val asm = new VectorAssembler().setInputCols(FeatureCols)
-      .setOutputCol("features").setHandleInvalid("keep")
-    val gbt = new GBTClassifier().setLabelCol("label").setWeightCol("weight")
-      .setFeaturesCol("features").setSeed(seed)
-    val grid = new ParamGridBuilder()
-      .addGrid(gbt.maxIter, maxIterGrid)
-      .addGrid(gbt.maxDepth, maxDepthGrid)
-      .build()
-    new TrainValidationSplit()
-      .setEstimator(new Pipeline().setStages(Array(asm, gbt)))
-      .setEvaluator(evaluator)
-      .setEstimatorParamMaps(grid)
-      .setTrainRatio(0.8).setParallelism(parallelism).setSeed(seed)
-      .fit(prepared)
-  }
-
-  /** Degenerate-search fast path: a 1×1 grid has nothing to select, so a
-    * TrainValidationSplit would fit the one candidate on 80%, "evaluate"
-    * it unopposed, then refit on 100% — two boosted-tree fits for zero
-    * search. Fit once on the full training set instead. Callers with real
-    * grids go through [[trainTuned]]/[[trainCrossValidated]]. */
-  def trainSingle(train: DataFrame, seed: Long = 42L,
-                  maxIter: Int = 10, maxDepth: Int = 3,
-                  coalesceTo: Option[Int] = None): PipelineModel = obs.span("gbt_fit") {
-    val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
-    val asm = new VectorAssembler().setInputCols(FeatureCols)
-      .setOutputCol("features").setHandleInvalid("keep")
-    val gbt = new GBTClassifier().setLabelCol("label").setWeightCol("weight")
-      .setFeaturesCol("features").setSeed(seed)
-      .setMaxIter(maxIter).setMaxDepth(maxDepth)
-    new Pipeline().setStages(Array(asm, gbt)).fit(prepared)
-  }
-
-  /** M4 variant — coarse-to-fine two-stage grid search, the grid-world
-    * analogue of the reference's adaptive hyperopt/TPE budget
-    * (`03:164-253`, 9 dims × up to 1000 sequential evals): a coarse pass
-    * over the caller's grid, then a second pass over a bracket around the
-    * winning cell (± half the mean grid spacing, clamped to valid values —
-    * at a grid edge the bracket extends outward, like TPE exploring open
-    * space). Both passes reuse the same TrainValidationSplit machinery and
-    * seed; the better-validated pass wins. Budget: |coarse| + at most 9
-    * refined fits — batch-parallel, unlike TPE's sequential chain. */
-  def trainRefined(train: DataFrame, seed: Long = 42L, parallelism: Int = 4,
-                   maxIterGrid: Seq[Int] = Seq(10, 20),
-                   maxDepthGrid: Seq[Int] = Seq(3, 5),
-                   coalesceTo: Option[Int] = None): TrainValidationSplitModel = {
-    val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
-    val coarse = trainTuned(prepared, seed, parallelism, maxIterGrid, maxDepthGrid)
-    val bestGbt = coarse.bestModel.asInstanceOf[PipelineModel]
-      .stages.last.asInstanceOf[GBTClassificationModel]
-    def bracket(grid: Seq[Int], best: Int, floor: Int, ceil: Int): Seq[Int] = {
-      val sorted = grid.distinct.sorted
-      val step =
-        if (sorted.size > 1)
-          math.max(1, (sorted.last - sorted.head) / (2 * (sorted.size - 1)))
-        else 0
-      Seq(best - step, best, best + step)
-        .filter(v => v >= floor && v <= ceil).distinct
-    }
-    val fineIter = bracket(maxIterGrid, bestGbt.getMaxIter,
-      floor = 1, ceil = Int.MaxValue)
-    // Spark's DecisionTreeParams validator caps maxDepth at 30
-    val fineDepth = bracket(maxDepthGrid, bestGbt.getMaxDepth,
-      floor = 1, ceil = 30)
-    if (fineIter.size <= 1 && fineDepth.size <= 1) coarse
-    else {
-      val fine = trainTuned(prepared, seed, parallelism, fineIter, fineDepth)
-      if (fine.validationMetrics.max >= coarse.validationMetrics.max) fine
-      else coarse
-    }
   }
 
   /** A point in the boosted-tree hyperparameter space searched by
@@ -219,24 +129,8 @@ object Matcher {
                           weightScale: Double = 1.0,
                           minInfoGain: Double = 0.0)
 
-  /** One candidate's assembler+GBT pipeline fit at the given boosting
-    * budget — the shared trainer body of the halving, TPE, and
-    * memoized-grid searches. `weightScale` applies as a narrow derived
-    * column (positive-class weights × scale — the scale_pos_weight
-    * semantics); at the default 1.0 the input frame passes through
-    * untouched, so pre-existing candidates fit bit-identically. */
-  private def fitCandidate(seed: Long, c: GbtCandidate, iters: Int,
-                           on: DataFrame): PipelineModel = {
-    val train =
-      if (c.weightScale == 1.0) on
-      else on.withColumn("weight",
-        when(col("label") === 1, col("weight") * c.weightScale)
-          .otherwise(col("weight")))
-    val asm = new VectorAssembler().setInputCols(FeatureCols)
-      .setOutputCol("features").setHandleInvalid("keep")
-    val gbt = gbtFor(seed, c, iters)
-    new Pipeline().setStages(Array(asm, gbt)).fit(train)
-  }
+  private def assembler: VectorAssembler = new VectorAssembler().setInputCols(FeatureCols)
+    .setOutputCol("features").setHandleInvalid("keep")
 
   private def gbtFor(seed: Long, c: GbtCandidate, iters: Int): GBTClassifier =
     new GBTClassifier().setLabelCol("label").setWeightCol("weight")
@@ -247,6 +141,32 @@ object Matcher {
       .setFeatureSubsetStrategy(c.featureSubsetStrategy)
       .setMinInfoGain(c.minInfoGain)
 
+  /** `weightScale` applies as a narrow derived column (positive-class
+    * weights × scale — the scale_pos_weight semantics); at the default 1.0
+    * the input frame passes through untouched. */
+  private def scaleWeights(c: GbtCandidate, df: DataFrame): DataFrame =
+    if (c.weightScale == 1.0) df
+    else df.withColumn("weight",
+      when(col("label") === 1, col("weight") * c.weightScale).otherwise(col("weight")))
+
+  /** M5 — fit one candidate's assembler+GBT pipeline at `iters` boosting
+    * rounds (`03:203-225`): the engine's one GBT fit, used directly for a
+    * one-point grid and as every search's winner refit.
+    * `GbtCandidate(d, 0.1, 1.0)` carries the GBT library defaults in every
+    * dim but depth, so it is the plain `GBTClassifier` with maxDepth `d`.
+    *
+    * `coalesceTo`: boosted-tree training runs many short Spark jobs per
+    * iteration; on a small training set spread over many partitions the
+    * per-task overhead dominates. Callers that know the row count (e.g.
+    * EntityResolution.train after its sampling pass) pass a partition
+    * target sized to the data; None leaves partitioning untouched. */
+  def fit(train: DataFrame, candidate: GbtCandidate, iters: Int, seed: Long = 42L,
+          coalesceTo: Option[Int] = None): PipelineModel = obs.span("gbt_fit") {
+    val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
+    new Pipeline().setStages(Array(assembler, gbtFor(seed, candidate, iters)))
+      .fit(scaleWeights(candidate, prepared))
+  }
+
   /** Trial fit on a PRE-ASSEMBLED frame (optimization round 14, guide
     * §1.2 per-task work): the VectorAssembler is a deterministic row-wise
     * transformer identical across every candidate, so assembling once per
@@ -255,17 +175,11 @@ object Matcher {
     * the same order reach the GBT, and the same rawPrediction reaches the
     * evaluator — while the per-trial assembly pass (and its metadata
     * first() job) is paid once instead of ~33 times across the m4/m5
-    * searches. Winner REFITS still go through [[fitCandidate]]: callers
-    * consume the refit as a full PipelineModel. */
+    * searches. Winner REFITS still go through [[fit]]: callers consume
+    * the refit as a full PipelineModel. */
   private def fitTrialGbt(seed: Long, c: GbtCandidate, iters: Int,
-                          assembled: DataFrame): org.apache.spark.ml.classification.GBTClassificationModel = {
-    val train =
-      if (c.weightScale == 1.0) assembled
-      else assembled.withColumn("weight",
-        when(col("label") === 1, col("weight") * c.weightScale)
-          .otherwise(col("weight")))
-    gbtFor(seed, c, iters).fit(train)
-  }
+                          assembled: DataFrame): GBTClassificationModel =
+    gbtFor(seed, c, iters).fit(scaleWeights(c, assembled))
 
   /** 16-point default candidate grid: the 4×2×2 depth/shrinkage/
     * subsampling grid, with the three round-12 dimensions
@@ -294,7 +208,8 @@ object Matcher {
     }
   }
 
-  /** Outcome of a [[trainHalving]] search: the winner refit on the full
+  /** Outcome of a search ([[trainHalving]], [[trainTpe]],
+    * [[trainGridMemo]]): the winner refit on the full
     * training input at the final budget, its held-out validation AUPR
     * (measured BEFORE the refit, on data the winner never trained on),
     * and the audit trail of the schedule. */
@@ -393,20 +308,30 @@ object Matcher {
     val globalMisses = new java.util.concurrent.atomic.AtomicLong
   }
 
-  /** Shared scaffolding of the three memo-compatible searches
-    * ([[trainHalving]], [[trainTpe]], [[trainGridMemo]]): ONE place owns
-    * the prepared-frame cache, the exact-proportion 0.8/0.2 stratified
-    * split, the trial thread pool, and the teardown. The [[FitMemo]]
-    * validity contract — identical input, seed, and split across every
-    * search sharing a memo — holds BECAUSE the searches cannot drift
-    * apart here: a split change is one edit, applied to all three or
-    * none. Both split frames materialize up front (every fit scans them
-    * repeatedly, and the stratified split's rank window must not
-    * re-evaluate per boosting iteration). */
-  private def withSearchContext[A](train: DataFrame, seed: Long,
-      parallelism: Int, coalesceTo: Option[Int])(
-      body: (DataFrame, DataFrame, DataFrame,
-             scala.concurrent.ExecutionContext) => A): A = {
+  /** The one search loop behind [[trainHalving]], [[trainTpe]] and
+    * [[trainGridMemo]], run inside the search's `obs` span (`halving`,
+    * `tpe`, `grid`). ONE place owns the prepared-frame cache, the
+    * exact-proportion 0.8/0.2 stratified split, the trial thread pool,
+    * the memo routing, and the teardown. The [[FitMemo]] validity
+    * contract — identical input, seed, and split across every search
+    * sharing a memo — holds BECAUSE the searches cannot drift apart here:
+    * a split change is one edit, applied to all three or none. Both split
+    * frames materialize up front (every fit scans them repeatedly, and the
+    * stratified split's rank window must not re-evaluate per boosting
+    * iteration).
+    *
+    * The body gets two functions: `trials(points)` scores every
+    * (candidate, budget) point concurrently on the pool — each one fitted
+    * on the 80% split and scored by held-out AUPR on the 20% — and
+    * `refit(c, iters)` fits the winner on the FULL input through [[fit]].
+    * Both go through the caller's memo, or a private one when the caller
+    * shares none. */
+  private def withSearchContext[A](span: String, train: DataFrame, seed: Long,
+      parallelism: Int, coalesceTo: Option[Int], memo: Option[FitMemo])(
+      body: (Seq[(GbtCandidate, Int)] => Seq[Double],
+             (GbtCandidate, Int) => PipelineModel) => A): A = obs.span(span) {
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration.Duration
     val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train).cache()
     val Seq(tr0, va0) = stratifiedSplit(prepared, Seq(0.8, 0.2), seed = seed)
     // the split frames are cached PRE-ASSEMBLED (see [[fitTrialGbt]]):
@@ -427,22 +352,27 @@ object Matcher {
     // leaves split membership untouched (the seeded draw happens on the
     // pre-shuffle side) and gives trials the SAME partition count the
     // winner refit already fits at (`prepared` is coalesced to the same
-    // value) — the established trainSingle/EntityResolution.train
-    // semantics. NOTE this changes which partition index a trial fit's
+    // value). NOTE this changes which partition index a trial fit's
     // rows sit in, so subsample draws (subsamplingRate < 1) and stats
     // accumulation order change ONCE relative to round 14 — trial metrics
     // and winners may differ; every consumer contract is
     // partition-schedule-invariant (fixed eval/budget counts, AUPR bound
     // booleans) and MatcherSpec pins the new values.
-    val asm = new VectorAssembler().setInputCols(FeatureCols)
-      .setOutputCol("features").setHandleInvalid("keep")
     val Seq(tr, va) = Seq(tr0, va0).map { df =>
-      val assembled = asm.transform(df)
+      val assembled = assembler.transform(df)
       coalesceTo.map(n => assembled.coalesce(n)).getOrElse(assembled).cache()
     }
+    val m = memo.getOrElse(new FitMemo)
+    def trial(c: GbtCandidate, iters: Int): Double =
+      m.trial(c, iters)(heldOutAupr(fitTrialGbt(seed, c, iters, tr).transform(va)))
+    def refit(c: GbtCandidate, iters: Int): PipelineModel =
+      m.refit(c, iters)(fit(prepared, c, iters, seed))
     val pool = java.util.concurrent.Executors.newFixedThreadPool(parallelism)
-    val ec = scala.concurrent.ExecutionContext.fromExecutorService(pool)
-    try body(prepared, tr, va, ec)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutorService(pool)
+    def trials(points: Seq[(GbtCandidate, Int)]): Seq[Double] = Await.result(
+      Future.sequence(points.map { case (c, iters) => Future(trial(c, iters)) }),
+      Duration.Inf)
+    try body(trials, refit)
     finally {
       pool.shutdown()
       tr.unpersist(blocking = false)
@@ -462,8 +392,7 @@ object Matcher {
     * vs n·maxIter for the full grid at full budget; here 16 candidates are
     * searched for ~26% of the rounds a 16-cell grid at `maxIter` would
     * burn, and unlike TPE's sequential chain every rung is
-    * thread-parallel (`parallelism` concurrent Spark fits, the same
-    * scheduling shape TrainValidationSplit uses).
+    * thread-parallel (`parallelism` concurrent Spark fits).
     *
     * Deterministic: fixed split, fixed seeds, stable sort with a
     * candidate-order tie-break. The train/validation split is the same
@@ -472,35 +401,15 @@ object Matcher {
                    candidates: Seq[GbtCandidate] = defaultHalvingCandidates,
                    minIter: Int = 5, maxIter: Int = 45, eta: Int = 3,
                    coalesceTo: Option[Int] = None,
-                   memo: Option[FitMemo] = None): HalvingResult = obs.span("halving") {
+                   memo: Option[FitMemo] = None): HalvingResult = {
     require(candidates.nonEmpty && eta >= 2 && minIter >= 1 && maxIter >= minIter)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    withSearchContext(train, seed, parallelism, coalesceTo) { (prepared, tr, va, ec0) =>
-      implicit val ec: ExecutionContext = ec0
-      def scoredTrial(c: GbtCandidate, iters: Int): (GbtCandidate, Double) = {
-        def compute: Double = {
-          val mod = fitTrialGbt(seed, c, iters, tr)
-          heldOutAupr(mod.transform(va))
-        }
-        (c, memo match {
-          case Some(mm) => mm.trial(c, iters)(compute)
-          case None => compute
-        })
-      }
-      def refitFull(c: GbtCandidate, iters: Int): PipelineModel = memo match {
-        case Some(mm) => mm.refit(c, iters)(fitCandidate(seed, c, iters, prepared))
-        case None => fitCandidate(seed, c, iters, prepared)
-      }
+    withSearchContext("halving", train, seed, parallelism, coalesceTo, memo) { (trials, refit) =>
       var alive = candidates.toIndexedSeq
       var budget = minIter
       var evals = 0
       var lastScores: Seq[(GbtCandidate, Double)] = Nil
       while (alive.size > 1) {
-        val b = budget
-        val scored = Await.result(
-          Future.sequence(alive.map(c => Future(scoredTrial(c, b)))),
-          Duration.Inf)
+        val scored = alive.zip(trials(alive.map((_, budget))))
         evals += alive.size
         // stable sort: ties resolve to the earlier candidate, so the
         // schedule is reproducible across runs and thread interleavings
@@ -512,14 +421,13 @@ object Matcher {
       }
       if (lastScores.isEmpty) { // degenerate 1-candidate "search"
         budget = maxIter
-        lastScores = Seq(scoredTrial(alive.head, budget))
+        lastScores = Seq(alive.head -> trials(Seq((alive.head, budget))).head)
         evals += 1
       }
       val (winner, winnerMetric) = lastScores.head
-      // like TrainValidationSplit: refit the selected config on ALL the
-      // training input (train + validation) at the final budget
-      HalvingResult(refitFull(winner, budget), winner, budget,
-        winnerMetric, evals)
+      // refit the selected config on ALL the training input (train +
+      // validation) at the final budget
+      HalvingResult(refit(winner, budget), winner, budget, winnerMetric, evals)
     }
   }
 
@@ -572,10 +480,7 @@ object Matcher {
       subsampleRange._2 <= 1.0)
     require(weightScaleRange._1 > 0.0 && weightScaleRange._1 <= weightScaleRange._2)
     require(minInfoGainRange._1 >= 0.0 && minInfoGainRange._1 <= minInfoGainRange._2)
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    withSearchContext(train, seed, parallelism, coalesceTo) { (prepared, tr, va, ec0) =>
-      implicit val ec: ExecutionContext = ec0
+    withSearchContext("tpe", train, seed, parallelism, coalesceTo, memo) { (trials, refit) =>
       val grid = candidates.toIndexedSeq
       // the grid seeds exploration (init trials come from it), but the
       // SEARCH SPACE is continuous in stepSize/subsamplingRate — cap is
@@ -584,22 +489,9 @@ object Matcher {
       // seeded deterministic exploration order for the init trials
       val initOrder = grid.indices
         .sortBy(i => (scala.util.hashing.MurmurHash3.productHash((seed, i)), i))
-      val trials = scala.collection.mutable.ArrayBuffer[(GbtCandidate, Double)]()
-      def evalBatch(cs: Seq[GbtCandidate]): Unit = {
-        val scored = Await.result(
-          Future.sequence(cs.map(c => Future {
-            def compute: Double = {
-              val mod = fitTrialGbt(seed, c, iters, tr)
-              heldOutAupr(mod.transform(va))
-            }
-            (c, memo match {
-              case Some(mm) => mm.trial(c, iters)(compute)
-              case None => compute
-            })
-          })),
-          Duration.Inf)
-        trials ++= scored
-      }
+      val history = scala.collection.mutable.ArrayBuffer[(GbtCandidate, Double)]()
+      def evalBatch(cs: Seq[GbtCandidate]): Unit =
+        history ++= cs.zip(trials(cs.map((_, iters))))
       evalBatch(initOrder.take(math.min(nInit, cap)).map(grid))
       // ---- density machinery ----------------------------------------
       // categorical dims (maxDepth, minInstancesPerNode,
@@ -643,8 +535,8 @@ object Matcher {
           .map(v => math.rint(v * 1e6) / 1e6) // canonical 1e-6 precision
           .distinct.sorted
       }
-      while (trials.size < cap) {
-        val done = trials.toIndexedSeq
+      while (history.size < cap) {
+        val done = history.toIndexedSeq
         val ranked = done.zipWithIndex
           .sortBy { case ((_, m), i) => (-m, i) }.map(_._1)
         val nGood = math.max(1, math.ceil(gamma * done.size).toInt)
@@ -678,7 +570,7 @@ object Matcher {
           grid.map(_.weightScale), wLo, wHi)
         val gainPool = contPool(good.map(_.minInfoGain),
           grid.map(_.minInfoGain), gLo, gHi)
-        val seen = trials.map(_._1).toSet
+        val seen = history.map(_._1).toSet
         // per-VALUE density ratios memoized before the cartesian: each
         // pool has ~a dozen values, so the l/g ratio is evaluated
         // O(Σ|pool_i|) times (~70 Parzen sums) instead of once per
@@ -714,24 +606,19 @@ object Matcher {
             c.minInstancesPerNode, c.featureSubsetStrategy, c.weightScale,
             c.minInfoGain) }
           .map(_._1)
-          .take(math.min(batch, cap - trials.size))
+          .take(math.min(batch, cap - history.size))
         // the continuous pool always holds unseen points (midpoints
         // refine between any two seen values); this guards the
         // degenerate all-seen corner so the loop can never spin
         if (next.isEmpty)
           throw new IllegalStateException(
-            s"TPE proposal drained: ${trials.size} trials < cap $cap")
+            s"TPE proposal drained: ${history.size} trials < cap $cap")
         evalBatch(next)
       }
-      val (winner, winnerMetric) = trials.zipWithIndex
+      val (winner, winnerMetric) = history.zipWithIndex
         .sortBy { case ((_, m), i) => (-m, i) }.head._1
       // same refit-on-everything convention as trainHalving
-      val refit = memo match {
-        case Some(mm) =>
-          mm.refit(winner, iters)(fitCandidate(seed, winner, iters, prepared))
-        case None => fitCandidate(seed, winner, iters, prepared)
-      }
-      HalvingResult(refit, winner, iters, winnerMetric, trials.size)
+      HalvingResult(refit(winner, iters), winner, iters, winnerMetric, history.size)
     }
   }
 
@@ -741,9 +628,9 @@ object Matcher {
     * [[trainHalving]]/[[trainTpe]]: fit each point on the 80% stratum,
     * evaluate held-out AUPR on the 20%, pick the winner by
     * (metric desc, point order), refit it on the FULL input at its
-    * budget. This is the TrainValidationSplit replacement for a tiny
-    * grid once a session runs several searches over one training frame —
-    * routing m5's {5,10}-iteration grid through here puts all three
+    * budget. This is the engine's plain grid search (EntityResolution.train
+    * runs its maxIter × maxDepth grid through it), and routing m5's
+    * {5,10}-iteration grid through here puts all three
     * training queries in ONE candidate space and split, so any
     * (candidate, budget) fit that coincides across the searches is paid
     * once, bit-identically (the FitMemo validity contract: same input,
@@ -756,58 +643,13 @@ object Matcher {
                     memo: Option[FitMemo] = None): HalvingResult = {
     require(points.nonEmpty && points.distinct.size == points.size,
       "grid points must be non-empty and distinct")
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    withSearchContext(train, seed, parallelism, coalesceTo) { (prepared, tr, va, ec0) =>
-      implicit val ec: ExecutionContext = ec0
-      val scored = Await.result(Future.sequence(points.map { case (c, iters) =>
-        Future {
-          def compute: Double = {
-            val mod = fitTrialGbt(seed, c, iters, tr)
-            heldOutAupr(mod.transform(va))
-          }
-          ((c, iters), memo match {
-            case Some(mm) => mm.trial(c, iters)(compute)
-            case None => compute
-          })
-        }
-      }), Duration.Inf)
+    withSearchContext("grid", train, seed, parallelism, coalesceTo, memo) { (trials, refit) =>
       // stable winner: ties resolve to the earlier point, like every
       // other search here
-      val ((winner, budget), metric) = scored.zipWithIndex
+      val ((winner, budget), metric) = points.zip(trials(points)).zipWithIndex
         .sortBy { case ((_, m), i) => (-m, i) }.head._1
-      val refit = memo match {
-        case Some(mm) =>
-          mm.refit(winner, budget)(fitCandidate(seed, winner, budget, prepared))
-        case None => fitCandidate(seed, winner, budget, prepared)
-      }
-      HalvingResult(refit, winner, budget, metric, points.size)
+      HalvingResult(refit(winner, budget), winner, budget, metric, points.size)
     }
-  }
-
-  /** M4 variant — k-fold CrossValidator over the same grid (the other
-    * distributed-search surface SURVEY §7.3 maps hyperopt to). Prefer
-    * [[trainTuned]]'s single train/validation split when data is plentiful
-    * (k-fold costs k× the fits for variance reduction the pair corpus
-    * rarely needs); CV earns its cost on small labeled sets. */
-  def trainCrossValidated(train: DataFrame, seed: Long = 42L, folds: Int = 3,
-                          parallelism: Int = 4,
-                          maxIterGrid: Seq[Int] = Seq(10, 20),
-                          maxDepthGrid: Seq[Int] = Seq(3, 5)): CrossValidatorModel = {
-    val asm = new VectorAssembler().setInputCols(FeatureCols)
-      .setOutputCol("features").setHandleInvalid("keep")
-    val gbt = new GBTClassifier().setLabelCol("label").setWeightCol("weight")
-      .setFeaturesCol("features").setSeed(seed)
-    val grid = new ParamGridBuilder()
-      .addGrid(gbt.maxIter, maxIterGrid)
-      .addGrid(gbt.maxDepth, maxDepthGrid)
-      .build()
-    new CrossValidator()
-      .setEstimator(new Pipeline().setStages(Array(asm, gbt)))
-      .setEvaluator(evaluator)
-      .setEstimatorParamMaps(grid)
-      .setNumFolds(folds).setParallelism(parallelism).setSeed(seed)
-      .fit(train)
   }
 
   /** M6 — area under the precision-recall curve (`03:218,311-314`). */

@@ -1,8 +1,8 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.Tables
+import graft.{Tables, obs}
 import graft.functions.WeightedMean
 import graft.ops.{AsOf, Resample}
 import graft.streaming.EventStreams
@@ -32,57 +32,80 @@ object BreadthQueries {
     * the two middle order statistics (approx_percentile's rank error is
     * deterministically ≤ n/accuracy, so quantiles 0.5 ∓ 0.004 at accuracy
     * 1000 bound rank 0.5·(n−1) from both sides with ~3× margin for any
-    * n ≳ 400); pass 2 counts the rows below the band and collects the
-    * ~0.8% of rows inside it, sorted. The interpolation replicates
-    * Percentile.getPercentile operation for operation: position
-    * p = 0.5·(n−1) (the same long→double multiply), v[⌊p⌋] when p is
-    * integral or the bracketing values coincide, else
+    * n ≳ 400); pass 2 counts the rows below and at each end of the band
+    * and collects the ~0.8% of rows strictly inside it, sorted. A band
+    * holding more than `bandCap` inside rows is NARROWED instead of
+    * collected: approx_percentile re-brackets the two order statistics
+    * among the inside rows, at their rank offsets within them and with the
+    * same margins, and the counts are taken again — each round keeps
+    * ~0.8% of the band, so the loop ends after O(log(n / bandCap)) rounds
+    * (and always: an end that is not an answer moves strictly inward).
+    * The interpolation replicates Percentile.getPercentile operation for
+    * operation: position p = 0.5·(n−1) (the same long→double multiply),
+    * v[⌊p⌋] when p is integral or the bracketing values coincide, else
     * (⌈p⌉−p)·v[⌊p⌋] + (p−⌊p⌋)·v[⌈p⌉] — the same doubles through the same
     * arithmetic, so the result is equal bit-for-bit (pinned by
     * BreadthSpec against percentile() on the real fixture plus
     * odd/even/duplicate-heavy frames). The band certificate
-    * (cLo ≤ ⌊p⌋ ∧ ⌈p⌉ < cLo + |band|, |band| ≤ cap) is CHECKED; any
-    * failure delegates to the percentile() aggregate, so the exact
-    * contract can never silently weaken. `values` is scanned twice (plus
-    * once more for the tiny band collect) — cheap column scans in place
-    * of the distinct-value buffer. Every pass reads the column cast to
-    * double, the values percentile() itself interpolates, so a decimal
-    * column's passes agree on band membership. */
+    * (#(x < lo) ≤ ⌊p⌋ ∧ ⌈p⌉ < #(x ≤ hi)) is CHECKED every round; a failed
+    * certificate or a NULL bracket delegates to the percentile()
+    * aggregate under the `median_fallback` span, so the exact contract
+    * can never silently weaken. A band within the cap costs two scans of
+    * `values` plus the band collect; each narrowing round adds two scans.
+    * Every pass reads the column cast to double, the values percentile()
+    * itself interpolates, so a decimal column's passes agree on band
+    * membership. */
   private[graft] def exactMedianTwoPass(values: DataFrame, c: String,
                                         bandCap: Long = 200000L): Option[Double] = {
     import values.sparkSession.implicits._
-    def fallback: Option[Double] = {
+    def fallback: Option[Double] = obs.span("median_fallback") {
       val r = values.agg(expr(s"percentile($c, 0.5)")).head()
       if (r.isNullAt(0)) None else Some(r.getDouble(0))
     }
     val x = col(c).cast("double")
-    val r1 = values.agg(count(x).as("n"),
-      percentile_approx(x, array(lit(0.496), lit(0.504)), lit(1000)).as("bracket")).head()
+    def bracket(p1: Double, p2: Double): Column = percentile_approx(x,
+      array(lit(math.max(0.0, p1)), lit(math.min(1.0, p2))), lit(1000))
+    def rows(cond: Column): Column = sum(when(cond, 1L).otherwise(0L))
+    val r1 = values.agg(count(x).as("n"), bracket(0.496, 0.504).as("bracket")).head()
     val n = r1.getLong(0)
+    val pos = 0.5 * (n - 1)
+    val (lower, higher) = (pos.floor.toLong, pos.ceil.toLong)
+    def interpolate(vLower: Double, vHigher: Double): Double =
+      if (higher == lower || vHigher == vLower) vLower
+      else (higher - pos) * vLower + (pos - lower) * vHigher
+    @scala.annotation.tailrec
+    def narrow(lo: Double, hi: Double): Option[Double] = {
+      val r2 = values.agg(rows(x < lo), rows(x <= lo), rows(x < hi), rows(x <= hi)).head()
+      val (ltLo, leLo, ltHi, leHi) = (r2.getLong(0), r2.getLong(1), r2.getLong(2), r2.getLong(3))
+      val inside = x > lo && x < hi
+      val nInside = math.max(0L, ltHi - leLo)
+      // ranks below leLo hold lo, ranks from ltHi on hold hi
+      def atEnd(k: Long): Option[Double] =
+        if (k < leLo) Some(lo) else if (k >= ltHi) Some(hi) else None
+      if (ltLo > lower || higher >= leHi) fallback
+      else (atEnd(lower), atEnd(higher)) match {
+        case (Some(vl), Some(vh)) => Some(interpolate(vl, vh))
+        case _ if nInside <= bandCap =>
+          val band = values.where(inside).select(x.as("x"))
+            .sort("x").as[Double].collect() // bounded: nInside ≤ bandCap
+          def at(k: Long): Double = atEnd(k).getOrElse(band((k - leLo).toInt))
+          Some(interpolate(at(lower), at(higher)))
+        case (endLower, endHigher) =>
+          val rb = values.where(inside).agg(bracket(
+            (lower - leLo).toDouble / nInside - 0.004,
+            (higher - leLo + 1).toDouble / nInside + 0.004)).head()
+          if (rb.isNullAt(0)) fallback
+          else {
+            val b = rb.getSeq[Double](0)
+            narrow(endLower.getOrElse(b(0)), endHigher.getOrElse(b(1)))
+          }
+      }
+    }
     if (n == 0L) None
     else if (r1.isNullAt(1)) fallback
     else {
-      val bracket = r1.getSeq[Double](1)
-      val (lo, hi) = (bracket(0), bracket(1))
-      val pos = 0.5 * (n - 1)
-      val (lower, higher) = (pos.floor.toLong, pos.ceil.toLong)
-      val r2 = values.agg(
-        sum(when(x < lo, 1L).otherwise(0L)).as("c_lo"),
-        sum(when(x.between(lo, hi), 1L).otherwise(0L)).as("band_n")).head()
-      val (cLo, bandN) = (r2.getLong(0), r2.getLong(1))
-      if (cLo > lower || higher >= cLo + bandN || bandN > bandCap) fallback
-      else {
-        val band = values.select(x.as("x"))
-          .where(col("x").between(lo, hi))
-          .sort("x").as[Double].collect() // bounded: band_n ≤ bandCap
-        val vLower = band((lower - cLo).toInt)
-        if (higher == lower) Some(vLower)
-        else {
-          val vHigher = band((higher - cLo).toInt)
-          if (vHigher == vLower) Some(vLower)
-          else Some((higher - pos) * vLower + (pos - lower) * vHigher)
-        }
-      }
+      val b = r1.getSeq[Double](1)
+      narrow(b(0), b(1))
     }
   }
 

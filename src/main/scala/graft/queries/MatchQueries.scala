@@ -27,56 +27,15 @@ object MatchQueries {
 
   /** Fitted artifacts are expensive; the reference itself fits once and
     * reuses the persisted models across notebooks (`01:517-531` →
-    * `03:357-429`). Mirror that: memoize the fitted feature stage and the
-    * scored flagship per (session, dir, filter) so queries sharing a stage
-    * (er_flagship_match / x2 / m5) fit it once per JVM. */
+    * `03:357-429`). Mirror that: the feature stage, the trained matcher,
+    * the scored and ranked flagship frames, and the m4/m5 training frame
+    * are each built once per (session, dir, filter) through
+    * [[SessionMemo.value]], so queries sharing a stage
+    * (er_flagship_match / x2 / m5) fit it once per session. Every build
+    * materializes what it caches (a `count()`), so the memo's sweep
+    * exemption covers it. */
   private case class Stage(feats: DataFrame, golden: DataFrame,
                            pipes: EntityResolution.FittedPipelines)
-  // Keyed on sessionUUID (stable and unique per session), not
-  // identityHashCode (collidable, and it would pin DataFrames of stopped
-  // contexts forever); entries of stopped contexts are evicted on access.
-  private val stageCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), Stage]()
-  private val matcherCache =
-    scala.collection.concurrent.TrieMap[(String, String, String),
-      (PipelineModel, DataFrame)]()
-  private val flagshipCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]()
-  // the FULL scored candidate frame (pre-ranking): er_flagship_match's
-  // top-500 rank and er_uncertainty's least-confident-100 rank are two
-  // different cuts of the SAME deterministic scoring pass — uncached,
-  // each paid the 906k-pair distance-attach + model transform again
-  // (optimization round 14, guide §1.2)
-  private val scoredCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]()
-  // the labeled/distance-featured/weighted frame m4 AND m5 both search
-  // over — derived once per (session, dir), not once per query
-  private val trainingFrameCache =
-    scala.collection.concurrent.TrieMap[(String, String, String), DataFrame]()
-
-  // Weak references so THIS map never extends a session's lifetime. Note
-  // the stage caches above still pin their sessions (their DataFrames hold
-  // strong refs) until the next cacheKey call's isStopped sweep — the weak
-  // ref only guarantees liveSessions itself is never the last holder.
-  private val liveSessions =
-    scala.collection.concurrent.TrieMap[String, java.lang.ref.WeakReference[SparkSession]]()
-
-  private def cacheKey(s: SparkSession, dir: String, keyFilter: String) = {
-    liveSessions.put(org.apache.spark.sql.graftshim.Shim.sessionUuid(s),
-      new java.lang.ref.WeakReference(s))
-    // evict entries bound to stopped or collected contexts — their
-    // DataFrames can never execute again and would otherwise be pinned
-    liveSessions.filterInPlace { (_, ref) =>
-      val sess = ref.get(); sess != null && !sess.sparkContext.isStopped
-    }
-    def live(k: (String, String, String)) = liveSessions.contains(k._1)
-    stageCache.filterInPlace((k, _) => live(k))
-    matcherCache.filterInPlace((k, _) => live(k))
-    flagshipCache.filterInPlace((k, _) => live(k))
-    scoredCache.filterInPlace((k, _) => live(k))
-    trainingFrameCache.filterInPlace((k, _) => live(k))
-    (org.apache.spark.sql.graftshim.Shim.sessionUuid(s), dir, keyFilter)
-  }
 
   private val flagshipCfg = EntityResolution.Config(
     // 10 boosted-tree iterations: 5 would halve the per-iteration job
@@ -106,40 +65,38 @@ object MatchQueries {
     * (session, dir, filter). */
   private def featureStage(s: SparkSession, dir: String,
                            keyFilter: String = "id % 10 = 0"): Stage =
-    stageCache.getOrElseUpdate(cacheKey(s, dir, keyFilter),
-      graft.Sweep.retainNew(s) {
-        val a = Catalogs.sideA(s, dir).where(keyFilter).withColumn("table", lit("abt"))
-        val b = Catalogs.sideB(s, dir).where(keyFilter).withColumn("table", lit("buy"))
-        val all = a.unionByName(b).select("table", "id", "name", "description", "price")
-        val (pipes, cached) = obs.span("features") {
-          val (pipes, feats) = EntityResolution.fitFeatureModels(all, flagshipCfg)
-          val cached = feats.cache()
-          cached.count() // materialize INSIDE retainNew — a lazy cache
-                         // registers no RDD and the sweep would evict it
-          (pipes, cached)
-        }
-        // golden pairs restricted to the sampled subset (semi-join on A ids)
-        Stage(cached, Catalogs.golden(s, dir)
-          .join(a.select(col("id").as("idA")), Seq("idA"), "left_semi"), pipes)
-      })
+    SessionMemo.value(s, s"stage:$dir:$keyFilter") {
+      val a = Catalogs.sideA(s, dir).where(keyFilter).withColumn("table", lit("abt"))
+      val b = Catalogs.sideB(s, dir).where(keyFilter).withColumn("table", lit("buy"))
+      val all = a.unionByName(b).select("table", "id", "name", "description", "price")
+      val (pipes, cached) = obs.span("features") {
+        val (pipes, feats) = EntityResolution.fitFeatureModels(all, flagshipCfg)
+        val cached = feats.cache()
+        cached.count() // materialize INSIDE the memo build — a lazy
+                       // cache registers no RDD and the sweep would evict it
+        (pipes, cached)
+      }
+      // golden pairs restricted to the sampled subset (semi-join on A ids)
+      Stage(cached, Catalogs.golden(s, dir)
+        .join(a.select(col("id").as("idA")), Seq("idA"), "left_semi"), pipes)
+    }
 
   /** Labeled candidates + trained matcher for a stage; memoized. */
   private def trainedMatcher(s: SparkSession, dir: String,
                              keyFilter: String = "id % 10 = 0"): (PipelineModel, DataFrame) =
-    matcherCache.getOrElseUpdate(cacheKey(s, dir, keyFilter),
-      graft.Sweep.retainNew(s) {
-        val st = featureStage(s, dir, keyFilter)
-        // the LSH runs inside labeledCandidates (its name_lsh span); the
-        // count materializes the label join
-        val labeled = obs.span("labeled_candidates") {
-          val l = EntityResolution.labeledCandidates(st.feats, st.golden, flagshipCfg)
-            .cache()
-          l.count() // materialize inside retainNew (see featureStage)
-          l
-        }
-        val trained = EntityResolution.train(st.feats, labeled, flagshipCfg)
-        (trained.model, labeled)
-      })
+    SessionMemo.value(s, s"matcher:$dir:$keyFilter") {
+      val st = featureStage(s, dir, keyFilter)
+      // the LSH runs inside labeledCandidates (its name_lsh span); the
+      // count materializes the label join
+      val labeled = obs.span("labeled_candidates") {
+        val l = EntityResolution.labeledCandidates(st.feats, st.golden, flagshipCfg)
+          .cache()
+        l.count() // materialize inside the memo build (see featureStage)
+        l
+      }
+      val trained = EntityResolution.train(st.feats, labeled, flagshipCfg)
+      (trained.model, labeled)
+    }
 
   /** Candidate-pair count of the flagship's LSH blocking stage — the
     * probe surface [[graft.ScaleProbe]] uses to assert candidates grow
@@ -156,37 +113,36 @@ object MatchQueries {
   /** Full match flow on a key subset; returns the scored, ranked pairs
     * (materialized via cache so sibling queries reuse results, not plans). */
   def flagship(s: SparkSession, dir: String, keyFilter: String = "id % 10 = 0"): DataFrame =
-    flagshipCache.getOrElseUpdate(cacheKey(s, dir, keyFilter),
-      graft.Sweep.retainNew(s) {
-        val df = flagshipUncached(s, dir, keyFilter).cache()
-        df.count() // materialize once; later executions are cache reads
-        df
-      })
+    SessionMemo.value(s, s"flagship:$dir:$keyFilter") {
+      val df = flagshipUncached(s, dir, keyFilter).cache()
+      df.count() // materialize once; later executions are cache reads
+      df
+    }
 
   /** The scored candidate frame (every labeled pair with its match
     * probability), cached + materialized per (session, dir, filter):
     * the flagship's top-500 and er_uncertainty's least-confident-100 are
-    * both cuts of this one deterministic scoring pass. */
+    * both cuts of this one deterministic scoring pass — uncached, each
+    * paid the 906k-pair distance-attach + model transform again. */
   private def scoredAll(s: SparkSession, dir: String,
                         keyFilter: String = "id % 10 = 0"): DataFrame =
-    scoredCache.getOrElseUpdate(cacheKey(s, dir, keyFilter),
-      graft.Sweep.retainNew(s) {
-        val st = featureStage(s, dir, keyFilter)
-        val (model, labeled) = trainedMatcher(s, dir, keyFilter)
-        // UN-ranked on purpose: scoreAll ends in a global orderBy that
-        // every consumer here immediately re-cuts with its own
-        // TakeOrdered (top-500 by score / top-100 by uncertainty) — the
-        // collapse that eliminates the range exchange only happens when
-        // the sort is NOT materialized, so the cache holds score(dists)
-        // and each consumer keeps its own ordered limit.
-        val dists = Distances.pairDistances(labeled.select("idA", "idB"),
-          st.feats.where("table = 'abt'"), st.feats.where("table = 'buy'"))
-        obs.span("score") {
-          val df = Matcher.score(model, dists).cache()
-          df.count() // materialize inside retainNew (see featureStage)
-          df
-        }
-      })
+    SessionMemo.value(s, s"scored:$dir:$keyFilter") {
+      val st = featureStage(s, dir, keyFilter)
+      val (model, labeled) = trainedMatcher(s, dir, keyFilter)
+      // UN-ranked on purpose: scoreAll ends in a global orderBy that
+      // every consumer here immediately re-cuts with its own
+      // TakeOrdered (top-500 by score / top-100 by uncertainty) — the
+      // collapse that eliminates the range exchange only happens when
+      // the sort is NOT materialized, so the cache holds score(dists)
+      // and each consumer keeps its own ordered limit.
+      val dists = Distances.pairDistances(labeled.select("idA", "idB"),
+        st.feats.where("table = 'abt'"), st.feats.where("table = 'buy'"))
+      obs.span("score") {
+        val df = Matcher.score(model, dists).cache()
+        df.count() // materialize inside the memo build (see featureStage)
+        df
+      }
+    }
 
   private def flagshipUncached(s: SparkSession, dir: String, keyFilter: String): DataFrame = {
     val (_, labeled) = trainedMatcher(s, dir, keyFilter)
@@ -319,22 +275,21 @@ object MatchQueries {
     * the candidate-join + distance-join + weight derivation for the
     * identical frame (shared by m4_halving_search and m5_train_eval). */
   private[graft] def halvingTrainingFrame(s: SparkSession, dir: String): DataFrame =
-    trainingFrameCache.getOrElseUpdate(cacheKey(s, dir, "id % 10 = 0"),
-      graft.Sweep.retainNew(s) {
-        val st = featureStage(s, dir)
-        val (feats, golden) = (st.feats, st.golden)
-        val cands = Fixtures.candidatePairs(s, dir)
-          .join(feats.where("table='abt'").select(col("id").as("idA")), "idA")
-          .join(feats.where("table='buy'").select(col("id").as("idB")), "idB")
-        val labeled = Pairs.labelJoin(cands, golden)
-        val dists = Distances.pairDistances(labeled, feats.where("table='abt'"),
-          feats.where("table='buy'")).join(labeled, Seq("idA", "idB"))
-        obs.span("training_frame") {
-          val w = Matcher.addClassWeights(dists).cache()
-          w.count() // materialize inside retainNew (see featureStage)
-          w
-        }
-      })
+    SessionMemo.value(s, s"training_frame:$dir") {
+      val st = featureStage(s, dir)
+      val (feats, golden) = (st.feats, st.golden)
+      val cands = Fixtures.candidatePairs(s, dir)
+        .join(feats.where("table='abt'").select(col("id").as("idA")), "idA")
+        .join(feats.where("table='buy'").select(col("id").as("idB")), "idB")
+      val labeled = Pairs.labelJoin(cands, golden)
+      val dists = Distances.pairDistances(labeled, feats.where("table='abt'"),
+        feats.where("table='buy'")).join(labeled, Seq("idA", "idB"))
+      obs.span("training_frame") {
+        val w = Matcher.addClassWeights(dists).cache()
+        w.count() // materialize inside the memo build (see featureStage)
+        w
+      }
+    }
 
   val defs: Seq[(String, Q)] = Seq(
     // The flagship end-to-end match query (entry() runs the ranked frame at
@@ -469,7 +424,7 @@ object MatchQueries {
       Matcher.addClassWeights(Fixtures.labeledPairs(s, dir))
         .select(col("label"), round(col("weight"), 6).as("weight")).distinct()),
 
-    // M4+M5+M6 — tuned GBT train + held-out areaUnderPR (metric value
+    // M4+M5+M6 — grid-searched GBT train + held-out areaUnderPR (metric value
     // sanity-asserted in MatcherSpec). The {5,10}-iteration × depth-3
     // grid runs through Matcher.trainGridMemo since round 12: the same
     // exact-proportion 0.8/0.2 stratified split, candidate space, and
@@ -511,7 +466,7 @@ object MatchQueries {
     }),
 
     // M4 (adaptive) — successive-halving hyperparameter search: 16
-    // candidates pruned 16 → 4 → 1 (20 evals — 5× the fits of the m5 TVS
+    // candidates pruned 16 → 4 → 1 (20 evals — 10× the trials of the m5
     // grid) for ~a quarter of the boosting rounds a full-budget 16-cell
     // grid would burn. Contract: exact pair/eval/budget counts (the
     // schedule is deterministic) + the AUPR quality invariant.

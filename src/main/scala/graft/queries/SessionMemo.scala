@@ -2,12 +2,12 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Per-(session, key) memo of materialized frames, for exact baselines that
-  * several registered queries share (the brute-force ANN top-k, the exact
-  * shingle-Jaccard pair set). Same pattern as MatchQueries' stage caches:
-  * keyed on the session UUID, entries of stopped sessions evicted on
-  * access, values materialized via localCheckpoint so reuse replays no
-  * lineage. */
+/** Per-(session, key) memo of state that several registered queries share:
+  * exact baselines (the brute-force ANN top-k, the exact shingle-Jaccard
+  * pair set), shared stores, and MatchQueries' fitted flagship stages.
+  * Keyed on the session UUID, entries of stopped sessions evicted on
+  * access; [[frame]] values are materialized via localCheckpoint so reuse
+  * replays no lineage. */
 object SessionMemo {
   private val frames =
     scala.collection.concurrent.TrieMap[(String, String), DataFrame]()

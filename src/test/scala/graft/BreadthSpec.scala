@@ -328,9 +328,37 @@ class BreadthSpec extends SparkSpec {
       val rows = SparkEntry.queries("a12_approx_sketch")(spark, emptyDir).collect()
       assert(rows.length == 1 && rows(0).isNullAt(rows(0).fieldIndex("exact_p50")))
     } finally graft.io.IO.deletePath(emptyDir)
-    // band cap forces the certificate path to DELEGATE, not weaken: with
-    // cap 0 every band overflows, and the value must still be exact
+    // cap 0: every band with rows inside overflows, so narrowing runs
+    // until both order statistics sit on the band's ends — still exact
     val big = (1 to 1000).map(_.toDouble).toDF("x")
     assert(exactMedianTwoPass(big, "x", bandCap = 0L) == oracle(big, "x"))
+  }
+
+  test("exactMedianTwoPass narrows a band over bandCap instead of falling " +
+       "back (n ≥ 100 × bandCap, bit-identical to percentile())") {
+    import graft.queries.BreadthQueries.exactMedianTwoPass
+    val rnd = new scala.util.Random(11)
+    val frames: Seq[(Seq[Double], Long)] = Seq(
+      // distinct values, even count: the first band holds ~160 rows
+      ((1 to 20000).map(_ => rnd.nextGaussian() * 100), 100L),
+      // heavy duplication, odd count
+      ((1 to 20001).map(i => (i % 1500) * 0.5), 100L),
+      // heavy band ends: the median sits among 20 values between two
+      // 10k-row blocks
+      (Seq.fill(10000)(1.0) ++ (1 to 20).map(i => 1.0 + i / 21.0) ++
+        Seq.fill(10000)(2.0), 5L),
+      // the lower middle statistic is the last row of a heavy block, the
+      // higher one the first of 10k distinct values above it
+      (Seq.fill(10000)(1.0) ++ (1 to 10000).map(i => 1.0 + i * 1e-3), 10L))
+    obs.drain()
+    frames.foreach { case (vs, cap) =>
+      assert(vs.size >= 100 * cap)
+      val df = vs.toDF("x").repartition(4)
+      val r = df.agg(expr("percentile(x, 0.5)")).head()
+      assert(exactMedianTwoPass(df, "x", bandCap = cap).contains(r.getDouble(0)),
+        s"frame of ${vs.size} at cap $cap")
+    }
+    val fallbacks = obs.drain().filter(_.path.endsWith("median_fallback"))
+    assert(fallbacks.isEmpty, s"percentile() fallback ran: $fallbacks")
   }
 }

@@ -18,7 +18,7 @@ class EntityResolutionSpec extends SparkSpec {
     val a = Catalogs.sideA(spark, sf).withColumn("table", lit("abt"))
     val b = Catalogs.sideB(spark, sf).withColumn("table", lit("buy"))
     val all = a.unionByName(b).select("table", "id", "name", "description", "price")
-    (EntityResolution.fitFeatures(all, cfg).cache(), Catalogs.golden(spark, sf))
+    (EntityResolution.fitFeatureModels(all, cfg)._2.cache(), Catalogs.golden(spark, sf))
   }
 
   test("candidates: LSH blocking recalls every golden identity pair") {
@@ -60,6 +60,22 @@ class EntityResolutionSpec extends SparkSpec {
       .as[(Boolean, Double)].collect().toMap
     assert(byIdentity(true) > byIdentity(false) + 0.3,
       s"identity pairs should far outscore non-matches: $byIdentity")
+  }
+
+  test("train: a 2×1 grid runs through the search loop and refits a grid " +
+       "point that clears the quality bar") {
+    import org.apache.spark.ml.classification.GBTClassificationModel
+    val labeled = EntityResolution.labeledCandidates(feats, golden, cfg)
+    val grid = cfg.copy(gbtMaxIterGrid = Seq(10, 20), gbtMaxDepthGrid = Seq(3))
+    obs.drain()
+    val trained = EntityResolution.train(feats, labeled, grid)
+    val paths = obs.drain().map(_.path)
+    assert(paths.contains("train/grid"),
+      s"the grid did not run through the search loop: $paths")
+    val gbt = trained.model.stages.last.asInstanceOf[GBTClassificationModel]
+    assert(Seq(10, 20).contains(gbt.getMaxIter) && gbt.getMaxDepth == 3,
+      s"refit (${gbt.getMaxIter}, ${gbt.getMaxDepth}) is not a grid point")
+    assert(trained.areaUnderPR > 0.6, s"AUPR ${trained.areaUnderPR}")
   }
 
   test("inference loop: MERGE into the feature store + re-block + score") {

@@ -98,8 +98,7 @@ class MatcherSpec extends SparkSpec {
   test("GBT train + areaUnderPR on separable data; native-transform scoring") {
     val df = Matcher.addClassWeights(syntheticPairs(400))
     val Seq(train, test) = Matcher.stratifiedSplit(df, Seq(0.8, 0.2))
-    val model = Matcher.trainTuned(train, maxIterGrid = Seq(5), maxDepthGrid = Seq(3))
-      .bestModel.asInstanceOf[PipelineModel]
+    val model = Matcher.fit(train, Matcher.GbtCandidate(3, 0.1, 1.0), 5)
     val aupr = Matcher.areaUnderPR(model, test)
     assert(aupr > 0.95, s"separable data should be near-perfect, got $aupr")
     val scored = Matcher.score(model, test)
@@ -110,34 +109,29 @@ class MatcherSpec extends SparkSpec {
     assert(ranked.sameElements(ranked.sortBy(-_)))
   }
 
-  test("CrossValidator variant: k-fold grid search picks a working model") {
-    val df = Matcher.addClassWeights(syntheticPairs(300)).coalesce(2)
-    val cv = Matcher.trainCrossValidated(df, folds = 2,
-      maxIterGrid = Seq(3, 5), maxDepthGrid = Seq(2))
-    val model = cv.bestModel.asInstanceOf[PipelineModel]
-    assert(Matcher.areaUnderPR(model, df) > 0.95)
-    assert(cv.avgMetrics.length == 2) // one metric per grid point
-    assert(cv.avgMetrics.forall(m => m >= 0.0 && m <= 1.0))
-  }
-
-  test("coarse-to-fine search: refined pass never validates worse than the coarse grid") {
+  test("Matcher.fit of GbtCandidate(d, 0.1, 1.0) is the plain GBT pipeline " +
+       "fit: identical trees and probabilities") {
+    import org.apache.spark.ml.Pipeline
+    import org.apache.spark.ml.classification.{GBTClassificationModel, GBTClassifier}
+    import org.apache.spark.ml.feature.VectorAssembler
     val df = Matcher.addClassWeights(syntheticPairs(400)).coalesce(2)
-    val Seq(train, test) = Matcher.stratifiedSplit(df, Seq(0.8, 0.2))
-    val coarse = Matcher.trainTuned(train,
-      maxIterGrid = Seq(3, 9), maxDepthGrid = Seq(2, 4))
-    val refined = Matcher.trainRefined(train,
-      maxIterGrid = Seq(3, 9), maxDepthGrid = Seq(2, 4))
-    assert(refined.validationMetrics.max >= coarse.validationMetrics.max,
-      s"refinement lost quality: ${coarse.validationMetrics.max} -> ${refined.validationMetrics.max}")
-    // the winner must come from the reachable search space: the grid
-    // {3, 9} or the ± step-3 bracket around either cell
-    val fineGbt = refined.bestModel.asInstanceOf[PipelineModel]
-      .stages.last.asInstanceOf[org.apache.spark.ml.classification.GBTClassificationModel]
-    assert(Set(3, 6, 9, 12)(fineGbt.getMaxIter),
-      s"maxIter ${fineGbt.getMaxIter} outside the reachable refined space")
-    val auprRefined = Matcher.areaUnderPR(
-      refined.bestModel.asInstanceOf[PipelineModel], test)
-    assert(auprRefined > 0.95, s"separable data should stay near-perfect: $auprRefined")
+    val model = Matcher.fit(df, Matcher.GbtCandidate(3, 0.1, 1.0), 10)
+    // the GBT a caller writes by hand: only maxIter and maxDepth set
+    val plain = new Pipeline().setStages(Array(
+      new VectorAssembler().setInputCols(Matcher.FeatureCols)
+        .setOutputCol("features").setHandleInvalid("keep"),
+      new GBTClassifier().setLabelCol("label").setWeightCol("weight")
+        .setFeaturesCol("features").setSeed(42).setMaxIter(10).setMaxDepth(3)))
+      .fit(df)
+    // every tree with its weight; the header line carries the stage uid
+    def trees(m: PipelineModel) =
+      m.stages.last.asInstanceOf[GBTClassificationModel].toDebugString
+        .linesIterator.drop(1).toSeq
+    assert(trees(model) == trees(plain))
+    def probs(m: PipelineModel) = Matcher.score(m, df)
+      .select("idA", "match_score").as[(Int, Double)].collect().toMap
+    val (a, b) = (probs(model), probs(plain))
+    assert(a.size == 400 && a == b, "probabilities differ row by row")
   }
 
   test("successive halving: deterministic schedule, searched model stays " +
@@ -314,8 +308,7 @@ class MatcherSpec extends SparkSpec {
     val root = "/root/repo/target/test_tmp/registry"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/m"))
     val df = Matcher.addClassWeights(syntheticPairs(200))
-    val model = Matcher.trainTuned(df, maxIterGrid = Seq(3), maxDepthGrid = Seq(2))
-      .bestModel.asInstanceOf[PipelineModel]
+    val model = Matcher.fit(df, Matcher.GbtCandidate(2, 0.1, 1.0), 3)
     val v1 = ModelStore.save(model, root, "m")
     val v2 = ModelStore.save(model, root, "m")
     assert(v2 == v1 + 1)

@@ -47,25 +47,30 @@ class ObsSpec extends SparkSpec {
     assert(rows("a").wallMs >= rows("a/b").wallMs)
   }
 
-  test("jobs from trainHalving's trial futures land in the caller's span") {
+  test("jobs from every search's trial futures land in caller/<search>") {
     val rnd = new scala.util.Random(7)
     val df = Matcher.addClassWeights((1 to 200).map { i =>
       val base = if (i % 2 == 1) 0.05 else 1.5
       (base + rnd.nextDouble() * 0.1, base + rnd.nextDouble() * 0.1,
         base + rnd.nextDouble() * 0.05, i % 2)
     }.toDF("name_sqdist", "descript_sqdist", "price_sqdist", "label")).coalesce(2)
-    val rows = recorded {
-      obs.span("caller") {
-        Matcher.trainHalving(df, parallelism = 4,
-          candidates = Matcher.defaultHalvingCandidates.take(4),
-          minIter = 1, maxIter = 2, eta = 2)
-      }
+    val four = Matcher.defaultHalvingCandidates.take(4)
+    val searches: Seq[(String, () => Matcher.HalvingResult)] = Seq(
+      "halving" -> (() => Matcher.trainHalving(df, parallelism = 4,
+        candidates = four, minIter = 1, maxIter = 2, eta = 2)),
+      "tpe" -> (() => Matcher.trainTpe(df, parallelism = 4,
+        candidates = four, nTrials = 5, nInit = 3, batch = 2, iters = 1)),
+      "grid" -> (() => Matcher.trainGridMemo(df, four.map((_, 1)), parallelism = 4)))
+    for ((search, run) <- searches) {
+      val rows = recorded(obs.span("caller")(run()))
+      val jobs = rows.values.filter(_.jobs > 0)
+      assert(jobs.nonEmpty && jobs.forall(_.path.startsWith(s"caller/$search")),
+        s"$search trial jobs escaped the caller's span: $rows")
+      // four or more trials, each a chain of jobs, under the search's own
+      // row; the winner refit's jobs sit under caller/<search>/gbt_fit
+      assert(rows(s"caller/$search").jobs > 7, s"$search: $rows")
+      assert(rows(s"caller/$search/gbt_fit").jobs > 0, s"$search: $rows")
     }
-    val jobs = rows.values.filter(_.jobs > 0)
-    assert(jobs.nonEmpty && jobs.forall(_.path.startsWith("caller")),
-      s"trial jobs escaped the caller's span: $rows")
-    // 4 + 2 trials plus the refit, each a chain of jobs, all under it
-    assert(rows("caller/halving").jobs > 7)
   }
 
   test("1,000 calls of one span leave one aggregate row") {
