@@ -84,9 +84,9 @@ object ProbeContracts {
           sum(when(col("drifted"), 1).otherwise(0))).head()
         (r.getLong(0), r.getLong(1))
       }
-      val ivf = drifted(Ann.ivfStoreStaleness(spark,
+      val ivf = drifted(Ann.vectorStoreStaleness(spark,
         LlmQueries.sharedIvfStore(spark, dir)))
-      val pq = drifted(Ann.ivfPqStoreStaleness(spark,
+      val pq = drifted(Ann.vectorStoreStaleness(spark,
         LlmQueries.sharedIvfPqStore(spark, dir)))
       p(s"ann_store_staleness: ivf driftedWithBaseline=${ivf._1} driftedAny=${ivf._2} " +
         s"ivfpq driftedWithBaseline=${pq._1} driftedAny=${pq._2}")

@@ -260,7 +260,8 @@ object ScaleProbe {
     // 24-query point, and the driver-side work (probe collect) is
     // bounded by cell count, not batch size.
     graft.llm.Ann.tuneProbe(spark, store, queries, k = 10)
-    val resolvedProbe = graft.llm.Ann.resolveProbe(spark, store, 0.9, forK = 10)
+    val resolvedProbe = graft.llm.Ann.resolveCurve(spark, store,
+      graft.llm.Ann.Knob.Probe, 0.9, forK = 10)
     val batchQ = emb.where("vec_id < 256") // copy-0 original vectors
     val (_, tBatchServe) = timed {
       graft.llm.Ann.ivfStoreTopKAtRecall(spark, store, batchQ, k = 10,

@@ -207,34 +207,6 @@ object IO {
     kept.unionByName(inserts)
   }
 
-  /** Path-level upsert with a tmp-dir swap.
-    *
-    * Durability contract (each `move` is metadata-only and atomic, but the
-    * two-move *sequence* is not): a crash before the first move leaves the
-    * original target untouched; a crash between the moves leaves the data
-    * under `<target>.__graft_old`, and [[recoverPath]] (invoked here on
-    * entry) restores it on the next call. There IS a window in which no
-    * live `<target>` directory exists — concurrent readers must tolerate a
-    * retry, which is why both reads in this method go through
-    * [[recoverPath]]. Both paths must live on one filesystem
-    * (`ATOMIC_MOVE` throws across mount points); a production deployment
-    * on an object store would swap a manifest/table-catalog pointer
-    * instead of a directory rename. */
-  def upsertPath(spark: SparkSession, targetPath: String, source: DataFrame,
-                 keys: Seq[String], updateCols: Seq[String]): Unit = {
-    recoverPath(targetPath)
-    val target = spark.read.parquet(targetPath)
-    val merged = upsert(target, source, keys, updateCols)
-    val tmp = targetPath + ".__graft_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    val tgt = Paths.get(targetPath)
-    val old = Paths.get(targetPath + ".__graft_old")
-    deleteRecursive(old)
-    Files.move(tgt, old, StandardCopyOption.ATOMIC_MOVE)
-    Files.move(Paths.get(tmp), tgt, StandardCopyOption.ATOMIC_MOVE)
-    deleteRecursive(old)
-  }
-
   /** Partition column used by the bucketed upsert store layout. */
   val BucketCol = "__graft_bucket"
 
@@ -258,12 +230,12 @@ object IO {
     (p.getFileSystem(spark.sparkContext.hadoopConfiguration), p)
   }
 
-  private def writeSmallFile(fs: FileSystem, p: HPath, content: String): Unit = {
+  private[graft] def writeSmallFile(fs: FileSystem, p: HPath, content: String): Unit = {
     val out = fs.create(p, true)
     try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
-  private def readSmallFile(fs: FileSystem, p: HPath): String = {
+  private[graft] def readSmallFile(fs: FileSystem, p: HPath): String = {
     val in = fs.open(p)
     try scala.io.Source.fromInputStream(in, "UTF-8").mkString finally in.close()
   }
@@ -664,9 +636,9 @@ object IO {
   }
 
   /** S5 at scale — partition-pruned MERGE with an ATOMIC manifest commit.
-    * [[upsertPath]] rewrites the whole store per merge (O(store)); an
-    * incremental pipeline merging a small delta every batch needs
-    * O(delta). This variant:
+    * Rewriting the whole store per merge is O(store); an incremental
+    * pipeline merging a small delta every batch needs O(delta). This
+    * variant:
     *
     *  1. buckets the source rows by key hash (same arithmetic as the store
     *     layout — ≤ `nBuckets` distinct values, so the driver-side collect
@@ -876,30 +848,28 @@ object IO {
         .join(broadcast(del.drop(BucketCol)), keys, "left_anti"))
   }
 
-  /** [[deleteFromPartitionedStore]] for stores whose [[BucketCol]] is a
-    * TRUSTED routing column rather than the key hash (the vector stores
-    * route by IVF cell): the caller supplies a LOCATE CLOSURE producing
-    * key rows that carry the bucket each key currently lives in (e.g. a
-    * column-pruned (key, bucket) projection scan), and only those
-    * buckets are read, anti-joined, and rewritten through the optimistic
-    * manifest loop. A closure, not a frame, because routing is NOT a
-    * pure function of the key here: when a racing writer moves a key to
-    * another bucket and this commit loses the version race, the retry
-    * must RE-LOCATE against the new current manifest or it would rewrite
-    * stale buckets and resurrect the key. Same pruning story: a delete
-    * of k keys touches ≤ k buckets however large the store is; an
-    * emptied bucket drops out of the manifest. No-op (no new version)
-    * when the locate finds nothing. */
-  def deleteFromPartitionedStoreRouted(spark: SparkSession, targetPath: String,
-                                       locateKeyRows: () => DataFrame,
-                                       keys: Seq[String]): Unit =
-    routedRewrite(spark, targetPath, locateKeyRows, None, keys)
-
-  /** Shared tail of the trusted-routing delete/upsert: per OCC attempt,
-    * re-locate the keys' CURRENT buckets, rewrite (old ∪ new) touched
-    * buckets as one anti-join (+ optional union of the new rows), commit
-    * atomically. The per-attempt locate is the correctness point — see
-    * [[deleteFromPartitionedStoreRouted]]. */
+  /** Routed DELETE / UPSERT for stores whose [[BucketCol]] is a TRUSTED
+    * routing column rather than the key hash (the vector stores route by
+    * IVF cell). The caller supplies a LOCATE CLOSURE producing key rows
+    * that carry the bucket each key currently lives in (e.g. a
+    * column-pruned (key, bucket) projection scan), and optionally
+    * `newRows`: full store rows with their trusted routing column. Per
+    * optimistic attempt, touched = located ∪ new buckets; one rewrite
+    * anti-joins the keys away and unions the new rows, committed
+    * atomically through the manifest loop — a racing reader sees
+    * the pre- or post-op version, never the deleted-but-not-yet-
+    * reinserted middle a delete-then-append pair would expose. The two
+    * bucket sets may differ: a re-embedded vector can ROUTE to a
+    * different cell, which an in-place per-bucket update cannot express.
+    *
+    * A closure, not a frame, because routing is NOT a pure function of
+    * the key here: when a racing writer moves a key to another bucket
+    * and this commit loses the version race, the retry must RE-LOCATE
+    * against the new current manifest or it would rewrite stale buckets
+    * and resurrect the key. A delete of k keys touches ≤ k buckets
+    * however large the store is; an emptied bucket drops out of the
+    * manifest. No-op (no new version) when the locate finds nothing and
+    * there are no new rows. */
   private[graft] def routedRewrite(spark: SparkSession, targetPath: String,
                                    locateKeyRows: () => DataFrame,
                                    newRows: Option[DataFrame],
@@ -933,11 +903,10 @@ object IO {
       // keeps (keys, bucket)
       val located = pin(locateKeyRows())
       // del/extra derive DETERMINISTICALLY from the pinned locate, so they
-      // need no checkpoint of their own (optimization round 15, guide
-      // §1.2): each consumer (touched-set collect, anti-join broadcast,
-      // frame union) re-reads the checkpoint's blocks — a tiny distinct /
-      // aggregate — where pinning them cost a full materialization job
-      // apiece per optimistic attempt
+      // need no checkpoint of their own: each consumer (touched-set
+      // collect, anti-join broadcast, frame union) re-reads the
+      // checkpoint's blocks — a tiny distinct / aggregate — where pinning
+      // them would cost a full materialization job apiece per attempt
       val del = guarded(located
           .select((keys.map(col) :+ col(BucketCol)): _*).distinct())
       // extra rows are a FUNCTION OF THE LOCATE (e.g. a compensating
@@ -960,27 +929,6 @@ object IO {
         beforeClaim = beforeClaim)
     finally pinned.foreach(_.unpersist(blocking = false))
   }
-
-  /** Routed UPSERT for trusted-[[BucketCol]] stores — ONE atomic commit
-    * replacing keys wherever they currently live and landing the new
-    * rows wherever the caller routed them (the two bucket sets may
-    * differ: a re-embedded vector can ROUTE to a different cell, which
-    * an in-place per-bucket update cannot express). `locateOldKeyRows`
-    * re-derives (keys + BucketCol) for the rows being replaced against
-    * the CURRENT manifest on every optimistic attempt (see
-    * [[deleteFromPartitionedStoreRouted]] for why a pinned locate is
-    * unsound under races); `newRows` carries the full store rows with
-    * their trusted routing column. Touched = old ∪ new buckets; one
-    * rewrite anti-joins the keys away and unions the new rows, committed
-    * through the same optimistic manifest loop as every merge — a racing
-    * reader sees the pre- or post-upsert version, never the
-    * deleted-but-not-yet-reinserted middle a two-commit delete+append
-    * would expose. */
-  def upsertPartitionedStoreRouted(spark: SparkSession, targetPath: String,
-                                   locateOldKeyRows: () => DataFrame,
-                                   newRows: DataFrame,
-                                   keys: Seq[String]): Unit =
-    routedRewrite(spark, targetPath, locateOldKeyRows, Some(newRows), keys)
 
   /** COMPACT the store's fragmented buckets — the OPTIMIZE step for the
     * LSM trade [[appendPartitionedStore]] makes: each append adds a delta
@@ -1254,8 +1202,7 @@ object IO {
     // recovery + swap below go through the MIRROR's FileSystem (not
     // java.nio), so an HDFS mirror works; rename is metadata-atomic on
     // HDFS/local, and an object-store mirror should swap a manifest
-    // pointer instead — the same deployment note as [[upsertPath]],
-    // which IS local-only by its java.nio contract
+    // pointer instead
     recoverPathOn(mfs, mirrorPath)
     val (fs, root) = hfs(spark, storePath)
     val cur = currentManifestVersion(fs, root).getOrElse(
@@ -1288,24 +1235,13 @@ object IO {
     cur
   }
 
-  /** FileSystem-routed twin of [[recoverPath]] for stores whose swap goes
-    * through Hadoop `rename` ([[syncMirror]]): restore the `.__graft_old`
-    * backup if a crash between the two renames left no live target. */
+  /** Crash recovery for a directory swapped through Hadoop `rename`
+    * ([[syncMirror]]): restore the `.__graft_old` backup if a crash
+    * between the two renames left no live target. */
   private def recoverPathOn(fs: FileSystem, targetPath: String): Unit = {
     val tgt = new HPath(targetPath)
     val old = new HPath(targetPath + ".__graft_old")
     if (!fs.exists(tgt) && fs.exists(old)) fs.rename(old, tgt)
-  }
-
-  /** Crash recovery for [[upsertPath]]: if the target directory is missing
-    * but the `.__graft_old` backup exists (crash between the two moves),
-    * restore the backup. Idempotent; safe to call before any read of a
-    * path that upsertPath manages. */
-  def recoverPath(targetPath: String): Unit = {
-    val tgt = Paths.get(targetPath)
-    val old = Paths.get(targetPath + ".__graft_old")
-    if (!Files.exists(tgt) && Files.exists(old))
-      Files.move(old, tgt, StandardCopyOption.ATOMIC_MOVE)
   }
 
   /** O(files) CLONE of a committed partitioned store — data files
@@ -1323,8 +1259,7 @@ object IO {
     *
     * Stale claim locks (`v*.lock`) do NOT travel: a clone is a new
     * store with no writer history. java.nio hardlinks make this
-    * local-filesystem-only, same contract as [[upsertPath]]; an object
-    * store clones with server-side copy (or a manifest pointing at
+    * local-filesystem-only; an object store clones with server-side copy (or a manifest pointing at
     * shared immutable objects — the table-format "shallow clone"). */
   def cloneStore(spark: SparkSession, srcPath: String, dstPath: String): Unit = {
     val (fs, root) = hfs(spark, srcPath)

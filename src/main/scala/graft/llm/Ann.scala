@@ -2,9 +2,12 @@ package graft.llm
 
 import org.apache.spark.ml.feature.BucketedRandomProjectionLSH
 import org.apache.spark.ml.functions.{array_to_vector, vector_to_array}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.io.IO
+import graft.obs
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`Array[Float]` in the `embeddings` fixture).
@@ -282,7 +285,6 @@ object Ann {
   def knnGraph(corpus: DataFrame, k: Int, nCells: Int = 0, nProbe: Int = 4,
                idCol: String = "vec_id", vecCol: String = "embedding",
                seed: Long = 42L, centroids: Option[DataFrame] = None): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val dense = corpus.where(cosineUsable(col(vecCol)))
     // nCells defaults to AUTO (√n sizing via fitCentroids): the within-cell
     // candidate volume n·nProbe·(n/nCells) is exactly what the √n rule
@@ -387,6 +389,15 @@ object Ann {
       .toDF("cell", "centroid")
   }
 
+  /** Collect a (cell, centroid) frame into the sorted array the map-side
+    * argmin/probe kernels loop over — nCells rows, tiny by definition. */
+  private def collectedCentroids(centroids: DataFrame): Array[(Int, Array[Double])] =
+    centroids
+      .select(col("cell"), col("centroid"))
+      .collect()
+      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
+      .sortBy(_._1)
+
   /** Assign each vector to its nearest centroid. GENUINELY map-side: the
     * centroid table is tiny by definition (nCells rows), so it collects
     * into the closure and the argmin is one tight JVM loop per row — zero
@@ -397,23 +408,10 @@ object Ann {
     * windows' (dist asc, cell asc) ordering; sums accumulate left-to-right
     * like the zip_with/aggregate formulation, so assignments are
     * bit-reproducible across both paths. */
-  /** Collect a (cell, centroid) frame into the sorted array the map-side
-    * argmin/probe kernels loop over — nCells rows, tiny by definition. */
-  private def collectedCentroids(centroids: DataFrame): Array[(Int, Array[Double])] =
-    centroids
-      .select(col("cell"), col("centroid"))
-      .collect()
-      .map(r => r.getInt(0) -> r.getSeq[Double](1).toArray)
-      .sortBy(_._1)
-
   def assignCells(df: DataFrame, centroids: DataFrame,
                   idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
     assignCellsCollected(df, collectedCentroids(centroids), idCol, vecCol)
 
-  /** [[assignCells]] over an already-collected centroid table — the build
-    * paths collect the tiny frame ONCE and route everything (assignment,
-    * the reserved-bucket id, the persisted centroid rows) through the
-    * same array instead of re-evaluating the frame per consumer. */
   /** Single validate+unbox pass: boxed Seq → primitive array, or null if
     * the input is null or carries a NULL/NaN/Inf component. The shared
     * front door of every vector-kernel UDF here — a primitive
@@ -435,6 +433,10 @@ object Ann {
     a
   }
 
+  /** [[assignCells]] over an already-collected centroid table — the build
+    * paths collect the tiny frame ONCE and route everything (assignment,
+    * the reserved-bucket id, the persisted centroid rows) through the
+    * same array instead of re-evaluating the frame per consumer. */
   private def assignCellsCollected(df: DataFrame,
                                    cents: Array[(Int, Array[Double])],
                                    idCol: String, vecCol: String): DataFrame = {
@@ -462,10 +464,10 @@ object Ann {
     * from the reserved routing bucket's `nn_id = -1 - cell` rows, read
     * through the store's committed manifest (so a racing rebuild can
     * never show a reader half-written centroids). */
-  def readCentroids(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+  def readCentroids(spark: SparkSession, path: String): DataFrame = {
     requireStoreKind(spark, path, "ivf")
-    val reserved = graft.io.IO.storeBuckets(path) - 1
-    graft.io.IO.readStoreBuckets(spark, path, Set(reserved))
+    val reserved = IO.storeBuckets(path) - 1
+    IO.readStoreBuckets(spark, path, Set(reserved))
       .select((-col("nn_id") - 1).cast("int").as("cell"),
         col("cv").as("centroid"))
   }
@@ -498,14 +500,13 @@ object Ann {
         round(avg(col("coh")), 4).as("mean_cosine"))
   }
 
-  /** The (query_id, qv, cell) probe set: each usable query's `nProbe`
-    * nearest cells by centroid L2 distance (ties to the lower cell id).
-    * Factored out of [[ivfTopKFromAssigned]] so [[ivfStoreTopK]] can
-    * derive the probed-cell union for its manifest-pruned store read
+  /** The (query_id, qv, cell, cell_rk) probe set: each usable query's
+    * `nProbe` nearest cells by centroid L2 distance (ties to the lower
+    * cell id), ranked. Shared by the in-memory serve and [[route]], which
+    * derives the probed-cell union for its manifest-pruned store read
     * from the same frame that drives the candidate join. */
   private def probeFrame(queries: DataFrame, centroids: DataFrame,
-                         nProbe: Int, idCol: String, vecCol: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
+                         nProbe: Int, idCol: String, vecCol: String): DataFrame =
     queries.where(cosineUsable(col(vecCol)))
       .select(col(idCol).as("query_id"), asDouble(col(vecCol)).as("qv"))
       .crossJoin(broadcast(centroids))
@@ -515,19 +516,20 @@ object Ann {
       .withColumn("cell_rk", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cdist").asc, col("cell").asc)))
       .where(col("cell_rk") <= nProbe)
-      // cell_rk (the probe rank) rides along: the one-read curve
-      // measurement (tuneProbe) derives every smaller probe budget's
-      // candidate set as the cell_rk <= p prefix — the same nesting the
-      // monotonicity theorem rests on. The serve consumers' explicit
-      // selects drop it.
+      // cell_rk rides along: the probe curve derives every smaller probe
+      // budget's candidates as its prefix (Knob.Probe); the serves' own
+      // selects drop it
       .select("query_id", "qv", "cell", "cell_rk")
-  }
 
-  /** Exact cosine re-rank of an assigned candidate set against a probe
-    * frame — the shared serve tail. */
-  private def rankProbed(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val w = Window.partitionBy("query_id").orderBy(col("cosine").desc, col("nn_id").asc)
+  /** The serve's total order: rounded cosine desc, then corpus id. */
+  private val byCosine =
+    Window.partitionBy("query_id").orderBy(col("cosine").desc, col("nn_id").asc)
+
+  /** Rounded exact cosine of every servable row of an assigned (nn_id,
+    * cv, cell) frame against the queries probing its cell, self-pairs
+    * excluded, with the `carry` probe columns alongside. */
+  private def probedCosines(assigned: DataFrame, probes: DataFrame,
+                            carry: Seq[String] = Seq.empty): DataFrame =
     // cosineUsable on the serve side: a zero-norm vector CAN be assigned
     // to a cell (L2 argmin is well-defined) but can never be a cosine
     // neighbor — without the guard its NaN cosine ranks first under
@@ -537,10 +539,14 @@ object Ann {
       .where(cosineUsable(col("cv")))
       .join(broadcast(probes), Seq("cell"))
       .where(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"),
-        round(cosine(col("cv"), col("qv")), 4).as("cosine"))
-      .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
-  }
+      .select(Seq(col("query_id"), col("nn_id"),
+        round(cosine(col("cv"), col("qv")), 4).as("cosine")) ++ carry.map(col): _*)
+
+  /** Exact cosine re-rank of an assigned candidate set against a probe
+    * frame — the shared serve tail. */
+  private def rankProbed(assigned: DataFrame, probes: DataFrame, k: Int): DataFrame =
+    probedCosines(assigned, probes)
+      .withColumn("rank", row_number().over(byCosine)).where(col("rank") <= k)
 
   /** Top-k over an already-assigned (nn_id, cv, cell) frame: nProbe cells
     * per query via the given centroids, exact cosine re-rank. Shared by
@@ -553,7 +559,7 @@ object Ann {
     rankProbed(assigned, probeFrame(queries, centroids, nProbe, idCol, vecCol), k)
 
   /** Build a persisted IVF index as a MANIFEST-COMMITTED partitioned
-    * store ([[graft.io.IO.writePartitionedStore]] with the cell as the
+    * store ([[IO.writePartitionedStore]] with the cell as the
     * trusted routing column) — the same commit/read machinery as every
     * other store here: readers resolve a committed manifest pointer, so
     * no reader can ever observe a build, append, or compaction
@@ -592,20 +598,20 @@ object Ann {
     // means the fitted cell count, not the nCells argument, is the truth)
     val reserved = cents.map(_._1).max + 1
     val data = assignCellsCollected(dense, cents, idCol, vecCol)
-      .select(col("nn_id"), col("cv"), col("cell").as(graft.io.IO.BucketCol))
+      .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
     val spark = corpus.sparkSession
     import spark.implicits._
     val centRows = cents.toSeq
       .map { case (cell, c) => (-1L - cell, c.toSeq) }
       .toDF("nn_id", "cv")
-      .withColumn(graft.io.IO.BucketCol, lit(reserved))
+      .withColumn(IO.BucketCol, lit(reserved))
     // writePartitionedStore rebalances on the routing column before the
     // partitionBy write (the small-files guard) and commits postings +
     // centroids in one manifest version
     // the layout tag rides the SAME v1 commit as the data (IO writes it
     // beside _graft_buckets before the commit marker), so no crash can
     // leave a committed store whose readers reject it for a missing tag
-    graft.io.IO.writePartitionedStore(data.unionByName(centRows), path,
+    IO.writePartitionedStore(data.unionByName(centRows), path,
       keys = Seq("nn_id"), nBuckets = reserved + 1,
       layoutTag = Some("ivf"))
   }
@@ -623,104 +629,80 @@ object Ann {
     val cents = readCentroids(spark, path)
     // same null-vector policy as writeIvfStore: never persist unservable rows
     val rows = assignCells(delta.where(cosineUsable(col(vecCol))), cents, idCol, vecCol)
-      .select(col("nn_id"), col("cv"), col("cell").as(graft.io.IO.BucketCol))
-    graft.io.IO.appendPartitionedStore(spark, path, rows, keys = Seq("nn_id"))
+      .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
+    IO.appendPartitionedStore(spark, path, rows, keys = Seq("nn_id"))
   }
 
   /** The data rows of a persisted IVF store — (nn_id, cv, cell) through
     * the CURRENT committed manifest (superseded generations and the
     * reserved centroid bucket excluded). */
-  def readIvfStore(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame = {
+  def readIvfStore(spark: SparkSession, path: String): DataFrame = {
     requireStoreKind(spark, path, "ivf")
-    val reserved = graft.io.IO.storeBuckets(path) - 1
-    graft.io.IO.readStoreBuckets(spark, path, (0 until reserved).toSet)
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
+    val reserved = IO.storeBuckets(path) - 1
+    IO.readStoreBuckets(spark, path, (0 until reserved).toSet)
+      .withColumnRenamed(IO.BucketCol, "cell")
       .select("nn_id", "cv", "cell")
   }
 
   /** Serve top-k from the persisted IVF index: nProbe cells per query via
     * the stored centroids, store read PRUNED to the union of probed cells
-    * (file-list-level pruning through the committed manifest — only the
-    * probed cells' directories are ever listed or scanned), exact cosine
-    * re-rank of candidates. Same query plan as [[ivfTopK]], but against
-    * an index that was built once and maintained by appends. The
-    * probed-cell union is a bounded driver-side collect (≤ nCells ints —
-    * cell count, not data, by construction).
+    * ([[route]]), exact cosine re-rank of candidates. Same query plan as
+    * [[ivfTopK]], but against an index that was built once and maintained
+    * by appends.
     *
-    * `allowedIds`: FILTERED vector search — the capability every serving
-    * index pairs with metadata predicates ("top-k among docs matching
-    * P"). The caller materializes the predicate as an id frame (from
-    * whatever table holds the metadata) and candidates semi-join it
-    * BEFORE the rank, so the result is the true top-k OF THE ALLOWED
-    * SUBSET — not a post-filtered top-k that returns fewer than k when
-    * the global top-k happens to be disallowed (the classic filtered-ANN
-    * bug). Join strategy is left to Catalyst/AQE: a selective id set
-    * auto-broadcasts, a corpus-scale one shuffles on the id — both
-    * correct. */
-  def ivfStoreTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+    * `allowedIds`: FILTERED vector search ("top-k among docs matching P").
+    * The caller materializes the predicate as an id frame and candidates
+    * semi-join it BEFORE the rank, so the result is the true top-k OF THE
+    * ALLOWED SUBSET — not a post-filtered top-k that returns fewer than k
+    * when the global top-k happens to be disallowed (the classic
+    * filtered-ANN bug). Catalyst/AQE picks the join: a selective id set
+    * broadcasts, a corpus-scale one shuffles on the id. */
+  def ivfStoreTopK(spark: SparkSession, path: String,
                    queries: DataFrame, k: Int, nProbe: Int = 4,
                    allowedIds: Option[DataFrame] = None,
                    idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    // PINNED (localCheckpoint) before the driver-side cell collect: the
-    // pruned store read and the candidate join must see the SAME probe
-    // set even when the caller's queries frame has nondeterministic
-    // lineage (sample/limit) — and the probe window then runs once, not
-    // once per consumer. Bounded: nProbe rows per usable query; blocks
-    // are freed by the context cleaner once the serve frame is dropped.
-    // The trade is deliberate: checkpoint blocks are non-reliable (an
-    // executor loss fails the serve instead of recomputing), which is
-    // the right failure mode — a silent partial recompute here would
-    // DROP results, not degrade gracefully.
-    val probes = probeFrame(queries, readCentroids(spark, path), nProbe,
-      idCol, vecCol).localCheckpoint()
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSet
-    val assigned = graft.io.IO.readStoreBuckets(spark, path, cells)
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
-      .select("nn_id", "cv", "cell")
-    rankProbed(restrictToAllowed(assigned, allowedIds, idCol), probes, k)
+    val (probes, rows) = route(spark, path, queries, readCentroids(spark, path),
+      nProbe, idCol, vecCol)
+    rankProbed(restrictToAllowed(rows.select("nn_id", "cv", "cell"), allowedIds, idCol),
+      probes, k)
   }
 
-  /** ONE-READ curve-measurement candidates (optimization round 14, guide
-    * §1.2 "remove unnecessary passes"): every servable row of the probed
-    * union at `maxProbe`, joined to its queries with the exact rounded
-    * cosine AND the probe rank (`cell_rk`) of its cell for that query.
-    * For any p ≤ maxProbe, the rows with `cell_rk <= p` are EXACTLY the
-    * candidate set [[ivfStoreTopK]] at nProbe = p ranks (the candidate-
-    * nesting property the curve contracts already rest on), so
-    * [[topKAtProbe]] over this frame reproduces that serve's rows
-    * bit-for-bit — same usability filter, same self-pair exclusion, same
-    * rounded-cosine/total order. [[tuneProbe]] measures its whole grid
-    * from one such pass instead of one pruned serve per grid point. */
-  private[graft] def ivfStoreProbeCandidates(spark: org.apache.spark.sql.SparkSession,
-                                             path: String, queries: DataFrame,
-                                             maxProbe: Int,
+  /** The route step of every IVF and IVF-PQ serve: the probe frame
+    * against `centroids`, PINNED (localCheckpoint), then the store rows of
+    * the probed cells only, read through the committed manifest (an
+    * unprobed cell's directory is never listed). Returns (probes, probed
+    * rows with the bucket column named `cell`). Pinning before the
+    * driver-side cell collect (≤ nCells ints) makes the pruned read and
+    * the candidate join see the SAME probe set under nondeterministic
+    * query lineage (sample/limit), so callers derive everything query-side
+    * from it, never from `queries`. Checkpoint blocks are non-reliable: an
+    * executor loss fails the serve instead of silently dropping results.
+    * The checkpoint, the collect and the schema-merged read are the
+    * serve's eager jobs, so they run under the `route` span; probe, ADC
+    * and refine run in the caller's action. */
+  private def route(spark: SparkSession, path: String, queries: DataFrame,
+                    centroids: DataFrame, nProbe: Int,
+                    idCol: String, vecCol: String): (DataFrame, DataFrame) =
+    obs.span("route") {
+      val probes = probeFrame(queries, centroids, nProbe, idCol, vecCol).localCheckpoint()
+      val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSet
+      (probes, IO.readStoreBuckets(spark, path, cells).withColumnRenamed(IO.BucketCol, "cell"))
+    }
+
+  /** Probe-curve candidates: every servable row of the probed union at
+    * `maxProbe` with its rounded cosine AND the probe rank (`cell_rk`) of
+    * its cell for that query. For any p ≤ maxProbe the rows with
+    * `cell_rk <= p` are EXACTLY the candidates [[ivfStoreTopK]] at
+    * nProbe = p ranks (probed candidate sets nest), so [[topKAt]] over
+    * this frame reproduces that serve row for row and [[tuneProbe]]
+    * measures its whole grid from one store read. */
+  private[graft] def ivfStoreProbeCandidates(spark: SparkSession, path: String,
+                                             queries: DataFrame, maxProbe: Int,
                                              idCol: String = "vec_id",
                                              vecCol: String = "embedding"): DataFrame = {
-    val probes = probeFrame(queries, readCentroids(spark, path), maxProbe,
-      idCol, vecCol).localCheckpoint()
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSet
-    graft.io.IO.readStoreBuckets(spark, path, cells)
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
-      .select("nn_id", "cv", "cell")
-      .where(cosineUsable(col("cv")))
-      .join(broadcast(probes), Seq("cell"))
-      .where(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"),
-        round(cosine(col("cv"), col("qv")), 4).as("cosine"), col("cell_rk"))
-  }
-
-  /** Top-k at probe budget `p` derived from an
-    * [[ivfStoreProbeCandidates]] frame — the `cell_rk <= p` prefix ranked
-    * by the serve's (cosine desc, nn_id asc) total order. Equals
-    * [[ivfStoreTopK]](nProbe = p) row-for-row for any p ≤ the frame's
-    * maxProbe. */
-  private[graft] def topKAtProbe(cands: DataFrame, k: Int, p: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    cands.where(col("cell_rk") <= p)
-      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("nn_id").asc)))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
+    val (probes, rows) = route(spark, path, queries, readCentroids(spark, path),
+      maxProbe, idCol, vecCol)
+    probedCosines(rows.select("nn_id", "cv", "cell"), probes, carry = Seq("cell_rk"))
   }
 
   /** Semi-join a candidate frame down to an allowed-id set (filtered
@@ -735,201 +717,204 @@ object Ann {
         Seq("nn_id"), "left_semi")
     }
 
-  // ---------------------------------------- measured probe operating point
+  // ----------------------------------------------- measured operating points
 
-  /** Sidecar carrying the store's MEASURED nProbe→recall@k curve — the
-    * tuning artifact every IVF deployment derives before picking its
-    * probe budget, persisted WITH the index so serves can resolve a
-    * recall target instead of hardcoding a probe count
-    * ([[ivfStoreTopKAtRecall]]). Header records k, the manifest version
-    * tuned against (so [[probeCurveStale]] can tell when appends/deletes
-    * have outrun the measurement), and the tuning query count. Same
-    * plain-small-file transport as `_graft_store_kind`. */
-  private def probeCurvePath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_probe_curve")
+  /** The recall knob an operating-point curve measures: the IVF store's
+    * probe count ([[tuneProbe]]) or the IVF-PQ store's ADC shortlist width
+    * at a fixed probe count ([[tuneRefine]]). Each curve persists WITH its
+    * store as a plain-text sidecar: one tab-separated `key=value` line with
+    * the `header` keys, then one `value<TAB>recall` line per grid point. */
+  sealed abstract class Knob(val sidecar: String, val column: String,
+                             private[llm] val header: Seq[String],
+                             private[llm] val tuner: String) {
+    /** The curve-candidate rows the serve at knob value `x` ranks. */
+    private[llm] def prefix(x: Int, k: Int): Column
+  }
+  object Knob {
+    case object Probe extends Knob("_graft_probe_curve", "n_probe",
+        Seq("k", "version", "n_queries"), "tuneProbe") {
+      private[llm] def prefix(x: Int, k: Int): Column = col("cell_rk") <= x
+    }
+    case object Refine extends Knob("_graft_refine_curve", "refine",
+        Seq("k", "n_probe", "version", "n_queries"), "tuneRefine") {
+      private[llm] def prefix(x: Int, k: Int): Column = col("crk") <= x.toLong * k
+    }
+  }
 
-  /** Measure the store's recall-vs-nProbe curve on `queries` and PERSIST
-    * it as the store's operating-point table. The exact baseline is the
-    * FULL-PROBE serve (nProbe = nCells): probing every cell makes the
-    * candidate set the entire servable corpus, so it equals the brute
-    * top-k by theorem — the tune needs no external oracle and reads only
-    * the store itself. Probe grid: powers of two up to the cell count
-    * (the standard sweep), overridable. Recall at probe p is the hit
-    * fraction of the full-probe result's (query, neighbor) pairs —
-    * monotone non-decreasing in p by the subset property of probed
-    * candidate sets under one total order. Returns the measured
-    * (n_probe, recall) frame; cost is |grid|+1 pruned serves, an OFFLINE
-    * maintenance op like [[compactIvfStore]].
-    *
-    * IVF-only BY THEOREM, not by omission: the self-contained baseline
-    * needs full-probe ≡ exact, which holds only when candidates rank by
-    * TRUE cosine — the IVF-PQ store ranks by ADC distance in code space,
-    * so its full-probe serve is NOT the brute result and a self-measured
-    * curve would calibrate against a biased baseline. The IVFPQ + flat
-    * refine topology tunes its probe budget against the flat tier's
-    * store (this method, on the full-precision index) — the standard
-    * deployment answer. */
-  def tuneProbe(spark: org.apache.spark.sql.SparkSession, path: String,
-                queries: DataFrame, k: Int = 10,
-                probes: Seq[Int] = Seq.empty,
-                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    requireStoreKind(spark, path, "ivf")
-    val nCells = graft.io.IO.storeBuckets(path) - 1
-    val grid = (if (probes.nonEmpty) probes.filter(p => p >= 1 && p < nCells)
-                else Iterator.iterate(1)(_ * 2).takeWhile(_ < nCells).toSeq)
-      .distinct.sorted :+ nCells
-    // the version is read BEFORE measuring and re-checked after: every
-    // grid point must describe ONE store version (the subset-nesting
-    // monotonicity theorem only holds within a version), and the stamp
-    // must be the version actually measured — a commit landing mid-tune
-    // fails loudly instead of persisting a mongrel curve it would then
-    // report as current
-    val v0 = graft.io.IO.storeVersions(spark, path).last
-    // pin the query frame once: every grid point must serve the SAME
-    // query set (nondeterministic caller lineage would otherwise tune
-    // different points on different queries)
+  /** A persisted operating-point curve: the k it was measured at, the
+    * probe count a refine curve was measured at, the manifest version
+    * measured, and its (knob value, recall@k) points. */
+  final case class Curve(k: Int, nProbe: Option[Int], version: Int,
+                         points: Seq[(Int, Double)])
+
+  /** Top-k at knob value `x` from a curve-candidates frame
+    * ([[ivfStoreProbeCandidates]] for Probe, [[ivfPqRefineCandidates]]
+    * for Refine): the knob's prefix ranked by the serve's total order.
+    * Its (query_id, nn_id, cosine, rank) rows equal the serve at `x` row
+    * for row; the candidate columns ride along. */
+  private[graft] def topKAt(cands: DataFrame, knob: Knob, k: Int, x: Int): DataFrame =
+    cands.where(knob.prefix(x, k))
+      .withColumn("rank", row_number().over(byCosine)).where(col("rank") <= k)
+
+  /** Measure a store's recall curve and PERSIST it as the knob's sidecar.
+    * The grid is `values` in [1, theorem) (default: powers of two) plus
+    * the `theorem` point, where the knob cannot bind and the serve is
+    * exact — recall 1.0 by theorem, so the tune needs no external oracle.
+    * `candidates` maps the pinned queries to the one-pass curve candidates
+    * at that point; recall at x is the fraction of its top-k rows that
+    * survive x's prefix and rank cut ([[topKAt]]), monotone in x because
+    * the prefixes nest under one total order. The store version is read
+    * before measuring and re-checked after: the nesting holds only within
+    * one version, so a commit landing mid-tune fails loudly instead of
+    * persisting a curve that mixes versions. */
+  private def measureCurve(spark: SparkSession, path: String, knob: Knob,
+                           queries: DataFrame, k: Int, nProbe: Option[Int],
+                           values: Seq[Int], idCol: String, vecCol: String)
+                          (theorem: => Int)
+                          (candidates: DataFrame => DataFrame): DataFrame = {
+    val v0 = IO.storeVersions(spark, path).last
+    val top = theorem
+    val grid = (if (values.nonEmpty) values.filter(x => x >= 1 && x < top)
+                else Iterator.iterate(1)(_ * 2).takeWhile(_ < top).toSeq)
+      .distinct.sorted :+ top
+    // pin the query frame once: every grid point must serve the SAME query
+    // set (nondeterministic caller lineage would otherwise tune different
+    // points on different queries)
     val q = queries.where(cosineUsable(col(vecCol)))
       .select(col(idCol), col(vecCol)).localCheckpoint()
     val curve =
       try {
         val nQ = q.count()
-        // Optimization round 14 (guide §1.2): ONE full-probe candidates
-        // pass instead of one pruned serve per grid point. Every grid
-        // point's served top-k is the cell_rk <= p window prefix of this
-        // frame (identical rows to ivfStoreTopK(nProbe = p) — see
-        // ivfStoreProbeCandidates), and the full-probe top-k is the
-        // unfiltered rank, so recall@p needs no join at all: flag the
-        // full-probe top-k rows once and count how many survive each
-        // prefix's rank cut. |grid| narrow window-counts over one
-        // checkpointed 4-column frame replace |grid| store reads, probe
-        // windows, and hash joins. The checkpointed frame is
-        // (queries × probed candidates) rows of 4 scalar columns — the
-        // same volume the old full-probe serve already computed and
-        // discarded past its top-k cut.
-        val cands = ivfStoreProbeCandidates(spark, path, q, nCells,
-            idCol, vecCol)
-          .localCheckpoint()
+        val cands = candidates(q).localCheckpoint()
         try {
-          import org.apache.spark.sql.expressions.Window
-          val flagged = cands.withColumn("rank_full",
-              row_number().over(Window.partitionBy("query_id")
-                .orderBy(col("cosine").desc, col("nn_id").asc)))
+          val flagged = cands.withColumn("rank_full", row_number().over(byCosine))
             .withColumn("is_full", col("rank_full") <= k)
           val nFull = flagged.where(col("is_full")).count()
-          val pts = grid.map { p =>
+          val pts = grid.map { x =>
             val recall =
-              if (p == nCells) 1.0 // by theorem; spares the redundant pass
-              else {
-                val hit = flagged.where(col("cell_rk") <= p)
-                  .withColumn("rank", row_number().over(
-                    Window.partitionBy("query_id")
-                      .orderBy(col("cosine").desc, col("nn_id").asc)))
-                  .where(col("rank") <= k && col("is_full")).count()
-                hit.toDouble / math.max(nFull, 1L)
-              }
-            (p, BigDecimal(recall)
-              .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble)
+              if (x == top) 1.0 // by theorem; spares the redundant pass
+              else topKAt(flagged, knob, k, x).where(col("is_full")).count()
+                .toDouble / math.max(nFull, 1L)
+            (x, BigDecimal(recall).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
           }
-          val vEnd = graft.io.IO.storeVersions(spark, path).last
+          val vEnd = IO.storeVersions(spark, path).last
           require(vEnd == v0,
             s"$path advanced v$v0 -> v$vEnd mid-tune — the measured points " +
               "span store versions; re-run the tune against the quiet store")
-          val (fs, _) = {
-            val pp = new org.apache.hadoop.fs.Path(path)
-            (pp.getFileSystem(spark.sessionState.newHadoopConf()), pp)
-          }
-          val out = fs.create(probeCurvePath(path), true)
-          try out.write((s"k=$k\tversion=$v0\tn_queries=$nQ\n" +
-            pts.map { case (p, r) => s"$p\t$r" }.mkString("\n")).getBytes("UTF-8"))
-          finally out.close()
+          val stamp = Seq[Long](k) ++ nProbe.map(_.toLong) ++ Seq[Long](v0, nQ)
+          val (fs, p) = sidecar(spark, path, knob.sidecar)
+          IO.writeSmallFile(fs, p,
+            knob.header.zip(stamp).map { case (key, v) => s"$key=$v" }.mkString("\t") +
+              "\n" + pts.map { case (x, r) => s"$x\t$r" }.mkString("\n"))
           pts
         } finally cands.unpersist(blocking = false)
       } finally q.unpersist(blocking = false)
     import spark.implicits._
-    curve.toDF("n_probe", "recall")
+    curve.toDF(knob.column, "recall")
   }
 
-  /** The persisted operating-point table: (k, manifest version tuned
-    * against, (nProbe, recall) points). Fails loudly when the store was
+  /** Measure the IVF store's recall-vs-nProbe curve on `queries` and
+    * PERSIST it ([[measureCurve]]). The theorem point is the FULL-PROBE
+    * serve (nProbe = nCells): its candidates are the entire servable
+    * corpus, so it equals the brute top-k. Returns the measured
+    * (n_probe, recall) frame; an OFFLINE maintenance op.
+    *
+    * IVF-only BY THEOREM: full-probe ≡ exact holds only when candidates
+    * rank by TRUE cosine. The IVF-PQ store ranks by ADC distance, so its
+    * full-probe serve is NOT the brute result; the IVFPQ + flat refine
+    * topology tunes its probe budget here, on the flat tier's
+    * full-precision store — the standard deployment answer. */
+  def tuneProbe(spark: SparkSession, path: String,
+                queries: DataFrame, k: Int = 10,
+                probes: Seq[Int] = Seq.empty,
+                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
+    requireStoreKind(spark, path, "ivf")
+    val nCells = IO.storeBuckets(path) - 1
+    measureCurve(spark, path, Knob.Probe, queries, k, None, probes, idCol, vecCol)(nCells)(
+      q => ivfStoreProbeCandidates(spark, path, q, nCells, idCol, vecCol))
+  }
+
+  /** A store's plain-text sidecar file and the filesystem it lives on. */
+  private def sidecar(spark: SparkSession, path: String, name: String): (FileSystem, Path) = {
+    val p = new Path(path, name)
+    (p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+  }
+
+  /** The store's persisted `knob` curve. Fails loudly when the store was
     * never tuned — a recall-target serve against an untuned store has no
-    * measured basis to resolve on. */
-  def readProbeCurve(spark: org.apache.spark.sql.SparkSession,
-                     path: String): (Int, Int, Seq[(Int, Double)]) = {
-    val p = probeCurvePath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    * measured basis to resolve on — and when the sidecar does not parse
+    * as a `knob` curve. */
+  def readCurve(spark: SparkSession, path: String, knob: Knob): Curve = {
+    val (fs, p) = sidecar(spark, path, knob.sidecar)
     require(fs.exists(p),
-      s"$path has no _graft_probe_curve — run tuneProbe before serving at " +
-        "a recall target")
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val hdr = lines.head.split('\t').map { kv =>
-      val Array(a, b) = kv.split('='); a -> b
-    }.toMap
-    val pts = lines.tail.filter(_.nonEmpty).map { l =>
-      val Array(a, b) = l.split('\t'); (a.toInt, b.toDouble)
+      s"$path has no ${knob.sidecar} — run ${knob.tuner} before serving at a recall target")
+    val lines = IO.readSmallFile(fs, p).linesIterator.toList
+    try {
+      val hdr = lines.head.split('\t').map(_.split('='))
+      require(hdr.forall(_.length == 2) && hdr.map(_.head).toSeq == knob.header,
+        s"header keys are not ${knob.header.mkString(", ")}")
+      val h = hdr.map(kv => kv(0) -> kv(1)).toMap
+      val pts = lines.tail.filter(_.nonEmpty).map { l =>
+        val Array(x, r) = l.split('\t'); (x.toInt, r.toDouble)
+      }
+      Curve(h("k").toInt, h.get("n_probe").map(_.toInt), h("version").toInt, pts)
+    } catch {
+      case e @ (_: IllegalArgumentException | _: MatchError | _: NoSuchElementException) =>
+        throw new IllegalArgumentException(
+          s"$p does not parse as a $knob curve: ${e.getMessage}", e)
     }
-    (hdr("k").toInt, hdr("version").toInt, pts)
   }
 
   /** True iff the store has committed versions SINCE the curve was
     * measured — appends/deletes/refreshes that may have moved the
-    * recall-vs-probe trade, so the operating point deserves a re-tune
-    * (the same drift story as [[ivfStoreStaleness]], for the tuning
-    * artifact). */
-  def probeCurveStale(spark: org.apache.spark.sql.SparkSession,
-                      path: String): Boolean =
-    readProbeCurve(spark, path)._2 !=
-      graft.io.IO.storeVersions(spark, path).last
+    * recall trade, so the operating point deserves a re-tune (the same
+    * drift story as [[vectorStoreStaleness]], for the tuning artifact). */
+  def curveStale(spark: SparkSession, path: String, knob: Knob): Boolean =
+    readCurve(spark, path, knob).version != IO.storeVersions(spark, path).last
 
-  /** The smallest MEASURED nProbe whose recorded recall meets
-    * `minRecall`; falls back to the largest measured probe (the
-    * full-probe point, recall 1.0 by theorem) when no smaller one does —
-    * so the resolve is total for any target ≤ 1.0. `forK` (when ≥ 0)
-    * requires the curve to have been tuned at THAT k: recall@k is not
-    * recall@k' — a probe budget measured for top-10 says nothing about
-    * top-100, and resolving across the mismatch would silently serve
-    * below the stated target. */
-  def resolveProbe(spark: org.apache.spark.sql.SparkSession, path: String,
-                   minRecall: Double, forK: Int = -1): Int = {
+  /** A recall-target serve against a stale curve could silently serve
+    * below the stated target, so it fails loudly instead — unless the
+    * caller passed `allowStale`, the explicit opt-out for a deployment
+    * that accepts measurement drift between re-tunes. */
+  private[graft] def requireCurrent(spark: SparkSession, path: String, knob: Knob): Unit =
+    require(!curveStale(spark, path, knob),
+      s"$path has committed versions since its ${knob.sidecar} was measured — a " +
+        "recall-target serve against the stale curve could silently miss the target; " +
+        s"re-run ${knob.tuner} (or pass allowStale = true to accept the drift)")
+
+  /** The smallest MEASURED knob value whose recall meets `minRecall`, else
+    * the largest (the theorem point, recall 1.0) — total for any target
+    * ≤ 1.0. `forK` / `forProbe` (when ≥ 0) require the curve to have been
+    * tuned at THAT k / probe count: recall@k transfers across neither, and
+    * resolving across a mismatch would silently serve below the target. */
+  def resolveCurve(spark: SparkSession, path: String, knob: Knob,
+                   minRecall: Double, forK: Int = -1, forProbe: Int = -1): Int = {
     require(minRecall > 0.0 && minRecall <= 1.0,
       s"minRecall must be in (0, 1]; got $minRecall")
-    val (curveK, _, pts) = readProbeCurve(spark, path)
-    require(forK < 0 || curveK == forK,
-      s"$path's probe curve was tuned at k=$curveK, not k=$forK — recall@k " +
-        "does not transfer across k; re-run tuneProbe at the serving k")
-    pts.sortBy(_._1).collectFirst { case (p, r) if r >= minRecall => p }
-      .getOrElse(pts.map(_._1).max)
+    val c = readCurve(spark, path, knob)
+    require(forK < 0 || c.k == forK,
+      s"$path's ${knob.sidecar} was tuned at k=${c.k}, not k=$forK — recall@k " +
+        s"does not transfer across k; re-run ${knob.tuner} at the serving k")
+    require(forProbe < 0 || c.nProbe.forall(_ == forProbe),
+      s"$path's ${knob.sidecar} was tuned at nProbe=${c.nProbe.getOrElse(-1)}, " +
+        s"not nProbe=$forProbe — re-run ${knob.tuner} at the serving probe budget")
+    c.points.sortBy(_._1).collectFirst { case (x, r) if r >= minRecall => x }
+      .getOrElse(c.points.map(_._1).max)
   }
 
   /** [[ivfStoreTopK]] at a RECALL TARGET instead of a probe count: the
     * probe budget resolves against the store's persisted measured curve
-    * — the closed loop between the tuning report and the serve default
-    * (a deployment states "recall ≥ 0.9", not "4 probes").
-    *
-    * The curve must be CURRENT: a commit since the tune (append/delete/
-    * refresh) may have moved the recall-vs-probe trade, so resolving
-    * against the stale measurement could silently serve below the stated
-    * target — the serve fails loudly instead (the same strictness as the
-    * forK mismatch check). `allowStale = true` is the explicit opt-out
-    * for a deployment that accepts measurement drift between re-tunes. */
-  def ivfStoreTopKAtRecall(spark: org.apache.spark.sql.SparkSession,
-                           path: String, queries: DataFrame, k: Int,
-                           minRecall: Double,
+    * at the serving k — the closed loop between the tuning report and the
+    * serve default (a deployment states "recall ≥ 0.9", not "4 probes").
+    * The curve must be current ([[requireCurrent]]). */
+  def ivfStoreTopKAtRecall(spark: SparkSession, path: String, queries: DataFrame,
+                           k: Int, minRecall: Double,
                            allowedIds: Option[DataFrame] = None,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding",
+                           idCol: String = "vec_id", vecCol: String = "embedding",
                            allowStale: Boolean = false): DataFrame = {
-    require(allowStale || !probeCurveStale(spark, path),
-      s"$path has committed versions since its probe curve was measured — " +
-        "a recall-target serve against the stale curve could silently miss " +
-        "the target; re-run tuneProbe (or pass allowStale = true to accept " +
-        "the drift)")
-    // forK = k: the curve must have been tuned at the SERVING k — see
-    // resolveProbe (recall@10 says nothing about recall@100)
+    if (!allowStale) requireCurrent(spark, path, Knob.Probe)
     ivfStoreTopK(spark, path, queries, k,
-      nProbe = resolveProbe(spark, path, minRecall, forK = k),
+      nProbe = resolveCurve(spark, path, Knob.Probe, minRecall, forK = k),
       allowedIds = allowedIds, idCol = idCol, vecCol = vecCol)
   }
 
@@ -941,7 +926,7 @@ object Ann {
     * Serves BOTH layouts (the store-kind marker resolves which buckets
     * are reserved quantizers and must never count as fragmented data
     * cells).
-    * Delegates to [[graft.io.IO.compactPartitionedStore]]: cells spread
+    * Delegates to [[IO.compactPartitionedStore]]: cells spread
     * over more than `maxGensPerCell` generations are rewritten
     * (content byte-identical, so served results cannot change) and the
     * collapse commits through the SAME optimistic-concurrency manifest
@@ -950,11 +935,10 @@ object Ann {
     * a concurrent append serializes through the version claim. Cost is
     * O(fragmented cells' data), never O(store). Returns
     * (cell, files_before, files_after) for the rewritten cells. */
-  def compactIvfStore(spark: org.apache.spark.sql.SparkSession, path: String,
+  def compactIvfStore(spark: SparkSession, path: String,
                       maxGensPerCell: Int = 1): DataFrame = {
     val frag = fragmentedCells(spark, path, maxGensPerCell)
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     if (frag.isEmpty)
       return Seq.empty[(Int, Int, Int)].toDF("cell", "files_before", "files_after")
     // per-cell parquet-file listings only bracket an ACTUAL rewrite —
@@ -966,7 +950,7 @@ object Ann {
     // a multi-generation quantizer bucket — no current op creates one —
     // could be silently rewritten while this report omitted it)
     val before = storeCellFiles(spark, path)
-    graft.io.IO.compactStoreBuckets(spark, path, frag)
+    IO.compactStoreBuckets(spark, path, frag)
     val after = storeCellFiles(spark, path)
     frag.toSeq.sorted
       .map(c => (c, before.getOrElse(c, 0), after.getOrElse(c, 0)))
@@ -976,30 +960,10 @@ object Ann {
   /** True iff some cell of the store is spread over more than `maxGens`
     * generations — i.e. [[compactIvfStore]] would have work to do. A
     * manifest-only check: no data directory is ever listed. */
-  def ivfStoreFragmented(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfStoreFragmented(spark: SparkSession, path: String,
                          maxGens: Int = 1): Boolean =
     fragmentedCells(spark, path, maxGens).nonEmpty
 
-  /** DELETE vectors from a persisted vector store by id — the curation
-    * step every serving index needs once dedup / decontamination /
-    * takedown passes flag rows (the training-data right-to-be-forgotten
-    * path), kind-agnostic across the IVF and IVF-PQ layouts.
-    *
-    * The store routes by CELL (a trusted routing column), not by key
-    * hash, so the generic [[graft.io.IO.deleteFromPartitionedStore]]
-    * would prune the WRONG buckets here. Instead the delete keys resolve
-    * to their cells first — one column-pruned (nn_id, cell) projection
-    * scan of the data cells joined to the broadcast id set — and then
-    * ONLY the touched cells are anti-joined and rewritten through the
-    * same optimistic manifest loop as every merge: O(id-column scan +
-    * touched cells' data), never a full-store rewrite; pre-delete
-    * versions stay time-travel-readable until vacuum; an emptied cell
-    * drops out of the manifest (and the probed serve handles its absence
-    * as an empty read). The broadcast bounds the op to takedown-scale
-    * delete sets — deleting a corpus-scale fraction is a REBUILD, and the
-    * staleness report is what tells you that moment arrived. Quantizer
-    * buckets are never touched: routing stays valid for every surviving
-    * and future row. */
   /** The data cells of a store, from an already-read kind + bucket count
     * (the maintenance entry points read both once and thread them). */
   private def dataCellsOf(kind: String, nBuckets: Int, path: String): Set[Int] = {
@@ -1017,26 +981,45 @@ object Ann {
     * cells joined to the broadcast id set (PlanAuditSpec pins the scan
     * schema carries nn_id only). A closure because the OCC retry loop
     * must re-locate against the new current manifest after a lost race —
-    * see [[graft.io.IO.deleteFromPartitionedStoreRouted]]. */
-  private def locateIds(spark: org.apache.spark.sql.SparkSession, path: String,
+    * see [[IO.routedRewrite]]. */
+  private def locateIds(spark: SparkSession, path: String,
                         dataCells: Set[Int], ids: DataFrame,
                         idCol: String): () => DataFrame = () =>
-    graft.io.IO.readStoreBuckets(spark, path, dataCells)
-      .select(col("nn_id"), col(graft.io.IO.BucketCol))
+    IO.readStoreBuckets(spark, path, dataCells)
+      .select(col("nn_id"), col(IO.BucketCol))
       .join(broadcast(ids.select(col(idCol).cast("long").as("nn_id")).distinct()),
         Seq("nn_id"))
 
-  def deleteFromVectorStore(spark: org.apache.spark.sql.SparkSession, path: String,
+  /** DELETE vectors from a persisted vector store by id — the curation
+    * step every serving index needs once dedup / decontamination /
+    * takedown passes flag rows (the training-data right-to-be-forgotten
+    * path), kind-agnostic across the IVF and IVF-PQ layouts.
+    *
+    * The store routes by CELL (a trusted routing column), not by key
+    * hash, so the generic [[IO.deleteFromPartitionedStore]]
+    * would prune the WRONG buckets here. Instead the delete keys resolve
+    * to their cells first ([[locateIds]]) and then ONLY the touched cells
+    * are anti-joined and rewritten through the same optimistic manifest
+    * loop as every merge ([[IO.routedRewrite]]): O(id-column scan +
+    * touched cells' data), never a full-store rewrite; pre-delete
+    * versions stay time-travel-readable until vacuum; an emptied cell
+    * drops out of the manifest (and the probed serve handles its absence
+    * as an empty read). The broadcast bounds the op to takedown-scale
+    * delete sets — deleting a corpus-scale fraction is a REBUILD, and the
+    * staleness report is what tells you that moment arrived. Quantizer
+    * buckets are never touched: routing stays valid for every surviving
+    * and future row. */
+  def deleteFromVectorStore(spark: SparkSession, path: String,
                             ids: DataFrame, idCol: String = "vec_id"): Unit = {
     val kind = readStoreKind(spark, path) // validates the marker
-    val dataCells = dataCellsOf(kind, graft.io.IO.storeBuckets(path), path)
-    graft.io.IO.deleteFromPartitionedStoreRouted(spark, path,
-      locateIds(spark, path, dataCells, ids, idCol), keys = Seq("nn_id"))
+    val dataCells = dataCellsOf(kind, IO.storeBuckets(path), path)
+    IO.routedRewrite(spark, path, locateIds(spark, path, dataCells, ids, idCol),
+      None, keys = Seq("nn_id"))
   }
 
-  /** Shared tail of the two staleness reports: per-cell (n, p50 dist)
-    * aggregates of the build-version rows vs the current rows, joined
-    * into the drift frame. Inputs carry exactly (cell, dist). The join
+  /** The drift frame of [[vectorStoreStaleness]]: per-cell (n, p50 dist)
+    * aggregates of the build-version rows vs the current rows, joined.
+    * Inputs carry exactly (cell, dist). The join
     * is FULL outer: appends add cells the build never had (n_build = 0,
     * NULL build quantile, drifted = true — a cell the quantizer fit
     * never saw has no baseline to be "close" to), and
@@ -1090,7 +1073,7 @@ object Ann {
     * layout persists (id, vector, cell), the IVF-PQ layout re-encodes
     * the residual codes through the stored codebooks.
     *
-    * ONE atomic manifest commit ([[graft.io.IO.upsertPartitionedStoreRouted]]):
+    * ONE atomic manifest commit ([[IO.routedRewrite]] with new rows):
     * a racing reader resolves the pre- or post-upsert version, never a
     * deleted-but-not-reinserted middle. Cost: the id-locate column scan
     * + O((old ∪ new touched cells)' data) rewrite. Unusable delta
@@ -1103,26 +1086,23 @@ object Ann {
                         vecCol: String = "embedding"): Unit = {
     val spark = delta.sparkSession
     val kind = readStoreKind(spark, path)
-    val dataCells = dataCellsOf(kind, graft.io.IO.storeBuckets(path), path)
+    val dataCells = dataCellsOf(kind, IO.storeBuckets(path), path)
     val usable = delta.where(cosineUsable(col(vecCol)))
     val newRows = kind match {
       case "ivf" =>
         assignCells(usable, readCentroids(spark, path), idCol, vecCol)
-          .select(col("nn_id"), col("cv"), col("cell").as(graft.io.IO.BucketCol))
-      case "ivfpq" =>
+          .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
+      case _ => // "ivfpq": dataCellsOf rejected every other kind
         val (_, centArr, cb) = loadIvfPqQuantizers(spark, path)
         val codesU = pqCodesUdf(cb)
         val rU = residUdf(centArr)
         assignCellsCollected(usable, centArr, idCol, vecCol)
           .select(col("nn_id"), codesU(rU(col("cv"), col("cell"))).as("codes"),
             lit(null).cast("array<double>").as("cv"),
-            col("cell").as(graft.io.IO.BucketCol))
-      case other => throw new IllegalArgumentException(
-        s"$path has unknown store kind '$other'")
+            col("cell").as(IO.BucketCol))
     }
-    graft.io.IO.upsertPartitionedStoreRouted(spark, path,
-      locateIds(spark, path, dataCells, delta, idCol), newRows,
-      keys = Seq("nn_id"))
+    IO.routedRewrite(spark, path, locateIds(spark, path, dataCells, delta, idCol),
+      Some(newRows), keys = Seq("nn_id"))
   }
 
   /** Sidecar recording the manifest version staleness reports baseline
@@ -1132,8 +1112,7 @@ object Ann {
     * (the old v1 baseline would compare current members against the NEW
     * centroids and misread a just-refreshed store as drifted or fresh at
     * random). */
-  private def stalenessBasePath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_staleness_base")
+  private val StalenessBaseFile = "_graft_staleness_base"
 
   /** The BUILD version a staleness report baselines against — v1, or the
     * last refresh's recorded version. Fails loudly when vacuum trimmed
@@ -1142,18 +1121,10 @@ object Ann {
     * would report itself fresh (build == now). Same fail-loudly rule as
     * the store-kind marker: a maintenance signal that can silently read
     * healthy is worse than none. */
-  private[llm] def stalenessBaseline(spark: org.apache.spark.sql.SparkSession,
-                                     path: String): Int = {
-    val vs = graft.io.IO.storeVersions(spark, path)
-    val p = stalenessBasePath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val base =
-      if (!fs.exists(p)) 1
-      else {
-        val in = fs.open(p)
-        try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim.toInt
-        finally in.close()
-      }
+  private[llm] def stalenessBaseline(spark: SparkSession, path: String): Int = {
+    val vs = IO.storeVersions(spark, path)
+    val (fs, p) = sidecar(spark, path, StalenessBaseFile)
+    val base = if (!fs.exists(p)) 1 else IO.readSmallFile(fs, p).trim.toInt
     require(vs.contains(base),
       s"$path no longer retains its staleness baseline v$base (retained: " +
         s"${vs.mkString(",")}) — vacuum removed it, and a report against a " +
@@ -1161,12 +1132,12 @@ object Ann {
     base
   }
 
-  /** Staleness report for an append-maintained IVF store — the queryable
-    * form of the trade [[appendIvfStore]] documents ("centroids age as
-    * the distribution drifts; refresh = rebuild"). Per cell, comparing
-    * the store's FIRST committed version (the build — the corpus its
-    * quantizer was actually fit on; time-travel-readable by construction
-    * until vacuum) against the CURRENT version:
+  /** Staleness report for an append-maintained vector store, either
+    * layout — the queryable form of the trade [[appendIvfStore]]
+    * documents ("centroids age as the distribution drifts; refresh =
+    * rebuild"). Per data cell, comparing the store's BUILD version (the
+    * corpus its quantizer was actually fit on, [[stalenessBaseline]];
+    * time-travel-readable until vacuum) against the CURRENT version:
     *
     *  - `n_build`, `n_now`, `appended_frac` — how much of the cell the
     *    quantizer fit never saw;
@@ -1179,31 +1150,43 @@ object Ann {
     *    from the centroid that routes them: probes start missing true
     *    neighbors, and the documented refresh (rebuild) is due.
     *
+    * The IVF-PQ layout keeps no corpus float, so its member distance is
+    * the decoded residual's norm √Σ_j ‖codeword_{j,c_j}‖² (the ADC sum of
+    * a zero-vector LUT), within the PQ error the serve itself runs at. It
+    * SATURATES at the codebook envelope, so there the ratio is a LOWER
+    * bound on true drift; the exact report runs on the flat tier's store.
+    *
     * Cost: O(store) — one pass per side into a partial-combining
     * per-cell aggregate (the exchange carries nCells rows); an OFFLINE
     * maintenance report, never on the serve path, same cost class as
     * [[compactIvfStore]]. */
-  def ivfStoreStaleness(spark: org.apache.spark.sql.SparkSession, path: String,
-                        maxDriftRatio: Double = 2.0): DataFrame = {
-    requireStoreKind(spark, path, "ivf")
-    val reserved = graft.io.IO.storeBuckets(path) - 1
+  def vectorStoreStaleness(spark: SparkSession, path: String,
+                           maxDriftRatio: Double = 2.0): DataFrame = {
+    val kind = readStoreKind(spark, path)
+    val dataCells = dataCellsOf(kind, IO.storeBuckets(path), path)
     val v1 = stalenessBaseline(spark, path)
-    val cents = broadcast(readCentroids(spark, path))
-    def withDist(df: DataFrame): DataFrame = df
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
-      .where(col("cell") =!= reserved)
-      .join(cents, Seq("cell"))
-      .select(col("cell"), sqrt(aggregate(
-        zip_with(col("cv"), col("centroid"), (x, y) => (x - y) * (x - y)),
-        lit(0.0d), (s, x) => s + x)).as("dist"))
+    val dist: DataFrame => DataFrame = kind match {
+      case "ivf" =>
+        val cents = broadcast(readCentroids(spark, path))
+        _.join(cents, Seq("cell")).select(col("cell"), sqrt(aggregate(
+          zip_with(col("cv"), col("centroid"), (x, y) => (x - y) * (x - y)),
+          lit(0.0d), (s, x) => s + x)).as("dist"))
+      case _ => // "ivfpq": dataCellsOf rejected every other kind
+        val (_, _, cb) = loadIvfPqQuantizers(spark, path)
+        val lut0: Seq[Seq[Double]] = cb.toSeq.map(_.toSeq.map(_.map(x => x * x).sum))
+        _.select(col("cell"), sqrt(pqAdc(col("codes"), typedLit(lut0))).as("dist"))
+    }
+    // data cells are 0 until their count; the reserved buckets sit above
+    def withDist(df: DataFrame): DataFrame =
+      dist(df.withColumnRenamed(IO.BucketCol, "cell").where(col("cell") < dataCells.size))
     stalenessReport(
-      withDist(graft.io.IO.readPartitionedStoreAtTagged(spark, path, v1)),
-      withDist(graft.io.IO.readStoreBuckets(spark, path, (0 until reserved).toSet)),
+      withDist(IO.readPartitionedStoreAtTagged(spark, path, v1)),
+      withDist(IO.readStoreBuckets(spark, path, dataCells)),
       maxDriftRatio)
   }
 
   /** REFRESH an IVF store whose quantizer has aged — the op the
-    * [[ivfStoreStaleness]] report exists to trigger, closing the
+    * [[vectorStoreStaleness]] report exists to trigger, closing the
     * "centroids age; refresh = rebuild" loop WITHOUT a from-scratch
     * rebuild of the store's commit history: re-fit the coarse centroids
     * on the CURRENT corpus (same cell count — the bucket layout is
@@ -1223,19 +1206,18 @@ object Ann {
     * report can only over-report drift, never read falsely fresh), so
     * the next report measures from the corpus this quantizer was
     * actually fit on. The persisted probe curve, if any, is left in
-    * place and reads as stale ([[probeCurveStale]]) — re-tune after a
+    * place and reads as stale ([[curveStale]]) — re-tune after a
     * refresh. Returns true iff a refresh committed. */
-  def refreshIvfStore(spark: org.apache.spark.sql.SparkSession, path: String,
+  def refreshIvfStore(spark: SparkSession, path: String,
                       maxDriftRatio: Double = 2.0, maxDriftedCells: Long = 0L,
                       force: Boolean = false, seed: Long = 42L): Boolean = {
     requireStoreKind(spark, path, "ivf")
-    val drifted = ivfStoreStaleness(spark, path, maxDriftRatio)
+    val drifted = vectorStoreStaleness(spark, path, maxDriftRatio)
       .where(col("drifted") && col("n_now") > 0).count()
     if (!force && drifted <= maxDriftedCells) return false
-    val nBuckets = graft.io.IO.storeBuckets(path)
+    val nBuckets = IO.storeBuckets(path)
     val reserved = nBuckets - 1
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     // recomputed per optimistic attempt (rare: only under a racing
     // writer): the refit must describe the manifest version it commits
     // against, same rule as every routed rewrite
@@ -1244,43 +1226,40 @@ object Ann {
       val cents = collectedCentroids(
         fitCentroids(rows, nCells = reserved, vecCol = "cv", seed = seed))
       val data = assignCellsCollected(rows, cents, "nn_id", "cv")
-        .select(col("nn_id"), col("cv"), col("cell").as(graft.io.IO.BucketCol))
+        .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
       val centRows = cents.toSeq
         .map { case (cell, c) => (-1L - cell, c.toSeq) }
         .toDF("nn_id", "cv")
-        .withColumn(graft.io.IO.BucketCol, lit(reserved))
+        .withColumn(IO.BucketCol, lit(reserved))
       data.unionByName(centRows)
     }
     // the baseline is the version THIS rewrite committed — returned from
     // the OCC loop, never re-read from storeVersions.last, which a
     // racing writer's immediately-following commit could have advanced
     // past ours (baselining on that commit would under-report ITS drift)
-    val committed = graft.io.IO.rewriteStoreBuckets(spark, path,
+    val committed = IO.rewriteStoreBuckets(spark, path,
       (0 until nBuckets).toSet, () => rewrite())
       .getOrElse(throw new IllegalStateException(
         s"refresh rewrite of $path committed no version"))
-    val p = stalenessBasePath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(committed.toString.getBytes("UTF-8")) finally out.close()
+    val (fs, p) = sidecar(spark, path, StalenessBaseFile)
+    IO.writeSmallFile(fs, p, committed.toString)
     true
   }
 
   /** Per-cell parquet-file counts of the CURRENT manifest (all
     * generations a cell's entry references), via Hadoop FileSystem so the
     * accounting is storage-agnostic like the read path itself. */
-  private def storeCellFiles(spark: org.apache.spark.sql.SparkSession,
+  private def storeCellFiles(spark: SparkSession,
                              path: String): Map[Int, Int] = {
-    import org.apache.hadoop.fs.Path
     val root = new Path(path)
     val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
-    val v = graft.io.IO.currentManifestVersion(fs, root).getOrElse(
+    val v = IO.currentManifestVersion(fs, root).getOrElse(
       throw new IllegalArgumentException(
         s"$path has no committed manifest — not an IVF store"))
-    graft.io.IO.readManifest(fs, root, v)
+    IO.readManifest(fs, root, v)
       .groupBy(_._1).map { case (b, pairs) =>
         b -> pairs.map { case (_, g) =>
-          val d = new Path(root, s"${graft.io.IO.GenCol}=$g/${graft.io.IO.BucketCol}=$b")
+          val d = new Path(root, s"${IO.GenCol}=$g/${IO.BucketCol}=$b")
           fs.listStatus(d).count(st =>
             st.isFile && st.getPath.getName.endsWith(".parquet"))
         }.sum
@@ -1295,11 +1274,11 @@ object Ann {
     * derived from the committed bucket→generation map, so the check
     * never lists a data directory (file counts are [[storeCellFiles]]'
     * separate, rewrite-bracketing concern). */
-  private def fragmentedCells(spark: org.apache.spark.sql.SparkSession,
+  private def fragmentedCells(spark: SparkSession,
                               path: String,
                               maxGens: Int): Set[Int] = {
     val reserved = reservedStoreBuckets(spark, path)
-    graft.io.IO.storeBucketGenerations(spark, path).collect {
+    IO.storeBucketGenerations(spark, path).collect {
       case (b, n) if n > maxGens && !reserved(b) => b
     }.toSet
   }
@@ -1712,14 +1691,14 @@ object Ann {
     // reads a flat store, see ivfPqStoreTopK's refineFrom)
     val data = resid
       .select(col("nn_id"), codesU(col("rv")).as("codes"), nullVec.as("cv"),
-        col("cell").as(graft.io.IO.BucketCol))
+        col("cell").as(IO.BucketCol))
     val spark = corpus.sparkSession
     import spark.implicits._
     val centRows = cents.toSeq
       .map { case (cell, c) => (-1L - cell, c.toSeq) }
       .toDF("nn_id", "cv")
       .select(col("nn_id"), nullCodes.as("codes"), col("cv"),
-        lit(reserved).as(graft.io.IO.BucketCol))
+        lit(reserved).as(IO.BucketCol))
     // codebook rows: identity IS the (subspace, code) pair, carried in
     // `codes`; the nn_id key space sits BELOW the centroid rows' range
     // [-reserved, -1] (offset by the cell count), so no centroid row and
@@ -1730,9 +1709,9 @@ object Ann {
       .flatMap { case (sub, j) => sub.zipWithIndex.map { case (cent, c) =>
         (-1L - reserved - (j.toLong * ksubActual + c), Seq(j, c), cent.toSeq) } }
       .toDF("nn_id", "codes", "cv")
-      .withColumn(graft.io.IO.BucketCol, lit(reserved + 1))
+      .withColumn(IO.BucketCol, lit(reserved + 1))
     // layout tag committed atomically with the data — see writeIvfStore
-    graft.io.IO.writePartitionedStore(data.unionByName(centRows).unionByName(cbRows),
+    IO.writePartitionedStore(data.unionByName(centRows).unionByName(cbRows),
       path, keys = Seq("nn_id"), nBuckets = reserved + 2,
       layoutTag = Some("ivfpq"))
     } finally assigned.unpersist(blocking = false)
@@ -1744,8 +1723,7 @@ object Ann {
     * path would silently decode the CODEBOOK bucket as centroids and
     * route every subsequent append by garbage distances. Readers require
     * a match and fail loudly instead. */
-  private def storeKindPath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_store_kind")
+  private val StoreKindFile = "_graft_store_kind"
   /** private[graft]: a store persisted BEFORE the marker existed needs a
     * one-time `writeStoreKind(spark, path, "ivf")` migration touch —
     * tooling-level, deliberate, never guessed by a reader. Recorded
@@ -1755,30 +1733,23 @@ object Ann {
     * population to migrate, and guessing would reintroduce exactly the
     * decode-codebooks-as-centroids corruption the marker exists to stop;
     * the requireStoreKind error message carries the migration recipe. */
-  private[graft] def writeStoreKind(spark: org.apache.spark.sql.SparkSession,
-                                    path: String, kind: String): Unit = {
-    val p = storeKindPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    val out = fs.create(p, true)
-    try out.write(kind.getBytes("UTF-8")) finally out.close()
+  private[graft] def writeStoreKind(spark: SparkSession, path: String, kind: String): Unit = {
+    val (fs, p) = sidecar(spark, path, StoreKindFile)
+    IO.writeSmallFile(fs, p, kind)
   }
   /** The store's layout kind ('ivf' | 'ivfpq') from its marker; fails
     * loudly on a missing marker (see [[writeStoreKind]] for the recorded
     * no-legacy-fallback decision). */
-  private def readStoreKind(spark: org.apache.spark.sql.SparkSession,
-                            path: String): String = {
-    val p = storeKindPath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+  private def readStoreKind(spark: SparkSession, path: String): String = {
+    val (fs, p) = sidecar(spark, path, StoreKindFile)
     require(fs.exists(p),
       s"$path has no _graft_store_kind marker — not a graft vector store " +
         "(a store persisted before the marker existed needs the one-time " +
         "writeStoreKind migration touch)")
-    val in = fs.open(p)
-    try scala.io.Source.fromInputStream(in, "UTF-8").mkString.trim
-    finally in.close()
+    IO.readSmallFile(fs, p).trim
   }
 
-  private def requireStoreKind(spark: org.apache.spark.sql.SparkSession,
+  private def requireStoreKind(spark: SparkSession,
                                path: String, kind: String): Unit = {
     val got = readStoreKind(spark, path)
     require(got == kind,
@@ -1791,19 +1762,19 @@ object Ann {
     * (centroids + codebooks). The kind-agnostic maintenance surface
     * (fragmentation check, compaction, staleness) routes through this
     * so it can never mistake a quantizer bucket for a data cell. */
-  private def reservedStoreBuckets(spark: org.apache.spark.sql.SparkSession,
+  private def reservedStoreBuckets(spark: SparkSession,
                                    path: String): Set[Int] = {
-    val n = graft.io.IO.storeBuckets(path)
+    val n = IO.storeBuckets(path)
     (0 until n).toSet -- dataCellsOf(readStoreKind(spark, path), n, path)
   }
 
   /** The coarse centroid table of a persisted IVF-PQ store (reserved
     * bucket `nCells`), through the committed manifest. */
-  def readIvfPqCentroids(spark: org.apache.spark.sql.SparkSession,
+  def readIvfPqCentroids(spark: SparkSession,
                          path: String): DataFrame = {
     requireStoreKind(spark, path, "ivfpq")
-    val reserved = graft.io.IO.storeBuckets(path) - 2
-    graft.io.IO.readStoreBuckets(spark, path, Set(reserved))
+    val reserved = IO.storeBuckets(path) - 2
+    IO.readStoreBuckets(spark, path, Set(reserved))
       .select((-col("nn_id") - 1).cast("int").as("cell"),
         col("cv").as("centroid"))
   }
@@ -1814,11 +1785,11 @@ object Ann {
     * Residual-space: codewords quantize `v − centroid(cell)`, so they
     * are only meaningful together with the SAME store's coarse
     * centroids ([[readIvfPqCentroids]]). */
-  def readIvfPqCodebooks(spark: org.apache.spark.sql.SparkSession,
+  def readIvfPqCodebooks(spark: SparkSession,
                          path: String): DataFrame = {
     requireStoreKind(spark, path, "ivfpq")
-    val reserved = graft.io.IO.storeBuckets(path) - 1
-    graft.io.IO.readStoreBuckets(spark, path, Set(reserved))
+    val reserved = IO.storeBuckets(path) - 1
+    IO.readStoreBuckets(spark, path, Set(reserved))
       .select(element_at(col("codes"), 1).as("subspace"),
         element_at(col("codes"), 2).as("code"), col("cv").as("centroid"))
   }
@@ -1829,24 +1800,24 @@ object Ann {
     * tiny rows, never data). Returns the centroid frame [[probeFrame]]
     * broadcasts and the collected codebooks the encode/LUT kernels
     * loop over. */
-  private def loadIvfPqQuantizers(spark: org.apache.spark.sql.SparkSession,
+  private def loadIvfPqQuantizers(spark: SparkSession,
                                   path: String):
       (DataFrame, Array[(Int, Array[Double])], Array[Array[Array[Double]]]) = {
     requireStoreKind(spark, path, "ivfpq")
-    val nCells = graft.io.IO.storeBuckets(path) - 2
-    val rows = graft.io.IO.readStoreBuckets(spark, path, Set(nCells, nCells + 1))
+    val nCells = IO.storeBuckets(path) - 2
+    val rows = IO.readStoreBuckets(spark, path, Set(nCells, nCells + 1))
       .collect()
     import spark.implicits._
     // collection.Seq + toVector: Spark hands back a MUTABLE ArraySeq, and
     // both a `getAs[Seq[_]]` checkcast (2.13 Seq = immutable.Seq) and the
     // local-seq encoder reject it
-    val centArr = rows.filter(_.getAs[Int](graft.io.IO.BucketCol) == nCells)
+    val centArr = rows.filter(_.getAs[Int](IO.BucketCol) == nCells)
       .map(r => ((-r.getAs[Long]("nn_id") - 1).toInt,
         r.getAs[scala.collection.Seq[Double]]("cv").toArray))
       .sortBy(_._1)
     val cents = centArr.toSeq.map { case (c, v) => (c, v.toVector) }
       .toDF("cell", "centroid")
-    val cb = rows.filter(_.getAs[Int](graft.io.IO.BucketCol) == nCells + 1)
+    val cb = rows.filter(_.getAs[Int](IO.BucketCol) == nCells + 1)
       .map { r =>
         val sc = r.getAs[scala.collection.Seq[Int]]("codes")
         (sc(0), sc(1), r.getAs[scala.collection.Seq[Double]]("cv").toArray)
@@ -1858,12 +1829,12 @@ object Ann {
 
   /** The code rows of a persisted IVF-PQ store — (nn_id, codes, cell)
     * through the CURRENT committed manifest, reserved buckets excluded. */
-  def readIvfPqStore(spark: org.apache.spark.sql.SparkSession,
+  def readIvfPqStore(spark: SparkSession,
                      path: String): DataFrame = {
     requireStoreKind(spark, path, "ivfpq")
-    val nCells = graft.io.IO.storeBuckets(path) - 2
-    graft.io.IO.readStoreBuckets(spark, path, (0 until nCells).toSet)
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
+    val nCells = IO.storeBuckets(path) - 2
+    IO.readStoreBuckets(spark, path, (0 until nCells).toSet)
+      .withColumnRenamed(IO.BucketCol, "cell")
       .select("nn_id", "codes", "cell")
   }
 
@@ -1883,15 +1854,15 @@ object Ann {
     val rows = assignCellsCollected(delta.where(cosineUsable(col(vecCol))),
         centArr, idCol, vecCol)
       .select(col("nn_id"), codesU(rU(col("cv"), col("cell"))).as("codes"),
-        nullVec.as("cv"), col("cell").as(graft.io.IO.BucketCol))
-    graft.io.IO.appendPartitionedStore(spark, path, rows, keys = Seq("nn_id"))
+        nullVec.as("cv"), col("cell").as(IO.BucketCol))
+    IO.appendPartitionedStore(spark, path, rows, keys = Seq("nn_id"))
   }
 
   /** Serve top-k from the persisted IVF-PQ index: nProbe cells per query
     * via the stored centroids, store read PRUNED to the probed cells'
-    * code rows (file-list-level manifest pruning — the scan never touches
-    * a float of the corpus), ADC-ranked shortlist of `refine`·k per query
-    * via the stored codebooks' LUTs, then
+    * code rows ([[route]] — the scan never touches a float of the
+    * corpus), ADC-ranked shortlist of `refine`·k per query via the stored
+    * codebooks' LUTs ([[pqRanked]]), then
     *
     *  - `refineFrom = Some(flat)`: exact-cosine re-rank of the shortlist
     *    against the given full-precision store — the standard
@@ -1902,61 +1873,18 @@ object Ann {
     *    without a flat tier does); emits (query_id, nn_id, adc_dist,
     *    rank) ranked by ADC distance asc.
     */
-  def ivfPqStoreTopK(spark: org.apache.spark.sql.SparkSession, path: String,
+  def ivfPqStoreTopK(spark: SparkSession, path: String,
                      queries: DataFrame, k: Int, nProbe: Int = 4, refine: Int = 8,
                      refineFrom: Option[DataFrame] = None,
                      allowedIds: Option[DataFrame] = None,
                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (cents, centArr, cb) = loadIvfPqQuantizers(spark, path)
-    // pinned before the cell collect — same rationale as ivfStoreTopK.
-    // EVERYTHING query-side downstream (the per-probe residual LUTs and
-    // the refine join's (query_id, qv) set) derives from this pinned
-    // frame, never from the caller's `queries`: under nondeterministic
-    // query lineage (sample/limit) a re-derivation could resolve a
-    // DIFFERENT query set — dropping queries from the result, or
-    // building a LUT from a different vector than the one that routed
-    // its probes.
-    val probes = probeFrame(queries, cents, nProbe, idCol, vecCol)
-      .localCheckpoint()
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSet
-    // filtered search restricts the CODE candidates before the ADC rank,
-    // so both the shortlist and the refined result are the true top-k of
-    // the allowed subset (see ivfStoreTopK's allowedIds doc)
-    val codes = restrictToAllowed(
-      graft.io.IO.readStoreBuckets(spark, path, cells)
-        .withColumnRenamed(graft.io.IO.BucketCol, "cell")
-        .select("nn_id", "codes", "cell"),
-      allowedIds, idCol)
-    // residual layout ⇒ the LUT is per (query, PROBED CELL): partial
-    // distances of (qv − centroid(cell)) to the residual codewords, so
-    // summed ADC ≈ ‖q − (centroid + codeword)‖² — comparable across the
-    // probed cells exactly like flat-layout ADC
-    val lutU = pqLutUdf(cb)
-    val rU = residUdf(centArr)
-    val probeLuts = probes
-      .withColumn("lut", lutU(rU(col("qv"), col("cell"))))
-      .select("query_id", "cell", "lut")
-    val qPinned = probes.select(col("query_id"), col("qv"))
-      .dropDuplicates("query_id")
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc").asc, col("nn_id").asc)
-    val shortlist = codes
-      .join(broadcast(probeLuts), Seq("cell"))
-      .where(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"),
-        pqAdc(col("codes"), col("lut")).as("adc"))
-      // same NULLS-FIRST trap as pqTopK's shortlist window — a NULL adc
-      // is dropped, never ranked
-      .where(col("adc").isNotNull)
-      .withColumn("crk", row_number().over(wAdc))
-      .where(col("crk") <= refine * k)
+    val (ranked, qPinned) = pqRanked(spark, path, queries, nProbe, allowedIds, idCol, vecCol)
+    val shortlist = ranked.where(col("crk") <= refine * k)
     refineFrom match {
       case Some(flat) =>
-        val w = Window.partitionBy("query_id")
-          .orderBy(col("cosine").desc, col("nn_id").asc)
         refineAgainstFlat(shortlist.select("query_id", "nn_id"), flat,
             qPinned, idCol, vecCol)
-          .withColumn("rank", row_number().over(w)).where(col("rank") <= k)
+          .withColumn("rank", row_number().over(byCosine)).where(col("rank") <= k)
       case None =>
         shortlist
           .select(col("query_id"), col("nn_id"), round(col("adc"), 4).as("adc_dist"))
@@ -1966,18 +1894,45 @@ object Ann {
     }
   }
 
-  /** The flat-tier exact re-rank join of a PQ shortlist, with the
-    * per-row work ORDERED FOR SCALE (optimization round 14, guide §8
-    * "move heavy bytes once / decide with small rows"): the shortlist
-    * (≤ refine·k rows per query) joins the flat corpus on the RAW vector
-    * column first, and the usability filter + element-wise double cast +
-    * cosine run on the JOIN SURVIVORS only. The previous form filtered
-    * and cast the ENTIRE flat side before the join — an O(corpus)
-    * per-element pass at serve time (the measured growth driver of the
-    * 100× PQ serve wall: the flat side grows linearly while everything
-    * else in the serve is pruned or constant-size). Survivor rows, their
-    * usability verdicts, and their rounded cosines are bit-identical —
-    * the filter and cast commute with the inner equi-join row for row. */
+  /** The code-domain rank shared by the IVF-PQ serve and its refine-curve
+    * candidates: [[route]] through the stored centroids, then every probed
+    * code row's ADC distance and ADC rank `crk` (adc asc, nn_id asc), with
+    * no shortlist cut. Returns (ranked rows, the pinned (query_id, qv) set
+    * the flat refine joins back). The LUT is per (query, PROBED CELL):
+    * partial distances of (qv − centroid(cell)) to the residual codewords,
+    * so summed ADC ≈ ‖q − (centroid + codeword)‖², comparable across cells.
+    * A filtered search restricts the CODE rows before the rank, so shortlist
+    * and refined result are the true top-k of the allowed subset. */
+  private def pqRanked(spark: SparkSession, path: String, queries: DataFrame,
+                       nProbe: Int, allowedIds: Option[DataFrame],
+                       idCol: String, vecCol: String): (DataFrame, DataFrame) = {
+    val (cents, centArr, cb) = loadIvfPqQuantizers(spark, path)
+    val (probes, rows) = route(spark, path, queries, cents, nProbe, idCol, vecCol)
+    val codes = restrictToAllowed(rows.select("nn_id", "codes", "cell"), allowedIds, idCol)
+    val lutU = pqLutUdf(cb)
+    val rU = residUdf(centArr)
+    val probeLuts = probes
+      .withColumn("lut", lutU(rU(col("qv"), col("cell"))))
+      .select("query_id", "cell", "lut")
+    val wAdc = Window.partitionBy("query_id").orderBy(col("adc").asc, col("nn_id").asc)
+    val ranked = codes
+      .join(broadcast(probeLuts), Seq("cell"))
+      .where(col("nn_id") =!= col("query_id"))
+      .select(col("query_id"), col("nn_id"),
+        pqAdc(col("codes"), col("lut")).as("adc"))
+      // same NULLS-FIRST trap as pqTopK's shortlist window — a NULL adc
+      // is dropped, never ranked
+      .where(col("adc").isNotNull)
+      .withColumn("crk", row_number().over(wAdc))
+    (ranked, probes.select(col("query_id"), col("qv")).dropDuplicates("query_id"))
+  }
+
+  /** The flat-tier exact re-rank join of a PQ shortlist, ORDERED FOR
+    * SCALE: the shortlist (≤ refine·k rows per query) joins the flat corpus
+    * on the RAW vector column first, and the usability filter, the double
+    * cast and the cosine run on the join survivors only — filtering the
+    * whole flat side first would be an O(corpus) pass per serve. The filter
+    * and cast commute with the inner equi-join, so the rows are the same. */
   private def refineAgainstFlat(shortIds: DataFrame, flat: DataFrame,
                                 qPinned: DataFrame,
                                 idCol: String, vecCol: String,
@@ -1991,261 +1946,55 @@ object Ann {
         round(cosine(asDouble(col("__fv")), col("qv")), 4).as("cosine")) ++
         carry.map(col): _*)
 
-  /** ONE-PASS refine-curve candidates (optimization round 14, guide §1.2
-    * — the PQ twin of [[ivfStoreProbeCandidates]]): the full ADC rank of
-    * every probed code row (`crk`, no shortlist cut) refine-joined to the
-    * flat tier's exact cosines, so for ANY refine width r the rows with
-    * `crk <= r·k` are exactly the shortlist [[ivfPqStoreTopK]] at that
-    * width re-ranks (the window-prefix property the refine curve's
-    * monotonicity already rests on). [[tuneRefine]] measures its whole
-    * grid from one such pass instead of one full serve per grid point.
-    * Mirrors ivfPqStoreTopK's refineFrom arm expression-for-expression
-    * (same pinned probes, same LUT/ADC kernel, same NULL-adc drop, same
-    * rounded cosine) so derived rows are bit-identical. */
-  private[graft] def ivfPqRefineCandidates(spark: org.apache.spark.sql.SparkSession,
-                                           path: String, queries: DataFrame,
-                                           nProbe: Int, refineFrom: DataFrame,
+  /** Refine-curve candidates: the full ADC rank ([[pqRanked]], no
+    * shortlist cut) refine-joined to the flat tier's exact cosines, `crk`
+    * carried. For ANY refine width r the rows with `crk <= r·k` are
+    * exactly the shortlist [[ivfPqStoreTopK]] at that width re-ranks (a
+    * wider shortlist is a superset under one total ADC order), so
+    * [[topKAt]] over this frame reproduces that serve row for row and
+    * [[tuneRefine]] measures its whole grid from one pass. */
+  private[graft] def ivfPqRefineCandidates(spark: SparkSession, path: String,
+                                           queries: DataFrame, nProbe: Int,
+                                           refineFrom: DataFrame,
                                            idCol: String = "vec_id",
                                            vecCol: String = "embedding"): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    val (cents, centArr, cb) = loadIvfPqQuantizers(spark, path)
-    val probes = probeFrame(queries, cents, nProbe, idCol, vecCol)
-      .localCheckpoint()
-    val cells = probes.select("cell").distinct().collect().map(_.getInt(0)).toSet
-    val codes = graft.io.IO.readStoreBuckets(spark, path, cells)
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
-      .select("nn_id", "codes", "cell")
-    val lutU = pqLutUdf(cb)
-    val rU = residUdf(centArr)
-    val probeLuts = probes
-      .withColumn("lut", lutU(rU(col("qv"), col("cell"))))
-      .select("query_id", "cell", "lut")
-    val qPinned = probes.select(col("query_id"), col("qv"))
-      .dropDuplicates("query_id")
-    val wAdc = Window.partitionBy("query_id").orderBy(col("adc").asc, col("nn_id").asc)
-    val ranked = codes
-      .join(broadcast(probeLuts), Seq("cell"))
-      .where(col("nn_id") =!= col("query_id"))
-      .select(col("query_id"), col("nn_id"),
-        pqAdc(col("codes"), col("lut")).as("adc"))
-      .where(col("adc").isNotNull)
-      .withColumn("crk", row_number().over(wAdc))
-    // survivors-only flat re-rank (see refineAgainstFlat), crk carried
+    val (ranked, qPinned) = pqRanked(spark, path, queries, nProbe, None, idCol, vecCol)
     refineAgainstFlat(ranked.select("query_id", "nn_id", "crk"), refineFrom,
-        qPinned, idCol, vecCol, carry = Seq("crk"))
+      qPinned, idCol, vecCol, carry = Seq("crk"))
   }
 
-  /** Top-k at shortlist width `refine` derived from an
-    * [[ivfPqRefineCandidates]] frame — the `crk <= refine·k` prefix
-    * re-ranked by the serve's (cosine desc, nn_id asc) order. Equals
-    * [[ivfPqStoreTopK]](refine = r, refineFrom = Some(flat))
-    * row-for-row. */
-  private[graft] def topKAtRefine(cands: DataFrame, k: Int, refine: Int): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
-    cands.where(col("crk") <= refine.toLong * k)
-      .withColumn("rank", row_number().over(Window.partitionBy("query_id")
-        .orderBy(col("cosine").desc, col("nn_id").asc)))
-      .where(col("rank") <= k)
-      .select("query_id", "nn_id", "cosine", "rank")
-  }
-
-  // --------------------------------------- measured PQ refine operating point
-
-  /** Sidecar carrying the IVF-PQ store's MEASURED refine→recall@k curve.
-    * The PQ serve's recall knob at a fixed probe budget is the ADC
-    * SHORTLIST WIDTH (`refine`·k candidates survive the code-domain rank
-    * into the exact re-rank) — nProbe trades the same way as the flat
-    * IVF store, but refine is the knob this layout ADDS, so it is the
-    * one its operating point must measure (recorded decision f4d0d13:
-    * nProbe curves tune on the flat tier via [[tuneProbe]]). Header
-    * records k, nProbe, the manifest version measured, and the query
-    * count; same transport as `_graft_probe_curve`. */
-  private def refineCurvePath(path: String) =
-    new org.apache.hadoop.fs.Path(path, "_graft_refine_curve")
-
-  /** Measure the store's recall-vs-refine curve at a FIXED nProbe on
-    * `queries` and PERSIST it as the store's operating point. The exact
-    * baseline is self-contained, like [[tuneProbe]]'s full-probe point:
-    * at `refine`·k ≥ the probed candidate volume the shortlist cut
-    * cannot bind, so the serve IS the exact flat-refined rank of every
-    * probed candidate — recall 1.0 by theorem, no external oracle.
-    * Monotone non-decreasing in refine by the window-prefix property
-    * (a wider shortlist is a superset under one total ADC order).
-    * `refineFrom` (the full-precision flat tier) is REQUIRED: recall of
-    * a pure code-domain rank against itself would measure nothing.
-    * Cost: |grid|+1 pruned serves — an OFFLINE maintenance op. */
-  def tuneRefine(spark: org.apache.spark.sql.SparkSession, path: String,
+  /** Measure the IVF-PQ store's recall-vs-refine curve at a FIXED nProbe
+    * and PERSIST it ([[measureCurve]]). At a fixed probe budget this
+    * layout's own recall knob is the ADC SHORTLIST WIDTH (nProbe tunes on
+    * the flat tier, [[tuneProbe]]). The theorem point is refine·k ≥ the
+    * store's code rows: the cut cannot bind, so the serve IS the exact
+    * flat-refined rank of every probed candidate. `refineFrom`, the
+    * full-precision flat tier, is REQUIRED: a code-domain rank measured
+    * against itself would measure nothing. An OFFLINE maintenance op. */
+  def tuneRefine(spark: SparkSession, path: String,
                  queries: DataFrame, refineFrom: DataFrame, k: Int = 10,
                  nProbe: Int = 4, refines: Seq[Int] = Seq.empty,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     requireStoreKind(spark, path, "ivfpq")
-    val v0 = graft.io.IO.storeVersions(spark, path).last
-    // the never-binding theorem point: refine·k ≥ the store's total code
-    // rows ≥ any query's probed candidate volume
-    val nRows = readIvfPqStore(spark, path).count()
-    val refineMax = math.max(1L, (nRows + k - 1) / k).toInt
-    val grid = (if (refines.nonEmpty) refines.filter(r => r >= 1 && r < refineMax)
-                else Iterator.iterate(1)(_ * 2).takeWhile(_ < refineMax).toSeq)
-      .distinct.sorted :+ refineMax
-    // pin queries: every grid point must serve the SAME set (tuneProbe's rule)
-    val q = queries.where(cosineUsable(col(vecCol)))
-      .select(col(idCol), col(vecCol)).localCheckpoint()
-    val curve =
-      try {
-        val nQ = q.count()
-        // Optimization round 14 (guide §1.2): ONE ADC + flat-refine pass
-        // at the never-binding width instead of one full serve per grid
-        // point — every width's shortlist is the crk <= r·k prefix of the
-        // same ADC total order (the window-prefix property this curve's
-        // monotonicity already rests on), so each grid point is a narrow
-        // window-count over the checkpointed 4-column frame, not a fresh
-        // probe/read/LUT/ADC/join pipeline. The theorem point's top-k is
-        // the unfiltered rank; recall needs no join (flag + count).
-        val cands = ivfPqRefineCandidates(spark, path, q, nProbe,
-            refineFrom, idCol, vecCol)
-          .localCheckpoint()
-        try {
-          import org.apache.spark.sql.expressions.Window
-          val flagged = cands.withColumn("rank_full",
-              row_number().over(Window.partitionBy("query_id")
-                .orderBy(col("cosine").desc, col("nn_id").asc)))
-            .withColumn("is_full", col("rank_full") <= k)
-          val nFull = flagged.where(col("is_full")).count()
-          val pts = grid.map { r =>
-            val recall =
-              if (r == refineMax) 1.0 // by theorem; skip the redundant pass
-              else flagged.where(col("crk") <= r.toLong * k)
-                .withColumn("rank", row_number().over(
-                  Window.partitionBy("query_id")
-                    .orderBy(col("cosine").desc, col("nn_id").asc)))
-                .where(col("rank") <= k && col("is_full")).count()
-                .toDouble / math.max(nFull, 1L)
-            (r, BigDecimal(recall)
-              .setScale(6, scala.math.BigDecimal.RoundingMode.HALF_UP).toDouble)
-          }
-          val vEnd = graft.io.IO.storeVersions(spark, path).last
-          require(vEnd == v0,
-            s"$path advanced v$v0 -> v$vEnd mid-tune — re-run against the " +
-              "quiet store (same rule as tuneProbe)")
-          val p = refineCurvePath(path)
-          val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-          val out = fs.create(p, true)
-          try out.write((s"k=$k\tn_probe=$nProbe\tversion=$v0\tn_queries=$nQ\n" +
-            pts.map { case (r, rc) => s"$r\t$rc" }.mkString("\n")).getBytes("UTF-8"))
-          finally out.close()
-          pts
-        } finally cands.unpersist(blocking = false)
-      } finally q.unpersist(blocking = false)
-    import spark.implicits._
-    curve.toDF("refine", "recall")
-  }
-
-  /** The persisted PQ operating-point table: (k, nProbe, version,
-    * (refine, recall) points). Fails loudly when never tuned. */
-  def readRefineCurve(spark: org.apache.spark.sql.SparkSession,
-                      path: String): (Int, Int, Int, Seq[(Int, Double)]) = {
-    val p = refineCurvePath(path)
-    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
-    require(fs.exists(p),
-      s"$path has no _graft_refine_curve — run tuneRefine before serving " +
-        "at a recall target")
-    val in = fs.open(p)
-    val lines =
-      try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-      finally in.close()
-    val hdr = lines.head.split('\t').map { kv =>
-      val Array(a, b) = kv.split('='); a -> b
-    }.toMap
-    val pts = lines.tail.filter(_.nonEmpty).map { l =>
-      val Array(a, b) = l.split('\t'); (a.toInt, b.toDouble)
-    }
-    (hdr("k").toInt, hdr("n_probe").toInt, hdr("version").toInt, pts)
-  }
-
-  /** True iff the store committed versions since the refine curve was
-    * measured — same drift contract as [[probeCurveStale]]. */
-  def refineCurveStale(spark: org.apache.spark.sql.SparkSession,
-                       path: String): Boolean =
-    readRefineCurve(spark, path)._3 !=
-      graft.io.IO.storeVersions(spark, path).last
-
-  /** The smallest MEASURED refine whose recorded recall meets
-    * `minRecall`; total for any target ≤ 1.0 via the theorem point.
-    * `forK`/`forProbe` (when ≥ 0) require the curve to have been tuned
-    * at THAT k and probe budget — recall@ (k, nProbe) transfers across
-    * neither. */
-  def resolveRefine(spark: org.apache.spark.sql.SparkSession, path: String,
-                    minRecall: Double, forK: Int = -1,
-                    forProbe: Int = -1): Int = {
-    require(minRecall > 0.0 && minRecall <= 1.0,
-      s"minRecall must be in (0, 1]; got $minRecall")
-    val (curveK, curveProbe, _, pts) = readRefineCurve(spark, path)
-    require(forK < 0 || curveK == forK,
-      s"$path's refine curve was tuned at k=$curveK, not k=$forK — re-run " +
-        "tuneRefine at the serving k")
-    require(forProbe < 0 || curveProbe == forProbe,
-      s"$path's refine curve was tuned at nProbe=$curveProbe, not " +
-        s"nProbe=$forProbe — re-run tuneRefine at the serving probe budget")
-    pts.sortBy(_._1).collectFirst { case (r, rc) if rc >= minRecall => r }
-      .getOrElse(pts.map(_._1).max)
+    measureCurve(spark, path, Knob.Refine, queries, k, Some(nProbe), refines, idCol, vecCol)(
+      math.max(1L, (readIvfPqStore(spark, path).count() + k - 1) / k).toInt)(
+      q => ivfPqRefineCandidates(spark, path, q, nProbe, refineFrom, idCol, vecCol))
   }
 
   /** [[ivfPqStoreTopK]] at a RECALL TARGET: the shortlist width resolves
-    * against the store's persisted measured refine curve — the PQ twin
-    * of [[ivfStoreTopKAtRecall]], with the same curve-currency rule
-    * (fail loudly on a stale curve unless `allowStale`). */
-  def ivfPqStoreTopKAtRecall(spark: org.apache.spark.sql.SparkSession,
-                             path: String, queries: DataFrame, k: Int,
-                             minRecall: Double, refineFrom: DataFrame,
-                             nProbe: Int = 4,
-                             allowedIds: Option[DataFrame] = None,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
+    * against the store's persisted refine curve, which must have been
+    * tuned at the serving k and probe count and must be current
+    * ([[requireCurrent]]). */
+  def ivfPqStoreTopKAtRecall(spark: SparkSession, path: String, queries: DataFrame,
+                             k: Int, minRecall: Double, refineFrom: DataFrame,
+                             nProbe: Int = 4, allowedIds: Option[DataFrame] = None,
+                             idCol: String = "vec_id", vecCol: String = "embedding",
                              allowStale: Boolean = false): DataFrame = {
-    require(allowStale || !refineCurveStale(spark, path),
-      s"$path has committed versions since its refine curve was measured — " +
-        "re-run tuneRefine (or pass allowStale = true to accept the drift)")
+    if (!allowStale) requireCurrent(spark, path, Knob.Refine)
     ivfPqStoreTopK(spark, path, queries, k, nProbe = nProbe,
-      refine = resolveRefine(spark, path, minRecall, forK = k, forProbe = nProbe),
+      refine = resolveCurve(spark, path, Knob.Refine, minRecall, forK = k, forProbe = nProbe),
       refineFrom = Some(refineFrom), allowedIds = allowedIds,
       idCol = idCol, vecCol = vecCol)
-  }
-
-  /** [[ivfStoreStaleness]] for the codes-at-rest IVF-PQ layout. No
-    * corpus float persists here, so the member-to-centroid distance is
-    * estimated from the CODES: the decoded residual's norm —
-    * ‖decode(codes)‖ = √Σ_j ‖codeword_{j,c_j}‖², computed by summing a
-    * LUT built from the ZERO vector (‖0 − codeword‖² per entry is
-    * exactly the codeword's squared norm) — which approximates
-    * ‖v − centroid(cell)‖ to within the PQ quantization error, the same
-    * fidelity the ADC serve itself runs at. Same columns, costs, and
-    * drift semantics as the IVF report.
-    *
-    * HONESTY BOUND: the decoded distance SATURATES at the codebook
-    * envelope — a vector far outside the residual distribution the
-    * codebooks were fit on still encodes to the nearest (small-norm)
-    * codeword, so its decoded distance under-reports and the ratio here
-    * is a LOWER bound on true drift. That is inherent to codes-at-rest
-    * (the floats are gone). The standard IVFPQ + flat-refine topology
-    * this store serves in ([[ivfPqStoreTopK]]'s `refineFrom`) keeps a
-    * full-precision flat tier — run [[ivfStoreStaleness]] against that
-    * tier's store for the exact report; this one is the cheap
-    * codes-only signal. */
-  def ivfPqStoreStaleness(spark: org.apache.spark.sql.SparkSession, path: String,
-                          maxDriftRatio: Double = 2.0): DataFrame = {
-    val (_, _, cb) = loadIvfPqQuantizers(spark, path)
-    val nCells = graft.io.IO.storeBuckets(path) - 2
-    val v1 = stalenessBaseline(spark, path)
-    val lut0: Seq[Seq[Double]] = cb.toSeq.map(_.toSeq.map(_.map(x => x * x).sum))
-    def withDist(df: DataFrame): DataFrame = df
-      .withColumnRenamed(graft.io.IO.BucketCol, "cell")
-      .where(col("cell") < nCells)
-      .select(col("cell"),
-        sqrt(pqAdc(col("codes"), typedLit(lut0))).as("dist"))
-    stalenessReport(
-      withDist(graft.io.IO.readPartitionedStoreAtTagged(spark, path, v1)),
-      withDist(graft.io.IO.readStoreBuckets(spark, path, (0 until nCells).toSet)),
-      maxDriftRatio)
   }
 
   /** Reciprocal-rank fusion (Cormack, Clarke & Büttcher, SIGIR 2009) of

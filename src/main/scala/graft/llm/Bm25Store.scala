@@ -532,7 +532,7 @@ object Bm25Store {
     IO.compactPartitionedStore(spark, path, maxGensPerBucket)
 
   /** Staleness report for an append-maintained BM25 index — the lexical
-    * sibling of [[Ann.ivfStoreStaleness]], with one structural
+    * sibling of [[Ann.vectorStoreStaleness]], with one structural
     * difference: BM25 scores DO NOT age under append (the serve derives
     * idf and avgdl from the SUMMED stats-delta rows, so appended docs
     * score exactly as a rebuild would — pinned by the tx_bm25_store

@@ -724,20 +724,20 @@ object LlmQueries {
       val nCells = graft.io.IO.storeBuckets(path) - 1
       val brute = bruteBaseline(s, dir).select("query_id", "nn_id").cache()
       val nBrute = brute.count()
-      // Optimization round 14 (guide §1.2): ONE full-probe candidates
-      // pass; each measured point is a window prefix of it (identical
-      // rows to ivfStoreTopK at that nProbe — the nesting theorem this
-      // very contract states), not a fresh probe/read/rank pipeline.
+      // ONE full-probe candidates pass; each measured point is a window
+      // prefix of it (identical rows to ivfStoreTopK at that nProbe — the
+      // nesting theorem this very contract states), not a fresh
+      // probe/read/rank pipeline.
       val cands = Ann.ivfStoreProbeCandidates(s, path, queries, nCells)
         .localCheckpoint()
       def recallAt(p: Int): Double = {
-        val hit = Ann.topKAtProbe(cands, k = 10, p)
+        val hit = Ann.topKAt(cands, Ann.Knob.Probe, k = 10, p)
           .select("query_id", "nn_id")
           .join(brute, Seq("query_id", "nn_id")).count()
         hit.toDouble / math.max(nBrute, 1L)
       }
       val curve = Seq(1, 2, 4).map(recallAt)
-      val full = Ann.topKAtProbe(cands, k = 10, nCells)
+      val full = Ann.topKAt(cands, Ann.Knob.Probe, k = 10, nCells)
       val fullEq = multisetEquals(full,
         Ann.bruteTopK(emb, queries, k = 10),
         Seq("query_id", "nn_id", "cosine", "rank"))
@@ -752,7 +752,7 @@ object LlmQueries {
           "recall_at_default_ok", "full_probe_equals_brute")
     }),
 
-    // CLOSED tuning loop (round-13): the measured recall-vs-nProbe curve
+    // CLOSED tuning loop: the measured recall-vs-nProbe curve
     // PERSISTS in the store (Ann.tuneProbe → _graft_probe_curve sidecar,
     // stamped with the manifest version it measured) and the serve
     // resolves a RECALL TARGET against it instead of a hardcoded probe
@@ -766,7 +766,7 @@ object LlmQueries {
     // brute baseline meets the target (guaranteed by the resolve rule:
     // smallest measured probe meeting it, else the full-probe point),
     // and the curve is CURRENT (tuned against the live manifest version
-    // — the re-tune-after-drift signal is probeCurveStale).
+    // — the re-tune-after-drift signal is curveStale).
     "ann_tuned_serve" -> ((s, dir) => {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
@@ -786,12 +786,12 @@ object LlmQueries {
         .join(brute, Seq("query_id", "nn_id")).count()
       Seq((queries.count(), monotone, curve.last._2 == 1.0,
            hit.toDouble / math.max(nBrute, 1L) >= target,
-           !Ann.probeCurveStale(s, path)))
+           !Ann.curveStale(s, path, Ann.Knob.Probe)))
         .toDF("n_queries", "curve_monotone", "full_probe_recall_one",
           "serve_meets_target", "curve_current")
     }),
 
-    // CLOSED tuning loop for the IVF-PQ tier (round-14): the PQ layout's
+    // CLOSED tuning loop for the IVF-PQ tier: the PQ layout's
     // own recall knob is the ADC SHORTLIST WIDTH (refine·k survivors of
     // the code-domain rank reach the exact flat re-rank) — nProbe tunes
     // on the flat tier per the recorded f4d0d13 decision. Ann.tuneRefine
@@ -815,30 +815,26 @@ object LlmQueries {
       val monotone = curve.length >= 2 &&
         curve.sliding(2).forall(w => w(0)._2 <= w(1)._2)
       val target = 0.9
-      // Optimization round 14 (guide §1.2): the recall-target serve and
-      // the theorem-point baseline share ONE ADC + flat-refine candidates
-      // pass — each is a crk-prefix re-rank of it (row-identical to the
-      // corresponding ivfPqStoreTopK serve; see ivfPqRefineCandidates).
-      // The stale-curve fail-loudly rule ivfPqStoreTopKAtRecall enforces
-      // is kept verbatim.
-      val stale = Ann.refineCurveStale(s, path)
-      require(!stale,
-        s"$path has committed versions since its refine curve was measured — " +
-          "re-run tuneRefine (or pass allowStale = true to accept the drift)")
+      // the recall-target serve and the theorem-point baseline share ONE
+      // ADC + flat-refine candidates pass — each is a crk-prefix re-rank
+      // of it (row-identical to the corresponding ivfPqStoreTopK serve;
+      // see ivfPqRefineCandidates), under the same stale-curve check
+      // ivfPqStoreTopKAtRecall runs
+      Ann.requireCurrent(s, path, Ann.Knob.Refine)
       val cands = Ann.ivfPqRefineCandidates(s, path, queries, nProbe = 4,
         refineFrom = emb).localCheckpoint()
-      val served = Ann.topKAtRefine(cands, k = 10,
-        Ann.resolveRefine(s, path, target, forK = 10, forProbe = 4))
+      val served = Ann.topKAt(cands, Ann.Knob.Refine, k = 10,
+        Ann.resolveCurve(s, path, Ann.Knob.Refine, target, forK = 10, forProbe = 4))
       // exact-in-probe baseline at the theorem point (the largest
       // measured refine — its shortlist cut cannot bind)
-      val baseline = Ann.topKAtRefine(cands, k = 10, curve.last._1)
+      val baseline = Ann.topKAt(cands, Ann.Knob.Refine, k = 10, curve.last._1)
         .select("query_id", "nn_id").localCheckpoint()
       val nBase = baseline.count()
       val hit = served.select("query_id", "nn_id")
         .join(baseline, Seq("query_id", "nn_id")).count()
       val out = Seq((queries.count(), monotone, curve.last._2 == 1.0,
            hit.toDouble / math.max(nBase, 1L) >= target,
-           !stale))
+           !Ann.curveStale(s, path, Ann.Knob.Refine)))
         .toDF("n_queries", "curve_monotone", "theorem_point_recall_one",
           "serve_meets_target", "curve_current")
       baseline.unpersist(blocking = false)
@@ -917,8 +913,8 @@ object LlmQueries {
           sum(when(col("appended_frac") < 0 || col("appended_frac") > 1, 1)
             .otherwise(0)))
         .as[(Long, Long, Long, Long)].head()
-      val ivf = summarize(Ann.ivfStoreStaleness(s, sharedIvfStore(s, dir)))
-      val pq = summarize(Ann.ivfPqStoreStaleness(s, sharedIvfPqStore(s, dir)))
+      val ivf = summarize(Ann.vectorStoreStaleness(s, sharedIvfStore(s, dir)))
+      val pq = summarize(Ann.vectorStoreStaleness(s, sharedIvfPqStore(s, dir)))
       Seq((nAll,
            ivf._1 == nBuild && ivf._2 == nAll,
            pq._1 == nBuild && pq._2 == nAll,
@@ -930,7 +926,7 @@ object LlmQueries {
           "in_distribution_drift_bounded")
     }),
 
-    // Staleness-DRIVEN refresh (round-13): the op the staleness report
+    // Staleness-DRIVEN refresh: the op the staleness report
     // exists to trigger, closing the "centroids age; refresh = rebuild"
     // loop. On a private clone of the shared store, every corpus vector
     // is re-embedded FAR out of distribution (×5 + 3, novel ids) and
@@ -962,7 +958,7 @@ object LlmQueries {
         graft.io.IO.storeVersions(s, path).size == nV0
       val refreshed = Ann.refreshIvfStore(s, path)
       val singleCommit = graft.io.IO.storeVersions(s, path).size == nV0 + 1
-      val cleared = Ann.ivfStoreStaleness(s, path)
+      val cleared = Ann.vectorStoreStaleness(s, path)
         .where(col("drifted") && col("n_now") > 0).count() == 0L
       val queries = emb.where("vec_id < 8")
       val served = Ann.ivfStoreTopK(s, path, queries, k = 10)

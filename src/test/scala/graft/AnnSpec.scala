@@ -702,7 +702,7 @@ class AnnSpec extends SparkSpec {
       (i.toLong, mk(if (i < 6) c1 else c2, 0.01f * (i % 4)))
     }.toDF("vec_id", "embedding")
     Ann.writeIvfStore(df, path, nCells = 2)
-    val fresh = Ann.ivfStoreStaleness(spark, path)
+    val fresh = Ann.vectorStoreStaleness(spark, path)
       .select("cell", "n_build", "n_now", "appended_frac", "drift_ratio", "drifted")
       .as[(Int, Long, Long, Double, Double, Boolean)].collect()
     assert(fresh.nonEmpty)
@@ -721,10 +721,10 @@ class AnnSpec extends SparkSpec {
       (i.toLong, Array(9f, 0.5f, 0.1f, 0.5f).map(_ * (1 + (i % 3))))
     }.toDF("vec_id", "embedding")
     Ann.appendIvfStore(far, path)
-    val drifted = Ann.ivfStoreStaleness(spark, path)
+    val drifted = Ann.vectorStoreStaleness(spark, path)
       .where(col("drifted") && col("n_build") > 0)
     assert(drifted.count() > 0, "a far-distribution append tripped no drift flag")
-    assert(Ann.ivfStoreStaleness(spark, path)
+    assert(Ann.vectorStoreStaleness(spark, path)
       .agg(max("appended_frac")).as[Double].head() > 0.3)
     // DELETE interaction: shrinking or emptying a build cell must keep
     // the accounting honest — the emptied cell stays IN the report with
@@ -736,7 +736,7 @@ class AnnSpec extends SparkSpec {
       df.where("vec_id >= 6 and vec_id < 12").select("vec_id")) // all of cluster 2
     Ann.deleteFromVectorStore(spark, path,
       (100L until 104L).toDF("vec_id")) // half the far append
-    val postDelete = Ann.ivfStoreStaleness(spark, path)
+    val postDelete = Ann.vectorStoreStaleness(spark, path)
       .select("cell", "n_build", "n_now", "appended_frac", "drift_ratio", "drifted")
       .as[(Int, Long, Long, Option[Double], Option[Double], Boolean)].collect()
     assert(postDelete.map(_._2).sum == 12L,
@@ -759,7 +759,7 @@ class AnnSpec extends SparkSpec {
       m = 4, ksub = 8)
     Ann.appendIvfPqStore(emb.where("vec_id % 3 = 2"), pqPath)
     val usable = emb.where(Ann.cosineUsable(col("embedding")))
-    val pqSums = Ann.ivfPqStoreStaleness(spark, pqPath)
+    val pqSums = Ann.vectorStoreStaleness(spark, pqPath)
       .agg(sum("n_build"), sum("n_now"),
         sum(when(col("drifted") && col("n_build") > 0, 1).otherwise(0)))
       .as[(Long, Long, Long)].head()
@@ -808,7 +808,7 @@ class AnnSpec extends SparkSpec {
     assert(graft.io.IO.storeVersions(spark, path).headOption.exists(_ > 1),
       "vacuum should have trimmed v1 — test precondition")
     val e = intercept[IllegalArgumentException] {
-      Ann.ivfStoreStaleness(spark, path).collect()
+      Ann.vectorStoreStaleness(spark, path).collect()
     }
     assert(e.getMessage.contains("staleness baseline"), e.getMessage)
     // the store itself stays fully servable — only the report refuses
@@ -1073,12 +1073,12 @@ class AnnSpec extends SparkSpec {
     assert(curve.last._2 == 1.0, s"full-probe point must be exactly 1.0: $curve")
     assert(curve.sliding(2).forall(w => w(0)._2 <= w(1)._2),
       s"curve must be monotone: $curve")
-    val (k, _, pts) = Ann.readProbeCurve(spark, path)
+    val Ann.Curve(k, _, _, pts) = Ann.readCurve(spark, path, Ann.Knob.Probe)
     assert(k == 10 && pts == curve, s"round-trip mismatch: $pts vs $curve")
-    assert(!Ann.probeCurveStale(spark, path))
+    assert(!Ann.curveStale(spark, path, Ann.Knob.Probe))
     // resolve rule: the SMALLEST measured probe meeting the target
     val target = 0.9
-    val p = Ann.resolveProbe(spark, path, target)
+    val p = Ann.resolveCurve(spark, path, Ann.Knob.Probe, target)
     assert(pts.filter(_._1 < p).forall(_._2 < target),
       s"a smaller probe already met $target: $pts resolved $p")
     assert(pts.find(_._1 == p).exists(_._2 >= target),
@@ -1092,13 +1092,14 @@ class AnnSpec extends SparkSpec {
       .as[(Long, Long, Double, Int)].collect().toSet
     assert(atRecall == atProbe)
     // an unreachable target resolves to the full-probe point (total)
-    assert(Ann.resolveProbe(spark, path, 1.0) == pts.map(_._1).max ||
-      pts.exists(pt => pt._2 >= 1.0 && pt._1 == Ann.resolveProbe(spark, path, 1.0)))
+    assert(Ann.resolveCurve(spark, path, Ann.Knob.Probe, 1.0) == pts.map(_._1).max ||
+      pts.exists(pt => pt._2 >= 1.0 &&
+        pt._1 == Ann.resolveCurve(spark, path, Ann.Knob.Probe, 1.0)))
     // drift: an appended commit outdates the measured point — the
     // re-tune signal ann_store_staleness's drift report pairs with
     Ann.appendIvfStore(emb.where("vec_id < 3")
       .select(($"vec_id" + 5000L).as("vec_id"), $"embedding"), path)
-    assert(Ann.probeCurveStale(spark, path),
+    assert(Ann.curveStale(spark, path, Ann.Knob.Probe),
       "append must outdate the recorded operating point")
     // a recall-target serve against the stale curve fails LOUDLY (it
     // could silently miss the stated target) — allowStale is the
@@ -1109,11 +1110,11 @@ class AnnSpec extends SparkSpec {
     assert(Ann.ivfStoreTopKAtRecall(spark, path, queries, 10, target,
       allowStale = true).count() > 0L)
     Ann.tuneProbe(spark, path, queries, k = 10)
-    assert(!Ann.probeCurveStale(spark, path), "re-tune must clear staleness")
+    assert(!Ann.curveStale(spark, path, Ann.Knob.Probe), "re-tune must clear staleness")
     // a recall target only resolves at the k the curve was TUNED at —
     // recall@10 says nothing about recall@100
     intercept[IllegalArgumentException] {
-      Ann.resolveProbe(spark, path, target, forK = 5)
+      Ann.resolveCurve(spark, path, Ann.Knob.Probe, target, forK = 5)
     }
     intercept[IllegalArgumentException] {
       Ann.ivfStoreTopKAtRecall(spark, path, queries, k = 5, minRecall = target)
@@ -1123,7 +1124,7 @@ class AnnSpec extends SparkSpec {
     graft.io.IO.deletePath(bare)
     Ann.writeIvfStore(emb.where("vec_id < 40"), bare)
     intercept[IllegalArgumentException] {
-      Ann.resolveProbe(spark, bare, 0.9)
+      Ann.resolveCurve(spark, bare, Ann.Knob.Probe, 0.9)
     }
   }
 
@@ -1142,11 +1143,11 @@ class AnnSpec extends SparkSpec {
     assert(curve.last._2 == 1.0, s"theorem point must be exactly 1.0: $curve")
     assert(curve.sliding(2).forall(w => w(0)._2 <= w(1)._2),
       s"curve must be monotone: $curve")
-    val (k, p, _, pts) = Ann.readRefineCurve(spark, path)
-    assert(k == 10 && p == 4 && pts == curve)
-    assert(!Ann.refineCurveStale(spark, path))
+    val Ann.Curve(k, p, _, pts) = Ann.readCurve(spark, path, Ann.Knob.Refine)
+    assert(k == 10 && p == Some(4) && pts == curve)
+    assert(!Ann.curveStale(spark, path, Ann.Knob.Refine))
     val target = 0.9
-    val r = Ann.resolveRefine(spark, path, target)
+    val r = Ann.resolveCurve(spark, path, Ann.Knob.Refine, target)
     assert(pts.filter(_._1 < r).forall(_._2 < target),
       s"a smaller refine already met $target: $pts resolved $r")
     assert(pts.find(_._1 == r).exists(_._2 >= target))
@@ -1163,7 +1164,7 @@ class AnnSpec extends SparkSpec {
     // tuned-at mismatches fail loudly — recall@ (k, nProbe) transfers
     // across neither axis
     intercept[IllegalArgumentException] {
-      Ann.resolveRefine(spark, path, target, forK = 5, forProbe = 4)
+      Ann.resolveCurve(spark, path, Ann.Knob.Refine, target, forK = 5, forProbe = 4)
     }
     intercept[IllegalArgumentException] {
       Ann.ivfPqStoreTopKAtRecall(spark, path, queries, 10, target,
@@ -1172,7 +1173,7 @@ class AnnSpec extends SparkSpec {
     // a committed append outdates the point; allowStale is the opt-out
     Ann.appendIvfPqStore(emb.where("vec_id < 3")
       .select(($"vec_id" + 5000L).as("vec_id"), $"embedding"), path)
-    assert(Ann.refineCurveStale(spark, path))
+    assert(Ann.curveStale(spark, path, Ann.Knob.Refine))
     intercept[IllegalArgumentException] {
       Ann.ivfPqStoreTopKAtRecall(spark, path, queries, 10, target,
         refineFrom = emb, nProbe = 4)
@@ -1184,8 +1185,91 @@ class AnnSpec extends SparkSpec {
     graft.io.IO.deletePath(bare)
     Ann.writeIvfPqStore(emb.where("vec_id < 40"), bare)
     intercept[IllegalArgumentException] {
-      Ann.resolveRefine(spark, bare, 0.9)
+      Ann.resolveCurve(spark, bare, Ann.Knob.Refine, 0.9)
     }
+  }
+
+  private def scratchStore(name: String): String =
+    new java.io.File(s"target/qtmp/$name").getAbsolutePath
+
+  private def servedRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Double, Int)] =
+    df.select("query_id", "nn_id", "cosine", "rank")
+      .as[(Long, Long, Double, Int)].collect().toSeq.sorted
+
+  test("probe-curve candidates: the top-k at every probe count of the grid " +
+       "equals ivfStoreTopK at that nProbe, row for row") {
+    val emb = Tables.embeddings(spark, sf)
+    val path = scratchStore("annspec_probe_prefix")
+    graft.io.IO.deletePath(path)
+    Ann.writeIvfStore(emb, path)
+    val queries = emb.where("vec_id < 5")
+    val nCells = graft.io.IO.storeBuckets(path) - 1
+    val cands = Ann.ivfStoreProbeCandidates(spark, path, queries, nCells).localCheckpoint()
+    for (p <- Iterator.iterate(1)(_ * 2).takeWhile(_ < nCells).toSeq :+ nCells) {
+      val derived = servedRows(Ann.topKAt(cands, Ann.Knob.Probe, 10, p))
+      assert(derived.nonEmpty)
+      assert(derived == servedRows(Ann.ivfStoreTopK(spark, path, queries, 10, nProbe = p)),
+        s"nProbe=$p")
+    }
+  }
+
+  test("refine-curve candidates: the top-k at every refine width of the grid " +
+       "equals the flat-refined ivfPqStoreTopK at that width, row for row") {
+    val emb = Tables.embeddings(spark, sf)
+    val path = scratchStore("annspec_refine_prefix")
+    graft.io.IO.deletePath(path)
+    Ann.writeIvfPqStore(emb, path)
+    val queries = emb.where("vec_id < 5")
+    val refineMax = ((Ann.readIvfPqStore(spark, path).count() + 9) / 10).toInt
+    val cands = Ann.ivfPqRefineCandidates(spark, path, queries, nProbe = 4,
+      refineFrom = emb).localCheckpoint()
+    for (r <- Seq(1, 2, 4, 8, refineMax)) {
+      val derived = servedRows(Ann.topKAt(cands, Ann.Knob.Refine, 10, r))
+      assert(derived.nonEmpty)
+      assert(derived == servedRows(Ann.ivfPqStoreTopK(spark, path, queries, 10,
+        nProbe = 4, refine = r, refineFrom = Some(emb))), s"refine=$r")
+    }
+  }
+
+  test("curve sidecars: both formats read back from their exact bytes, a " +
+       "tune writes those bytes, and a wrong-kind or malformed sidecar fails " +
+       "loudly naming its path") {
+    import java.nio.file.{Files, Paths}
+    val dir = scratchStore("annspec_curve_sidecars")
+    graft.io.IO.deletePath(dir)
+    Files.createDirectories(Paths.get(dir))
+    def put(name: String, text: String): Unit =
+      Files.write(Paths.get(dir, name), text.getBytes("UTF-8"))
+    val probeBytes = "k=10\tversion=3\tn_queries=5\n1\t0.52\n2\t0.875\n16\t1.0"
+    put("_graft_probe_curve", probeBytes)
+    put("_graft_refine_curve",
+      "k=10\tn_probe=4\tversion=2\tn_queries=5\n1\t0.72\n2\t0.9\n40\t1.0")
+    assert(Ann.readCurve(spark, dir, Ann.Knob.Probe) ==
+      Ann.Curve(10, None, 3, Seq((1, 0.52), (2, 0.875), (16, 1.0))))
+    assert(Ann.readCurve(spark, dir, Ann.Knob.Refine) ==
+      Ann.Curve(10, Some(4), 2, Seq((1, 0.72), (2, 0.9), (40, 1.0))))
+    // a probe sidecar read as a refine curve, and a malformed one
+    put("_graft_refine_curve", probeBytes)
+    val wrongKind = intercept[IllegalArgumentException] {
+      Ann.readCurve(spark, dir, Ann.Knob.Refine)
+    }
+    assert(wrongKind.getMessage.contains(dir), wrongKind.getMessage)
+    put("_graft_probe_curve", "k=10\tversion=3\tn_queries=5\n1;0.52")
+    val malformed = intercept[IllegalArgumentException] {
+      Ann.readCurve(spark, dir, Ann.Knob.Probe)
+    }
+    assert(malformed.getMessage.contains(dir), malformed.getMessage)
+    // a tune writes exactly this format: header keys in order, then one
+    // line per measured point
+    val emb = Tables.embeddings(spark, sf)
+    val path = scratchStore("annspec_curve_bytes")
+    graft.io.IO.deletePath(path)
+    Ann.writeIvfStore(emb.where("vec_id < 60"), path)
+    val curve = Ann.tuneProbe(spark, path, emb.where("vec_id < 3"), k = 5)
+      .orderBy("n_probe").as[(Int, Double)].collect().toSeq
+    val v = graft.io.IO.storeVersions(spark, path).last
+    assert(new String(Files.readAllBytes(Paths.get(path, "_graft_probe_curve")), "UTF-8") ==
+      s"k=5\tversion=$v\tn_queries=3\n" + curve.map { case (p, r) => s"$p\t$r" }.mkString("\n"))
   }
 
   test("refreshIvfStore: gated on the measured drift report; the refit " +
@@ -1204,7 +1288,7 @@ class AnnSpec extends SparkSpec {
     val drift = emb.select(($"vec_id" + 9000L).as("vec_id"),
       transform($"embedding", x => x * lit(5.0f) + lit(3.0f)).as("embedding"))
     Ann.appendIvfStore(drift, path)
-    assert(Ann.ivfStoreStaleness(spark, path)
+    assert(Ann.vectorStoreStaleness(spark, path)
       .where($"drifted" && $"n_now" > 0).count() > 0,
       "planted drift must trip the report")
     val v1 = graft.io.IO.storeVersions(spark, path)
@@ -1213,7 +1297,7 @@ class AnnSpec extends SparkSpec {
     assert(v2.size == v1.size + 1, "refresh must be ONE atomic commit")
     // baseline advanced to the refresh version: the report is clean for
     // exactly the corpus the new quantizer was fit on
-    assert(Ann.ivfStoreStaleness(spark, path)
+    assert(Ann.vectorStoreStaleness(spark, path)
       .where($"drifted" && $"n_now" > 0).count() == 0L)
     // pre-refresh versions stay time-travel-readable (servable counts
     // computed per side: a ×5+3 re-embed can make a zero vector usable)

@@ -103,7 +103,7 @@ class EmptyInputSpec extends SparkSpec {
     assert(curve.nonEmpty && curve.last._2 == 1.0)
     assert(curve.init.forall(_._2 == 0.0),
       s"no-query recall must be the defined 0.0, got $curve")
-    assert(Ann.resolveProbe(spark, path, 0.9, forK = 3) == curve.last._1)
+    assert(Ann.resolveCurve(spark, path, Ann.Knob.Probe, 0.9, forK = 3) == curve.last._1)
     // BM25: empty delete is a no-op commit-wise
     val docs = Seq((1L, "cat dog"), (2L, "dog fish")).toDF("doc_id", "text")
     val bm = "/root/repo/target/qtmp/empty_ops_bm25"

@@ -46,18 +46,6 @@ class IOSpec extends SparkSpec {
     assert(out == Set(("abt", 1, 9.0), ("abt", 2, 2.0), ("buy", 1, 3.0)))
   }
 
-  test("upsertPath: atomic swap updates the table in place") {
-    val path = s"$tmp/upsert_target"
-    Seq((1, 10.0), (2, 20.0)).toDF("id", "v")
-      .write.mode("overwrite").parquet(path)
-    IO.upsertPath(spark, path, Seq((2, 99.0), (3, 30.0)).toDF("id", "v"),
-      Seq("id"), Seq("v"))
-    val out = spark.read.parquet(path).as[(Int, Double)].collect().toSet
-    assert(out == Set((1, 10.0), (2, 99.0), (3, 30.0)))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(path + ".__graft_tmp")))
-  }
-
   test("upsertPartitionedStore: merges correctly and never touches unaffected buckets") {
     import java.nio.file.{Files, Paths}
     import scala.jdk.CollectionConverters._
@@ -397,9 +385,9 @@ class IOSpec extends SparkSpec {
     IO.routedRewrite(spark, path, locate(Set(3L)), None, Seq("id"),
       beforeClaim = () =>
         if (competed.compareAndSet(false, true)) {
-          IO.upsertPartitionedStoreRouted(spark, path, locate(Set(3L)),
-            Seq((3L, 300.0)).toDF("id", "v")
-              .withColumn(IO.BucketCol, lit(3)),
+          IO.routedRewrite(spark, path, locate(Set(3L)),
+            Some(Seq((3L, 300.0)).toDF("id", "v")
+              .withColumn(IO.BucketCol, lit(3))),
             Seq("id"))
         })
     val out = IO.readPartitionedStore(spark, path)

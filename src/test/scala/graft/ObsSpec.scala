@@ -73,6 +73,32 @@ class ObsSpec extends SparkSpec {
     }
   }
 
+  test("vector-store serves put their probe checkpoint and cell collect " +
+       "under caller/route") {
+    val emb = Tables.embeddings(spark, sf)
+    val queries = emb.where("vec_id < 4")
+    val ivf = new java.io.File("target/qtmp/obsspec_route_ivf").getAbsolutePath
+    val pq = new java.io.File("target/qtmp/obsspec_route_ivfpq").getAbsolutePath
+    graft.io.IO.deletePath(ivf)
+    graft.io.IO.deletePath(pq)
+    graft.llm.Ann.writeIvfStore(emb, ivf)
+    graft.llm.Ann.tuneProbe(spark, ivf, queries, k = 5)
+    graft.llm.Ann.writeIvfPqStore(emb, pq)
+    val serves: Seq[(String, () => Unit)] = Seq(
+      "ivfPqStoreTopK" -> (() =>
+        graft.llm.Ann.ivfPqStoreTopK(spark, pq, queries, k = 5).collect()),
+      "ivfStoreTopKAtRecall" -> (() =>
+        graft.llm.Ann.ivfStoreTopKAtRecall(spark, ivf, queries, k = 5,
+          minRecall = 0.9).collect()))
+    for ((serve, run) <- serves) {
+      val rows = recorded(obs.span("caller")(run()))
+      // at least the probe checkpoint and the probed-cell collect
+      assert(rows.get("caller/route").exists(_.jobs >= 2), s"$serve: $rows")
+      assert(rows.values.filter(_.jobs > 0).forall(_.path.startsWith("caller")),
+        s"$serve left unspanned jobs: $rows")
+    }
+  }
+
   test("1,000 calls of one span leave one aggregate row") {
     obs.drain()
     (1 to 1000).foreach(_ => obs.span("tick")(()))
