@@ -1,5 +1,6 @@
 package graft.blocking
 
+import org.apache.spark.ml.attribute.AttributeGroup
 import org.apache.spark.ml.feature.{BucketedRandomProjectionLSH, BucketedRandomProjectionLSHModel}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -46,14 +47,16 @@ object Blocking {
     model.approxSimilarityJoin(a, b, threshold, distCol)
       .selectExpr("datasetA.id as idA", "datasetB.id as idB", distCol)
 
+  /** A transformed row's bucket ids, one 8-byte id per hash table. */
+  private def bucketIds(model: BucketedRandomProjectionLSHModel): Column =
+    transform(col(model.getOutputCol),
+      hv => element_at(org.apache.spark.ml.functions.vector_to_array(hv), 1).cast("long"))
+
   /** Explode a transformed side to one row per (key, hash-table index,
     * bucket id) — keys and 8-byte bucket ids ONLY, no vectors. */
   private def buckets(model: BucketedRandomProjectionLSHModel, df: DataFrame,
                       keyAs: String): DataFrame =
-    model.transform(df).select(col("key").as(keyAs),
-      posexplode(transform(col(model.getOutputCol),
-        hv => element_at(org.apache.spark.ml.functions.vector_to_array(hv), 1)
-          .cast("long"))))
+    model.transform(df).select(col("key").as(keyAs), posexplode(bucketIds(model)))
       .withColumnRenamed("pos", "tbl").withColumnRenamed("col", "bucket")
 
   /** The candidate-key join behind [[dedupedSimilarityJoin]], exposed for
@@ -146,6 +149,63 @@ object Blocking {
     ra.unpersist(blocking = false)
     rb.unpersist(blocking = false)
     out
+  }
+
+  /** The incremental counterpart of [[dedupedSimilarityJoin]]: probe a
+    * small `delta` side against a large `stored` side in ONE pass over
+    * `stored`. Same pair set as `dedupedSimilarityJoin(delta, stored, …)`
+    * and MLlib's `approxSimilarityJoin` over the non-NULL-key rows (same
+    * seed-determined hashes, same exact `sqrt(sq_dist) < threshold`
+    * post-filter), but no grouping, no shuffle and no `distinct`:
+    *
+    *  - the model is fitted on `delta`; a feature column carrying its
+    *    vector size in the schema metadata (every fitted feature pipeline's
+    *    output does) makes the fit job-free;
+    *  - both sides posexplode to (table index, bucket); the delta side is
+    *    broadcast, so the equi-join is a BroadcastHashJoin that streams
+    *    `stored` once;
+    *  - a pair is kept only at its FIRST colliding table (no earlier index
+    *    has equal buckets), so each pair is emitted once;
+    *  - each side's row travels as a struct, `A` and `B`, of its `id`,
+    *    `featureCol` and `carryCols`, so a caller needing more per-pair
+    *    columns (the matcher's distances) reads them without a join back.
+    *
+    * Output: idA, idB, distance, A, B — one row per (delta row, stored
+    * row) pair, so ids must be unique per side. Rows with a NULL `keyCol`
+    * or `featureCol` are dropped, as the key join of
+    * [[dedupedSimilarityJoin]] drops them. */
+  def probeSimilarityJoin(delta: DataFrame, stored: DataFrame, keyCol: String,
+                          featureCol: String, threshold: Double,
+                          bucketLength: Double = 1.0, numHashTables: Int = 10,
+                          seed: Long = 42L, carryCols: Seq[String] = Nil): DataFrame = {
+    val rowCols = ("id" +: featureCol +: carryCols).distinct
+    def usable(df: DataFrame) = df.where(col(keyCol).isNotNull && col(featureCol).isNotNull)
+    // the fit reads the vector size from the column metadata and runs no
+    // job; vectors built by hand carry none, so their size comes off one
+    // row, and a delta with no usable row pairs with nothing: both inputs
+    // are emptied, so no row is ever hashed with the placeholder size
+    val dim = AttributeGroup.fromStructField(delta.schema(featureCol)).size match {
+      case n if n >= 0 => Some(n)
+      case _ => usable(delta).select(featureCol).head(1).headOption
+        .map(_.getAs[org.apache.spark.ml.linalg.Vector](0).size)
+    }
+    val model = fitLsh(usable(delta).select(col(featureCol).as(featureCol,
+      new AttributeGroup(featureCol, dim.getOrElse(1)).toMetadata())), featureCol,
+      bucketLength, numHashTables, seed)
+    def side(df: DataFrame, s: String): DataFrame =
+      model.transform(usable(df))
+        .select(struct(rowCols.map(col): _*).as(s), bucketIds(model).as(s"__h$s"))
+        .select(col("*"), posexplode(col(s"__h$s")).as(Seq("tbl", "bucket")))
+    def input(df: DataFrame) = if (dim.isDefined) df else df.limit(0)
+    side(input(stored), "B").join(broadcast(side(input(delta), "A")), Seq("tbl", "bucket"))
+      // 1-based position of the first table whose buckets agree
+      .where(array_position(zip_with(col("__hA"), col("__hB"), _ === _), true) ===
+        col("tbl") + 1)
+      .withColumn("distance", sqrt(graft.functions.SqDist.sq_dist(
+        col(s"A.$featureCol"), col(s"B.$featureCol"))))
+      .where(col("distance") < threshold)
+      .select(col("A.id").as("idA"), col("B.id").as("idB"), col("distance"),
+        col("A"), col("B"))
   }
 
   /** J5 — exact cross-join similarity oracle (small inputs only). The

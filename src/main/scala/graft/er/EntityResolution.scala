@@ -210,37 +210,44 @@ object EntityResolution {
   /** Notebook 03 (incremental inference, `03:455-579`): featurize the new
     * rows with the stored pipelines, MERGE them into the parquet feature
     * store (S5 — matched rows update only the three feature columns),
-    * re-block the new rows against the stored opposite side, score with
-    * the Production matcher, and return the ranked matches.
+    * block the new rows against the stored opposite side, score with the
+    * Production matcher, and return the ranked matches.
     *
     * The store is key-hash-bucketed ([[writeFeatureStore]]) and the MERGE
     * is partition-pruned: only the buckets the delta's keys hash into are
-    * read and rewritten (dynamic partition overwrite), so a per-batch
-    * incremental pipeline pays O(delta), not O(store) — the Delta-MERGE
+    * read and rewritten (dynamic partition overwrite) — the Delta-MERGE
     * file-pruning behavior of the reference (`03:481-495`), re-expressed
-    * for a plain parquet store. */
+    * for a plain parquet store.
+    *
+    * The batch is featurized once and pinned. Blocking is one broadcast
+    * LSH probe ([[Blocking.probeSimilarityJoin]]) of the batch's side-A
+    * rows against the post-merge store's side B, read once; the probe
+    * carries both sides' feature vectors, so scoring needs no join back to
+    * the store. The pairs and scores are those of `dedupedSimilarityJoin`
+    * plus [[scoreAll]] over the post-merge store. Spans: `store_merge` and
+    * `store_read` (its file listing and schema jobs) run here; the probe,
+    * score and sort jobs run in the caller's action, under the caller's
+    * span. The probe streams the whole stored side B once per batch, so
+    * its reads are O(store). */
   def inferIncremental(newRows: DataFrame, featureStorePath: String,
                        pipes: FittedPipelines, matcher: PipelineModel,
                        cfg: Config = Config()): DataFrame = {
     val spark = newRows.sparkSession
-    val newFeats = transformCatalog(pipes, newRows)
+    val newFeats = transformCatalog(pipes, newRows).localCheckpoint()
     // bucket count comes from the store's own marker, not cfg — a config
     // that drifted from the writer's would otherwise duplicate keys
     obs.span("store_merge") {
       graft.io.IO.upsertPartitionedStore(spark, featureStorePath, newFeats,
-        keys = Seq("table", "id"),
-        updateCols = Seq("name_features", "descript_features", "price_features"))
+        keys = Seq("table", "id"), updateCols = Distances.VecCols)
     }
-    val store = graft.io.IO.readPartitionedStore(spark, featureStorePath)
-    val storedB = store.where("table = 'buy'")
-    val cands = obs.span("name_lsh") {
-      Blocking.dedupedSimilarityJoin(
-          newFeats.where("table = 'abt'"), storedB, keyCol = "name",
-          featureCol = "name_features", threshold = cfg.nameThreshold,
-          bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
-          seed = cfg.seed)
-        .select("idA", "idB").distinct()
-    }
-    scoreAll(store, cands, matcher)
+    val store = obs.span("store_read")(graft.io.IO.readPartitionedStore(spark, featureStorePath))
+    // the batch's rows are its side-A rows' post-merge store rows: the
+    // MERGE updates exactly the feature columns the probe carries
+    val pairs = Blocking.probeSimilarityJoin(
+      newFeats.where("table = 'abt'"), store.where("table = 'buy'"), keyCol = "name",
+      featureCol = "name_features", threshold = cfg.nameThreshold,
+      bucketLength = cfg.bucketLength, numHashTables = cfg.numHashTables,
+      seed = cfg.seed, carryCols = Distances.VecCols)
+    Matcher.ranked(Matcher.score(matcher, Distances.sqdists(pairs)))
   }
 }

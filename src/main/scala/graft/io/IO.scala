@@ -635,6 +635,15 @@ object IO {
       .parquet(dirs: _*).drop(GenCol)
   }
 
+  /** The distinct [[BucketCol]] values of `df`, in ONE job with no
+    * exchange: each partition collects its own set (at most nBuckets ×
+    * partitions values reach the driver), where `distinct()` would run a
+    * shuffle-map job and a result job. */
+  private def bucketsOf(df: DataFrame): Set[Int] =
+    df.select(BucketCol).rdd
+      .mapPartitions(rows => rows.map(_.getInt(0)).toSet.iterator)
+      .collect().toSet
+
   /** S5 at scale — partition-pruned MERGE with an ATOMIC manifest commit.
     * Rewriting the whole store per merge is O(store); an incremental
     * pipeline merging a small delta every batch needs O(delta). This
@@ -693,7 +702,7 @@ object IO {
     val nBuckets = storeBuckets(targetPath)
     val src = source.withColumn(BucketCol, guardedBucketExpr(keys, nBuckets))
       .localCheckpoint()
-    val touched = src.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+    val touched = bucketsOf(src)
     commitRewrittenBuckets(spark, targetPath, touched,
       // recomputed per optimistic attempt: the merge is a function of the
       // base version it commits against
@@ -842,7 +851,7 @@ object IO {
     val del = keyRows.select(keys.map(col): _*).distinct()
       .withColumn(BucketCol, bucketExpr(keys, nBuckets))
       .localCheckpoint()
-    val touched = del.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet
+    val touched = bucketsOf(del)
     commitRewrittenBuckets(spark, targetPath, touched,
       () => readStoreBuckets(spark, targetPath, touched)
         .join(broadcast(del.drop(BucketCol)), keys, "left_anti"))
@@ -894,8 +903,7 @@ object IO {
     // the single anti-join, same MERGE rule as every upsert here
     val insKeys = if (insertKeys.nonEmpty) insertKeys else keys
     val ins = newRows.map(r => pin(guarded(requireUniqueSourceKeys(r, insKeys))))
-    val insTouched = ins.map(_.select(BucketCol).distinct()
-      .collect().map(_.getInt(0)).toSet).getOrElse(Set.empty[Int])
+    val insTouched = ins.map(bucketsOf).getOrElse(Set.empty[Int])
     def plan(): (Set[Int], DataFrame) = {
       // the RAW located frame (keys + BucketCol + whatever side columns
       // the locate projected, e.g. a denormalized doc length) feeds the
@@ -915,10 +923,11 @@ object IO {
       // derived from a stale locate would commit stale compensation
       // after a lost race
       val extra = extraRowsFromLocated.map(f => guarded(f(located)))
+      // the touched set reads the located rows without del's distinct: the
+      // same buckets, and the same guard, with no exchange
       val touched = insTouched ++
-        del.select(BucketCol).distinct().collect().map(_.getInt(0)).toSet ++
-        extra.map(_.select(BucketCol).distinct()
-          .collect().map(_.getInt(0)).toSet).getOrElse(Set.empty[Int])
+        bucketsOf(guarded(located.select((keys.map(col) :+ col(BucketCol)): _*))) ++
+        extra.map(bucketsOf).getOrElse(Set.empty[Int])
       val base = readStoreBuckets(spark, targetPath, touched)
         .join(broadcast(del.drop(BucketCol)), keys, "left_anti")
       val withIns = ins.map(base.unionByName(_)).getOrElse(base)

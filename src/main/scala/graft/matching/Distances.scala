@@ -47,12 +47,18 @@ object Distances {
     * built and shipped a visibly fatter hash relation per training/scoring
     * call for zero use. */
   def pairDistances(pairs: DataFrame, featA: DataFrame, featB: DataFrame): DataFrame = {
-    val vecCols = Seq("id", "name_features", "descript_features", "price_features")
-    attachFeatures(pairs, featA.select(vecCols.map(col): _*),
-        featB.select(vecCols.map(col): _*)).select(
-      col("idA"), col("idB"),
-      sqdistNative(col("A.name_features"), col("B.name_features")).as("name_sqdist"),
-      sqdistNative(col("A.descript_features"), col("B.descript_features")).as("descript_sqdist"),
-      sqdistNative(col("A.price_features"), col("B.price_features")).as("price_sqdist"))
+    val vecCols = "id" +: VecCols
+    sqdists(attachFeatures(pairs, featA.select(vecCols.map(col): _*),
+      featB.select(vecCols.map(col): _*)))
   }
+
+  /** The three feature vectors a pair's distances read, per side. */
+  val VecCols: Seq[String] = Seq("name_features", "descript_features", "price_features")
+
+  /** X1 over pairs that already carry both sides' vectors as `A.<col>` and
+    * `B.<col>` — join aliases ([[attachFeatures]]) or struct columns
+    * ([[graft.blocking.Blocking.probeSimilarityJoin]]'s `A`/`B`). */
+  def sqdists(attached: DataFrame): DataFrame =
+    attached.select(col("idA") +: col("idB") +: VecCols.map(c =>
+      sqdistNative(col(s"A.$c"), col(s"B.$c")).as(c.stripSuffix("_features") + "_sqdist")): _*)
 }

@@ -223,7 +223,7 @@ object MatchQueries {
 
   /** Measured contract stats for the incremental-inference loop: runs the
     * real pipeline (fitted-pipeline featurization → MERGE into the parquet
-    * feature store → re-block vs stored side B → score with the trained
+    * feature store → LSH probe vs stored side B → score with the trained
     * matcher) and captures the oracle-checkable facts. The memoized
     * flagship stage + matcher stand in for the reference's persisted
     * artifacts reloaded at inference time (`03:357-429`). */

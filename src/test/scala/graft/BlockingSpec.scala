@@ -118,6 +118,108 @@ class BlockingSpec extends SparkSpec {
     assert(manual == mllib)
   }
 
+  /** A feature store in miniature for the incremental probe: fixture part
+    * names and token-dropped variants through one fitted name pipeline, so
+    * equal names carry equal vectors (the invariant dedupedSimilarityJoin's
+    * per-key representatives rest on). */
+  private lazy val namePool: Vector[(String, org.apache.spark.ml.linalg.Vector)] = {
+    val names = Tables.part(spark, sf).limit(60).select("p_name").as[String].collect()
+    val variants = names.flatMap { n =>
+      val t = n.split(" ")
+      Seq(n, t.drop(1).mkString(" "), t.dropRight(1).mkString(" "))
+    }.distinct.toSeq.toDF("name")
+    graft.features.TextFeatures.namePipeline().fit(variants).transform(variants)
+      .select("name", "name_features").collect()
+      .map(r => r.getString(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1)).toVector
+  }
+
+  private type Feat = (Long, String, org.apache.spark.ml.linalg.Vector)
+  private def feats(rows: Seq[Feat]) = rows.toDF("id", "name", "f")
+
+  /** (probe, MLlib approxSimilarityJoin, dedupedSimilarityJoin) pair sets of
+    * delta side A against stored side B at the flagship's threshold; the
+    * MLlib oracle sees only non-NULL names, the rows the key join keeps. */
+  private def threeWays(a: Seq[Feat], b: Seq[Feat]): Seq[Set[(Long, Long)]] = {
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("idA", "idB").as[(Long, Long)].collect().toSet
+    val probeRows = Blocking.probeSimilarityJoin(feats(a), feats(b), keyCol = "name",
+      featureCol = "f", threshold = 1.3).select("idA", "idB").as[(Long, Long)].collect()
+    val probe = probeRows.toSet
+    assert(probeRows.length == probe.size, "the probe emitted a pair twice")
+    val (an, bn) = (feats(a.filter(_._2 != null)), feats(b.filter(_._2 != null)))
+    val mllib = pairs(Blocking.similarityJoin(Blocking.fitLsh(an, "f"), an, bn, 1.3))
+    val deduped = pairs(Blocking.dedupedSimilarityJoin(feats(a), feats(b),
+      keyCol = "name", featureCol = "f", threshold = 1.3))
+    Seq(probe, mllib, deduped)
+  }
+
+  test("probeSimilarityJoin: same pair set as approxSimilarityJoin and " +
+       "dedupedSimilarityJoin on the fixture and 24 seeded random deltas") {
+    val pool = namePool
+    val rnd0 = new scala.util.Random(11)
+    def name(r: scala.util.Random) = pool(r.nextInt(pool.size))
+    // stored rows: 40 abt, 60 buy (duplicate names included), 3 NULL-name
+    // buy rows carrying a real vector
+    val abt = (1L to 40L).map { i => val (n, v) = name(rnd0); (i, n, v) }
+    val buy = (1001L to 1060L).map { i => val (n, v) = name(rnd0); (i, n, v) } ++
+      (1061L to 1063L).map(i => (i, null: String, name(rnd0)._2))
+    // the fixture: every stored abt row as one batch
+    val fixture = threeWays(abt, buy)
+    assert(fixture.head.nonEmpty && fixture.forall(_ == fixture.head),
+      s"fixture pair sets differ: ${fixture.map(_.size)}")
+    var paired = 0
+    for (seed <- 1 to 24) {
+      val r = new scala.util.Random(seed)
+      val updated = r.shuffle(abt).take(1 + r.nextInt(4)).map { case (i, _, _) =>
+        val (n, v) = name(r); (i, n, v) }
+      val fresh = (1 to r.nextInt(4)).map { k => val (n, v) = name(r); (5000L + k, n, v) }
+      // a duplicate name inside the delta, a NULL name, and buy rows
+      val dup = if (seed % 3 == 0 && fresh.nonEmpty) Seq((6000L, fresh.head._2, fresh.head._3)) else Nil
+      val nulls = if (seed % 4 == 1) Seq((7000L, null: String, name(r)._2)) else Nil
+      val deltaBuy = if (seed % 2 == 0) (1 to 3).map { k =>
+        val (n, v) = name(r); (if (k == 1) 1001L + r.nextInt(60) else 8000L + k, n, v) } else Nil
+      // seed 24 holds buy rows only: no side-A row to probe with
+      val deltaA = if (seed == 24) Nil else updated ++ fresh ++ dup ++ nulls
+      val mergedB = (buy.map(x => x._1 -> x).toMap ++ deltaBuy.map(x => x._1 -> x)).values.toSeq
+      if (deltaA.count(_._2 != null) == 0) {
+        val out = Blocking.probeSimilarityJoin(feats(deltaA), feats(mergedB),
+          keyCol = "name", featureCol = "f", threshold = 1.3)
+        assert(out.columns.toSeq == Seq("idA", "idB", "distance", "A", "B"))
+        assert(out.count() == 0)
+      } else {
+        val ways = threeWays(deltaA, mergedB)
+        assert(ways.forall(_ == ways.head),
+          s"seed $seed: probe/mllib/deduped sizes ${ways.map(_.size)}")
+        if (ways.head.nonEmpty) paired += 1
+      }
+    }
+    assert(paired >= 20, s"only $paired deltas found any pair")
+  }
+
+  test("probeSimilarityJoin: one BroadcastHashJoin on (tbl, bucket), no " +
+       "nested loop, no cartesian, no shuffle") {
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec, CartesianProductExec}
+    val helper = new AdaptiveSparkPlanHelper {}
+    val pool = namePool
+    val a = feats(pool.take(8).zipWithIndex.map { case ((n, v), i) => (i.toLong, n, v) })
+    val b = feats(pool.zipWithIndex.map { case ((n, v), i) => (1000L + i, n, v) })
+    val out = Blocking.probeSimilarityJoin(a, b, keyCol = "name", featureCol = "f",
+      threshold = 1.3)
+    assert(out.count() > 0)
+    val plan = out.queryExecution.executedPlan
+    val joins = helper.collect(plan) { case j: BroadcastHashJoinExec => j }
+    assert(joins.size == 1, plan)
+    assert(joins.head.leftKeys.map(_.references.head.name) == Seq("tbl", "bucket"), plan)
+    assert(helper.collect(plan) {
+      case j: BroadcastNestedLoopJoinExec => j
+      case j: CartesianProductExec => j
+      case e: ShuffleExchangeExec => e
+    }.isEmpty, plan)
+  }
+
   test("plan: similarity join stays an equi-join, never cartesian") {
     val model = Blocking.fitLsh(a, "f", bucketLength = 2.0, numHashTables = 6)
     val plan = Blocking.similarityJoin(model, a, b, threshold = 1.0)

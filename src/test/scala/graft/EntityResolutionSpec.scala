@@ -113,6 +113,66 @@ class EntityResolutionSpec extends SparkSpec {
     assert(top.forall(sc => sc >= 0.0 && sc <= 1.0))
   }
 
+  test("inferIncremental: (idA, idB, match_score) bit-identical to " +
+       "dedupedSimilarityJoin + scoreAll over the post-merge store") {
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.execution.joins.{BroadcastHashJoinExec,
+      BroadcastNestedLoopJoinExec, CartesianProductExec}
+    val a = Catalogs.sideA(spark, sf).withColumn("table", lit("abt"))
+    val b = Catalogs.sideB(spark, sf).withColumn("table", lit("buy"))
+    val all = a.unionByName(b).select("table", "id", "name", "description", "price")
+    val (pipes, allFeats) = EntityResolution.fitFeatureModels(all, cfg)
+    allFeats.cache()
+    val store = new java.io.File("target/test_tmp/er_store_exact").getAbsolutePath
+    EntityResolution.writeFeatureStore(allFeats, store, cfg)
+    val model = EntityResolution.train(allFeats,
+      EntityResolution.labeledCandidates(allFeats, golden, cfg), cfg).model
+    val cols = Seq("table", "id", "name", "description", "price")
+    val firstName = a.orderBy("id").select("name").as[String].head()
+    val deltas = Seq(
+      // updated prices, a brand-new id, and a new id sharing a stored name
+      a.where("id % 40 = 0").withColumn("price", lit("$1.00")).select(cols.map(col): _*)
+        .unionByName(Seq(("abt", 999991L, "cold widget", "PROMO", "$9.99"),
+          ("abt", 999992L, firstName, "PROMO", "$5.00")).toDF(cols: _*)),
+      // a delta holding buy rows: a re-priced stored buy row and a new buy
+      // row named like side A's first row, which the new abt rows must find
+      b.where("id % 50 = 1").withColumn("price", lit("$2.00")).select(cols.map(col): _*)
+        .unionByName(Seq(("buy", 999993L, firstName, "NEW", "$3.00"),
+          ("abt", 999994L, firstName, "PROMO", "$4.00")).toDF(cols: _*)))
+    val helper = new AdaptiveSparkPlanHelper {}
+    for ((d, i) <- deltas.zipWithIndex) {
+      val ranked = EntityResolution.inferIncremental(d, store, pipes, model, cfg)
+      val got = ranked.collect()
+        .map(r => (r.getAs[Long]("idA"), r.getAs[Long]("idB"), r.getAs[Double]("match_score")))
+      val post = graft.io.IO.readPartitionedStore(spark, store)
+      val pairs = graft.blocking.Blocking.dedupedSimilarityJoin(
+          EntityResolution.transformCatalog(pipes, d).where("table = 'abt'"),
+          post.where("table = 'buy'"), keyCol = "name", featureCol = "name_features",
+          threshold = cfg.nameThreshold, bucketLength = cfg.bucketLength,
+          numHashTables = cfg.numHashTables, seed = cfg.seed)
+        .select("idA", "idB").distinct()
+      val want = EntityResolution.scoreAll(post, pairs, model)
+        .select("idA", "idB", "match_score").as[(Long, Long, Double)].collect()
+      def sorted(x: Array[(Long, Long, Double)]) = x.sortBy(t => (t._1, t._2)).toSeq
+      assert(got.nonEmpty && sorted(got) == sorted(want), s"delta $i")
+      if (i == 1) assert(got.exists(x => x._1 == 999994L && x._2 == 999993L))
+      // one BroadcastHashJoin probe; the final sort's range exchange is the
+      // plan's only shuffle
+      val plan = ranked.queryExecution.executedPlan
+      assert(helper.collect(plan) { case j: BroadcastHashJoinExec => j }.nonEmpty, plan)
+      assert(helper.collect(plan) {
+        case j: BroadcastNestedLoopJoinExec => j
+        case j: CartesianProductExec => j
+      }.isEmpty, plan)
+      val shuffles = helper.collect(plan) { case e: ShuffleExchangeExec => e }
+      assert(shuffles.size == 1 &&
+        shuffles.head.outputPartitioning.isInstanceOf[RangePartitioning], plan)
+    }
+    allFeats.unpersist()
+  }
+
   test("deploy: registry round-trip serves identical scores") {
     val labeled = EntityResolution.labeledCandidates(feats, golden, cfg)
     val trained = EntityResolution.train(feats, labeled, cfg)

@@ -99,6 +99,38 @@ class ObsSpec extends SparkSpec {
     }
   }
 
+  test("inferIncremental: merge and store-read jobs under their spans, at " +
+       "most 16 jobs per batch, none unspanned") {
+    import org.apache.spark.sql.functions.lit
+    import graft.er.{Catalogs, EntityResolution}
+    val cfg = EntityResolution.Config(w2vMaxIter = 2)
+    val all = Catalogs.sideA(spark, sf).withColumn("table", lit("abt"))
+      .unionByName(Catalogs.sideB(spark, sf).withColumn("table", lit("buy")))
+      .select("table", "id", "name", "description", "price")
+    val (pipes, feats) = EntityResolution.fitFeatureModels(all, cfg)
+    val store = new java.io.File("target/qtmp/obsspec_infer_store").getAbsolutePath
+    EntityResolution.writeFeatureStore(feats, store, cfg)
+    // any matcher over the three distances will do: the job count is the
+    // merge, the store read and the probe's, not the model's
+    val rnd = new scala.util.Random(3)
+    val model = Matcher.fit(Matcher.addClassWeights((1 to 100).map { i =>
+      val base = if (i % 2 == 1) 0.05 else 1.5
+      (base + rnd.nextDouble() * 0.1, base, base, i % 2)
+    }.toDF("name_sqdist", "descript_sqdist", "price_sqdist", "label")),
+      Matcher.GbtCandidate(3, 0.1, 1.0), iters = 2)
+    val batch = Catalogs.sideA(spark, sf).where("id % 40 = 0").withColumn("table", lit("abt"))
+      .select("table", "id", "name", "description", "price")
+    val rows = recorded(obs.span("caller") {
+      assert(EntityResolution.inferIncremental(batch, store, pipes, model, cfg)
+        .collect().nonEmpty)
+    })
+    val jobs = rows.values.filter(_.jobs > 0)
+    assert(jobs.exists(_.path.startsWith("caller/store_merge")), rows)
+    assert(rows.get("caller/store_read").exists(_.jobs > 0), rows)
+    assert(jobs.forall(_.path.startsWith("caller")), s"unspanned jobs: $rows")
+    assert(jobs.map(_.jobs).sum <= 16, s"${jobs.map(r => r.path -> r.jobs)}")
+  }
+
   test("1,000 calls of one span leave one aggregate row") {
     obs.drain()
     (1 to 1000).foreach(_ => obs.span("tick")(()))
