@@ -49,7 +49,7 @@ object ProbeContracts {
       Ann.writeIvfPqStore(emb.where("vec_id % 3 != 2"), path,
         centroids = Some(Ann.fitCentroids(
           emb.where(Ann.cosineUsable(org.apache.spark.sql.functions.col("embedding"))))))
-      Ann.appendIvfPqStore(emb.where("vec_id % 3 = 2"), path)
+      Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), path)
       val st = LlmQueries.annStats(spark,
         Ann.ivfPqStoreTopK(spark, path, emb.where("vec_id < 8"), k = 10,
           refineFrom = Some(emb)), dir)

@@ -6,6 +6,7 @@ import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
+import org.apache.spark.sql.graftshim.Shim
 import graft.obs
 
 /** IO layer: schema-declared CSV scan (S2, ref `01_Feature
@@ -421,24 +422,8 @@ object IO {
         coalesce(bucket.cast("string"), lit("NULL")))).cast("int"))
     .otherwise(bucket)
 
-  /** Lay a store out partitioned by key-hash bucket under a generation
-    * directory (`__graft_gen=1/__graft_bucket=N/…`) with a committed
-    * manifest, so merges can prune to touched buckets AND commit
-    * atomically ([[upsertPartitionedStore]]). The bucket count is
-    * persisted alongside the data ([[storeBuckets]]) — merges MUST hash
-    * with the writer's count, never the caller's.
-    *
-    * If `df` already carries [[BucketCol]] it is TRUSTED (same convention
-    * as [[appendPartitionedStore]]): stores whose pruning dimension is
-    * not the key hash — a term-bucketed inverted index, a cell-routed
-    * vector index — lay out by their own bounded routing column and
-    * still get the manifest commit/read machinery. The caller then owns
-    * the bucket arithmetic end to end; keyed merges (which hash with
-    * [[storeBuckets]]) are only valid when the caller's bucketing IS the
-    * key hash. Keys are null-guarded either way. */
   /** Write a generation directory partitioned by [[BucketCol]] with the
-    * FileOutputCommitter redundancy removed (optimization round 14, guide
-    * §6): store visibility commits through OUR manifest markers (atomic
+    * FileOutputCommitter redundancy removed: store visibility commits through OUR manifest markers (atomic
     * create of `vN.committed`), so the committer's job-level atomicity
     * buys nothing here — algorithm v2 moves task output at TASK commit
     * instead of a DRIVER-SERIAL merge of every bucket directory at job
@@ -466,13 +451,31 @@ object IO {
       "store generation writes use committer v2, whose task-commit is not " +
         "safe under speculative execution — disable spark.speculation for " +
         "store-writing sessions")
-    df.hint("rebalance", col(BucketCol))
-      .write.mode("overwrite")
+    // one writer per bucket directory: a hash repartition on the bucket
+    // clusters with AQE on (which still coalesces its partitions) and off
+    // (as in every foreachBatch micro-batch, where Spark drops a
+    // REBALANCE hint and each task would write into every bucket)
+    df.repartition(col(BucketCol)).write.mode("overwrite")
       .option("mapreduce.fileoutputcommitter.algorithm.version", "2")
       .option("mapreduce.fileoutputcommitter.marksuccessfuljobs", "false")
       .partitionBy(BucketCol).parquet(genPath.toString)
   }
 
+  /** Lay a store out partitioned by key-hash bucket under a generation
+    * directory (`__graft_gen=1/__graft_bucket=N/…`) with a committed
+    * manifest, so merges can prune to touched buckets AND commit
+    * atomically ([[upsertPartitionedStore]]). The bucket count is
+    * persisted alongside the data ([[storeBuckets]]) — merges MUST hash
+    * with the writer's count, never the caller's.
+    *
+    * If `df` already carries [[BucketCol]] it is TRUSTED (same convention
+    * as [[appendPartitionedStore]]): stores whose pruning dimension is
+    * not the key hash — a term-bucketed inverted index, a cell-routed
+    * vector index — lay out by their own bounded routing column and
+    * still get the manifest commit/read machinery. The caller then owns
+    * the bucket arithmetic end to end; keyed merges (which hash with
+    * [[storeBuckets]]) are only valid when the caller's bucketing IS the
+    * key hash. Keys are null-guarded either way. */
   def writePartitionedStore(df: DataFrame, path: String, keys: Seq[String],
                             nBuckets: Int = 64,
                             layoutTag: Option[String] = None): Unit = {
@@ -480,12 +483,12 @@ object IO {
     val (fs, root) = hfs(spark, path)
     fs.delete(root, true) // fresh-store overwrite semantics
     val gen = newGenName(1)
-    // REBALANCE on the layout column before the partitionBy write: without
-    // it every input task opens a writer in every bucket directory it has
-    // a row for (tasks × nBuckets small files; measured 22 s for a 4k-row
-    // store at 32 tasks × 64 buckets, and every later scan of the store
-    // pays the file count again). With it AQE clusters rows by bucket into
-    // a bounded task set — ~one file per bucket.
+    // writeGenDir clusters by the layout column before the partitionBy
+    // write: without it every input task opens a writer in every bucket
+    // directory it has a row for (tasks × nBuckets small files; measured
+    // 22 s for a 4k-row store at 32 tasks × 64 buckets, and every later
+    // scan of the store pays the file count again). With it each bucket
+    // is written by one task — ~one file per bucket.
     val genPath = new HPath(root, s"$GenCol=$gen")
     val bucketed =
       if (df.columns.contains(BucketCol))
@@ -647,31 +650,20 @@ object IO {
   /** S5 at scale — partition-pruned MERGE with an ATOMIC manifest commit.
     * Rewriting the whole store per merge is O(store); an incremental
     * pipeline merging a small delta every batch needs O(delta). This
-    * variant:
+    * variant buckets the source rows by key hash (same arithmetic as the
+    * store layout — ≤ `nBuckets` distinct values, so the driver-side
+    * collect of touched buckets is bounded and tiny) and hands
+    * [[commitRewrite]] a plan over exactly those buckets whose function is
+    * [[upsert]] (WHEN MATCHED UPDATE / NOT MATCHED INSERT) over their
+    * current rows. The loop reads ONLY the touched buckets, resolved
+    * through the manifest (untouched buckets are never even listed),
+    * writes the merged buckets to a NEW generation directory — no live
+    * file is overwritten, so the merge streams straight from the old
+    * generation into the new one — and commits manifest v+1 by atomically
+    * creating its `.committed` marker.
     *
-    *  1. buckets the source rows by key hash (same arithmetic as the store
-    *     layout — ≤ `nBuckets` distinct values, so the driver-side collect
-    *     of touched buckets is bounded and tiny);
-    *  2. reads ONLY the touched buckets of the target, resolving each
-    *     through the manifest to the generation directory holding its
-    *     current files (file-list-level pruning — untouched buckets are
-    *     never even listed);
-    *  3. merges with the same WHEN MATCHED UPDATE / NOT MATCHED INSERT
-    *     semantics as [[upsert]];
-    *  4. writes the merged touched buckets to a NEW generation directory
-    *     (`__graft_gen=<v+1>/`) — no live file is overwritten, so the
-    *     merge plan can stream straight from the old generation into the
-    *     new one without a checkpoint barrier;
-    *  5. writes manifest v+1 (untouched buckets keep their old generation,
-    *     touched buckets point at the new one), then COMMITS by atomically
-    *     creating the `.committed` marker.
-    *
-    * Crash-atomicity: the marker create is the single commit point. A
-    * crash anywhere before it — mid data write, mid manifest write, or
-    * between them — leaves the previous manifest current, so readers see
-    * exactly the pre-merge store (verified by IOSpec's crash-injection
-    * test); a retry re-derives the same generation number and overwrites
-    * the orphan files. Superseded files are reclaimed by
+    * Crash-atomicity: the marker create is the single commit point (see
+    * [[commitRewrite]]). Superseded files are reclaimed by
     * [[vacuumPartitionedStore]], never by the merge itself, so a reader
     * that resolved the old manifest keeps its files until vacuum (the
     * retention caveat every manifest-pointer table format shares).
@@ -686,13 +678,11 @@ object IO {
     upsertPartitionedStoreImpl(spark, targetPath, source, keys, updateCols,
       beforeCommit = () => (), evolveSchema = evolveSchema)
 
-  /** [[upsertPartitionedStore]] with two test seams: `beforeCommit` runs
-    * after all data and manifest files are written but before the commit
-    * marker (IOSpec throws there to prove a crash in the window leaves
-    * the pre-merge state readable); `beforeClaim` runs after the attempt's
-    * data write but BEFORE the version claim (IOSpec runs a competing
-    * full merge there to prove the optimistic retry serializes racing
-    * writers). */
+  /** [[upsertPartitionedStore]] with [[commitRewrite]]'s two test seams:
+    * `beforeCommit` (IOSpec throws there to prove a crash in the window
+    * leaves the pre-merge state readable) and `beforeClaim` (IOSpec runs a
+    * competing full merge there to prove the optimistic retry serializes
+    * racing writers). */
   private[graft] def upsertPartitionedStoreImpl(
       spark: SparkSession, targetPath: String, source: DataFrame,
       keys: Seq[String], updateCols: Seq[String],
@@ -702,67 +692,61 @@ object IO {
     val nBuckets = storeBuckets(targetPath)
     val src = source.withColumn(BucketCol, guardedBucketExpr(keys, nBuckets))
       .localCheckpoint()
-    val touched = bucketsOf(src)
-    commitRewrittenBuckets(spark, targetPath, touched,
-      // recomputed per optimistic attempt: the merge is a function of the
-      // base version it commits against
-      () => upsert(readStoreBuckets(spark, targetPath, touched), src,
-        keys, updateCols, evolveSchema = evolveSchema),
-      beforeCommit, beforeClaim = beforeClaim)
+    try {
+      // hash routing is a pure key function, so the touched set cannot
+      // move between attempts; only the base rows are re-read per attempt
+      val touched = bucketsOf(src)
+      commitRewrite(spark, targetPath,
+        () => (touched, upsert(_, src, keys, updateCols, evolveSchema = evolveSchema)),
+        beforeCommit, beforeClaim = beforeClaim)
+    } finally Shim.releaseCheckpoint(src)
   }
 
-  /** Shared OPTIMISTICALLY-CONCURRENT commit tail for ops that REWRITE a
-    * set of touched buckets (upsert, delete). Per attempt: read the
-    * current version, rebuild the rewritten rows against it, write them
-    * to a WRITER-UNIQUE generation directory (racing writers can never
-    * clobber each other's data files), claim the next commit version via
-    * the atomic lock create, re-check the base is still current under
-    * the claim, then write manifest `cur`+1 (rewrite collapses each
-    * touched bucket's delta generations; untouched buckets keep theirs;
-    * an emptied bucket drops out) and commit via the atomic marker
-    * create. A writer that loses the race — claim refused, or the base
-    * advanced while it computed — recomputes against the NEW current and
-    * retries, so concurrent merges serialize like any optimistic table
-    * format's commit loop; its orphaned generation directory is
-    * unreachable garbage vacuum reclaims. Same crash contract as
-    * [[upsertPartitionedStore]] documents. */
-  private def commitRewrittenBuckets(spark: SparkSession, targetPath: String,
-                                     touched: Set[Int],
-                                     rewrite: () => DataFrame,
-                                     beforeCommit: () => Unit = () => (),
-                                     maxAttempts: Int = 5,
-                                     beforeClaim: () => Unit = () => ()): Option[Int] =
-    commitRewrittenBucketsPlanned(spark, targetPath, () => (touched, rewrite()),
-      beforeCommit, maxAttempts, beforeClaim)
-
-  /** [[commitRewrittenBuckets]] whose TOUCHED SET is recomputed together
-    * with the rewrite on every fresh base — required by the
-    * trusted-routing ops (routed delete/upsert): a racing writer can
-    * MOVE a key to a bucket outside the first attempt's touched set
-    * (routing is not a pure function of the key there), so a retry that
-    * kept the stale set would rewrite the wrong buckets and resurrect or
-    * duplicate the key. Hash-routed callers pass a constant set (their
-    * bucket IS a pure key function, so relocation is impossible). A plan
-    * whose touched set comes back empty is a no-op: nothing to rewrite,
-    * no version committed. Returns the version THIS call committed (None
-    * for the no-op) — callers that record per-commit state (the
-    * refresh's staleness baseline) must use it rather than re-reading
-    * storeVersions.last, which a racing writer's later commit can have
-    * advanced past ours.
+  /** THE store-rewrite primitive: every keyed mutation (hash MERGE, keyed
+    * and routed delete, routed upsert, compaction, the vector stores'
+    * refresh) and the append commit through this optimistic loop. Per
+    * attempt it resolves the current manifest version, asks `plan` for
+    * the touched buckets and the function from their current rows (with
+    * [[BucketCol]]) to their new rows, reads those rows ITSELF from that
+    * same version, and writes the result to a WRITER-UNIQUE generation
+    * directory (racing writers never clobber each other's data files).
+    * It then claims the next version via the atomic lock create,
+    * re-checks under the claim that the base is still current, writes
+    * manifest `cur`+1 (touched buckets collapse onto the new generation,
+    * untouched buckets keep theirs, an emptied bucket drops out) and
+    * commits via the atomic marker create.
     *
-    * `append` is [[appendPartitionedStore]]'s manifest rule: the new
-    * generation's buckets are ADDED next to their existing entries
-    * instead of replacing them. Its data is then base-independent, so it
-    * is written once however many races the commit loses.
+    * A writer that loses the race — claim refused, or the base advanced —
+    * re-plans against the NEW current, so concurrent rewrites serialize
+    * like any optimistic table format's commit loop; its orphaned
+    * generation is garbage vacuum reclaims. The touched set is re-planned
+    * with the rows because trusted routing is not a pure key function: a
+    * racing writer can MOVE a key out of the first attempt's touched set,
+    * and a retry that kept the stale set would resurrect or duplicate it.
+    * A plan whose touched set is empty is a no-op: no version committed.
+    * Returns the version THIS call committed (None for the no-op) —
+    * callers that record per-commit state (the refresh's staleness
+    * baseline) must use it rather than storeVersions.last, which a racing
+    * writer's later commit can have advanced past ours.
     *
-    * Each attempt's phases run in `obs` spans: locate (the plan), write
-    * (the generation), claim, and commit (re-check, manifest, marker). */
-  private def commitRewrittenBucketsPlanned(spark: SparkSession, targetPath: String,
-                                            plan: () => (Set[Int], DataFrame),
-                                            beforeCommit: () => Unit = () => (),
-                                            maxAttempts: Int = 5,
-                                            beforeClaim: () => Unit = () => (),
-                                            append: Boolean = false): Option[Int] = {
+    * `append` is [[appendPartitionedStore]]'s manifest rule: the plan's
+    * rows are base-independent (its function gets no base rows), the new
+    * generation's buckets are ADDED next to their existing entries, and
+    * the generation is written once however many races the commit loses.
+    *
+    * Crash contract: the marker create is the single commit point, so a
+    * crash anywhere before it — mid data write, mid manifest write, or
+    * between them — leaves the previous version current. Test seams:
+    * `beforeClaim` runs after the attempt's data write, `beforeCommit`
+    * after its manifest write. Each attempt's phases run in `obs` spans:
+    * locate (the plan and the base read), write (the generation), claim,
+    * and commit (re-check, manifest, marker). */
+  private[graft] def commitRewrite(spark: SparkSession, targetPath: String,
+                                   plan: () => (Set[Int], DataFrame => DataFrame),
+                                   beforeCommit: () => Unit = () => (),
+                                   maxAttempts: Int = 5,
+                                   beforeClaim: () => Unit = () => (),
+                                   append: Boolean = false): Option[Int] = {
     val (fs, root) = hfs(spark, targetPath)
     // reused across attempts when the base hasn't advanced: a refused
     // claim (peer mid-commit, not yet committed) must not cost a second
@@ -782,16 +766,19 @@ object IO {
       // generation is base-independent and writes once; a rewrite's
       // generation is a function of its base
       if (genName.isEmpty || (!append && dataBase != cur)) {
-        // plan + write recompute as a UNIT against this base: the
-        // rewrite frame and the touched set it was derived from must
-        // describe the same manifest version
-        val (t, frame) = obs.span("locate")(plan())
-        touched = t
-        if (touched.isEmpty && !append) return None
+        val rows = obs.span("locate") {
+          val (t, rewrite) = plan()
+          touched = t
+          if (append) Some(rewrite(spark.emptyDataFrame))
+          else if (t.isEmpty) None
+          else Some(rewrite(readManifestBuckets(spark, targetPath, man, t)))
+        }
+        val frame = rows match {
+          case Some(f) => f
+          case None => return None
+        }
         genName = newGenName(cur + 1)
         val genPath = new HPath(root, s"$GenCol=$genName")
-        // same rebalance-before-partitionBy + manifest-covered committer
-        // shortcut as writePartitionedStore (see writeGenDir)
         obs.span("write")(writeGenDir(frame, genPath))
         written = listPartDirs(fs, genPath, BucketCol)
         dataBase = cur
@@ -838,36 +825,36 @@ object IO {
   }
 
   /** Keyed DELETE — `WHEN MATCHED DELETE` with the same O(delta) pruning
-    * as the merge: bucket the delete keys with the store's persisted hash,
-    * read ONLY those buckets, anti-join the keys away, and commit the
-    * rewritten buckets as a new generation. The capability every
-    * training-data store eventually needs (takedown / right-to-be-forgotten
-    * passes), and at scale the pruning is the whole story: a delete of k
-    * keys touches ≤ k buckets however large the store is. A bucket whose
-    * rows are all deleted drops out of the manifest entirely. */
+    * as the merge: a [[routedRewrite]] whose locate is each key's hash
+    * bucket under the store's persisted count, so only those buckets are
+    * read, anti-joined and rewritten as a new generation. The capability
+    * every training-data store eventually needs (takedown /
+    * right-to-be-forgotten passes), and at scale the pruning is the whole
+    * story: a delete of k keys touches ≤ k buckets however large the
+    * store is. A bucket whose rows are all deleted drops out of the
+    * manifest entirely. A key row with a NULL key is dropped first: SQL
+    * equality never matches a NULL, so it deletes nothing and touches no
+    * bucket — a delete of only such rows commits no version. */
   def deleteFromPartitionedStore(spark: SparkSession, targetPath: String,
                                  keyRows: DataFrame, keys: Seq[String]): Unit = {
-    val nBuckets = storeBuckets(targetPath)
-    val del = keyRows.select(keys.map(col): _*).distinct()
-      .withColumn(BucketCol, bucketExpr(keys, nBuckets))
-      .localCheckpoint()
-    val touched = bucketsOf(del)
-    commitRewrittenBuckets(spark, targetPath, touched,
-      () => readStoreBuckets(spark, targetPath, touched)
-        .join(broadcast(del.drop(BucketCol)), keys, "left_anti"))
+    val located = keyRows.select(keys.map(col): _*)
+      .where(keys.map(col(_).isNotNull).reduce(_ && _))
+      .withColumn(BucketCol, bucketExpr(keys, storeBuckets(targetPath)))
+    routedRewrite(spark, targetPath, () => located, None, keys)
   }
 
   /** Routed DELETE / UPSERT for stores whose [[BucketCol]] is a TRUSTED
     * routing column rather than the key hash (the vector stores route by
-    * IVF cell). The caller supplies a LOCATE CLOSURE producing key rows
-    * that carry the bucket each key currently lives in (e.g. a
-    * column-pruned (key, bucket) projection scan), and optionally
-    * `newRows`: full store rows with their trusted routing column. Per
-    * optimistic attempt, touched = located ∪ new buckets; one rewrite
-    * anti-joins the keys away and unions the new rows, committed
-    * atomically through the manifest loop — a racing reader sees
-    * the pre- or post-op version, never the deleted-but-not-yet-
-    * reinserted middle a delete-then-append pair would expose. The two
+    * IVF cell), and the keyed delete's path too. The caller supplies a
+    * LOCATE CLOSURE producing key rows that carry the bucket each key
+    * currently lives in (e.g. a column-pruned (key, bucket) projection
+    * scan), and optionally `newRows`: full store rows with their trusted
+    * routing column. Each [[commitRewrite]] attempt pins the locate,
+    * derives touched = new ∪ located ∪ extra-row buckets in one job, and
+    * plans one rewrite that anti-joins the keys away from the touched
+    * buckets' rows and unions the new and extra rows — a racing reader
+    * sees the pre- or post-op version, never the deleted-but-not-yet-
+    * reinserted middle a delete-then-append pair would expose. The
     * bucket sets may differ: a re-embedded vector can ROUTE to a
     * different cell, which an in-place per-bucket update cannot express.
     *
@@ -875,13 +862,14 @@ object IO {
     * the key here: when a racing writer moves a key to another bucket
     * and this commit loses the version race, the retry must RE-LOCATE
     * against the new current manifest or it would rewrite stale buckets
-    * and resurrect the key. A delete of k keys touches ≤ k buckets
-    * however large the store is; an emptied bucket drops out of the
-    * manifest. No-op (no new version) when the locate finds nothing and
-    * there are no new rows. */
+    * and resurrect the key. `newRows` is by-name and pinned once, on the
+    * first attempt (inside its locate span): its routing never depends on
+    * the base. A delete of k keys touches ≤ k buckets however large the
+    * store is; an emptied bucket drops out of the manifest. No-op (no new
+    * version) when the locate finds nothing and there are no new rows. */
   private[graft] def routedRewrite(spark: SparkSession, targetPath: String,
                                    locateKeyRows: () => DataFrame,
-                                   newRows: Option[DataFrame],
+                                   newRows: => Option[DataFrame],
                                    keys: Seq[String],
                                    beforeClaim: () => Unit = () => (),
                                    insertKeys: Seq[String] = Seq.empty,
@@ -889,54 +877,41 @@ object IO {
     val nBuckets = storeBuckets(targetPath)
     def guarded(df: DataFrame) = df.withColumn(BucketCol,
       nullKeyGuard(keys, bucketRangeGuard(nBuckets, col(BucketCol))))
-    // every localCheckpoint this op pins is tracked and unpersisted once
-    // the commit loop returns: a long-lived session doing repeated
-    // maintenance (a foreachBatch upsert loop) would otherwise accumulate
-    // checkpoint blocks until session end
+    // every pin this op takes is released once the loop returns: a
+    // long-lived session doing repeated maintenance (a foreachBatch upsert
+    // loop) would otherwise accumulate checkpoint blocks until session end
     val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def pin(df: DataFrame): DataFrame = { val p = df.localCheckpoint(); pinned += p; p }
-    // new rows pin once — their routing comes from the stored quantizers,
-    // which no append/delete/upsert commit ever touches; duplicate keys
-    // (by `insertKeys` — the store's row identity, which may be wider
-    // than the locate/anti-join `keys`: an inverted index removes by
-    // doc_id but inserts (term, doc_id) rows) would double-insert after
-    // the single anti-join, same MERGE rule as every upsert here
+    // duplicate new keys (by `insertKeys` — the store's row identity,
+    // which may be wider than the locate/anti-join `keys`: an inverted
+    // index removes by doc_id but inserts (term, doc_id) rows) would
+    // double-insert after the single anti-join, same MERGE rule as every
+    // upsert here
     val insKeys = if (insertKeys.nonEmpty) insertKeys else keys
-    val ins = newRows.map(r => pin(guarded(requireUniqueSourceKeys(r, insKeys))))
-    val insTouched = ins.map(bucketsOf).getOrElse(Set.empty[Int])
-    def plan(): (Set[Int], DataFrame) = {
+    lazy val ins = newRows.map(r => pin(guarded(requireUniqueSourceKeys(r, insKeys))))
+    def plan(): (Set[Int], DataFrame => DataFrame) = {
       // the RAW located frame (keys + BucketCol + whatever side columns
       // the locate projected, e.g. a denormalized doc length) feeds the
-      // per-attempt extra-row derivation; the anti-join side below only
-      // keeps (keys, bucket)
+      // extra-row derivation; the anti-join side only keeps (keys, bucket)
       val located = pin(locateKeyRows())
-      // del/extra derive DETERMINISTICALLY from the pinned locate, so they
-      // need no checkpoint of their own: each consumer (touched-set
-      // collect, anti-join broadcast, frame union) re-reads the
-      // checkpoint's blocks — a tiny distinct / aggregate — where pinning
-      // them would cost a full materialization job apiece per attempt
-      val del = guarded(located
-          .select((keys.map(col) :+ col(BucketCol)): _*).distinct())
+      val keyBuckets = guarded(located.select((keys.map(col) :+ col(BucketCol)): _*))
       // extra rows are a FUNCTION OF THE LOCATE (e.g. a compensating
-      // stats-delta row derived from the rows being removed), so they
-      // recompute per optimistic attempt together with it — an extra row
-      // derived from a stale locate would commit stale compensation
-      // after a lost race
+      // stats-delta row derived from the rows being removed), so they are
+      // re-derived with it on every attempt — an extra row derived from a
+      // stale locate would commit stale compensation after a lost race.
+      // Like the anti-join side, they read the pinned locate's blocks
+      // instead of taking a pin of their own
       val extra = extraRowsFromLocated.map(f => guarded(f(located)))
-      // the touched set reads the located rows without del's distinct: the
-      // same buckets, and the same guard, with no exchange
-      val touched = insTouched ++
-        bucketsOf(guarded(located.select((keys.map(col) :+ col(BucketCol)): _*))) ++
-        extra.map(bucketsOf).getOrElse(Set.empty[Int])
-      val base = readStoreBuckets(spark, targetPath, touched)
-        .join(broadcast(del.drop(BucketCol)), keys, "left_anti")
-      val withIns = ins.map(base.unionByName(_)).getOrElse(base)
-      (touched, extra.map(withIns.unionByName(_)).getOrElse(withIns))
+      val added = ins.toSeq ++ extra
+      // the touched set in ONE job: a union of every side's bucket column
+      // (the located rows without the anti-join side's distinct — the same
+      // buckets, with no exchange)
+      val touched = bucketsOf((keyBuckets +: added).map(_.select(BucketCol)).reduce(_ union _))
+      val del = broadcast(keyBuckets.distinct().drop(BucketCol))
+      (touched, base => (base.join(del, keys, "left_anti") +: added).reduce(_ unionByName _))
     }
-    try
-      commitRewrittenBucketsPlanned(spark, targetPath, () => plan(),
-        beforeClaim = beforeClaim)
-    finally pinned.foreach(_.unpersist(blocking = false))
+    try commitRewrite(spark, targetPath, () => plan(), beforeClaim = beforeClaim)
+    finally pinned.foreach(Shim.releaseCheckpoint)
   }
 
   /** COMPACT the store's fragmented buckets — the OPTIMIZE step for the
@@ -959,27 +934,15 @@ object IO {
       .filter(_._2 > maxGensPerBucket).keys.toSet)
 
   /** Compact exactly the given buckets (collapse each to one generation,
-    * content byte-identical) — the seam for stores whose fragmentation
+    * content byte-identical: the plan's function is the identity over
+    * their current rows) — the seam for stores whose fragmentation
     * criterion is LAYOUT-AWARE (the vector stores exclude their reserved
     * quantizer buckets): the caller's decision set is the one rewritten,
-    * so the compaction report can never disagree with the rewrite. */
+    * so the compaction report can never disagree with the rewrite. An
+    * empty set commits nothing. */
   def compactStoreBuckets(spark: SparkSession, path: String,
                           buckets: Set[Int]): Unit =
-    if (buckets.nonEmpty)
-      commitRewrittenBuckets(spark, path, buckets,
-        () => readStoreBuckets(spark, path, buckets))
-
-  /** Rewrite the given buckets' contents with a caller-supplied frame
-    * (carrying [[BucketCol]]) through the SAME optimistic manifest loop
-    * as every merge — the seam behind whole-layout maintenance ops that
-    * replace data AND quantizer buckets in one atomic commit (the vector
-    * stores' staleness-driven refresh). The rewrite closure recomputes
-    * per attempt against the then-current manifest; previous versions
-    * stay time-travel-readable until vacuum. */
-  private[graft] def rewriteStoreBuckets(spark: SparkSession, path: String,
-                                         buckets: Set[Int],
-                                         rewrite: () => DataFrame): Option[Int] =
-    commitRewrittenBuckets(spark, path, buckets, rewrite)
+    commitRewrite(spark, path, () => (buckets, identity[DataFrame]))
 
   /** CHANGE FEED — the net row-level diff between two committed versions,
     * in CDC shape: `_change_type` ∈ insert / delete / update_preimage /
@@ -1088,7 +1051,7 @@ object IO {
     // appends never truly conflict (base-independent data), so they get
     // more attempts: a refused claim just means a peer is inside its
     // few-ms commit window
-    commitRewrittenBucketsPlanned(spark, targetPath, () => (Set.empty[Int], src),
+    commitRewrite(spark, targetPath, () => (Set.empty[Int], _ => src),
       maxAttempts = 10, append = true)
   }
 

@@ -6,6 +6,7 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftshim.Shim
 import graft.io.IO
 import graft.obs
 
@@ -605,7 +606,7 @@ object Ann {
       .map { case (cell, c) => (-1L - cell, c.toSeq) }
       .toDF("nn_id", "cv")
       .withColumn(IO.BucketCol, lit(reserved))
-    // writePartitionedStore rebalances on the routing column before the
+    // writePartitionedStore repartitions on the routing column before the
     // partitionBy write (the small-files guard) and commits postings +
     // centroids in one manifest version
     // the layout tag rides the SAME v1 commit as the data (IO writes it
@@ -616,21 +617,46 @@ object Ann {
       layoutTag = Some("ivf"))
   }
 
-  /** Incremental index maintenance: route a delta of new vectors through
-    * the STORED centroids and append — O(delta) data writes, no existing
-    * file read or rewritten, committed through the store's optimistic
-    * manifest loop so a racing reader sees the old version or the new
-    * one, never a torn middle. (The trade, as for every IVF deployment:
-    * centroids age as the distribution drifts; refresh = writeIvfStore
-    * again.) */
-  def appendIvfStore(delta: DataFrame, path: String,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
+  /** Incremental index maintenance, either layout: route a delta of new
+    * vectors through the STORED quantizers ([[encodeRows]]) and append —
+    * O(delta) data writes, no existing file read or rewritten, committed
+    * through the store's optimistic manifest loop so a racing reader sees
+    * the old version or the new one, never a torn middle. The trade, as
+    * for every IVF deployment: the quantizers age as the distribution
+    * drifts (IVF-PQ doubly: coarse cells and codebooks);
+    * [[vectorStoreStaleness]] measures it, and [[refreshIvfStore]] or a
+    * rebuild answers it. A path that is not a vector store fails loudly. */
+  def appendVectorStore(delta: DataFrame, path: String,
+                        idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
     val spark = delta.sparkSession
-    val cents = readCentroids(spark, path)
-    // same null-vector policy as writeIvfStore: never persist unservable rows
-    val rows = assignCells(delta.where(cosineUsable(col(vecCol))), cents, idCol, vecCol)
-      .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
-    IO.appendPartitionedStore(spark, path, rows, keys = Seq("nn_id"))
+    IO.appendPartitionedStore(spark, path,
+      encodeRows(spark, path, readStoreKind(spark, path), delta, idCol, vecCol),
+      keys = Seq("nn_id"))
+  }
+
+  /** Store rows for a batch of vectors, routed through the store's STORED
+    * centroids and, for IVF-PQ, residual-encoded through its stored
+    * codebooks — the one row encoder of [[appendVectorStore]] and
+    * [[upsertVectorStore]]. Unusable vectors (null/zero/NaN/Inf) are
+    * dropped: never persist unservable rows, same policy as the builds. */
+  private def encodeRows(spark: SparkSession, path: String, kind: String,
+                         delta: DataFrame, idCol: String, vecCol: String): DataFrame = {
+    val usable = delta.where(cosineUsable(col(vecCol)))
+    kind match {
+      case "ivf" =>
+        assignCells(usable, readCentroids(spark, path), idCol, vecCol)
+          .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
+      case "ivfpq" =>
+        val (_, centArr, cb) = loadIvfPqQuantizers(spark, path)
+        val codesU = pqCodesUdf(cb)
+        val rU = residUdf(centArr)
+        assignCellsCollected(usable, centArr, idCol, vecCol)
+          .select(col("nn_id"), codesU(rU(col("cv"), col("cell"))).as("codes"),
+            lit(null).cast("array<double>").as("cv"),
+            col("cell").as(IO.BucketCol))
+      case other => throw new IllegalArgumentException(
+        s"$path has unknown store kind '$other'")
+    }
   }
 
   /** The data rows of a persisted IVF store — (nn_id, cv, cell) through
@@ -807,8 +833,8 @@ object Ann {
             knob.header.zip(stamp).map { case (key, v) => s"$key=$v" }.mkString("\t") +
               "\n" + pts.map { case (x, r) => s"$x\t$r" }.mkString("\n"))
           pts
-        } finally cands.unpersist(blocking = false)
-      } finally q.unpersist(blocking = false)
+        } finally Shim.releaseCheckpoint(cands)
+      } finally Shim.releaseCheckpoint(q)
     import spark.implicits._
     curve.toDF(knob.column, "recall")
   }
@@ -919,10 +945,10 @@ object Ann {
   }
 
   /** Compact a vector store's fragmented cells — the OPTIMIZE step every
-    * append-maintained store needs: each [[appendIvfStore]] /
-    * [[appendIvfPqStore]] delta adds a generation to every cell it
-    * touches, and a year of daily deltas
-    * makes every probed read list + open many small files per cell.
+    * append-maintained store needs: each [[appendVectorStore]] delta
+    * adds a generation to every cell it touches, and a year of daily
+    * deltas makes every probed read list + open many small files per
+    * cell.
     * Serves BOTH layouts (the store-kind marker resolves which buckets
     * are reserved quantizers and must never count as fragmented data
     * cells).
@@ -1087,22 +1113,8 @@ object Ann {
     val spark = delta.sparkSession
     val kind = readStoreKind(spark, path)
     val dataCells = dataCellsOf(kind, IO.storeBuckets(path), path)
-    val usable = delta.where(cosineUsable(col(vecCol)))
-    val newRows = kind match {
-      case "ivf" =>
-        assignCells(usable, readCentroids(spark, path), idCol, vecCol)
-          .select(col("nn_id"), col("cv"), col("cell").as(IO.BucketCol))
-      case _ => // "ivfpq": dataCellsOf rejected every other kind
-        val (_, centArr, cb) = loadIvfPqQuantizers(spark, path)
-        val codesU = pqCodesUdf(cb)
-        val rU = residUdf(centArr)
-        assignCellsCollected(usable, centArr, idCol, vecCol)
-          .select(col("nn_id"), codesU(rU(col("cv"), col("cell"))).as("codes"),
-            lit(null).cast("array<double>").as("cv"),
-            col("cell").as(IO.BucketCol))
-    }
     IO.routedRewrite(spark, path, locateIds(spark, path, dataCells, delta, idCol),
-      Some(newRows), keys = Seq("nn_id"))
+      Some(encodeRows(spark, path, kind, delta, idCol, vecCol)), keys = Seq("nn_id"))
   }
 
   /** Sidecar recording the manifest version staleness reports baseline
@@ -1133,7 +1145,7 @@ object Ann {
   }
 
   /** Staleness report for an append-maintained vector store, either
-    * layout — the queryable form of the trade [[appendIvfStore]]
+    * layout — the queryable form of the trade [[appendVectorStore]]
     * documents ("centroids age as the distribution drifts; refresh =
     * rebuild"). Per data cell, comparing the store's BUILD version (the
     * corpus its quantizer was actually fit on, [[stalenessBaseline]];
@@ -1218,11 +1230,12 @@ object Ann {
     val nBuckets = IO.storeBuckets(path)
     val reserved = nBuckets - 1
     import spark.implicits._
-    // recomputed per optimistic attempt (rare: only under a racing
-    // writer): the refit must describe the manifest version it commits
-    // against, same rule as every routed rewrite
-    def rewrite(): DataFrame = {
-      val rows = readIvfStore(spark, path)
+    // re-planned per optimistic attempt (rare: only under a racing
+    // writer): the refit is a function of the base it commits against.
+    // It fits on the data cells alone, partition-pruned out of the base,
+    // so the reserved bucket's rows never reach the fit
+    def rewrite(base: DataFrame): DataFrame = {
+      val rows = base.where(col(IO.BucketCol) < reserved).select("nn_id", "cv")
       val cents = collectedCentroids(
         fitCentroids(rows, nCells = reserved, vecCol = "cv", seed = seed))
       val data = assignCellsCollected(rows, cents, "nn_id", "cv")
@@ -1237,8 +1250,8 @@ object Ann {
     // the OCC loop, never re-read from storeVersions.last, which a
     // racing writer's immediately-following commit could have advanced
     // past ours (baselining on that commit would under-report ITS drift)
-    val committed = IO.rewriteStoreBuckets(spark, path,
-      (0 until nBuckets).toSet, () => rewrite())
+    val committed = IO.commitRewrite(spark, path,
+      () => ((0 until nBuckets).toSet, rewrite))
       .getOrElse(throw new IllegalStateException(
         s"refresh rewrite of $path committed no version"))
     val (fs, p) = sidecar(spark, path, StalenessBaseFile)
@@ -1455,7 +1468,7 @@ object Ann {
 
   /** Map-side PQ encode kernel: vector → its m nearest-codeword codes
     * against the collected codebooks. Shared by [[pqEncode]] (raw
-    * vectors) and the persisted [[writeIvfPqStore]]/[[appendIvfPqStore]]
+    * vectors) and the persisted [[writeIvfPqStore]]/[[appendVectorStore]]
     * build passes (residuals). Boxed element type via [[unboxFinite]],
     * same trap as assignCells' argmin; an unusable vector encodes to
     * NULL codes (unservable — every call site sits behind cosineUsable,
@@ -1836,26 +1849,6 @@ object Ann {
     IO.readStoreBuckets(spark, path, (0 until nCells).toSet)
       .withColumnRenamed(IO.BucketCol, "cell")
       .select("nn_id", "codes", "cell")
-  }
-
-  /** Incremental maintenance: route a delta of new vectors through the
-    * STORED centroids, RESIDUAL-encode through the stored residual
-    * codebooks, and append — O(delta) writes through the optimistic
-    * manifest loop, no existing file read or rewritten. Same aging trade
-    * as [[appendIvfStore]], doubled: both the coarse cells and the
-    * codebooks drift as the distribution moves; refresh = rebuild. */
-  def appendIvfPqStore(delta: DataFrame, path: String,
-                       idCol: String = "vec_id", vecCol: String = "embedding"): Unit = {
-    val spark = delta.sparkSession
-    val (_, centArr, cb) = loadIvfPqQuantizers(spark, path)
-    val codesU = pqCodesUdf(cb)
-    val rU = residUdf(centArr)
-    val nullVec = lit(null).cast("array<double>")
-    val rows = assignCellsCollected(delta.where(cosineUsable(col(vecCol))),
-        centArr, idCol, vecCol)
-      .select(col("nn_id"), codesU(rU(col("cv"), col("cell"))).as("codes"),
-        nullVec.as("cv"), col("cell").as(IO.BucketCol))
-    IO.appendPartitionedStore(spark, path, rows, keys = Seq("nn_id"))
   }
 
   /** Serve top-k from the persisted IVF-PQ index: nProbe cells per query

@@ -39,7 +39,7 @@ object LlmQueries {
     val emb = Tables.embeddings(s, dir)
     Ann.writeIvfStore(emb.where("vec_id % 3 != 2"), path,
       centroids = Some(corpusCentroids(s, dir)))
-    Ann.appendIvfStore(emb.where("vec_id % 3 = 2"), path)
+    Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), path)
     path
   }
 
@@ -74,7 +74,7 @@ object LlmQueries {
       val emb = Tables.embeddings(s, dir)
       Ann.writeIvfPqStore(emb.where("vec_id % 3 != 2"), path,
         centroids = Some(corpusCentroids(s, dir)))
-      Ann.appendIvfPqStore(emb.where("vec_id % 3 = 2"), path)
+      Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), path)
       path
     }
 
@@ -950,7 +950,7 @@ object LlmQueries {
         .select((col("vec_id") + 2000000000L).as("vec_id"),
           transform(col("embedding"),
             x => x * lit(5.0f) + lit(3.0f)).as("embedding"))
-      Ann.appendIvfStore(drift, path)
+      Ann.appendVectorStore(drift, path)
       // gate respected: with an unreachable drifted-cells bound the
       // refresh declines (and commits nothing)
       val nV0 = graft.io.IO.storeVersions(s, path).size

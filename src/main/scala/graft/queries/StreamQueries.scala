@@ -117,7 +117,7 @@ object StreamQueries {
     // non-empty batch seeds the store under the session's shared
     // quantizer; every later batch routes through the STORED centroids —
     // an O(delta) OCC-manifest append, the exact maintenance path
-    // appendIvfStore documents). Contract: the stream-maintained store's
+    // appendVectorStore documents). Contract: the stream-maintained store's
     // (id, cell) content equals a batch assignment of the full servable
     // corpus under the same centroids — however the arrivals were
     // batched — and the maintenance was genuinely incremental (one
@@ -140,7 +140,7 @@ object StreamQueries {
             if (!b.isEmpty) {
               if (!graft.io.IO.isPartitionedStore(b.sparkSession, store))
                 Ann.writeIvfStore(b, store, centroids = Some(cents))
-              else Ann.appendIvfStore(b, store)
+              else Ann.appendVectorStore(b, store)
             }
           }
           .start()

@@ -29,4 +29,21 @@ object Shim {
     * the public `getOrCreate` would start one). */
   def activeContext: Option[org.apache.spark.SparkContext] =
     org.apache.spark.SparkContext.getActive
+
+  /** Free a `localCheckpoint()`ed frame's blocks. `Dataset.unpersist`
+    * only drops cache-manager entries; a local checkpoint's blocks belong
+    * to the RDD under the frame's `LogicalRDD` leaf, which stays in
+    * `getPersistentRDDs` until that RDD itself is unpersisted. The release
+    * goes through `unpersistRDD` (`private[spark]`) because
+    * `RDD.unpersist` logs a lost-lineage warning for every checkpoint,
+    * and a released pin is never read again. Any other plan shape fails
+    * loudly: falling back to `unpersist` would silently keep the blocks. */
+  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+    df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan match {
+      case r: org.apache.spark.sql.execution.LogicalRDD =>
+        r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
+      case p => throw new IllegalArgumentException(
+        s"releaseCheckpoint expects a localCheckpoint()ed frame (a LogicalRDD " +
+          s"leaf), got a ${p.getClass.getName} plan")
+    }
 }

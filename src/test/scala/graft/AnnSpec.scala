@@ -116,7 +116,7 @@ class AnnSpec extends SparkSpec {
           java.nio.file.Files.getLastModifiedTime(p).toMillis).toMap
     }
     val before = files()
-    Ann.appendIvfStore(emb.where("vec_id % 3 = 2"), path)
+    Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), path)
     val after = files()
     // pure insert: every pre-append file survives byte-identical in place
     // (the delta lands in a NEW generation directory; only the manifest
@@ -125,6 +125,14 @@ class AnnSpec extends SparkSpec {
     assert(after.size > before.size)
     // the store now holds the whole corpus exactly once
     assert(Ann.readIvfStore(spark, path).count() == emb.count())
+    // a partitioned store that is not a vector store has no quantizers
+    // to route through: the append fails loudly instead of guessing
+    val plain = new java.io.File("target/test_tmp/ivf_store_plain").getAbsolutePath
+    graft.io.IO.writePartitionedStore(emb.select(col("vec_id").as("nn_id")), plain,
+      Seq("nn_id"), nBuckets = 4)
+    val e = intercept[IllegalArgumentException](
+      Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), plain))
+    assert(e.getMessage.contains("not a graft vector store"))
   }
 
   test("ivf store: null embeddings are never persisted (count == servable)") {
@@ -134,7 +142,7 @@ class AnnSpec extends SparkSpec {
     val withNulls = emb.withColumn("embedding",
       when(col("vec_id") % 10 === 0, lit(null)).otherwise(col("embedding")))
     Ann.writeIvfStore(withNulls.where("vec_id % 3 != 2"), path)
-    Ann.appendIvfStore(withNulls.where("vec_id % 3 = 2"), path)
+    Ann.appendVectorStore(withNulls.where("vec_id % 3 = 2"), path)
     val store = Ann.readIvfStore(spark, path)
     val expected = withNulls.where("embedding IS NOT NULL").count()
     // store count equals its servable contents: no default-Hive-partition
@@ -148,7 +156,7 @@ class AnnSpec extends SparkSpec {
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(path))
     val emb = Tables.embeddings(spark, sf)
     Ann.writeIvfStore(emb.where("vec_id % 3 != 2"), path)
-    Ann.appendIvfStore(emb.where("vec_id % 3 = 2"), path)
+    Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), path)
     val queries = emb.where("vec_id < 8")
     val fromStore = Ann.ivfStoreTopK(spark, path, queries, k = 10)
       .as[(Long, Long, Double, Int)].collect().toSet
@@ -390,7 +398,7 @@ class AnnSpec extends SparkSpec {
     // the rest through the STORED centroids + codebooks
     Ann.writeIvfPqStore(emb.where("vec_id % 3 != 2"), path, nCells = 16,
       m = 4, ksub = 8)
-    Ann.appendIvfPqStore(emb.where("vec_id % 3 = 2"), path)
+    Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), path)
     // completeness: one code row per servable vector, and NO corpus float
     // persists in a cell bucket (codes-only at rest is the point)
     val servable = emb.where(Ann.cosineUsable(col("embedding"))).count()
@@ -720,7 +728,7 @@ class AnnSpec extends SparkSpec {
     val far = (100 until 108).map { i =>
       (i.toLong, Array(9f, 0.5f, 0.1f, 0.5f).map(_ * (1 + (i % 3))))
     }.toDF("vec_id", "embedding")
-    Ann.appendIvfStore(far, path)
+    Ann.appendVectorStore(far, path)
     val drifted = Ann.vectorStoreStaleness(spark, path)
       .where(col("drifted") && col("n_build") > 0)
     assert(drifted.count() > 0, "a far-distribution append tripped no drift flag")
@@ -757,7 +765,7 @@ class AnnSpec extends SparkSpec {
     graft.io.IO.deletePath(pqPath)
     Ann.writeIvfPqStore(emb.where("vec_id % 3 != 2"), pqPath, nCells = 16,
       m = 4, ksub = 8)
-    Ann.appendIvfPqStore(emb.where("vec_id % 3 = 2"), pqPath)
+    Ann.appendVectorStore(emb.where("vec_id % 3 = 2"), pqPath)
     val usable = emb.where(Ann.cosineUsable(col("embedding")))
     val pqSums = Ann.vectorStoreStaleness(spark, pqPath)
       .agg(sum("n_build"), sum("n_now"),
@@ -774,7 +782,7 @@ class AnnSpec extends SparkSpec {
     val path = "/root/repo/target/qtmp/annspec_compact"
     graft.io.IO.deletePath(path)
     Ann.writeIvfStore(emb.where($"vec_id" % 3 =!= 2), path)
-    Ann.appendIvfStore(emb.where($"vec_id" % 3 === 2), path)
+    Ann.appendVectorStore(emb.where($"vec_id" % 3 === 2), path)
     val queries = emb.where("vec_id < 4")
     val before = Ann.ivfStoreTopK(spark, path, queries, k = 5).localCheckpoint()
     val nBefore = Ann.readIvfStore(spark, path).count()
@@ -800,7 +808,7 @@ class AnnSpec extends SparkSpec {
     val path = "/root/repo/target/test_tmp/annspec_stale_vacuum"
     graft.io.IO.deletePath(path)
     Ann.writeIvfStore(emb.where($"vec_id" % 3 =!= 2), path)
-    Ann.appendIvfStore(emb.where($"vec_id" % 3 === 2), path)
+    Ann.appendVectorStore(emb.where($"vec_id" % 3 === 2), path)
     // vacuum with zero orphan grace trims manifests to the current
     // version — the v1 build baseline is gone, so a report would
     // compare current against current and read 'fresh' for ANY store
@@ -823,7 +831,7 @@ class AnnSpec extends SparkSpec {
     graft.io.IO.deletePath(path)
     Ann.writeIvfPqStore(emb.where($"vec_id" % 3 =!= 2), path, nCells = 16,
       m = 4, ksub = 8)
-    Ann.appendIvfPqStore(emb.where($"vec_id" % 3 === 2), path)
+    Ann.appendVectorStore(emb.where($"vec_id" % 3 === 2), path)
     assert(Ann.ivfStoreFragmented(spark, path),
       "build + append should leave fragmented code cells")
     val queries = emb.where("vec_id < 4")
@@ -852,7 +860,7 @@ class AnnSpec extends SparkSpec {
     val path = "/root/repo/target/qtmp/annspec_occ"
     graft.io.IO.deletePath(path)
     Ann.writeIvfStore(emb.where($"vec_id" % 3 =!= 2), path)          // v1
-    Ann.appendIvfStore(emb.where($"vec_id" % 3 === 2), path)         // v2
+    Ann.appendVectorStore(emb.where($"vec_id" % 3 === 2), path)         // v2
     // a delta of NEW ids, routed through the stored centroids
     val delta = emb.where("vec_id < 30")
       .withColumn("vec_id", $"vec_id" + 100000L).localCheckpoint()
@@ -865,7 +873,7 @@ class AnnSpec extends SparkSpec {
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
     val fCompact = Future(Ann.compactIvfStore(spark, path).count())
-    val fAppend = Future(Ann.appendIvfStore(delta, path))
+    val fAppend = Future(Ann.appendVectorStore(delta, path))
     Await.result(fCompact, Duration.Inf)
     Await.result(fAppend, Duration.Inf)
     assert(Ann.readIvfStore(spark, path).count() == emb.count() + nDelta,
@@ -890,7 +898,7 @@ class AnnSpec extends SparkSpec {
     val path = "/root/repo/target/qtmp/annspec_timetravel"
     graft.io.IO.deletePath(path)
     Ann.writeIvfStore(emb.where($"vec_id" % 3 =!= 2), path)          // v1
-    Ann.appendIvfStore(emb.where($"vec_id" % 3 === 2), path)         // v2
+    Ann.appendVectorStore(emb.where($"vec_id" % 3 === 2), path)         // v2
     assert(Ann.compactIvfStore(spark, path).count() > 0)             // v3
     val versions = graft.io.IO.storeVersions(spark, path)
     assert(versions == Seq(1, 2, 3), s"unexpected versions: $versions")
@@ -1097,7 +1105,7 @@ class AnnSpec extends SparkSpec {
         pt._1 == Ann.resolveCurve(spark, path, Ann.Knob.Probe, 1.0)))
     // drift: an appended commit outdates the measured point — the
     // re-tune signal ann_store_staleness's drift report pairs with
-    Ann.appendIvfStore(emb.where("vec_id < 3")
+    Ann.appendVectorStore(emb.where("vec_id < 3")
       .select(($"vec_id" + 5000L).as("vec_id"), $"embedding"), path)
     assert(Ann.curveStale(spark, path, Ann.Knob.Probe),
       "append must outdate the recorded operating point")
@@ -1171,7 +1179,7 @@ class AnnSpec extends SparkSpec {
         refineFrom = emb, nProbe = 2)
     }
     // a committed append outdates the point; allowStale is the opt-out
-    Ann.appendIvfPqStore(emb.where("vec_id < 3")
+    Ann.appendVectorStore(emb.where("vec_id < 3")
       .select(($"vec_id" + 5000L).as("vec_id"), $"embedding"), path)
     assert(Ann.curveStale(spark, path, Ann.Knob.Refine))
     intercept[IllegalArgumentException] {
@@ -1287,7 +1295,7 @@ class AnnSpec extends SparkSpec {
     // plant REAL drift: every vector re-embedded far out of distribution
     val drift = emb.select(($"vec_id" + 9000L).as("vec_id"),
       transform($"embedding", x => x * lit(5.0f) + lit(3.0f)).as("embedding"))
-    Ann.appendIvfStore(drift, path)
+    Ann.appendVectorStore(drift, path)
     assert(Ann.vectorStoreStaleness(spark, path)
       .where($"drifted" && $"n_now" > 0).count() > 0,
       "planted drift must trip the report")

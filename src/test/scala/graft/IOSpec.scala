@@ -213,6 +213,78 @@ class IOSpec extends SparkSpec {
     assert(out2.size == 62 - (b0Ids -- Set(5L, 17L)).size)
   }
 
+  test("a delete whose keys are all NULL commits no version") {
+    val path = s"$tmp/null_delete_store"
+    IO.writePartitionedStore(
+      (1 to 16).map(i => (i.toLong, i.toDouble)).toDF("id", "v"),
+      path, Seq("id"), nBuckets = 4)
+    // a NULL key never matches a row, so it touches no bucket
+    IO.deleteFromPartitionedStore(spark, path,
+      Seq(Option.empty[java.lang.Long], None).toDF("id"), Seq("id"))
+    assert(IO.storeVersions(spark, path) == Seq(1))
+    // mixed with a real key, only the real key's bucket is rewritten
+    IO.deleteFromPartitionedStore(spark, path,
+      Seq(Some(3L), None).toDF("id"), Seq("id"))
+    assert(IO.storeVersions(spark, path) == Seq(1, 2))
+    assert(IO.readPartitionedStore(spark, path).as[(Long, Double)].collect().toMap ==
+      (1 to 16).filter(_ != 3).map(i => i.toLong -> i.toDouble).toMap)
+  }
+
+  test("a store write with AQE off still clusters each bucket into one file") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val noAqe = spark.newSession()
+    noAqe.conf.set("spark.sql.adaptive.enabled", "false")
+    val path = s"$tmp/no_aqe_store"
+    val rows = noAqe.range(0, 400, 1, 8).select(col("id"), (col("id") * 2.0).as("v"))
+    assert(rows.rdd.getNumPartitions >= 4)
+    def filesPerBucket(): Map[String, Int] =
+      Files.walk(Paths.get(path)).iterator().asScala
+        .filter(_.toString.endsWith(".parquet"))
+        .toSeq.groupBy(_.getParent.toString).view.mapValues(_.size).toMap
+    IO.writePartitionedStore(rows, path, Seq("id"), nBuckets = 4)
+    assert(filesPerBucket().size == 4 && filesPerBucket().values.forall(_ == 1),
+      s"build: ${filesPerBucket()}")
+    // a rewrite through the commit loop, from the same AQE-off session
+    IO.upsertPartitionedStore(noAqe, path,
+      noAqe.range(0, 400, 1, 8).select(col("id"), lit(-1.0).as("v")), Seq("id"), Seq("v"))
+    assert(filesPerBucket().values.forall(_ == 1), s"upsert: ${filesPerBucket()}")
+  }
+
+  test("store mutations release every checkpoint they pin") {
+    import graft.llm.{Ann, Bm25Store}
+    def persisted(): Set[Int] = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    def leaves(op: String)(body: => Unit): Unit = {
+      val before = persisted()
+      body
+      assert((persisted() -- before).isEmpty, s"$op left pinned RDDs behind")
+    }
+    val kv = s"$tmp/release_kv_store"
+    IO.writePartitionedStore(
+      (1 to 32).map(i => (i.toLong, i.toDouble)).toDF("id", "v"), kv, Seq("id"), nBuckets = 4)
+    leaves("upsertPartitionedStore")(IO.upsertPartitionedStore(spark, kv,
+      Seq((3L, 30.0), (99L, 1.0)).toDF("id", "v"), Seq("id"), Seq("v")))
+    leaves("deleteFromPartitionedStore")(IO.deleteFromPartitionedStore(spark, kv,
+      Seq(4L, 5L).toDF("id"), Seq("id")))
+    val bm = s"$tmp/release_bm25_store"
+    Bm25Store.write((1 to 12).map(i => (i.toLong, s"doc $i about item ${i % 3}"))
+      .toDF("doc_id", "text"), bm, termBuckets = 4)
+    leaves("Bm25Store.upsert")(Bm25Store.upsert(
+      Seq((2L, "edited item text"), (50L, "new doc")).toDF("doc_id", "text"), bm))
+    leaves("Bm25Store.delete")(Bm25Store.delete(spark, bm, Seq(3L, 50L).toDF("doc_id")))
+    val emb = Tables.embeddings(spark, sf)
+    val vs = s"$tmp/release_ivfpq_store"
+    IO.deletePath(vs)
+    Ann.writeIvfPqStore(emb, vs)
+    leaves("Ann.upsertVectorStore")(Ann.upsertVectorStore(emb.where("vec_id < 4"), vs))
+    leaves("Ann.deleteFromVectorStore")(Ann.deleteFromVectorStore(spark, vs,
+      emb.where("vec_id >= 4 and vec_id < 8").select("vec_id")))
+    // a frame that is not a local checkpoint has nothing to release; the
+    // helper refuses it rather than unpersist and keep the blocks
+    intercept[IllegalArgumentException](
+      org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(spark.range(4).toDF()))
+  }
+
   test("storeChangeFeed: net CDC between versions — inserts, updates as " +
        "pre/post image pairs, deletes; unchanged rows in rewritten buckets " +
        "emit nothing") {
@@ -543,8 +615,8 @@ class IOSpec extends SparkSpec {
     IO.writePartitionedStore(wide.toDF(), path, Seq("id"), nBuckets)
     val nFiles = Files.walk(Paths.get(path)).iterator().asScala
       .count(_.toString.endsWith(".parquet"))
-    // one-ish file per bucket (AQE may split a big bucket; 2x is slack,
-    // 32 tasks x 16 buckets = 512 is the regression this guards against)
+    // one file per bucket (2x is slack; 32 tasks x 16 buckets = 512 is
+    // the regression this guards against)
     assert(nFiles <= nBuckets * 2, s"small-file fanout regressed: $nFiles files")
     assert(IO.readPartitionedStore(spark, path).count() == 2048)
   }

@@ -67,7 +67,7 @@ class IndexModelSpec extends SparkSpec {
           val rows = (1 to 1 + rnd.nextInt(4)).map { _ =>
             nextId += 1; nextId -> vec(rnd)
           }
-          Ann.appendIvfStore(rows.toDF("vec_id", "embedding"), path)
+          Ann.appendVectorStore(rows.toDF("vec_id", "embedding"), path)
           model ++= rows
         case 1 => // delete existing + a missing id (no-op part)
           val dels = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(4)) :+ 999999L

@@ -131,6 +131,35 @@ class ObsSpec extends SparkSpec {
     assert(jobs.map(_.jobs).sum <= 16, s"${jobs.map(r => r.path -> r.jobs)}")
   }
 
+  test("BM25 and vector-store mutations run every job under the commit " +
+       "loop's phases, within their job budgets") {
+    import graft.llm.{Ann, Bm25Store}
+    val bm = new java.io.File("target/qtmp/obsspec_mut_bm25").getAbsolutePath
+    val pq = new java.io.File("target/qtmp/obsspec_mut_ivfpq").getAbsolutePath
+    Bm25Store.write((1 to 60).map(i => (i.toLong, s"item $i of kind ${i % 7} color ${i % 5}"))
+      .toDF("doc_id", "text"), bm, termBuckets = 16)
+    val emb = Tables.embeddings(spark, sf)
+    graft.io.IO.deletePath(pq)
+    Ann.writeIvfPqStore(emb, pq)
+    val docs = Seq((3L, "item three recolored"), (9L, "item nine of kind two"),
+      (500L, "a new item"), (501L, "another new item")).toDF("doc_id", "text")
+    val vecs = emb.where("vec_id < 4")
+    // budgets: the job counts measured on these stores, one attempt each
+    val ops: Seq[(String, Int, () => Unit)] = Seq(
+      ("Bm25Store.upsert", 24, () => Bm25Store.upsert(docs, bm)),
+      ("Bm25Store.delete", 16, () => Bm25Store.delete(spark, bm, docs.select("doc_id"))),
+      ("Ann.upsertVectorStore", 14, () => Ann.upsertVectorStore(vecs, pq)),
+      ("Ann.deleteFromVectorStore", 10, () =>
+        Ann.deleteFromVectorStore(spark, pq, vecs.select("vec_id"))))
+    for ((op, budget, run) <- ops) {
+      val rows = recorded(obs.span("caller")(run()))
+      val jobs = rows.values.filter(_.jobs > 0)
+      assert(jobs.forall(r => Seq("locate", "write", "claim", "commit")
+        .exists(p => r.path.startsWith(s"caller/$p"))), s"$op: $rows")
+      assert(jobs.map(_.jobs).sum <= budget, s"$op: ${jobs.map(r => r.path -> r.jobs)}")
+    }
+  }
+
   test("1,000 calls of one span leave one aggregate row") {
     obs.drain()
     (1 to 1000).foreach(_ => obs.span("tick")(()))

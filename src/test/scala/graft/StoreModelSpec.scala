@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 import graft.io.IO
 
 /** Model-based test of the partitioned store: a SEEDED random sequence of
-  * upserts / deletes / appends / compactions runs against both the store
-  * and an in-memory reference model. After every commit the store must
-  * equal the model; afterwards every retained version must time-travel to
-  * its recorded snapshot, every version-pair change feed must apply back
-  * to the later snapshot, and a mirror synced stepwise must converge at
-  * each commit. One spec, the whole table-format contract. */
+  * upserts / keyed deletes / appends / compactions / trusted-routing moves
+  * / routed deletes runs against both the store and an in-memory reference
+  * model. After every commit the store must equal the model, with every
+  * key in the bucket the model routes it to; afterwards every retained
+  * version must time-travel to its recorded snapshot, every version-pair
+  * change feed must apply back to the later snapshot, and a mirror synced
+  * stepwise must converge at each commit. One spec, the whole
+  * table-format contract. */
 class StoreModelSpec extends SparkSpec {
   import spark.implicits._
 
@@ -32,10 +34,28 @@ class StoreModelSpec extends SparkSpec {
     var snapshots = Map(1 -> model)
     IO.syncMirror(spark, path, mirror, Seq("id"))
 
-    for (step <- 1 to 10) {
-      rnd.nextInt(4) match {
+    // keys a trusted-routing move left outside their hash bucket, with
+    // the bucket they live in: the keyed (hash-located) ops only pick
+    // keys that still live at their hash
+    var routed = Map.empty[Long, Int]
+    def hashBucket(ids: Seq[Long]): Map[Long, Int] = ids.toDF("id")
+      .select(col("id"), IO.bucketExpr(Seq("id"), 8))
+      .as[(Long, Int)].collect().toMap
+    def hashed() = model.keys.filterNot(routed.contains).toSeq.sorted
+    // the routed ops' locate: each key's CURRENT bucket, from a scan
+    def locate(ids: Seq[Long]) = () =>
+      IO.readStoreBuckets(spark, path, (0 until 8).toSet)
+        .select(col("id"), col(IO.BucketCol)).join(ids.toDF("id"), "id")
+    def storeBuckets() = IO.readStoreBuckets(spark, path, (0 until 8).toSet)
+      .select(col("id"), col(IO.BucketCol)).as[(Long, Int)].collect().toMap
+
+    var kinds = Set.empty[Int]
+    for (step <- 1 to 14) {
+      val kind = rnd.nextInt(6)
+      kinds += kind
+      kind match {
         case 0 => // upsert: update some existing + insert some new
-          val updates = rnd.shuffle(model.keys.toSeq).take(1 + rnd.nextInt(5))
+          val updates = rnd.shuffle(hashed()).take(1 + rnd.nextInt(5))
             .map(k => k -> (rnd.nextInt(1000).toDouble))
           val inserts = (1 to rnd.nextInt(3)).map { _ =>
             nextId += 1; nextId -> rnd.nextInt(1000).toDouble
@@ -44,7 +64,7 @@ class StoreModelSpec extends SparkSpec {
           IO.upsertPartitionedStore(spark, path, src, Seq("id"), Seq("v"))
           model = model ++ updates ++ inserts
         case 1 => // delete existing and (no-op) missing keys
-          val dels = rnd.shuffle(model.keys.toSeq).take(rnd.nextInt(4)) :+ 999999L
+          val dels = rnd.shuffle(hashed()).take(rnd.nextInt(4)) :+ 999999L
           IO.deleteFromPartitionedStore(spark, path, dels.toDF("id"), Seq("id"))
           model = model -- dels
         case 2 => // append brand-new keys only (append never merges)
@@ -55,15 +75,36 @@ class StoreModelSpec extends SparkSpec {
           model = model ++ rows
         case 3 => // compaction: content must be invisible to readers
           IO.compactPartitionedStore(spark, path)
+        case 4 => // trusted-routing move: new value AND a new bucket
+          val cur = storeBuckets()
+          val moved = rnd.shuffle(model.keys.toSeq).take(1 + rnd.nextInt(2)).map { k =>
+            (k, rnd.nextInt(1000).toDouble, (cur(k) + 1 + rnd.nextInt(7)) % 8)
+          }
+          IO.routedRewrite(spark, path, locate(moved.map(_._1)),
+            Some(moved.toDF("id", "v", IO.BucketCol)), Seq("id"))
+          model = model ++ moved.map(m => m._1 -> m._2)
+          val home = hashBucket(moved.map(_._1))
+          moved.foreach { case (k, _, b) =>
+            routed = if (home(k) == b) routed - k else routed + (k -> b)
+          }
+        case 5 => // routed delete of any keys, moved ones included
+          val dels = rnd.shuffle(model.keys.toSeq).take(1 + rnd.nextInt(3)) :+ 999999L
+          IO.routedRewrite(spark, path, locate(dels), None, Seq("id"))
+          model = model -- dels
+          routed = routed -- dels
       }
       val v = IO.storeVersions(spark, path).last
       snapshots += v -> model
       assert(storeMap() == model, s"store diverged from model at step $step (v$v)")
+      assert(storeBuckets() == hashBucket(model.keys.toSeq) ++ routed,
+        s"a key sits outside its modelled bucket at step $step (v$v)")
       // mirror syncs to exactly this commit
       assert(IO.syncMirror(spark, path, mirror, Seq("id")) == v)
       assert(spark.read.parquet(mirror).as[(Long, Double)].collect().toMap == model,
         s"mirror diverged at step $step (v$v)")
     }
+
+    assert(kinds == (0 to 5).toSet, s"the seeded sequence skipped an op kind: $kinds")
 
     // time travel: every retained version serves its recorded snapshot
     val versions = IO.storeVersions(spark, path)
@@ -95,11 +136,11 @@ class StoreModelSpec extends SparkSpec {
     def forkMap() = IO.readPartitionedStore(spark, fork)
       .as[(Long, Double)].collect().toMap
     assert(forkMap() == model, "fresh clone must equal the source")
-    val forkUps = Seq(7L -> 4242.0, 424242L -> 1.0)
+    val forkUps = Seq(hashed().head -> 4242.0, 424242L -> 1.0)
     IO.upsertPartitionedStore(spark, fork, forkUps.toDF("id", "v"),
       Seq("id"), Seq("v"))
     forkModel = forkModel ++ forkUps
-    val forkDels = forkModel.keys.toSeq.sorted.take(3)
+    val forkDels = forkModel.keys.filterNot(routed.contains).toSeq.sorted.take(3)
     IO.deleteFromPartitionedStore(spark, fork, forkDels.toDF("id"), Seq("id"))
     forkModel = forkModel -- forkDels
     IO.compactPartitionedStore(spark, fork)
