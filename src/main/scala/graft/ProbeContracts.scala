@@ -42,7 +42,8 @@ object ProbeContracts {
         codebooks = Some(Ann.fitPqCodebooks(emb, maxIter = 3))), dir)
     p(f"ann_pq: recall=${pqAnn.recall}%.4f mismatches=${pqAnn.mismatches} rankBad=${pqAnn.rankBad}")
     locally {
-      val path = graft.Sweep.ephemeral("/root/repo/target/qtmp/probe_ivfpq")
+      val path = graft.Sweep.ephemeral(
+        new java.io.File("target/qtmp/probe_ivfpq").getAbsolutePath)
       graft.io.IO.deletePath(path)
       // residual-space codebooks fit inside the build (3 bounded Lloyd
       // iterations) — mirrors the registered query's store exactly

@@ -1,27 +1,28 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.graftshim.Shim
+import org.apache.spark.storage.StorageLevel
 
-/** Between-query session hygiene for the long-lived Bench/Verify JVMs.
+/** Session-storage hygiene: who releases a pinned frame, and when.
   *
-  * A 129-query run in ONE SparkSession accumulates state no individual
-  * query can release:
+  * Within a call, every pin (a `.cache()` or a `localCheckpoint()`) is
+  * freed by one rule, [[release]], mostly through a [[pinned]] scope.
+  * Across queries, a long-lived Bench/Verify JVM accumulates state no
+  * single query can release:
   *
-  *   - lineage-truncating `localCheckpoint` blocks whose DataFrames died
-  *     with the query that built them (Blocking, IO.upsert, Dedup's
-  *     materialize, DocStreams' per-batch frames each leave one per call —
-  *     necessarily, since the blocks must outlive the call for the
-  *     RETURNED frame to stay executable);
+  *   - `localCheckpoint` blocks behind a RETURNED lazy frame (Blocking's
+  *     pairs, Dedup's results and cluster labels, `inferIncremental`'s
+  *     batch, `Ann.route`'s probes, DocStreams' per-batch frames), which
+  *     must outlive the call for that frame to stay executable;
   *   - `.cache()`d frames a query materialized and nothing else shares;
   *   - per-run parquet stores under target/qtmp keyed by an incrementing
   *     counter (streaming dedup stores, IVF stores, export shards), which
   *     the next run cannot find to delete.
   *
   * Left alone these fill the block manager and the disk until every later
-  * query pays GC — the round-5 driver bench inflated trivial projections
-  * 4–10× exactly this way (231 s total vs 139 s in round 4). The same
-  * failure mode would hit a long-lived 100 TB job: storage that only ever
-  * grows is a leak, whatever the cluster size.
+  * query pays GC: storage that only ever grows is a leak, whatever the
+  * cluster size.
   *
   * Protocol: Bench and Verify call [[drop]] after every query. Memo
   * builders that deliberately share materialized state across queries
@@ -37,6 +38,51 @@ object Sweep {
 
   /** Per-run qtmp paths awaiting deletion once their query is consumed. */
   private val ephemerals = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+
+  /** The handle of one [[pinned]] scope: `pin(df)` registers a frame the
+    * body pinned, `pin.release(df)` frees one early (a round loop's
+    * previous round), and `pin.keep(df)` hands one out behind the caller's
+    * lazily returned result, where [[drop]] and the ContextCleaner own it.
+    * A cached frame whose plan an earlier one already cached shares that
+    * frame's cache entry (a self-join's two sides), so it is not
+    * registered a second time. */
+  final class Pins private[Sweep] () {
+    private[Sweep] val held = scala.collection.mutable.ArrayBuffer.empty[Dataset[_]]
+    def apply[T](ds: Dataset[T]): Dataset[T] = {
+      if (!cached(ds) || !held.exists(h => cached(h) && h.toDF().sameSemantics(ds.toDF()))) held += ds
+      ds
+    }
+    def release(ds: Dataset[_]): Unit = { held -= ds; Sweep.release(ds) }
+    def keep[T](ds: Dataset[T]): Dataset[T] = { held -= ds; ds }
+  }
+
+  /** Run `body`, releasing every frame it registers, last pinned first,
+    * when it returns or throws. The body keeps its own materialization (a
+    * `.cache()` stays lazy, a `localCheckpoint()` eager); the scope owns
+    * only the release, so nothing the result reads lazily may stay
+    * registered. */
+  def pinned[A](body: Pins => A): A = {
+    val pins = new Pins
+    val out = try body(pins) catch { case t: Throwable =>
+      pins.held.reverseIterator.foreach { p =>
+        try release(p) catch { case e: Throwable => t.addSuppressed(e) }
+      }
+      throw t
+    }
+    pins.held.reverseIterator.foreach(release)
+    out
+  }
+
+  /** THE release rule for one pin: a cached frame drops its cache-manager
+    * entry; a `localCheckpoint()` leaf frees its RDD's blocks, which
+    * `Dataset.unpersist` never touches. A frame that holds neither throws,
+    * so a release that frees nothing cannot be written. */
+  def release(ds: Dataset[_]): Unit =
+    if (cached(ds)) ds.unpersist(blocking = false)
+    else require(Shim.releaseCheckpoint(ds),
+      "release of a frame that holds no pin (neither cached nor a live localCheckpoint)")
+
+  private def cached(ds: Dataset[_]): Boolean = ds.storageLevel != StorageLevel.NONE
 
   /** Run `build`, registering every RDD it leaves persisted as retained.
     * The build must MATERIALIZE what it wants kept (localCheckpoint is
@@ -73,12 +119,5 @@ object Sweep {
     }
     var p = ephemerals.poll()
     while (p != null) { graft.io.IO.deletePath(p); p = ephemerals.poll() }
-  }
-
-  /** Full release including the retained memos — end-of-run teardown and
-    * the regression spec's clean-slate assertion. */
-  def releaseAll(s: SparkSession): Unit = {
-    retained.clear()
-    drop(s)
   }
 }

@@ -114,7 +114,7 @@ object Blocking {
                             featureCol: String, threshold: Double,
                             bucketLength: Double = 1.0, numHashTables: Int = 10,
                             seed: Long = 42L, salts: Int = 8,
-                            logBucketSkew: Boolean = false): DataFrame = {
+                            logBucketSkew: Boolean = false): DataFrame = graft.Sweep.pinned { pin =>
     // one representative row per distinct key, carrying BOTH the (shared)
     // feature vector and the key's id list — so the post-filter expansion
     // back to id pairs is an in-row explode, not two more shuffled joins
@@ -122,15 +122,15 @@ object Blocking {
       df.groupBy(col(keyCol).as("key"))
         .agg(first(col(featureCol)).as(featureCol),
              collect_list(col("id")).as("__ids"))
-    val ra = reps(a).cache()
-    val rb = reps(b).cache()
+    val ra = pin(reps(a).cache())
+    val rb = pin(reps(b).cache())
     val model = fitLsh(ra, featureCol, bucketLength, numHashTables, seed)
     if (logBucketSkew)
       bucketSkew(model, ra, rb).collect().foreach { r =>
         log.info(s"[blocking] hot bucket ${r.get(0)}: ${r.get(1)} keys (share ${r.get(2)})")
       }
     val keyPairs = saltedBucketJoin(model, ra, rb, salts).distinct()
-    val out = keyPairs
+    keyPairs
       .join(ra.select(col("key").as("keyA"), col(featureCol).as("__fA"),
         col("__ids").as("__idsA")), Seq("keyA"))
       .join(rb.select(col("key").as("keyB"), col(featureCol).as("__fB"),
@@ -142,13 +142,9 @@ object Blocking {
       // surviving key pair), with no post-filter joins back to the inputs
       .select(explode(col("__idsA")).as("idA"), col("__idsB"), col("distance"))
       .select(col("idA"), explode(col("__idsB")).as("idB"), col("distance"))
-      // materialize (lineage-truncating local checkpoint), then drop the
-      // representative caches — otherwise every invocation in a long
-      // session leaks two cached frames into storage memory
+      // materialize (lineage-truncating local checkpoint) before the scope
+      // drops the representative caches
       .localCheckpoint()
-    ra.unpersist(blocking = false)
-    rb.unpersist(blocking = false)
-    out
   }
 
   /** The incremental counterpart of [[dedupedSimilarityJoin]]: probe a

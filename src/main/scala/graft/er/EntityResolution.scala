@@ -129,29 +129,29 @@ object EntityResolution {
     // The coalesce stays inside the fit (training side only) so the
     // split sees the plan's row order unchanged. The count fills the cache
     // here, so the attach shows as its own phase, not inside the first fit.
-    val weighted = obs.span("distances") {
-      val w = Matcher.addClassWeights(dists).cache(); w.count(); w
+    graft.Sweep.pinned { pin =>
+      val weighted = obs.span("distances") {
+        val w = pin(Matcher.addClassWeights(dists).cache()); w.count(); w
+      }
+      val Seq(tr, te) = obs.span("split") {
+        Matcher.stratifiedSplit(weighted, Seq(0.8, 0.2), seed = cfg.seed)
+      }
+      // a one-point grid is no search — fit it once on the whole split
+      val points = (for (i <- cfg.gbtMaxIterGrid; d <- cfg.gbtMaxDepthGrid)
+        yield (Matcher.GbtCandidate(d, 0.1, 1.0), i)).distinct
+      val best =
+        if (points.size == 1)
+          Matcher.fit(tr, points.head._1, points.head._2, cfg.seed, Some(parts))
+        else
+          Matcher.trainGridMemo(tr, points, seed = cfg.seed, coalesceTo = Some(parts)).model
+      // heldOutAupr == evaluator.evaluate bit-for-bit (it delegates to the
+      // distributed evaluator outside its bounded-collect regime) while
+      // skipping the evaluator's ~4 tiny shuffle jobs when the held-out
+      // curve is small — the same swap the m4/m5 trial loop made in
+      // optimization round 14 (guide §1.2)
+      TrainedMatcher(best,
+        obs.span("aupr")(Matcher.heldOutAupr(best.transform(te))))
     }
-    val Seq(tr, te) = obs.span("split") {
-      Matcher.stratifiedSplit(weighted, Seq(0.8, 0.2), seed = cfg.seed)
-    }
-    // a one-point grid is no search — fit it once on the whole split
-    val points = (for (i <- cfg.gbtMaxIterGrid; d <- cfg.gbtMaxDepthGrid)
-      yield (Matcher.GbtCandidate(d, 0.1, 1.0), i)).distinct
-    val best =
-      if (points.size == 1)
-        Matcher.fit(tr, points.head._1, points.head._2, cfg.seed, Some(parts))
-      else
-        Matcher.trainGridMemo(tr, points, seed = cfg.seed, coalesceTo = Some(parts)).model
-    // heldOutAupr == evaluator.evaluate bit-for-bit (it delegates to the
-    // distributed evaluator outside its bounded-collect regime) while
-    // skipping the evaluator's ~4 tiny shuffle jobs when the held-out
-    // curve is small — the same swap the m4/m5 trial loop made in
-    // optimization round 14 (guide §1.2)
-    val result = TrainedMatcher(best,
-      obs.span("aupr")(Matcher.heldOutAupr(best.transform(te))))
-    weighted.unpersist(blocking = false)
-    result
   }
 
   /** Notebook 03 (inference): score candidate pairs with a fitted matcher
@@ -228,7 +228,8 @@ object EntityResolution {
     * `store_read` (its file listing and schema jobs) run here; the probe,
     * score and sort jobs run in the caller's action, under the caller's
     * span. The probe streams the whole stored side B once per batch, so
-    * its reads are O(store). */
+    * its reads are O(store). The batch's pin outlives this call behind the
+    * returned frame: [[graft.Sweep.drop]] or the ContextCleaner frees it. */
   def inferIncremental(newRows: DataFrame, featureStorePath: String,
                        pipes: FittedPipelines, matcher: PipelineModel,
                        cfg: Config = Config()): DataFrame = {

@@ -6,7 +6,6 @@ import org.apache.spark.sql.types.StructType
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import java.util.Comparator
-import org.apache.spark.sql.graftshim.Shim
 import graft.obs
 
 /** IO layer: schema-declared CSV scan (S2, ref `01_Feature
@@ -690,16 +689,16 @@ object IO {
       beforeClaim: () => Unit = () => (),
       evolveSchema: Boolean = false): Unit = {
     val nBuckets = storeBuckets(targetPath)
-    val src = source.withColumn(BucketCol, guardedBucketExpr(keys, nBuckets))
-      .localCheckpoint()
-    try {
+    graft.Sweep.pinned { pin =>
+      val src = pin(source.withColumn(BucketCol, guardedBucketExpr(keys, nBuckets))
+        .localCheckpoint())
       // hash routing is a pure key function, so the touched set cannot
       // move between attempts; only the base rows are re-read per attempt
       val touched = bucketsOf(src)
       commitRewrite(spark, targetPath,
         () => (touched, upsert(_, src, keys, updateCols, evolveSchema = evolveSchema)),
         beforeCommit, beforeClaim = beforeClaim)
-    } finally Shim.releaseCheckpoint(src)
+    }
   }
 
   /** THE store-rewrite primitive: every keyed mutation (hash MERGE, keyed
@@ -877,41 +876,38 @@ object IO {
     val nBuckets = storeBuckets(targetPath)
     def guarded(df: DataFrame) = df.withColumn(BucketCol,
       nullKeyGuard(keys, bucketRangeGuard(nBuckets, col(BucketCol))))
-    // every pin this op takes is released once the loop returns: a
-    // long-lived session doing repeated maintenance (a foreachBatch upsert
-    // loop) would otherwise accumulate checkpoint blocks until session end
-    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-    def pin(df: DataFrame): DataFrame = { val p = df.localCheckpoint(); pinned += p; p }
-    // duplicate new keys (by `insertKeys` — the store's row identity,
-    // which may be wider than the locate/anti-join `keys`: an inverted
-    // index removes by doc_id but inserts (term, doc_id) rows) would
-    // double-insert after the single anti-join, same MERGE rule as every
-    // upsert here
-    val insKeys = if (insertKeys.nonEmpty) insertKeys else keys
-    lazy val ins = newRows.map(r => pin(guarded(requireUniqueSourceKeys(r, insKeys))))
-    def plan(): (Set[Int], DataFrame => DataFrame) = {
-      // the RAW located frame (keys + BucketCol + whatever side columns
-      // the locate projected, e.g. a denormalized doc length) feeds the
-      // extra-row derivation; the anti-join side only keeps (keys, bucket)
-      val located = pin(locateKeyRows())
-      val keyBuckets = guarded(located.select((keys.map(col) :+ col(BucketCol)): _*))
-      // extra rows are a FUNCTION OF THE LOCATE (e.g. a compensating
-      // stats-delta row derived from the rows being removed), so they are
-      // re-derived with it on every attempt — an extra row derived from a
-      // stale locate would commit stale compensation after a lost race.
-      // Like the anti-join side, they read the pinned locate's blocks
-      // instead of taking a pin of their own
-      val extra = extraRowsFromLocated.map(f => guarded(f(located)))
-      val added = ins.toSeq ++ extra
-      // the touched set in ONE job: a union of every side's bucket column
-      // (the located rows without the anti-join side's distinct — the same
-      // buckets, with no exchange)
-      val touched = bucketsOf((keyBuckets +: added).map(_.select(BucketCol)).reduce(_ union _))
-      val del = broadcast(keyBuckets.distinct().drop(BucketCol))
-      (touched, base => (base.join(del, keys, "left_anti") +: added).reduce(_ unionByName _))
+    graft.Sweep.pinned { pin =>
+      // duplicate new keys (by `insertKeys` — the store's row identity,
+      // which may be wider than the locate/anti-join `keys`: an inverted
+      // index removes by doc_id but inserts (term, doc_id) rows) would
+      // double-insert after the single anti-join, same MERGE rule as every
+      // upsert here
+      val insKeys = if (insertKeys.nonEmpty) insertKeys else keys
+      lazy val ins = newRows.map(r =>
+        pin(guarded(requireUniqueSourceKeys(r, insKeys)).localCheckpoint()))
+      def plan(): (Set[Int], DataFrame => DataFrame) = {
+        // the RAW located frame (keys + BucketCol + whatever side columns
+        // the locate projected, e.g. a denormalized doc length) feeds the
+        // extra-row derivation; the anti-join side only keeps (keys, bucket)
+        val located = pin(locateKeyRows().localCheckpoint())
+        val keyBuckets = guarded(located.select((keys.map(col) :+ col(BucketCol)): _*))
+        // extra rows are a FUNCTION OF THE LOCATE (e.g. a compensating
+        // stats-delta row derived from the rows being removed), so they are
+        // re-derived with it on every attempt — an extra row derived from a
+        // stale locate would commit stale compensation after a lost race.
+        // Like the anti-join side, they read the pinned locate's blocks
+        // instead of taking a pin of their own
+        val extra = extraRowsFromLocated.map(f => guarded(f(located)))
+        val added = ins.toSeq ++ extra
+        // the touched set in ONE job: a union of every side's bucket column
+        // (the located rows without the anti-join side's distinct — the same
+        // buckets, with no exchange)
+        val touched = bucketsOf((keyBuckets +: added).map(_.select(BucketCol)).reduce(_ union _))
+        val del = broadcast(keyBuckets.distinct().drop(BucketCol))
+        (touched, base => (base.join(del, keys, "left_anti") +: added).reduce(_ unionByName _))
+      }
+      commitRewrite(spark, targetPath, () => plan(), beforeClaim = beforeClaim)
     }
-    try commitRewrite(spark, targetPath, () => plan(), beforeClaim = beforeClaim)
-    finally pinned.foreach(Shim.releaseCheckpoint)
   }
 
   /** COMPACT the store's fragmented buckets — the OPTIMIZE step for the

@@ -6,7 +6,6 @@ import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftshim.Shim
 import graft.io.IO
 import graft.obs
 
@@ -705,7 +704,9 @@ object Ann {
     * executor loss fails the serve instead of silently dropping results.
     * The checkpoint, the collect and the schema-merged read are the
     * serve's eager jobs, so they run under the `route` span; probe, ADC
-    * and refine run in the caller's action. */
+    * and refine run in the caller's action. The probe pin outlives this
+    * call behind the returned frames: [[graft.Sweep.drop]] or the
+    * ContextCleaner frees it. */
   private def route(spark: SparkSession, path: String, queries: DataFrame,
                     centroids: DataFrame, nProbe: Int,
                     idCol: String, vecCol: String): (DataFrame, DataFrame) =
@@ -806,35 +807,32 @@ object Ann {
     // pin the query frame once: every grid point must serve the SAME query
     // set (nondeterministic caller lineage would otherwise tune different
     // points on different queries)
-    val q = queries.where(cosineUsable(col(vecCol)))
-      .select(col(idCol), col(vecCol)).localCheckpoint()
-    val curve =
-      try {
-        val nQ = q.count()
-        val cands = candidates(q).localCheckpoint()
-        try {
-          val flagged = cands.withColumn("rank_full", row_number().over(byCosine))
-            .withColumn("is_full", col("rank_full") <= k)
-          val nFull = flagged.where(col("is_full")).count()
-          val pts = grid.map { x =>
-            val recall =
-              if (x == top) 1.0 // by theorem; spares the redundant pass
-              else topKAt(flagged, knob, k, x).where(col("is_full")).count()
-                .toDouble / math.max(nFull, 1L)
-            (x, BigDecimal(recall).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
-          }
-          val vEnd = IO.storeVersions(spark, path).last
-          require(vEnd == v0,
-            s"$path advanced v$v0 -> v$vEnd mid-tune — the measured points " +
-              "span store versions; re-run the tune against the quiet store")
-          val stamp = Seq[Long](k) ++ nProbe.map(_.toLong) ++ Seq[Long](v0, nQ)
-          val (fs, p) = sidecar(spark, path, knob.sidecar)
-          IO.writeSmallFile(fs, p,
-            knob.header.zip(stamp).map { case (key, v) => s"$key=$v" }.mkString("\t") +
-              "\n" + pts.map { case (x, r) => s"$x\t$r" }.mkString("\n"))
-          pts
-        } finally Shim.releaseCheckpoint(cands)
-      } finally Shim.releaseCheckpoint(q)
+    val curve = graft.Sweep.pinned { pin =>
+      val q = pin(queries.where(cosineUsable(col(vecCol)))
+        .select(col(idCol), col(vecCol)).localCheckpoint())
+      val nQ = q.count()
+      val cands = pin(candidates(q).localCheckpoint())
+      val flagged = cands.withColumn("rank_full", row_number().over(byCosine))
+        .withColumn("is_full", col("rank_full") <= k)
+      val nFull = flagged.where(col("is_full")).count()
+      val pts = grid.map { x =>
+        val recall =
+          if (x == top) 1.0 // by theorem; spares the redundant pass
+          else topKAt(flagged, knob, k, x).where(col("is_full")).count()
+            .toDouble / math.max(nFull, 1L)
+        (x, BigDecimal(recall).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble)
+      }
+      val vEnd = IO.storeVersions(spark, path).last
+      require(vEnd == v0,
+        s"$path advanced v$v0 -> v$vEnd mid-tune — the measured points " +
+          "span store versions; re-run the tune against the quiet store")
+      val stamp = Seq[Long](k) ++ nProbe.map(_.toLong) ++ Seq[Long](v0, nQ)
+      val (fs, p) = sidecar(spark, path, knob.sidecar)
+      IO.writeSmallFile(fs, p,
+        knob.header.zip(stamp).map { case (key, v) => s"$key=$v" }.mkString("\t") +
+          "\n" + pts.map { case (x, r) => s"$x\t$r" }.mkString("\n"))
+      pts
+    }
     import spark.implicits._
     curve.toDF(knob.column, "recall")
   }
@@ -1386,74 +1384,75 @@ object Ann {
     // the residual path passes false — excluding zero residuals would
     // bias every codebook away from the exact value the densest rows
     // quantize to (writeIvfPqStore's fit).
-    val dense = corpus.where(
-        if (requireNonZero) cosineUsable(col(vecCol)) else finiteVec(col(vecCol)))
-      .select(col(idCol).as("id"), asDouble(col(vecCol)).as("cv"))
-      .persist()
-    val firstDim = dense.select(size(col("cv"))).take(1)
-    require(firstDim.nonEmpty,
-      "PQ codebook fit input is empty — no finite vector to fit on")
-    val dim = firstDim.head.getInt(0)
-    // dim >= m: zero-length vectors pass finiteVec (the residual-path
-    // filter) and 0 % m == 0, so without the floor an empty-array input
-    // would silently fit zero-length codebooks every vector "encodes" to
-    // at ADC distance 0 — a garbage store with no error anywhere
-    require(dim >= m && dim % m == 0,
-      s"dim=$dim must be a positive multiple of m=$m subspaces")
-    val dsub = dim / m
-    // seeded deterministic init: ksub hash-chosen corpus rows, sliced per
-    // subspace (hash order ≈ uniform sample; TakeOrdered keeps it scan-cheap)
-    val initRows = dense
-      .withColumn("h", xxhash64(col("id"), lit(seed)))
-      .orderBy(col("h"), col("id")).limit(ksub)
-      .select("cv").collect().map(_.getSeq[Double](0).toArray)
-    var cents: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
-      initRows.map(v => v.slice(j * dsub, (j + 1) * dsub))
-    }
-    for (_ <- 1 to maxIter) {
-      val bc = spark.sparkContext.broadcast(cents)
-      val codesU = udf { (v: Seq[Double]) =>
-        val cb = bc.value
-        (0 until cb.length).map { j =>
-          var best = 0; var bestD = Double.MaxValue
-          var c = 0
-          while (c < cb(j).length) {
-            val cent = cb(j)(c); var d = 0.0; var i = 0
-            while (i < cent.length) {
-              val x = v(j * cent.length + i) - cent(i); d += x * x; i += 1
+    graft.Sweep.pinned { pin =>
+      val dense = pin(corpus.where(
+          if (requireNonZero) cosineUsable(col(vecCol)) else finiteVec(col(vecCol)))
+        .select(col(idCol).as("id"), asDouble(col(vecCol)).as("cv"))
+        .persist())
+      val firstDim = dense.select(size(col("cv"))).take(1)
+      require(firstDim.nonEmpty,
+        "PQ codebook fit input is empty — no finite vector to fit on")
+      val dim = firstDim.head.getInt(0)
+      // dim >= m: zero-length vectors pass finiteVec (the residual-path
+      // filter) and 0 % m == 0, so without the floor an empty-array input
+      // would silently fit zero-length codebooks every vector "encodes" to
+      // at ADC distance 0 — a garbage store with no error anywhere
+      require(dim >= m && dim % m == 0,
+        s"dim=$dim must be a positive multiple of m=$m subspaces")
+      val dsub = dim / m
+      // seeded deterministic init: ksub hash-chosen corpus rows, sliced per
+      // subspace (hash order ≈ uniform sample; TakeOrdered keeps it scan-cheap)
+      val initRows = dense
+        .withColumn("h", xxhash64(col("id"), lit(seed)))
+        .orderBy(col("h"), col("id")).limit(ksub)
+        .select("cv").collect().map(_.getSeq[Double](0).toArray)
+      var cents: Array[Array[Array[Double]]] = Array.tabulate(m) { j =>
+        initRows.map(v => v.slice(j * dsub, (j + 1) * dsub))
+      }
+      for (_ <- 1 to maxIter) {
+        val bc = spark.sparkContext.broadcast(cents)
+        val codesU = udf { (v: Seq[Double]) =>
+          val cb = bc.value
+          (0 until cb.length).map { j =>
+            var best = 0; var bestD = Double.MaxValue
+            var c = 0
+            while (c < cb(j).length) {
+              val cent = cb(j)(c); var d = 0.0; var i = 0
+              while (i < cent.length) {
+                val x = v(j * cent.length + i) - cent(i); d += x * x; i += 1
+              }
+              if (d < bestD) { bestD = d; best = c }
+              c += 1
             }
-            if (d < bestD) { bestD = d; best = c }
-            c += 1
-          }
-          best
-        }
-      }
-      // one corpus scan: assign → explode dims → partial-combined sums.
-      // The exchange carries m·ksub·dsub cells per partition, not rows.
-      val stats = dense
-        .withColumn("codes", codesU(col("cv")))
-        .select(posexplode(col("cv")).as(Seq("pos", "x")), col("codes"))
-        .withColumn("subspace", (col("pos") / dsub).cast("int"))
-        .withColumn("code", element_at(col("codes"), col("subspace") + 1))
-        .groupBy("subspace", "code", "pos")
-        .agg(sum("x").as("sx"), count(lit(1)).as("n"))
-        .collect()
-      val next = cents.map(_.map(_.clone()))
-      stats.groupBy(r => (r.getInt(0), r.getInt(1))).foreach { case ((j, c), rs) =>
-        rs.foreach { r =>
-          next(j)(c)(r.getInt(2) - j * dsub) = r.getLong(4) match {
-            case 0L => next(j)(c)(r.getInt(2) - j * dsub)
-            case n  => r.getDouble(3) / n
+            best
           }
         }
+        // one corpus scan: assign → explode dims → partial-combined sums.
+        // The exchange carries m·ksub·dsub cells per partition, not rows.
+        val stats = dense
+          .withColumn("codes", codesU(col("cv")))
+          .select(posexplode(col("cv")).as(Seq("pos", "x")), col("codes"))
+          .withColumn("subspace", (col("pos") / dsub).cast("int"))
+          .withColumn("code", element_at(col("codes"), col("subspace") + 1))
+          .groupBy("subspace", "code", "pos")
+          .agg(sum("x").as("sx"), count(lit(1)).as("n"))
+          .collect()
+        val next = cents.map(_.map(_.clone()))
+        stats.groupBy(r => (r.getInt(0), r.getInt(1))).foreach { case ((j, c), rs) =>
+          rs.foreach { r =>
+            next(j)(c)(r.getInt(2) - j * dsub) = r.getLong(4) match {
+              case 0L => next(j)(c)(r.getInt(2) - j * dsub)
+              case n  => r.getDouble(3) / n
+            }
+          }
+        }
+        bc.destroy()
+        cents = next
       }
-      bc.destroy()
-      cents = next
+      cents.zipWithIndex.flatMap { case (cb, j) =>
+        cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
+      }.toSeq.toDF("subspace", "code", "centroid")
     }
-    dense.unpersist()
-    cents.zipWithIndex.flatMap { case (cb, j) =>
-      cb.zipWithIndex.map { case (cent, c) => (j, c, cent.toSeq) }
-    }.toSeq.toDF("subspace", "code", "centroid")
   }
 
   /** Collect a (subspace, code, centroid) codebook frame into the m ×
@@ -1669,65 +1668,62 @@ object Ann {
     // the assigned frame feeds BOTH the residual-codebook fit (maxIter
     // scans inside fitPqCodebooks) and the encode pass — persist it so
     // the source read + argmin run once, not once per consumer
-    val assigned = assignCellsCollected(dense, cents, idCol, vecCol).persist()
-    // try/finally brackets EVERYTHING after the persist — a throw from
-    // the residual-codebook fit, the collect, or the non-empty require
-    // must not leak the cached frame for the session
-    try {
-    val n = assigned.count()
-    val rU = residUdf(cents)
-    val resid = assigned.select(col("nn_id"), rU(col("cv"), col("cell")).as("rv"),
-      col("cell"))
-    val cb = collectCodebooks(codebooks.getOrElse {
-      // bounded fit input: deterministic seeded hash-sample above the cap
-      // (keep-one-in-s residue classes — no RNG, same rows every run),
-      // exactly fitCentroids' rule. Below the cap the full residual frame
-      // fits, so fixture-scale codes are sample-invariant.
-      val fitInput =
-        if (n <= fitSampleCap) resid
-        else {
-          val keepOneIn = math.max(2L, (n + fitSampleCap - 1) / fitSampleCap)
-          resid.where(pmod(xxhash64(col("nn_id"), lit(seed)), lit(keepOneIn)) === 0)
-        }
-      fitPqCodebooks(fitInput, m, ksub, "nn_id", "rv", seed, codebookIters,
-        requireNonZero = false)
-    })
-    require(cb.nonEmpty && cb.forall(_.nonEmpty),
-      "codebooks frame is empty — nothing to encode with")
-    val ksubActual = cb.map(_.length).max
-    val codesU = pqCodesUdf(cb)
-    val reserved = cents.map(_._1).max + 1
-    val nullCodes = lit(null).cast("array<int>")
-    val nullVec = lit(null).cast("array<double>")
-    // data rows: RESIDUAL codes only — the full-precision vector does NOT
-    // persist here (that is the point of the layout; exact refinement
-    // reads a flat store, see ivfPqStoreTopK's refineFrom)
-    val data = resid
-      .select(col("nn_id"), codesU(col("rv")).as("codes"), nullVec.as("cv"),
-        col("cell").as(IO.BucketCol))
-    val spark = corpus.sparkSession
-    import spark.implicits._
-    val centRows = cents.toSeq
-      .map { case (cell, c) => (-1L - cell, c.toSeq) }
-      .toDF("nn_id", "cv")
-      .select(col("nn_id"), nullCodes.as("codes"), col("cv"),
-        lit(reserved).as(IO.BucketCol))
-    // codebook rows: identity IS the (subspace, code) pair, carried in
-    // `codes`; the nn_id key space sits BELOW the centroid rows' range
-    // [-reserved, -1] (offset by the cell count), so no centroid row and
-    // no codebook row can ever collide on the store's key column —
-    // unique within the codebook rows because `code < ksubActual` by
-    // construction
-    val cbRows = cb.zipWithIndex.toSeq
-      .flatMap { case (sub, j) => sub.zipWithIndex.map { case (cent, c) =>
-        (-1L - reserved - (j.toLong * ksubActual + c), Seq(j, c), cent.toSeq) } }
-      .toDF("nn_id", "codes", "cv")
-      .withColumn(IO.BucketCol, lit(reserved + 1))
-    // layout tag committed atomically with the data — see writeIvfStore
-    IO.writePartitionedStore(data.unionByName(centRows).unionByName(cbRows),
-      path, keys = Seq("nn_id"), nBuckets = reserved + 2,
-      layoutTag = Some("ivfpq"))
-    } finally assigned.unpersist(blocking = false)
+    graft.Sweep.pinned { pin =>
+      val assigned = pin(assignCellsCollected(dense, cents, idCol, vecCol).persist())
+      val n = assigned.count()
+      val rU = residUdf(cents)
+      val resid = assigned.select(col("nn_id"), rU(col("cv"), col("cell")).as("rv"),
+        col("cell"))
+      val cb = collectCodebooks(codebooks.getOrElse {
+        // bounded fit input: deterministic seeded hash-sample above the cap
+        // (keep-one-in-s residue classes — no RNG, same rows every run),
+        // exactly fitCentroids' rule. Below the cap the full residual frame
+        // fits, so fixture-scale codes are sample-invariant.
+        val fitInput =
+          if (n <= fitSampleCap) resid
+          else {
+            val keepOneIn = math.max(2L, (n + fitSampleCap - 1) / fitSampleCap)
+            resid.where(pmod(xxhash64(col("nn_id"), lit(seed)), lit(keepOneIn)) === 0)
+          }
+        fitPqCodebooks(fitInput, m, ksub, "nn_id", "rv", seed, codebookIters,
+          requireNonZero = false)
+      })
+      require(cb.nonEmpty && cb.forall(_.nonEmpty),
+        "codebooks frame is empty — nothing to encode with")
+      val ksubActual = cb.map(_.length).max
+      val codesU = pqCodesUdf(cb)
+      val reserved = cents.map(_._1).max + 1
+      val nullCodes = lit(null).cast("array<int>")
+      val nullVec = lit(null).cast("array<double>")
+      // data rows: RESIDUAL codes only — the full-precision vector does NOT
+      // persist here (that is the point of the layout; exact refinement
+      // reads a flat store, see ivfPqStoreTopK's refineFrom)
+      val data = resid
+        .select(col("nn_id"), codesU(col("rv")).as("codes"), nullVec.as("cv"),
+          col("cell").as(IO.BucketCol))
+      val spark = corpus.sparkSession
+      import spark.implicits._
+      val centRows = cents.toSeq
+        .map { case (cell, c) => (-1L - cell, c.toSeq) }
+        .toDF("nn_id", "cv")
+        .select(col("nn_id"), nullCodes.as("codes"), col("cv"),
+          lit(reserved).as(IO.BucketCol))
+      // codebook rows: identity IS the (subspace, code) pair, carried in
+      // `codes`; the nn_id key space sits BELOW the centroid rows' range
+      // [-reserved, -1] (offset by the cell count), so no centroid row and
+      // no codebook row can ever collide on the store's key column —
+      // unique within the codebook rows because `code < ksubActual` by
+      // construction
+      val cbRows = cb.zipWithIndex.toSeq
+        .flatMap { case (sub, j) => sub.zipWithIndex.map { case (cent, c) =>
+          (-1L - reserved - (j.toLong * ksubActual + c), Seq(j, c), cent.toSeq) } }
+        .toDF("nn_id", "codes", "cv")
+        .withColumn(IO.BucketCol, lit(reserved + 1))
+      // layout tag committed atomically with the data — see writeIvfStore
+      IO.writePartitionedStore(data.unionByName(centRows).unionByName(cbRows),
+        path, keys = Seq("nn_id"), nBuckets = reserved + 2,
+        layoutTag = Some("ivfpq"))
+    }
   }
 
   /** One-word layout marker distinguishing the IVF layout (cells + ONE

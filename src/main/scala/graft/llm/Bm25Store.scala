@@ -95,16 +95,15 @@ object Bm25Store {
     * (and the upsert's per-OCC-attempt stats row a fourth). Caching is
     * content-neutral: every downstream consumer is an aggregation or a
     * per-row projection, so row order cannot reach any result. The write
-    * ops are eager, so the unpersist is safe at `body` exit. */
+    * ops are eager, so the release is safe at `body` exit. */
   private def withIndexBase[T](docs: DataFrame, textCol: String)(
-      body: DataFrame => T): T = {
-    val base = docs.select(col("doc_id"),
+      body: DataFrame => T): T = graft.Sweep.pinned { pin =>
+    body(pin(docs.select(col("doc_id"),
         TextAnalysis.tokens(col(textCol)).as("toks"))
       // ANSI size(null) = null: a null-text doc has no `dl` (it is skipped
       // by the full scan's avg(dl) too) but still counts toward n_docs
       .select(col("doc_id"), col("toks"), size(col("toks")).as("dl"))
-      .cache()
-    try body(base) finally base.unpersist(blocking = false)
+      .cache()))
   }
 
   /** Postings + one registry row per doc + one stats-delta row for a

@@ -291,15 +291,15 @@ object Bpe {
   def fitDistributedVerbose(df: DataFrame, textCol: String = "text",
                             nMerges: Int = 256,
                             minPairCount: Long = 2L,
-                            batchMerges: Int = 16): FitResult = {
+                            batchMerges: Int = 16): FitResult = graft.Sweep.pinned { pin =>
     require(nMerges >= 1, s"nMerges must be >= 1; got $nMerges")
     require(batchMerges >= 1, s"batchMerges must be >= 1; got $batchMerges")
     val toSyms = udf((w: String) => w.map(_.toString) :+ EndMark)
-    var types = df
+    var types = pin(df
       .select(explode(TextAnalysis.tokens(col(textCol))).as("word"))
       .groupBy("word").agg(count(lit(1)).as("freq"))
       .select(toSyms(col("word")).as("syms"), col("freq"))
-      .localCheckpoint()
+      .localCheckpoint())
     // adjacent symbol pairs; guarded because sequence(1, 0) DESCENDS in
     // Spark rather than yielding an empty array, and a fully-merged word
     // can collapse to a single symbol
@@ -389,13 +389,12 @@ object Bpe {
         val batch = kept.map { case (l, r, _) => (l, r) }
         val applyU = udf((s: Seq[String]) =>
           batch.foldLeft(s)((acc, m) => mergeOnce(acc, m._1, m._2)))
-        val next = types.select(applyU(col("syms")).as("syms"), col("freq"))
-          .localCheckpoint()
-        types.unpersist()
+        val next = pin(types.select(applyU(col("syms")).as("syms"), col("freq"))
+          .localCheckpoint())
+        pin.release(types)
         types = next
       }
     }
-    types.unpersist()
     FitResult(merges.toSeq, exhausted)
   }
 

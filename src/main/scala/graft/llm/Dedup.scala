@@ -25,7 +25,7 @@ object Dedup {
     if (sys.props.contains("graft.audit.rawPlans")) result
     else {
       val out = result.localCheckpoint()
-      intermediates.foreach(_.unpersist(blocking = false))
+      intermediates.foreach(graft.Sweep.release)
       out
     }
 
@@ -322,11 +322,13 @@ object Dedup {
     * close in 1-2 rounds. Each round is two small shuffles over
     * (id, label) longs; frames are localCheckpoint'd per round to truncate
     * the growing lineage — without that, round k re-executes rounds
-    * 1..k-1 — and each round's checkpoint blocks are released once the
-    * next round is materialized, so storage stays at two label frames
-    * regardless of round count. Convergence = no label sank below its
-    * round-start `old` value, counted with a scan of the already-
-    * checkpointed round result — no extra join. */
+    * 1..k-1 — and a round's input labels and neighbour-min frame are
+    * released once its step is materialized, so at most four frames are
+    * pinned at once, whatever the round count; only the final labels
+    * outlive the call ([[graft.Sweep.drop]] or the ContextCleaner frees
+    * them). Convergence = no label sank below its round-start `old`
+    * value, counted with a scan of the already-checkpointed round result
+    * — no extra join. */
   def dupClusters(pairs: DataFrame, idA: String = "idA", idB: String = "idB"): DataFrame =
     dupClustersCounted(pairs, idA, idB)._1
 
@@ -335,43 +337,41 @@ object Dedup {
     * longest chain while the per-round work grows ~linearly in edges;
     * a rounds blow-up is the iterative operator's quadratic signature). */
   private[graft] def dupClustersCounted(pairs: DataFrame, idA: String = "idA",
-                                        idB: String = "idB"): (DataFrame, Int) = {
-    val edges = pairs.select(col(idA).as("src"), col(idB).as("dst"))
+                                        idB: String = "idB"): (DataFrame, Int) = graft.Sweep.pinned { pin =>
+    val edges = pin(pairs.select(col(idA).as("src"), col(idB).as("dst"))
       .unionByName(pairs.select(col(idB).as("src"), col(idA).as("dst")))
-      .localCheckpoint()
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("cluster", col("id")).localCheckpoint()
-    var toRelease: Seq[DataFrame] = Seq.empty
+      .localCheckpoint())
+    var labels = pin(edges.select(col("src").as("id")).distinct()
+      .withColumn("cluster", col("id")).localCheckpoint())
     var changed = 1L
     var rounds = 0
     while (changed > 0) {
       rounds += 1
-      val nbrMin = edges
+      val nbrMin = pin(edges
         .join(labels.select(col("id").as("dst"), col("cluster").as("nc")), Seq("dst"))
         .groupBy(col("src").as("id")).agg(min("nc").as("min_nbr"))
         .join(labels, Seq("id"))
         .select(col("id"), least(col("cluster"), col("min_nbr")).as("cluster"),
           col("cluster").as("old"))
-        .localCheckpoint()
+        .localCheckpoint())
       val ptr = nbrMin.select(col("id").as("__pid"), col("cluster").as("__pcluster"))
-      val step = nbrMin
+      val step = pin(nbrMin
         .join(ptr, col("cluster") === col("__pid"), "left")
         .select(col("id"),
           least(col("cluster"), coalesce(col("__pcluster"), col("cluster")))
             .as("cluster"),
           col("old"))
-        .localCheckpoint()
+        .localCheckpoint())
       changed = step.where(col("cluster") < col("old")).count()
-      // step is materialized (the count above) — the previous round's
-      // labels and this round's nbrMin are dead weight now
-      toRelease.foreach(_.unpersist(blocking = false))
-      toRelease = Seq(labels, nbrMin)
-      labels = step.select("id", "cluster")
+      // step is materialized (the checkpoint is eager) — the round's
+      // input labels and its nbrMin are dead weight now
+      pin.release(nbrMin)
+      pin.release(labels)
+      labels = step
     }
     // the final round's checkpoint stays live behind the returned frame
-    // (callers memoize/checkpoint it); everything else releases now
-    (toRelease :+ edges).foreach(_.unpersist(blocking = false))
-    (labels.select(col("id").as("doc_id"), col("cluster").as("cluster_id")), rounds)
+    // (callers memoize/checkpoint it); the scope releases the edges
+    (pin.keep(labels).select(col("id").as("doc_id"), col("cluster").as("cluster_id")), rounds)
   }
 
   /** Priority-aware survivor selection: keep the best member of each

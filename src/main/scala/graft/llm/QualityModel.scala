@@ -113,13 +113,12 @@ object QualityModel {
     // Matcher.withHashSplit
     val holdout = conv(substring(md5(concat(lit("qm:"), col("__qm_src"),
       lit(":"), col("doc_id").cast("string"))), 1, 2), 16, 10).cast("int") >= 204
-    val fitDf = assembler.transform(train.where(!holdout)).cache()
-    val model = new LogisticRegression().setFeaturesCol("fv")
-      .setLabelCol("label").setMaxIter(50).setRegParam(0.01).fit(fitDf)
+    val fitDf = assembler.transform(train.where(!holdout))
+    val model = graft.Sweep.pinned(pin => new LogisticRegression().setFeaturesCol("fv")
+      .setLabelCol("label").setMaxIter(50).setRegParam(0.01).fit(pin(fitDf.cache())))
     val auc = new BinaryClassificationEvaluator().setLabelCol("label")
       .setRawPredictionCol("rawPrediction").setMetricName("areaUnderROC")
       .evaluate(model.transform(assembler.transform(train.where(holdout))))
-    fitDf.unpersist(blocking = false)
     // one count serves both classes: negatives are one garbled copy per
     // positive by construction (the 1:1 invariant the case class documents)
     val n = base.count()

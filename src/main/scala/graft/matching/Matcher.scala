@@ -329,10 +329,10 @@ object Matcher {
   private def withSearchContext[A](span: String, train: DataFrame, seed: Long,
       parallelism: Int, coalesceTo: Option[Int], memo: Option[FitMemo])(
       body: (Seq[(GbtCandidate, Int)] => Seq[Double],
-             (GbtCandidate, Int) => PipelineModel) => A): A = obs.span(span) {
+             (GbtCandidate, Int) => PipelineModel) => A): A = obs.span(span)(graft.Sweep.pinned { pin =>
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val prepared = coalesceTo.map(n => train.coalesce(n)).getOrElse(train).cache()
+    val prepared = pin(coalesceTo.map(n => train.coalesce(n)).getOrElse(train).cache())
     val Seq(tr0, va0) = stratifiedSplit(prepared, Seq(0.8, 0.2), seed = seed)
     // the split frames are cached PRE-ASSEMBLED (see [[fitTrialGbt]]):
     // every trial fit and every held-out evaluation reads the assembled
@@ -360,7 +360,7 @@ object Matcher {
     // booleans) and MatcherSpec pins the new values.
     val Seq(tr, va) = Seq(tr0, va0).map { df =>
       val assembled = assembler.transform(df)
-      coalesceTo.map(n => assembled.coalesce(n)).getOrElse(assembled).cache()
+      pin(coalesceTo.map(n => assembled.coalesce(n)).getOrElse(assembled).cache())
     }
     val m = memo.getOrElse(new FitMemo)
     def trial(c: GbtCandidate, iters: Int): Double =
@@ -372,14 +372,8 @@ object Matcher {
     def trials(points: Seq[(GbtCandidate, Int)]): Seq[Double] = Await.result(
       Future.sequence(points.map { case (c, iters) => Future(trial(c, iters)) }),
       Duration.Inf)
-    try body(trials, refit)
-    finally {
-      pool.shutdown()
-      tr.unpersist(blocking = false)
-      va.unpersist(blocking = false)
-      prepared.unpersist(blocking = false)
-    }
-  }
+    try body(trials, refit) finally pool.shutdown()
+  })
 
   /** M4 variant — successive halving (Hyperband's inner loop; Jamieson &
     * Talwalkar, AISTATS 2016) over the GBT space: the adaptive-budget

@@ -194,11 +194,11 @@ object LlmQueries {
                                     cols: Seq[String]): Boolean =
     multisetMismatches(a, b, cols).count() == 0L
 
-  private[graft] def annStats(s: SparkSession, approx0: DataFrame,
+  /** `approx` is scanned four times, so callers pass it pinned. */
+  private[graft] def annStats(s: SparkSession, approx: DataFrame,
                               dir: String): AnnStats = {
     import org.apache.spark.sql.expressions.Window
     val emb = Tables.embeddings(s, dir)
-    val approx = approx0.cache()
     val queries = emb.where("vec_id < 8")
     val brute = bruteBaseline(s, dir).select(col("query_id"), col("nn_id"))
     val nQueries = queries.count()
@@ -215,14 +215,13 @@ object LlmQueries {
     val rankBad = approx.withColumn("rk2", row_number().over(
         Window.partitionBy("query_id").orderBy(col("cosine").desc, col("nn_id").asc)))
       .where(col("rank") =!= col("rk2")).count()
-    approx.unpersist(blocking = false)
     AnnStats(nQueries, hit.toDouble / math.max(nBrute, 1L), mismatches, rankBad)
   }
 
   private def annContract(s: SparkSession, approx: DataFrame, dir: String,
-                          recallBound: Double): DataFrame = {
+                          recallBound: Double): DataFrame = graft.Sweep.pinned { pin =>
     import s.implicits._
-    val st = annStats(s, approx, dir)
+    val st = annStats(s, pin(approx.cache()), dir)
     Seq((st.nQueries, st.recall >= recallBound,
          st.mismatches == 0L, st.rankBad == 0L))
       .toDF("n_queries", "recall_ok", "rescore_exact", "ranks_valid")
@@ -261,20 +260,20 @@ object LlmQueries {
   /** Token capacity of a packed training sequence (tx_pack). */
   private[graft] val packCapacity = 256L
 
-  private[graft] def minhashStats(s: SparkSession, dir: String): MinhashStats = {
-    val docs = Tables.documents(s, dir)
-    val found = Dedup.minhashPairs(docs, threshold = 0.35)
-      .select(col("idA"), col("idB"), col("jaccard_dist")).cache()
-    val exactLow = exactJaccardLow(s, dir)
-    val exactAt = exactLow.where(col("jaccard") >= 0.35)
-    val nExact = exactAt.count()
-    val hit = found.join(exactAt, Seq("idA", "idB")).count()
-    val gross = found.join(exactLow, Seq("idA", "idB"), "left_anti").count()
-    val estsOk = found.where(col("jaccard_dist") < 0.0 || col("jaccard_dist") > 1.0)
-      .count() == 0L
-    found.unpersist(blocking = false)
-    MinhashStats(nExact, hit.toDouble / math.max(nExact, 1L), gross, estsOk)
-  }
+  private[graft] def minhashStats(s: SparkSession, dir: String): MinhashStats =
+    graft.Sweep.pinned { pin =>
+      val docs = Tables.documents(s, dir)
+      val found = pin(Dedup.minhashPairs(docs, threshold = 0.35)
+        .select(col("idA"), col("idB"), col("jaccard_dist")).cache())
+      val exactLow = exactJaccardLow(s, dir)
+      val exactAt = exactLow.where(col("jaccard") >= 0.35)
+      val nExact = exactAt.count()
+      val hit = found.join(exactAt, Seq("idA", "idB")).count()
+      val gross = found.join(exactLow, Seq("idA", "idB"), "left_anti").count()
+      val estsOk = found.where(col("jaccard_dist") < 0.0 || col("jaccard_dist") > 1.0)
+        .count() == 0L
+      MinhashStats(nExact, hit.toDouble / math.max(nExact, 1L), gross, estsOk)
+    }
 
   /** Fitted weak-label quality model, memoized per (session, dir): the
     * fit is shared by tx_quality_model and st_quality_stream (same corpus
@@ -340,31 +339,30 @@ object LlmQueries {
     * surfaces as a probed-bound boolean. */
   private[graft] case class SemStats(nExact: Long, recall: Double, falsePos: Long)
 
-  private[graft] def semanticStats(s: SparkSession, dir: String): SemStats = {
-    val emb = Tables.embeddings(s, dir)
-    // exact all-pairs baseline: one side broadcast (the embeddings table is
-    // MBs even at sf0.1), so the cross product parallelizes over the left
-    // side's partitions with no shuffle
-    val v = emb.where(Ann.cosineUsable(col("embedding")))
-      .select(col("vec_id"),
-        transform(col("embedding"), x => x.cast("double")).as("v"))
-    val exact = v.select(col("vec_id").as("idA"), col("v").as("vA"))
-      .crossJoin(broadcast(v.select(col("vec_id").as("idB"), col("v").as("vB"))))
-      .where(col("idA") < col("idB"))
-      .withColumn("cosine", graft.functions.CosineSim.cosine_sim(col("vA"), col("vB")))
-      .where(col("cosine") >= 0.3)
-      .select("idA", "idB").cache()
-    val sem = Dedup.semanticPairs(emb, nCells = 8, threshold = 0.3)
-      .select("idA", "idB").cache()
-    // the within-cell pair join runs when this count fills the cache
-    val nSem = graft.obs.span("cell_pair_join")(sem.count())
-    val nExact = exact.count()
-    val hit = sem.join(exact, Seq("idA", "idB")).count()
-    val fp = nSem - hit
-    exact.unpersist(blocking = false)
-    sem.unpersist(blocking = false)
-    SemStats(nExact, hit.toDouble / math.max(nExact, 1L), fp)
-  }
+  private[graft] def semanticStats(s: SparkSession, dir: String): SemStats =
+    graft.Sweep.pinned { pin =>
+      val emb = Tables.embeddings(s, dir)
+      // exact all-pairs baseline: one side broadcast (the embeddings table is
+      // MBs even at sf0.1), so the cross product parallelizes over the left
+      // side's partitions with no shuffle
+      val v = emb.where(Ann.cosineUsable(col("embedding")))
+        .select(col("vec_id"),
+          transform(col("embedding"), x => x.cast("double")).as("v"))
+      val exact = pin(v.select(col("vec_id").as("idA"), col("v").as("vA"))
+        .crossJoin(broadcast(v.select(col("vec_id").as("idB"), col("v").as("vB"))))
+        .where(col("idA") < col("idB"))
+        .withColumn("cosine", graft.functions.CosineSim.cosine_sim(col("vA"), col("vB")))
+        .where(col("cosine") >= 0.3)
+        .select("idA", "idB").cache())
+      val sem = pin(Dedup.semanticPairs(emb, nCells = 8, threshold = 0.3)
+        .select("idA", "idB").cache())
+      // the within-cell pair join runs when this count fills the cache
+      val nSem = graft.obs.span("cell_pair_join")(sem.count())
+      val nExact = exact.count()
+      val hit = sem.join(exact, Seq("idA", "idB")).count()
+      val fp = nSem - hit
+      SemStats(nExact, hit.toDouble / math.max(nExact, 1L), fp)
+    }
 
   val defs: Seq[(String, Q)] = Seq(
     // Exact dedup by content hash (hash-groupBy; 16-byte shuffle key).
@@ -526,12 +524,12 @@ object LlmQueries {
     // map-side, so the contract pins the structural invariants: exact
     // query count, k picks each, first pick ≡ exact top-1, and the
     // non-increasing mmr_score sequence the greedy guarantees.
-    "ann_mmr_topk" -> ((s, dir) => {
+    "ann_mmr_topk" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(s, dir)
-      val mmr = Ann.mmrTopK(emb, emb.where("vec_id < 8"),
-        k = 10, m = 30, lambda = 0.7).cache()
+      val mmr = pin(Ann.mmrTopK(emb, emb.where("vec_id < 8"),
+        k = 10, m = 30, lambda = 0.7).cache())
       val nQ = mmr.select("query_id").distinct().count()
       val kEach = mmr.groupBy("query_id").count()
         .where(col("count") =!= 10).count() == 0L
@@ -544,10 +542,8 @@ object LlmQueries {
           .over(Window.partitionBy("query_id").orderBy("mmr_rank")))
         .where(col("prev").isNotNull && col("mmr_score") > col("prev"))
         .count() == 0L
-      val out = Seq((nQ, kEach, firstOk, monotone))
+      Seq((nQ, kEach, firstOk, monotone))
         .toDF("n_queries", "k_each", "first_is_top1", "scores_nonincreasing")
-      mmr.unpersist(blocking = false)
-      out
     }),
 
     // Corpus k-NN graph through the IVF cells (probes equi-joined to cell
@@ -572,19 +568,18 @@ object LlmQueries {
     // collapsed the shared store's generations, since compaction never
     // changes row content), every score is an exact re-ranked cosine,
     // ranks are valid. n_corpus pins the fixture.
-    "ann_ivf_store" -> ((s, dir) => {
+    "ann_ivf_store" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = sharedIvfStore(s, dir)
       val queries = emb.where("vec_id < 8")
-      val fromStore = Ann.ivfStoreTopK(s, path, queries, k = 10).cache()
+      val fromStore = pin(Ann.ivfStoreTopK(s, path, queries, k = 10).cache())
       val cents = Ann.readCentroids(s, path)
       val batch = Ann.ivfTopKFromAssigned(
         Ann.assignCells(emb, cents), cents, queries, k = 10)
       val same = multisetEquals(fromStore, batch,
         Seq("query_id", "nn_id", "cosine", "rank"))
       val st = annStats(s, fromStore, dir)
-      fromStore.unpersist(blocking = false)
       Seq((emb.count(), same, st.mismatches == 0L, st.rankBad == 0L))
         .toDF("n_corpus", "incremental_equals_batch", "rescore_exact", "ranks_valid")
     }),
@@ -598,12 +593,12 @@ object LlmQueries {
     // code row per servable vector, recall vs brute over the bound,
     // refined cosines exactly reproduce the independent recompute, ranks
     // contiguous.
-    "ann_ivfpq_store" -> ((s, dir) => {
+    "ann_ivfpq_store" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = sharedIvfPqStore(s, dir)
-      val served = Ann.ivfPqStoreTopK(s, path, emb.where("vec_id < 8"),
-        k = 10, refineFrom = Some(emb))
+      val served = pin(Ann.ivfPqStoreTopK(s, path, emb.where("vec_id < 8"),
+        k = 10, refineFrom = Some(emb)).cache())
       val st = annStats(s, served, dir)
       val nRows = Ann.readIvfPqStore(s, path).count()
       val nServable = emb.where(Ann.cosineUsable(col("embedding"))).count()
@@ -623,23 +618,23 @@ object LlmQueries {
     // filtered brute over the bound, no disallowed id ever surfaces,
     // scores exactly reproduce the independent recompute, ranks
     // contiguous.
-    "ann_filtered_topk" -> ((s, dir) => {
+    "ann_filtered_topk" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       import org.apache.spark.sql.expressions.Window
       val emb = Tables.embeddings(s, dir)
       val allowed = emb.where("vec_id % 2 = 0").select("vec_id")
       val queries = emb.where("vec_id < 8")
-      val served = Ann.ivfStoreTopK(s, sharedIvfStore(s, dir), queries,
-        k = 10, allowedIds = Some(allowed)).cache()
+      val served = pin(Ann.ivfStoreTopK(s, sharedIvfStore(s, dir), queries,
+        k = 10, allowedIds = Some(allowed)).cache())
       // pinned: the filtered brute baseline feeds BOTH the count and the
       // recall join — uncached it re-ran the cross-join rank per consumer
       // (optimization round 14, guide §1.2: don't compute things twice)
-      val brute = Ann.bruteTopK(emb.where("vec_id % 2 = 0"), queries, k = 10)
-        .select("query_id", "nn_id").cache()
+      val brute = pin(Ann.bruteTopK(emb.where("vec_id % 2 = 0"), queries, k = 10)
+        .select("query_id", "nn_id").cache())
       val nBrute = brute.count()
       val hit = served.select("query_id", "nn_id")
         .join(brute, Seq("query_id", "nn_id")).count()
-      brute.unpersist(blocking = false)
+      pin.release(brute)
       val disallowed = served.where(col("nn_id") % 2 =!= 0).count()
       val asD = (c: org.apache.spark.sql.Column) => transform(c, x => x.cast("double"))
       val mismatches = served
@@ -651,13 +646,11 @@ object LlmQueries {
       val rankBad = served.withColumn("rk2", row_number().over(
           Window.partitionBy("query_id").orderBy(col("cosine").desc, col("nn_id").asc)))
         .where(col("rank") =!= col("rk2")).count()
-      val out = Seq((queries.count(),
+      Seq((queries.count(),
           hit.toDouble / math.max(nBrute, 1L) >= ContractBounds.annFilteredRecall,
           disallowed == 0L, mismatches == 0L, rankBad == 0L))
         .toDF("n_queries", "recall_ok", "only_allowed", "rescore_exact",
           "ranks_valid")
-      served.unpersist(blocking = false)
-      out
     }),
 
     // Keyed DELETE from a persisted vector index — the curation step
@@ -677,7 +670,7 @@ object LlmQueries {
     // surface in rows or serves; the post-delete serve EQUALS a batch
     // assignment of the surviving corpus under the same centroids; the
     // pre-delete version still reads complete.
-    "ann_store_delete" -> ((s, dir) => {
+    "ann_store_delete" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = graft.Sweep.ephemeral(
@@ -686,10 +679,10 @@ object LlmQueries {
       val preVersion = graft.io.IO.storeVersions(s, path).last
       val nServable = emb.where(Ann.cosineUsable(col("embedding"))).count()
       Ann.deleteFromVectorStore(s, path, emb.where("vec_id % 5 = 1"))
-      val rows = Ann.readIvfStore(s, path).cache()
+      val rows = pin(Ann.readIvfStore(s, path).cache())
       val nAfter = rows.count()
       val deletedLeft = rows.where(col("nn_id") % 5 === 1).count()
-      rows.unpersist(blocking = false)
+      pin.release(rows)
       val queries = emb.where("vec_id < 8")
       val served = Ann.ivfStoreTopK(s, path, queries, k = 10)
       val cents = Ann.readCentroids(s, path)
@@ -716,20 +709,20 @@ object LlmQueries {
     // cells makes the candidate set the entire servable corpus, so the
     // served top-k must equal the brute top-k EXACTLY — scores, ranks
     // and all. Plus the probed measured floor at the default budget.
-    "ann_probe_curve" -> ((s, dir) => {
+    "ann_probe_curve" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = sharedIvfStore(s, dir)
       val queries = emb.where("vec_id < 8")
       val nCells = graft.io.IO.storeBuckets(path) - 1
-      val brute = bruteBaseline(s, dir).select("query_id", "nn_id").cache()
+      val brute = pin(bruteBaseline(s, dir).select("query_id", "nn_id").cache())
       val nBrute = brute.count()
       // ONE full-probe candidates pass; each measured point is a window
       // prefix of it (identical rows to ivfStoreTopK at that nProbe — the
       // nesting theorem this very contract states), not a fresh
       // probe/read/rank pipeline.
-      val cands = Ann.ivfStoreProbeCandidates(s, path, queries, nCells)
-        .localCheckpoint()
+      val cands = pin(Ann.ivfStoreProbeCandidates(s, path, queries, nCells)
+        .localCheckpoint())
       def recallAt(p: Int): Double = {
         val hit = Ann.topKAt(cands, Ann.Knob.Probe, k = 10, p)
           .select("query_id", "nn_id")
@@ -741,11 +734,9 @@ object LlmQueries {
       val fullEq = multisetEquals(full,
         Ann.bruteTopK(emb, queries, k = 10),
         Seq("query_id", "nn_id", "cosine", "rank"))
-      cands.unpersist(blocking = false)
       // full-probe recall is 1.0 by theorem (2), so the monotone chain
       // checks the measured points against each other and against 1.0
       val monotone = (curve :+ 1.0).sliding(2).forall(w => w(0) <= w(1))
-      brute.unpersist(blocking = false)
       Seq((queries.count(), monotone,
            curve.last >= ContractBounds.annIvfRecall, fullEq))
         .toDF("n_queries", "recall_monotone_in_probes",
@@ -806,7 +797,7 @@ object LlmQueries {
     // survives the exact re-rank), theorem point exactly 1.0, the
     // recall-target serve meets the target against the recomputed
     // exact-in-probe baseline, and the curve is CURRENT.
-    "ann_pq_tuned_serve" -> ((s, dir) => {
+    "ann_pq_tuned_serve" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = sharedIvfPqStore(s, dir)
@@ -821,25 +812,22 @@ object LlmQueries {
       // see ivfPqRefineCandidates), under the same stale-curve check
       // ivfPqStoreTopKAtRecall runs
       Ann.requireCurrent(s, path, Ann.Knob.Refine)
-      val cands = Ann.ivfPqRefineCandidates(s, path, queries, nProbe = 4,
-        refineFrom = emb).localCheckpoint()
+      val cands = pin(Ann.ivfPqRefineCandidates(s, path, queries, nProbe = 4,
+        refineFrom = emb).localCheckpoint())
       val served = Ann.topKAt(cands, Ann.Knob.Refine, k = 10,
         Ann.resolveCurve(s, path, Ann.Knob.Refine, target, forK = 10, forProbe = 4))
       // exact-in-probe baseline at the theorem point (the largest
       // measured refine — its shortlist cut cannot bind)
-      val baseline = Ann.topKAt(cands, Ann.Knob.Refine, k = 10, curve.last._1)
-        .select("query_id", "nn_id").localCheckpoint()
+      val baseline = pin(Ann.topKAt(cands, Ann.Knob.Refine, k = 10, curve.last._1)
+        .select("query_id", "nn_id").localCheckpoint())
       val nBase = baseline.count()
       val hit = served.select("query_id", "nn_id")
         .join(baseline, Seq("query_id", "nn_id")).count()
-      val out = Seq((queries.count(), monotone, curve.last._2 == 1.0,
+      Seq((queries.count(), monotone, curve.last._2 == 1.0,
            hit.toDouble / math.max(nBase, 1L) >= target,
            !Ann.curveStale(s, path, Ann.Knob.Refine)))
         .toDF("n_queries", "curve_monotone", "theorem_point_recall_one",
           "serve_meets_target", "curve_current")
-      baseline.unpersist(blocking = false)
-      cands.unpersist(blocking = false)
-      out
     }),
 
     // RE-EMBED upsert on a persisted vector index — the maintenance op a
@@ -853,7 +841,7 @@ object LlmQueries {
     // content equals a batch assignment of the UPDATED corpus under the
     // stored centroids; exactly one version was committed; the
     // pre-upsert version still reads the original corpus.
-    "ann_store_upsert" -> ((s, dir) => {
+    "ann_store_upsert" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       // private mutation target via O(files) clone of the shared store —
@@ -875,10 +863,10 @@ object LlmQueries {
       val expect = Ann.assignCells(
         updated.where(Ann.cosineUsable(col("embedding"))), cents)
         .select("nn_id", "cell")
-      val got = Ann.readIvfStore(s, path).select("nn_id", "cell").cache()
+      val got = pin(Ann.readIvfStore(s, path).select("nn_id", "cell").cache())
       val nAfter = got.count()
       val same = multisetEquals(got, expect, Seq("nn_id", "cell"))
-      got.unpersist(blocking = false)
+      pin.release(got)
       val postVersions = graft.io.IO.storeVersions(s, path)
       val preRows = graft.io.IO.readPartitionedStoreAt(s, path, preVersions.last)
         .where(col("nn_id") >= 0).count()
@@ -900,13 +888,13 @@ object LlmQueries {
     // append must trip at most the probed number of small-cell drift
     // flags (ContractBounds), and heavy REAL drift tripping the flag is
     // pinned in AnnSpec.
-    "ann_store_staleness" -> ((s, dir) => {
+    "ann_store_staleness" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
-      val usable = emb.where(Ann.cosineUsable(col("embedding"))).cache()
+      val usable = pin(emb.where(Ann.cosineUsable(col("embedding"))).cache())
       val nBuild = usable.where("vec_id % 3 != 2").count()
       val nAll = usable.count()
-      usable.unpersist(blocking = false)
+      pin.release(usable)
       def summarize(report: org.apache.spark.sql.DataFrame) = report
         .agg(sum("n_build"), sum("n_now"),
           sum(when(col("drifted") && col("n_build") > 0, 1).otherwise(0)),
@@ -981,7 +969,7 @@ object LlmQueries {
     // that served results are identical pre/post while the per-cell file
     // count shrinks. The pre-compaction manifest version stays
     // time-travel-readable (pinned in AnnSpec).
-    "ann_ivf_compact" -> ((s, dir) => {
+    "ann_ivf_compact" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       var path = sharedIvfStore(s, dir)
@@ -998,7 +986,7 @@ object LlmQueries {
       // rewritten under it (the manifest protects readers) but because
       // the comparison below must not re-resolve to the POST-compaction
       // manifest version
-      val served = Ann.ivfStoreTopK(s, path, queries, k = 10).localCheckpoint()
+      val served = pin(Ann.ivfStoreTopK(s, path, queries, k = 10).localCheckpoint())
       val stats = Ann.compactIvfStore(s, path)
       val reduced = (stats.where(col("files_after") >= col("files_before"))
         .count() == 0L) && stats.count() > 0L
@@ -1050,16 +1038,15 @@ object LlmQueries {
     // assigned exactly once (SQL-computable total), cell count bounded,
     // coherence values valid cosines. Clustering GAIN is property-tested
     // on planted clusters in AnnSpec.
-    "ann_cluster_report" -> ((s, dir) => {
+    "ann_cluster_report" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
-      val rep = Ann.clusterReport(Tables.embeddings(s, dir),
-        precomputed = Some(corpusCentroids(s, dir))).cache()
+      val rep = pin(Ann.clusterReport(Tables.embeddings(s, dir),
+        precomputed = Some(corpusCentroids(s, dir))).cache())
       val nAssigned = rep.agg(coalesce(sum("n_members"), lit(0L)))
         .as[Long].head()
       val nCells = rep.count()
       val cohValid = rep.where(col("mean_cosine") < -1.0
         || col("mean_cosine") > 1.0 || col("mean_cosine").isNull).count() == 0L
-      rep.unpersist(blocking = false)
       Seq((nAssigned, nCells >= 1L && nCells <= 16L, cohValid))
         .toDF("n_assigned", "cells_bounded", "coherence_valid")
     }),
@@ -1166,7 +1153,7 @@ object LlmQueries {
     // df, avgdl, per-posting arithmetic and fold order all included;
     // deleted ids leave no row; exactly the expected commits landed;
     // the pre-mutation version still reads the original postings.
-    "tx_bm25_upsert" -> ((s, dir) => {
+    "tx_bm25_upsert" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val path = graft.Sweep.ephemeral(
@@ -1179,14 +1166,14 @@ object LlmQueries {
       // anti-join, the leftover/time-travel broadcasts, the counts),
       // and re-deriving them re-tokenizes the corpus per consumer
       val tokenful = docs.where(size(TextAnalysis.tokens(col("text"))) > 0)
-      val deleted = tokenful.where("doc_id % 11 = 5").localCheckpoint()
-      val reindexed = tokenful.where("doc_id % 7 = 3 and doc_id % 11 != 5")
+      val deleted = pin(tokenful.where("doc_id % 11 = 5").localCheckpoint())
+      val reindexed = pin(tokenful.where("doc_id % 7 = 3 and doc_id % 11 != 5")
         .select(col("doc_id"),
           concat(col("text"), lit(" graftupd graftupd")).as("text"))
-        .localCheckpoint()
-      val novel = tokenful.where("doc_id % 31 = 0")
+        .localCheckpoint())
+      val novel = pin(tokenful.where("doc_id % 31 = 0")
         .select((col("doc_id") + 1000000000L).as("doc_id"), col("text"))
-        .localCheckpoint()
+        .localCheckpoint())
       val nDeleted = deleted.count()
       val nUpserted = reindexed.count() + novel.count()
       Bm25Store.delete(s, path, deleted.select("doc_id"))
@@ -1214,12 +1201,10 @@ object LlmQueries {
         (if (nUpserted > 0) 1 else 0)
       val preLeft = graft.io.IO.readPartitionedStoreAt(s, path, preVersion)
         .join(broadcast(deleted.select("doc_id")), Seq("doc_id")).count()
-      val out = Seq((nDeleted, nUpserted, same, leftover == 0L,
+      Seq((nDeleted, nUpserted, same, leftover == 0L,
            commits == expectCommits, nDeleted == 0L || preLeft > 0L))
         .toDF("n_deleted", "n_upserted", "serve_equals_rebuild",
           "deleted_gone", "commits_expected", "history_preserved")
-      Seq(deleted, reindexed, novel).foreach(_.unpersist(blocking = false))
-      out
     }),
 
     // Hybrid retrieval: BM25 lexical top-50 fused with cosine semantic

@@ -170,24 +170,23 @@ object MatchQueries {
   private[graft] case class LshJoinStats(nExact: Long, recall: Double,
                                          falsePos: Long, distMismatch: Long)
 
-  private[graft] def lshJoinStats(s: SparkSession, dir: String): LshJoinStats = {
-    val st = featureStage(s, dir)
-    val a = st.feats.where("table = 'abt' and id % 20 = 0")
-    val b = st.feats.where("table = 'buy' and id % 20 = 0")
-    val lsh = Blocking.dedupedSimilarityJoin(a, b, keyCol = "name",
-        featureCol = "name_features", threshold = 1.3)
-      .select(col("idA"), col("idB"), round(col("distance"), 6).as("d")).cache()
-    val exact = Blocking.crossJoinExact(a, b, "name_features", 1.3)
-      .select(col("idA"), col("idB"), round(col("distance"), 6).as("ed")).cache()
-    val nExact = exact.count()
-    val hit = lsh.join(exact, Seq("idA", "idB")).count()
-    val fp = lsh.join(exact, Seq("idA", "idB"), "left_anti").count()
-    val distBad = lsh.join(exact, Seq("idA", "idB"))
-      .where(col("d") =!= col("ed")).count()
-    lsh.unpersist(blocking = false)
-    exact.unpersist(blocking = false)
-    LshJoinStats(nExact, hit.toDouble / math.max(nExact, 1L), fp, distBad)
-  }
+  private[graft] def lshJoinStats(s: SparkSession, dir: String): LshJoinStats =
+    graft.Sweep.pinned { pin =>
+      val st = featureStage(s, dir)
+      val a = st.feats.where("table = 'abt' and id % 20 = 0")
+      val b = st.feats.where("table = 'buy' and id % 20 = 0")
+      val lsh = pin(Blocking.dedupedSimilarityJoin(a, b, keyCol = "name",
+          featureCol = "name_features", threshold = 1.3)
+        .select(col("idA"), col("idB"), round(col("distance"), 6).as("d")).cache())
+      val exact = pin(Blocking.crossJoinExact(a, b, "name_features", 1.3)
+        .select(col("idA"), col("idB"), round(col("distance"), 6).as("ed")).cache())
+      val nExact = exact.count()
+      val hit = lsh.join(exact, Seq("idA", "idB")).count()
+      val fp = lsh.join(exact, Seq("idA", "idB"), "left_anti").count()
+      val distBad = lsh.join(exact, Seq("idA", "idB"))
+        .where(col("d") =!= col("ed")).count()
+      LshJoinStats(nExact, hit.toDouble / math.max(nExact, 1L), fp, distBad)
+    }
 
   /** Measured contract stats for the flagship match output vs the sampled
     * golden pairs: every golden pair is a candidate by construction
@@ -231,7 +230,7 @@ object MatchQueries {
                                            foreignIds: Long, scoresBad: Long,
                                            nScored: Long)
 
-  private[graft] def inferenceStats(s: SparkSession, dir: String): InferenceStats = {
+  private[graft] def inferenceStats(s: SparkSession, dir: String): InferenceStats = graft.Sweep.pinned { pin =>
     val st = featureStage(s, dir)
     val (model, _) = trainedMatcher(s, dir)
     val store = "/root/repo/target/qtmp/er_feature_store"
@@ -242,9 +241,9 @@ object MatchQueries {
       .withColumn("price", concat(lit("$9"),
         regexp_replace(col("price"), "\\$", "")))
       .select("table", "id", "name", "description", "price")
-    val scored = EntityResolution
+    val scored = pin(EntityResolution
       .inferIncremental(newRows, store, st.pipes, model, flagshipCfg)
-      .select("idA", "idB", "match_score").cache()
+      .select("idA", "idB", "match_score").cache())
     val nScored = obs.span("score")(scored.count())
     // reclaim superseded generations, then count through the manifest (a
     // raw directory read would also see pre-merge files awaiting vacuum)
@@ -254,7 +253,6 @@ object MatchQueries {
       .join(newRows.select(col("id").as("idA")), Seq("idA"), "left_anti").count()
     val scoresBad = scored
       .where(col("match_score") < 0.0 || col("match_score") > 1.0).count()
-    scored.unpersist(blocking = false)
     InferenceStats(newRows.count(), storeRows, foreignIds, scoresBad, nScored)
   }
 
@@ -317,9 +315,9 @@ object MatchQueries {
     // the GBT), so the pair list itself has no SQL form — this pins
     // everything about the ranked content that can be independently
     // recomputed, one step past the flagship's aggregate invariants.
-    "er_flagship_top_pairs" -> ((s, dir) => {
+    "er_flagship_top_pairs" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
-      val pairs = flagship(s, dir).select("idA", "idB", "label").cache()
+      val pairs = pin(flagship(s, dir).select("idA", "idB", "label").cache())
       val n = pairs.count()
       val expected = math.min(500L, trainedMatcher(s, dir)._2.count())
       val golden = featureStage(s, dir).golden.select("idA", "idB")
@@ -327,12 +325,10 @@ object MatchQueries {
       val wrong = pairs.join(golden, Seq("idA", "idB"), "left")
         .where(col("label") =!= coalesce(col("__g"), lit(0))).count()
       val dups = n - pairs.select("idA", "idB").distinct().count()
-      val out = Seq((featureStage(s, dir).golden.count(),
+      Seq((featureStage(s, dir).golden.count(),
           n == expected, wrong == 0L, dups == 0L))
         .toDF("n_golden", "count_exact", "labels_match_golden",
           "pairs_distinct")
-      pairs.unpersist(blocking = false)
-      out
     }),
 
     // J4 — LSH approximate similarity join on name features (A vs B — the
@@ -392,16 +388,15 @@ object MatchQueries {
     // class ratio in every split. Per-split counts themselves are
     // seed-dependent (Bernoulli), so the contract is what an oracle can
     // check; m2b_hash_split is the fully-value-checked split variant.
-    "m2_stratified_split" -> ((s, dir) => {
+    "m2_stratified_split" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
-      val labeled = Fixtures.labeledPairs(s, dir).cache()
+      val labeled = pin(Fixtures.labeledPairs(s, dir).cache())
       val total = labeled.count()
       val globalFrac = labeled.where(col("label") === 1).count().toDouble / total
       val splits = Matcher.stratifiedSplit(labeled, Seq(0.7, 0.15, 0.15))
       val counts = splits.map(_.count())
       val posCounts = splits.map(_.where(col("label") === 1).count())
       val fracs = posCounts.zip(counts).map { case (p, n) => p.toDouble / math.max(n, 1L) }
-      labeled.unpersist(blocking = false)
       // RELATIVE tolerance (+ non-empty positives per split): an absolute
       // 0.1 band would let a split that lost every row of a rare positive
       // class still pass when globalFrac << 0.1
@@ -530,7 +525,7 @@ object MatchQueries {
     // travels with the artifact), promote v2, load Production, score
     // consistency, and verify the PRODUCTION version's recorded metric
     // equals an independent recompute from the loaded model.
-    "m7_model_store" -> ((s, dir) => {
+    "m7_model_store" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
       import graft.functions.VecStats.vec_stats
       val a = Catalogs.sideA(s, dir).where("id % 20 = 0").withColumn("table", lit("abt"))
@@ -546,7 +541,7 @@ object MatchQueries {
       // join, and untransformed it re-ran the whole feature chain per
       // consumer.
       def transformed(m: PipelineModel): DataFrame =
-        m.transform(a).select(col("id"), col("name_features")).cache()
+        pin(m.transform(a).select(col("id"), col("name_features")).cache())
       def meanNnz(t: DataFrame): Double = t
         .agg(avg(vec_stats(col("name_features")).getField("nnz")))
         .head().getDouble(0)
@@ -575,8 +570,6 @@ object MatchQueries {
       val metricOk = rec.exists(m =>
         m.metric == "mean_name_nnz" && m.value == meanNnz(prodT) &&
           m.params.get("pipeline").contains("namePipeline"))
-      pipeT.unpersist(blocking = false)
-      prodT.unpersist(blocking = false)
       Seq((v1 < v2, ModelStore.productionVersion(root, name).contains(v2),
            lifecycleOk, same, metricOk))
         .toDF("versions_increment", "production_points_at_v2",
@@ -609,24 +602,22 @@ object MatchQueries {
     // memoized feature stage + trained model. Scores are model state, so
     // the contract pins the structure: exactly 100 picks, probabilities
     // valid, uncertainty non-decreasing, never above the 0.5 ceiling.
-    "er_uncertainty" -> ((s, dir) => {
+    "er_uncertainty" -> ((s, dir) => graft.Sweep.pinned { pin =>
       import s.implicits._
-      val picked = scoredAll(s, dir)
+      val picked = pin(scoredAll(s, dir)
         .withColumn("uncertainty", abs(col("match_score") - 0.5))
         .orderBy(col("uncertainty").asc, col("idA"), col("idB"))
-        .limit(100).cache()
+        .limit(100).cache())
       val n = picked.count()
       val scoresBad = picked
         .where(col("match_score") < 0.0 || col("match_score") > 1.0).count()
       val u = picked.orderBy(col("uncertainty").asc, col("idA"), col("idB"))
         .select("uncertainty").as[Double].collect() // bounded: 100 rows
-      val out = Seq((n, scoresBad == 0L,
+      Seq((n, scoresBad == 0L,
           u.length < 2 || u.sliding(2).forall(p => p(0) <= p(1)),
           u.forall(_ <= 0.5)))
         .toDF("n_selected", "scores_in_unit_interval",
           "uncertainty_sorted", "uncertainty_le_half")
-      picked.unpersist(blocking = false)
-      out
     }),
 
     // The reference's full inference loop (`03:455-579`): featurize

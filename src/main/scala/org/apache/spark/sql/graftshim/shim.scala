@@ -30,20 +30,18 @@ object Shim {
   def activeContext: Option[org.apache.spark.SparkContext] =
     org.apache.spark.SparkContext.getActive
 
-  /** Free a `localCheckpoint()`ed frame's blocks. `Dataset.unpersist`
-    * only drops cache-manager entries; a local checkpoint's blocks belong
-    * to the RDD under the frame's `LogicalRDD` leaf, which stays in
-    * `getPersistentRDDs` until that RDD itself is unpersisted. The release
-    * goes through `unpersistRDD` (`private[spark]`) because
-    * `RDD.unpersist` logs a lost-lineage warning for every checkpoint,
-    * and a released pin is never read again. Any other plan shape fails
-    * loudly: falling back to `unpersist` would silently keep the blocks. */
-  def releaseCheckpoint(df: org.apache.spark.sql.DataFrame): Unit =
+  /** Free a `localCheckpoint()`ed frame's blocks, which belong to the RDD
+    * under its `LogicalRDD` leaf and stay in `getPersistentRDDs` until that
+    * RDD is unpersisted; false when `df` holds no live checkpoint. Goes
+    * through `unpersistRDD` (`private[spark]`) because `RDD.unpersist`
+    * logs a lost-lineage warning for every checkpoint, and a released pin
+    * is never read again. Called only by `graft.Sweep.release`. */
+  def releaseCheckpoint(df: org.apache.spark.sql.Dataset[_]): Boolean =
     df.asInstanceOf[org.apache.spark.sql.classic.Dataset[_]].logicalPlan match {
-      case r: org.apache.spark.sql.execution.LogicalRDD =>
+      case r: org.apache.spark.sql.execution.LogicalRDD
+          if r.rdd.sparkContext.getPersistentRDDs.contains(r.rdd.id) =>
         r.rdd.sparkContext.unpersistRDD(r.rdd.id, blocking = false)
-      case p => throw new IllegalArgumentException(
-        s"releaseCheckpoint expects a localCheckpoint()ed frame (a LogicalRDD " +
-          s"leaf), got a ${p.getClass.getName} plan")
+        true
+      case _ => false
     }
 }

@@ -113,6 +113,14 @@ class BpeSpec extends SparkSpec {
     assert((after -- before).isEmpty)
   }
 
+  test("fitDistributedVerbose releases every merge round's checkpoint") {
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val fitted = Bpe.fitDistributedVerbose(toyDf, nMerges = 8, batchMerges = 1)
+    assert(fitted.merges.nonEmpty)
+    val after = spark.sparkContext.getPersistentRDDs.keySet
+    assert((after -- before).isEmpty, s"merge rounds left pinned RDDs: ${after -- before}")
+  }
+
   test("fixture fit at sf0.001 matches the oracle's first merge and is deterministic") {
     val docs = Tables.documents(spark, sf)
     val ms = Bpe.fit(docs, nMerges = 4)

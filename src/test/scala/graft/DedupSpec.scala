@@ -101,6 +101,17 @@ class DedupSpec extends SparkSpec {
     assert(out.length == 64 && out.forall(_._2 == 0L))
   }
 
+  test("dupClustersCounted keeps only the returned labels' checkpoint pinned") {
+    val chain = (0L until 31L).map(i => (i, i + 1)).toDF("idA", "idB")
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    val (labels, rounds) = Dedup.dupClustersCounted(chain)
+    val added = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(rounds >= 3, s"chain closed in $rounds rounds; the check needs several")
+    assert(added.size <= 1, s"$rounds rounds left ${added.size} pinned RDDs: $added")
+    // the one survivor is the checkpoint the returned frame reads
+    assert(labels.as[(Long, Long)].collect().forall(_._2 == 0L))
+  }
+
   test("decontaminate: drops benchmark members and their near-dups, keeps the rest") {
     val bench = docs.where($"doc_id" === 1) // "the quick brown fox jumps..."
     // hand-computed J vs doc 1: doc2 = 1.0 (exact dup), doc3 = 4/10 = 0.4,

@@ -279,10 +279,6 @@ class IOSpec extends SparkSpec {
     leaves("Ann.upsertVectorStore")(Ann.upsertVectorStore(emb.where("vec_id < 4"), vs))
     leaves("Ann.deleteFromVectorStore")(Ann.deleteFromVectorStore(spark, vs,
       emb.where("vec_id >= 4 and vec_id < 8").select("vec_id")))
-    // a frame that is not a local checkpoint has nothing to release; the
-    // helper refuses it rather than unpersist and keep the blocks
-    intercept[IllegalArgumentException](
-      org.apache.spark.sql.graftshim.Shim.releaseCheckpoint(spark.range(4).toDF()))
   }
 
   test("storeChangeFeed: net CDC between versions — inserts, updates as " +
