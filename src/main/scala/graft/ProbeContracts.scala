@@ -42,8 +42,7 @@ object ProbeContracts {
         codebooks = Some(Ann.fitPqCodebooks(emb, maxIter = 3))), dir)
     p(f"ann_pq: recall=${pqAnn.recall}%.4f mismatches=${pqAnn.mismatches} rankBad=${pqAnn.rankBad}")
     locally {
-      val path = graft.Sweep.ephemeral(
-        new java.io.File("target/qtmp/probe_ivfpq").getAbsolutePath)
+      val path = graft.Sweep.ephemeral(s"${graft.Sweep.Qtmp}/probe_ivfpq")
       graft.io.IO.deletePath(path)
       // residual-space codebooks fit inside the build (3 bounded Lloyd
       // iterations) — mirrors the registered query's store exactly
@@ -92,13 +91,6 @@ object ProbeContracts {
       p(s"ann_store_staleness: ivf driftedWithBaseline=${ivf._1} driftedAny=${ivf._2} " +
         s"ivfpq driftedWithBaseline=${pq._1} driftedAny=${pq._2}")
     }
-    if (sys.env.contains("SPARK_GRAFT_PQ_SWEEP"))
-      for (m <- Seq(4, 8); ks <- Seq(16, 32); rf <- Seq(4, 8)) {
-        val st = LlmQueries.annStats(spark,
-          Ann.pqTopK(emb, emb.where("vec_id < 8"), k = 10,
-            m = m, ksub = ks, refine = rf), dir)
-        p(f"ann_pq m=$m ksub=$ks refine=$rf: recall=${st.recall}%.4f")
-      }
 
     val j4 = MatchQueries.lshJoinStats(spark, dir)
     p(f"j4: nExact=${j4.nExact} recall=${j4.recall}%.4f fp=${j4.falsePos} distMismatch=${j4.distMismatch}")

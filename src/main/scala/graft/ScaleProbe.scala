@@ -43,9 +43,6 @@ object ScaleProbe {
 
   private val KeyOffset = 10500000L // divisible by 3, 4, 5, 7, 10, 20
 
-  // resolved against the working directory: each checkout probes in its own tree
-  private val qtmp = new java.io.File("target/qtmp").getAbsolutePath
-
   private def tokenRename(c: org.apache.spark.sql.Column,
                           cp: org.apache.spark.sql.Column) =
     when(cp === 0, c).otherwise(
@@ -56,7 +53,7 @@ object ScaleProbe {
     * the dir (re-staged only when the base fixture changes). */
   def inflateDir(spark: SparkSession, base: String, factor: Int): String = {
     import java.nio.file.{Files, Paths}
-    val out = Paths.get(qtmp,
+    val out = Paths.get(Sweep.Qtmp,
       s"scale_${Integer.toHexString(base.hashCode)}_x$factor")
     val marker = out.resolve("_graft_staged")
     // v2: embedding inflation rule changed (pmod rotation + per-copy
@@ -153,7 +150,7 @@ object ScaleProbe {
     println(f"[scale] $tag cc: $tCc%.1f s (${cc._1} clusters, ${cc._2} rounds)")
     // IVF store: auto-√n-cell build, then a fixed 24-query serve
     val emb = Tables.embeddings(spark, dir)
-    val store = s"$qtmp/scaleprobe_ivf_$tag"
+    val store = s"${Sweep.Qtmp}/scaleprobe_ivf_$tag"
     graft.io.IO.deletePath(store)
     val (_, tBuild) = timed {
       graft.llm.Ann.writeIvfStore(emb, store, nCells = 0)
@@ -172,7 +169,7 @@ object ScaleProbe {
     // 24-query serve with exact flat refine. The probed read is code
     // rows of nProbe cells per query, so serve must stay ~flat like the
     // full-precision IVF serve above.
-    val pqStore = s"$qtmp/scaleprobe_ivfpq_$tag"
+    val pqStore = s"${Sweep.Qtmp}/scaleprobe_ivfpq_$tag"
     graft.io.IO.deletePath(pqStore)
     graft.llm.Ann.writeIvfPqStore(emb, pqStore,
       centroids = Some(graft.llm.Ann.readCentroids(spark, store)))
@@ -186,7 +183,7 @@ object ScaleProbe {
     // copy 0 only (token renaming), so the OUTPUT is scale-invariant and
     // the measured growth is purely the pruned read's: ≤ |terms|+1 buckets
     // of √n-growing posting volume, never the corpus.
-    val bmStore = s"$qtmp/scaleprobe_bm25_$tag"
+    val bmStore = s"${Sweep.Qtmp}/scaleprobe_bm25_$tag"
     graft.io.IO.deletePath(bmStore)
     val (_, tBmBuild) = timed {
       graft.llm.Bm25Store.write(docs, bmStore, termBuckets = 0)
@@ -203,7 +200,7 @@ object ScaleProbe {
     // nearDupBatchAgainstStore. Buckets are sized ∝ corpus (~300 band
     // rows per bucket) so the touched-bucket read volume tracks the
     // DELTA's band keys, not the corpus.
-    val ndStore = s"$qtmp/scaleprobe_neardup_$tag"
+    val ndStore = s"${Sweep.Qtmp}/scaleprobe_neardup_$tag"
     graft.io.IO.deletePath(ndStore)
     val nDocs = docs.count()
     val ndBuckets = math.max(64L, nDocs * 12 / 300).toInt
@@ -248,7 +245,7 @@ object ScaleProbe {
     import spark.implicits._
     val emb = Tables.embeddings(spark, dir)
     val docs = Tables.documents(spark, dir)
-    val store = s"$qtmp/scaleprobe_srv_ivf_$tag"
+    val store = s"${Sweep.Qtmp}/scaleprobe_srv_ivf_$tag"
     graft.io.IO.deletePath(store)
     graft.llm.Ann.writeIvfStore(emb, store, nCells = 0)
     val nCells = graft.llm.Ann.readCentroids(spark, store).count()
@@ -271,7 +268,7 @@ object ScaleProbe {
       graft.llm.Ann.ivfStoreTopKAtRecall(spark, store, batchQ, k = 10,
         minRecall = 0.9).count()
     }
-    val pqStore = s"$qtmp/scaleprobe_srv_ivfpq_$tag"
+    val pqStore = s"${Sweep.Qtmp}/scaleprobe_srv_ivfpq_$tag"
     graft.io.IO.deletePath(pqStore)
     graft.llm.Ann.writeIvfPqStore(emb, pqStore,
       centroids = Some(graft.llm.Ann.readCentroids(spark, store)))
@@ -279,7 +276,7 @@ object ScaleProbe {
       graft.llm.Ann.ivfPqStoreTopK(spark, pqStore, queries, k = 10,
         refineFrom = Some(emb)).count()
     }
-    val bmStore = s"$qtmp/scaleprobe_srv_bm25_$tag"
+    val bmStore = s"${Sweep.Qtmp}/scaleprobe_srv_bm25_$tag"
     graft.io.IO.deletePath(bmStore)
     graft.llm.Bm25Store.write(docs, bmStore, termBuckets = 0)
     val (nHits, tBmServe) = timed {

@@ -3,7 +3,7 @@ package graft
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import graft.queries.{BreadthQueries, FeatureQueries, LlmQueries, MatchQueries, RelationalQueries, StreamQueries}
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** Entry contract — see SURVEY.md §7.
   *
   * `queries` is the SURVEY §2 operator inventory plus the LLM-pipeline
   * extensions, one entry per operator; `oracleSql` carries the DuckDB

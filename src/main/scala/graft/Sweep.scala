@@ -33,6 +33,10 @@ import org.apache.spark.storage.StorageLevel
   */
 object Sweep {
 
+  /** Root of every per-run scratch store, resolved against the working
+    * directory: each checkout writes in its own tree. */
+  val Qtmp: String = new java.io.File("target/qtmp").getAbsolutePath
+
   /** RDD ids that survive [[drop]] — the deliberately session-shared memos. */
   private val retained = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
 

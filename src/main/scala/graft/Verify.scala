@@ -24,9 +24,9 @@ object Verify {
     val (Array(srcDir, outDir), onlyNames) = rest.splitAt(2)
     val only = onlyNames.toSet // empty = all (the driver's invocation)
     val sfDir = if (!adversarial) srcDir else {
-      val fixture = "/root/repo/target/sfnull_verify"
+      val fixture = new java.io.File("target/sfnull_verify").getAbsolutePath
       graft.io.IO.deletePath(fixture)
-      val gen = new ProcessBuilder("python3", "/root/repo/tools/make_null_fixture.py",
+      val gen = new ProcessBuilder("python3", "tools/make_null_fixture.py",
           srcDir, fixture).inheritIO().start().waitFor()
       if (gen != 0) { System.err.println(s"[verify] fixture generation failed ($gen)"); sys.exit(gen) }
       fixture
@@ -81,7 +81,7 @@ object Verify {
       // (the per-query pre-delete above guarantees no stale dir can
       // stand in for a query that threw)
       val check = new ProcessBuilder(
-          (Seq("python3", "/root/repo/tools/local_check.py", sfDir, outDir)
+          (Seq("python3", "tools/local_check.py", sfDir, outDir)
             ++ onlyNames): _*)
         .inheritIO().start().waitFor()
       if (dumpFailures > 0) {

@@ -18,16 +18,11 @@ object Dedup {
     * long-lived session accumulate storage memory until eviction pressure
     * degrades the whole engine; checkpoint blocks, by contrast, are freed
     * by the ContextCleaner once the returned frame is garbage collected. */
-  private def releasing(intermediates: DataFrame*)(result: DataFrame): DataFrame =
-    // plan-audit mode (graft.Plans): return the raw frame so the explain
-    // shows the operator chain, not a checkpoint read; the audit session
-    // is short-lived, so skipping the cache release is harmless there
-    if (sys.props.contains("graft.audit.rawPlans")) result
-    else {
-      val out = result.localCheckpoint()
-      intermediates.foreach(graft.Sweep.release)
-      out
-    }
+  private def releasing(intermediates: DataFrame*)(result: DataFrame): DataFrame = {
+    val out = result.localCheckpoint()
+    intermediates.foreach(graft.Sweep.release)
+    out
+  }
 
   /** Exact dedup by content hash: one row per distinct text, keeping the
     * smallest doc_id as the canonical survivor plus the duplicate count.

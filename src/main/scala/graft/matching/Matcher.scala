@@ -332,7 +332,12 @@ object Matcher {
              (GbtCandidate, Int) => PipelineModel) => A): A = obs.span(span)(graft.Sweep.pinned { pin =>
     import scala.concurrent.{Await, ExecutionContext, Future}
     import scala.concurrent.duration.Duration
-    val prepared = pin(coalesceTo.map(n => train.coalesce(n)).getOrElse(train).cache())
+    // a `train` the caller already cached is the caller's pin, not this
+    // scope's: re-caching it would register (and release) the caller's entry
+    val base = coalesceTo.map(n => train.coalesce(n)).getOrElse(train)
+    val prepared =
+      if (base.storageLevel != org.apache.spark.storage.StorageLevel.NONE) base
+      else pin(base.cache())
     val Seq(tr0, va0) = stratifiedSplit(prepared, Seq(0.8, 0.2), seed = seed)
     // the split frames are cached PRE-ASSEMBLED (see [[fitTrialGbt]]):
     // every trial fit and every held-out evaluation reads the assembled

@@ -73,9 +73,8 @@ object Layout {
 
   /** The Z-ordered re-layout frame: range-partition + local sort on the
     * Z-value, then drop it. The ONE definition of the re-layout pipeline
-    * — [[zorderWrite]] writes it, and the plan audits (Plans, the
-    * PlanAuditSpec exchange-count assert) explain this same frame, so
-    * the audited plan can never diverge from what the writer executes. */
+    * — [[zorderWrite]] writes it, and PlanAuditSpec's exchange-count
+    * assert reads the plan of that write as it ran. */
   def zorderFrame(df: DataFrame, cols: Seq[String],
                   nFiles: Int, bits: Int = 12): DataFrame = {
     val z = "__graft_zval"

@@ -16,7 +16,6 @@ import graft.streaming.EventStreams
 object BreadthQueries {
 
   type Q = (SparkSession, String) => DataFrame
-  private val Tmp = "/root/repo/target/qtmp"
 
   private def views(s: SparkSession, dir: String): Unit = {
     Tables.customer(s, dir).createOrReplaceTempView("customer_v")
@@ -366,7 +365,7 @@ object BreadthQueries {
     // sampling-dependent, so spans are the stable contract).
     "s13_zorder_layout" -> ((s, dir) => {
       import s.implicits._
-      val out = s"$Tmp/s13_zorder"
+      val out = s"${graft.Sweep.Qtmp}/s13_zorder"
       val li = Tables.lineitem(s, dir).select("l_partkey", "l_suppkey", "l_orderkey")
       graft.ops.Layout.zorderWrite(li, out, Seq("l_partkey", "l_suppkey"),
         nFiles = 16, bits = 10)
@@ -462,7 +461,7 @@ object BreadthQueries {
     // X7 — correlated LATERAL subquery with per-row ORDER BY + LIMIT
     // (top-2 orders per customer): the SQL surface for "top-k per group".
     // Catalyst rewrites the correlated limit into a ranked window join —
-    // no per-row re-execution (plan checked in PLANS.md).
+    // no per-row re-execution (asserted by PlanAuditSpec).
     "x7_lateral_topk" -> ((s, dir) => {
       views(s, dir)
       s.sql(
@@ -491,7 +490,7 @@ object BreadthQueries {
     // partition back (BreadthSpec asserts the scan's PartitionFilters
     // prune to a single directory).
     "s7_partition_pruned" -> ((s, dir) => {
-      val out = s"$Tmp/s7_partitioned"
+      val out = s"${graft.Sweep.Qtmp}/s7_partitioned"
       Tables.orders(s, dir).write.mode("overwrite")
         .partitionBy("o_orderstatus").parquet(out)
       s.read.parquet(out).where("o_orderstatus = 'F'")

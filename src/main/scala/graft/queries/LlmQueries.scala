@@ -55,7 +55,7 @@ object LlmQueries {
   private[graft] def sharedIvfStore(s: SparkSession, dir: String): String =
     SessionMemo.value(s, s"ivf_shared_store:$dir") {
       buildSplitIvfStore(s, dir,
-        s"/root/repo/target/qtmp/ivf_shared_${storeRunId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/ivf_shared_${storeRunId.incrementAndGet()}")
     }
 
   /** ONE built IVF-PQ store per (session, dir) — the codes-at-rest
@@ -69,7 +69,7 @@ object LlmQueries {
     * over the hash-capped residual sample. */
   private[graft] def sharedIvfPqStore(s: SparkSession, dir: String): String =
     SessionMemo.value(s, s"ivfpq_shared_store:$dir") {
-      val path = s"/root/repo/target/qtmp/ivfpq_shared_${storeRunId.incrementAndGet()}"
+      val path = s"${graft.Sweep.Qtmp}/ivfpq_shared_${storeRunId.incrementAndGet()}"
       graft.io.IO.deletePath(path)
       val emb = Tables.embeddings(s, dir)
       Ann.writeIvfPqStore(emb.where("vec_id % 3 != 2"), path,
@@ -89,7 +89,7 @@ object LlmQueries {
   private[graft] def sharedBm25Store(s: SparkSession, dir: String): String =
     SessionMemo.value(s, s"bm25_shared_store:$dir") {
       val docs = Tables.documents(s, dir)
-      val path = s"/root/repo/target/qtmp/bm25_shared_${storeRunId.incrementAndGet()}"
+      val path = s"${graft.Sweep.Qtmp}/bm25_shared_${storeRunId.incrementAndGet()}"
       graft.io.IO.deletePath(path)
       Bm25Store.write(docs.where("doc_id % 3 != 2"), path)
       Bm25Store.append(docs.where("doc_id % 3 = 2"), path)
@@ -674,7 +674,7 @@ object LlmQueries {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/ivf_delete_${storeRunId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/ivf_delete_${storeRunId.incrementAndGet()}")
       graft.io.IO.cloneStore(s, sharedIvfStore(s, dir), path)
       val preVersion = graft.io.IO.storeVersions(s, path).last
       val nServable = emb.where(Ann.cosineUsable(col("embedding"))).count()
@@ -847,7 +847,7 @@ object LlmQueries {
       // private mutation target via O(files) clone of the shared store —
       // see ann_store_delete for the rationale
       val path = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/ivf_upsert_${storeRunId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/ivf_upsert_${storeRunId.incrementAndGet()}")
       graft.io.IO.cloneStore(s, sharedIvfStore(s, dir), path)
       val preVersions = graft.io.IO.storeVersions(s, path)
       val nServable = emb.where(Ann.cosineUsable(col("embedding"))).count()
@@ -932,7 +932,7 @@ object LlmQueries {
       import s.implicits._
       val emb = Tables.embeddings(s, dir)
       val path = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/ivf_refresh_${storeRunId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/ivf_refresh_${storeRunId.incrementAndGet()}")
       graft.io.IO.cloneStore(s, sharedIvfStore(s, dir), path)
       val drift = emb
         .select((col("vec_id") + 2000000000L).as("vec_id"),
@@ -979,7 +979,7 @@ object LlmQueries {
         // shared store — rebuild a private fragmented store so the
         // contract still exercises a real compaction
         path = buildSplitIvfStore(s, dir, graft.Sweep.ephemeral(
-          s"/root/repo/target/qtmp/ivf_compact_${storeRunId.incrementAndGet()}"))
+          s"${graft.Sweep.Qtmp}/ivf_compact_${storeRunId.incrementAndGet()}"))
       }
       val queries = emb.where("vec_id < 8")
       // materialize the pre-compaction serve — not because files are
@@ -1157,7 +1157,7 @@ object LlmQueries {
       import s.implicits._
       val docs = Tables.documents(s, dir).select("doc_id", "text")
       val path = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/bm25_upsert_${storeRunId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/bm25_upsert_${storeRunId.incrementAndGet()}")
       graft.io.IO.cloneStore(s, sharedBm25Store(s, dir), path)
       val preVersion = graft.io.IO.storeVersions(s, path).last
       val nV0 = graft.io.IO.storeVersions(s, path).size
@@ -1352,7 +1352,7 @@ object LlmQueries {
     // ordering is asserted in MixingSpec.
     "tx_export_shards" -> ((s, dir) => {
       val path = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/export_shards_${storeRunId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/export_shards_${storeRunId.incrementAndGet()}")
       graft.io.IO.deletePath(path)
       Mixing.writeTrainingShards(Tables.documents(s, dir), "doc_id",
         "train42", 8, path)
@@ -1493,7 +1493,7 @@ object LlmQueries {
     "mm_decode" -> ((s, dir) => {
       val staged = Multimodal.stageImageFiles(
         Tables.documents(s, dir).where("doc_id < 50"),
-        s"/root/repo/target/qtmp/mm_images_${Integer.toHexString(dir.hashCode)}")
+        s"${graft.Sweep.Qtmp}/mm_images_${Integer.toHexString(dir.hashCode)}")
       val assets = Multimodal.readBinaryAssets(s, staged)
         .select(regexp_extract(col("path"), "(\\d+)\\.(png|bmp)$", 1)
           .cast("long").as("asset_id"), col("content"))
@@ -1507,7 +1507,7 @@ object LlmQueries {
     "mm_audio_decode" -> ((s, dir) => {
       val staged = Multimodal.stageWavFiles(
         Tables.documents(s, dir).where("doc_id < 50"),
-        s"/root/repo/target/qtmp/mm_audio_${Integer.toHexString(dir.hashCode)}")
+        s"${graft.Sweep.Qtmp}/mm_audio_${Integer.toHexString(dir.hashCode)}")
       val assets = Multimodal.readBinaryAssets(s, staged)
         .select(regexp_extract(col("path"), "(\\d+)\\.wav$", 1)
           .cast("long").as("asset_id"), col("content"))
@@ -1521,7 +1521,7 @@ object LlmQueries {
     "mm_video_decode" -> ((s, dir) => {
       val staged = Multimodal.stageMp4Files(
         Tables.documents(s, dir).where("doc_id < 50"),
-        s"/root/repo/target/qtmp/mm_video_${Integer.toHexString(dir.hashCode)}")
+        s"${graft.Sweep.Qtmp}/mm_video_${Integer.toHexString(dir.hashCode)}")
       val assets = Multimodal.readBinaryAssets(s, staged)
         .select(regexp_extract(col("path"), "(\\d+)\\.mp4$", 1)
           .cast("long").as("asset_id"), col("content"))
@@ -1540,7 +1540,7 @@ object LlmQueries {
     "mm_binary_ingest" -> ((s, dir) => {
       val staged = Multimodal.stageAssetFiles(
         Tables.documents(s, dir).where("doc_id < 50"),
-        s"/root/repo/target/qtmp/mm_assets_${Integer.toHexString(dir.hashCode)}")
+        s"${graft.Sweep.Qtmp}/mm_assets_${Integer.toHexString(dir.hashCode)}")
       val assets = Multimodal.readBinaryAssets(s, staged)
         .select(regexp_extract(col("path"), "(\\d+)\\.bin$", 1).cast("long").as("asset_id"),
           col("length").cast("long").as("n_bytes"), col("content"))
@@ -1588,10 +1588,8 @@ object LlmQueries {
   private[graft] def curatedDocs(s: SparkSession, dir: String): DataFrame =
     SessionMemo.frame(s, s"curated:$dir")(buildCurated(s, dir))
 
-  /** The un-memoized curation plan — what [[curatedDocs]] materializes.
-    * Exposed separately so the plan audit (graft.Plans) can explain the
-    * real operator chain rather than the memo's checkpoint read. */
-  private[graft] def buildCurated(s: SparkSession, dir: String): DataFrame = {
+  /** The un-memoized curation plan — what [[curatedDocs]] materializes. */
+  private def buildCurated(s: SparkSession, dir: String): DataFrame = {
       val docs = Tables.documents(s, dir)
       val t = col("text")
       val kept = docs.select(col("doc_id"), col("source"), t,

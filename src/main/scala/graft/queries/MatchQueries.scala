@@ -233,7 +233,7 @@ object MatchQueries {
   private[graft] def inferenceStats(s: SparkSession, dir: String): InferenceStats = graft.Sweep.pinned { pin =>
     val st = featureStage(s, dir)
     val (model, _) = trainedMatcher(s, dir)
-    val store = "/root/repo/target/qtmp/er_feature_store"
+    val store = s"${graft.Sweep.Qtmp}/er_feature_store"
     EntityResolution.writeFeatureStore(st.feats, store, flagshipCfg)
     // "new/updated products": a key-subset of side A with changed price
     val newRows = Catalogs.sideA(s, dir).where("id % 50 = 0")
@@ -359,7 +359,7 @@ object MatchQueries {
       val a = Catalogs.sideA(s, dir).where("id % 20 = 0").withColumn("table", lit("abt"))
         .withColumn("description", coalesce(col("description"), lit("")))
       val pipe = TextFeatures.namePipeline().fit(a)
-      val path = "/root/repo/target/qtmp/s6_name_pipeline"
+      val path = s"${graft.Sweep.Qtmp}/s6_name_pipeline"
       pipe.write.overwrite().save(path)
       val loaded = PipelineModel.load(path)
       val orig = pipe.transform(a).select(col("id"), col("name_features"))
@@ -531,7 +531,7 @@ object MatchQueries {
       val a = Catalogs.sideA(s, dir).where("id % 20 = 0").withColumn("table", lit("abt"))
         .withColumn("description", coalesce(col("description"), lit("")))
       val pipe = TextFeatures.namePipeline().fit(a)
-      val root = "/root/repo/target/qtmp/registry"
+      val root = s"${graft.Sweep.Qtmp}/registry"
       val name = "name_pipeline"
       // the run metric: mean nnz of the fitted name features over the
       // training frame — deterministic given the seeded pipeline, so the

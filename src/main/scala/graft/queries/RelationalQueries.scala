@@ -14,7 +14,6 @@ import graft.pairs.Pairs
   * `broadcast()` hints mark dimension sides.
   */
 object RelationalQueries {
-  private val Tmp = "/root/repo/target/qtmp"
 
   type Q = (SparkSession, String) => DataFrame
 
@@ -22,7 +21,7 @@ object RelationalQueries {
     // S2 — CSV scan with explicit schema (write fixture-derived CSV, read it
     // back schema-declared; proves the reader never infers).
     "s2_csv_scan" -> ((s, dir) => {
-      val out = s"$Tmp/s2_csv"
+      val out = s"${graft.Sweep.Qtmp}/s2_csv"
       Tables.part(s, dir).selectExpr("p_partkey", "p_name", "p_brand", "p_size")
         .coalesce(1).write.mode("overwrite").option("header", "true").csv(out)
       IO.readCsv(s, out, StructType(Seq(
@@ -32,7 +31,7 @@ object RelationalQueries {
 
     // S3 — overwrite parquet sink, read-back equivalence.
     "s3_parquet_sink" -> ((s, dir) => {
-      val out = s"$Tmp/s3_parquet"
+      val out = s"${graft.Sweep.Qtmp}/s3_parquet"
       IO.writeOverwrite(
         Tables.orders(s, dir).selectExpr("o_orderkey", "o_custkey", "o_orderstatus"), out)
       s.read.parquet(out)
@@ -43,7 +42,7 @@ object RelationalQueries {
     // all apply as with parquet). Roundtrip equivalence against the
     // parquet-derived oracle proves lossless format conversion.
     "s8_orc_roundtrip" -> ((s, dir) => {
-      val out = s"$Tmp/s8_orc"
+      val out = s"${graft.Sweep.Qtmp}/s8_orc"
       Tables.nation(s, dir).selectExpr("n_nationkey", "n_name", "n_regionkey")
         .write.mode("overwrite").orc(out)
       s.read.orc(out)
@@ -54,7 +53,7 @@ object RelationalQueries {
     // (never inferSchema at scale — inference is a full extra pass over
     // 100 TB) keeps the read a single streaming parse.
     "s9_json_roundtrip" -> ((s, dir) => {
-      val out = s"$Tmp/s9_json"
+      val out = s"${graft.Sweep.Qtmp}/s9_json"
       Tables.region(s, dir).selectExpr("r_regionkey", "r_name")
         .write.mode("overwrite").json(out)
       s.read.schema(StructType(Seq(
@@ -70,7 +69,7 @@ object RelationalQueries {
     // string column, so there is nothing to infer — still a single
     // streaming pass at any scale.
     "s10_text_roundtrip" -> ((s, dir) => {
-      val out = s"$Tmp/s10_text"
+      val out = s"${graft.Sweep.Qtmp}/s10_text"
       // coalesce BEFORE the sink: the text source writes a null row as an
       // empty line (read back as ""), so nulls must collapse to ""
       // symmetrically in the oracle too or a null-text fixture row would
@@ -104,7 +103,7 @@ object RelationalQueries {
     // still serves the exact pre-merge rows after the merge committed —
     // the property vacuum-less manifest retention guarantees.
     "s11_time_travel" -> ((s, dir) => {
-      val path = s"$Tmp/s11_store"
+      val path = s"${graft.Sweep.Qtmp}/s11_store"
       IO.deletePath(path)
       val target = Tables.part(s, dir)
         .selectExpr("p_partkey as id", "p_name as name", "round(p_retailprice, 2) as price")
@@ -123,7 +122,7 @@ object RelationalQueries {
     // name retained, price replaced); unchanged rows inside rewritten
     // buckets emit nothing.
     "s12_change_feed" -> ((s, dir) => {
-      val path = s"$Tmp/s12_store"
+      val path = s"${graft.Sweep.Qtmp}/s12_store"
       IO.deletePath(path)
       val target = Tables.part(s, dir)
         .selectExpr("p_partkey as id", "p_name as name", "round(p_retailprice, 2) as price")

@@ -44,7 +44,7 @@ object StreamQueries {
       import s.implicits._
       val docs = graft.Tables.documents(s, dir)
       val benchmark = docs.where("doc_id % 97 = 0")
-      val outDir = s"/root/repo/target/qtmp/st_decontam_${runId.incrementAndGet()}"
+      val outDir = s"${graft.Sweep.Qtmp}/st_decontam_${runId.incrementAndGet()}"
       graft.io.IO.deletePath(outDir)
       // 2 micro-batches: the contract (union of per-batch survivors ==
       // batch decontamination) is batching-invariant, and one cross-batch
@@ -79,7 +79,7 @@ object StreamQueries {
       // third full build AND the realistic topology: the online serve
       // path reads the index the offline maintenance path owns
       val store = graft.queries.LlmQueries.sharedIvfStore(s, dir)
-      val resultsDir = s"/root/repo/target/qtmp/st_ann_serve_${runId.incrementAndGet()}"
+      val resultsDir = s"${graft.Sweep.Qtmp}/st_ann_serve_${runId.incrementAndGet()}"
       graft.io.IO.deletePath(resultsDir)
       // 2 micro-batches (see st_decontam_stream — batching-invariant result)
       val stream = graft.streaming.DocStreams.readVectorStream(s, dir, nSplits = 2)
@@ -127,7 +127,7 @@ object StreamQueries {
       import s.implicits._
       val emb = graft.Tables.embeddings(s, dir)
       val store = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/st_ann_append_${runId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/st_ann_append_${runId.incrementAndGet()}")
       graft.io.IO.deletePath(store)
       val cents = graft.queries.LlmQueries.corpusCentroids(s, dir)
       EventStreams.withStreamShufflePartitions(s) {
@@ -226,8 +226,8 @@ object StreamQueries {
       // harness sweep deletes them once the query's result is consumed,
       // keeping qtmp size flat across bench runs.
       val id = runId.incrementAndGet()
-      val store = graft.Sweep.ephemeral(s"/root/repo/target/qtmp/st_incdedup_store_$id")
-      val out = graft.Sweep.ephemeral(s"/root/repo/target/qtmp/st_incdedup_out_$id")
+      val store = graft.Sweep.ephemeral(s"${graft.Sweep.Qtmp}/st_incdedup_store_$id")
+      val out = graft.Sweep.ephemeral(s"${graft.Sweep.Qtmp}/st_incdedup_out_$id")
       graft.io.IO.deletePath(store)
       graft.io.IO.deletePath(out)
       EventStreams.withStreamShufflePartitions(s) {
@@ -284,7 +284,7 @@ object StreamQueries {
     // production sink shape for keyed state (file sinks only append).
     "st_foreach_upsert" -> ((s, dir) => {
       val store = graft.Sweep.ephemeral(
-        s"/root/repo/target/qtmp/st_upsert_store_${runId.incrementAndGet()}")
+        s"${graft.Sweep.Qtmp}/st_upsert_store_${runId.incrementAndGet()}")
       // the per-JVM counter repeats across separate runs — a leftover store
       // at this path (e.g. from a different sf dir) would be silently
       // upserted into, keeping stale keys the new batch never emits
@@ -317,8 +317,8 @@ object StreamQueries {
     "st_incremental_neardup" -> ((s, dir) => {
       import s.implicits._
       val id = runId.incrementAndGet()
-      val store = graft.Sweep.ephemeral(s"/root/repo/target/qtmp/st_incnd_store_$id")
-      val out = graft.Sweep.ephemeral(s"/root/repo/target/qtmp/st_incnd_out_$id")
+      val store = graft.Sweep.ephemeral(s"${graft.Sweep.Qtmp}/st_incnd_store_$id")
+      val out = graft.Sweep.ephemeral(s"${graft.Sweep.Qtmp}/st_incnd_out_$id")
       graft.io.IO.deletePath(store)
       graft.io.IO.deletePath(out)
       EventStreams.withStreamShufflePartitions(s) {

@@ -63,7 +63,7 @@ object DocStreams {
     import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
     val src = Paths.get(dir, s"$table.parquet")
-    val out = Paths.get("/root/repo/target/qtmp",
+    val out = Paths.get(graft.Sweep.Qtmp,
       s"stream_${table}_v2_${Integer.toHexString(dir.hashCode)}_$nSplits")
     val marker = out.resolve("_graft_staged")
     val srcSize = s"${Files.size(src)}:${Files.getLastModifiedTime(src).toMillis}"

@@ -68,7 +68,7 @@ object EventStreams {
   private def stageDir(dir: String): String = {
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val src = Paths.get(dir, "events.parquet")
-    val out = Paths.get("/root/repo/target/qtmp",
+    val out = Paths.get(graft.Sweep.Qtmp,
       s"stream_events_${Integer.toHexString(dir.hashCode)}")
     Files.createDirectories(out)
     val dst = out.resolve("events.parquet")

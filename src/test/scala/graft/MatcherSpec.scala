@@ -304,6 +304,19 @@ class MatcherSpec extends SparkSpec {
     assert(r.candidate == Matcher.GbtCandidate(3, 0.1, 1.0))
   }
 
+  test("successive halving leaves a caller-cached training frame cached " +
+       "(coalesceTo = None releases only the search's own pins)") {
+    val df = Matcher.addClassWeights(syntheticPairs(200)).coalesce(2).cache()
+    df.count()
+    try {
+      Matcher.trainHalving(df, parallelism = 2,
+        candidates = Seq(Matcher.GbtCandidate(3, 0.1, 1.0)),
+        minIter = 2, maxIter = 6, eta = 3)
+      assert(df.storageLevel != org.apache.spark.storage.StorageLevel.NONE,
+        "the search released the caller's cache")
+    } finally Sweep.release(df)
+  }
+
   test("model store: versioning, production pointer, load round-trip") {
     val root = "/root/repo/target/test_tmp/registry"
     org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(s"$root/m"))

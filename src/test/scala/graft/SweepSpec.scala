@@ -96,24 +96,38 @@ class SweepSpec extends SparkSpec {
     intercept[IllegalArgumentException](Sweep.release(spark.range(4).toDF()))
   }
 
-  test("every pin release in src/main goes through Sweep.release") {
-    val owners = Set("Sweep.scala", "shim.scala")
+  /** `path:line: text` of every src/main source line `bad` flags, files
+    * named in `owners` exempt. */
+  private def mainSourceLines(owners: Set[String])(bad: String => Boolean): Seq[String] = {
     def files(d: java.io.File): Seq[java.io.File] =
       Option(d.listFiles()).toSeq.flatten.flatMap(f =>
         if (f.isDirectory) files(f) else Seq(f).filter(_.getName.endsWith(".scala")))
     val root = new java.io.File("src/main/scala")
     val scanned = files(root)
     assert(scanned.exists(_.getName == "Sweep.scala"), s"no sources under ${root.getAbsolutePath}")
-    val offenders = for {
+    for {
       f <- scanned if !owners(f.getName)
       (line, i) <- java.nio.file.Files.readAllLines(f.toPath).toArray(Array.empty[String]).zipWithIndex
-      if line.contains("unpersist(") || line.contains("releaseCheckpoint")
+      if bad(line)
     } yield s"${f.getPath}:${i + 1}: ${line.trim}"
+  }
+
+  test("every pin release in src/main goes through Sweep.release") {
+    val offenders = mainSourceLines(Set("Sweep.scala", "shim.scala"))(line =>
+      line.contains("unpersist(") || line.contains("releaseCheckpoint"))
     assert(offenders.isEmpty, offenders.mkString("release outside the one rule:\n", "\n", ""))
   }
 
+  test("no src/main string literal names an absolute checkout path") {
+    // scratch stores resolve under Sweep.Qtmp and tools against the working
+    // directory, so a second checkout never writes into this one
+    val checkout = "\"" + new java.io.File("").getAbsolutePath
+    val offenders = mainSourceLines(Set.empty)(_.contains(checkout))
+    assert(offenders.isEmpty, offenders.mkString("absolute checkout path:\n", "\n", ""))
+  }
+
   private def qtmpPerRunStores(): Set[String] = {
-    val dir = new java.io.File("/root/repo/target/qtmp")
+    val dir = new java.io.File(Sweep.Qtmp)
     Option(dir.list()).map(_.toSet).getOrElse(Set.empty)
       .filter(n => n.startsWith("st_") || n.startsWith("ivf_store_")
         || n.startsWith("export_shards_"))
